@@ -18,6 +18,12 @@ deterministic and is what this module re-expresses Spark-first:
   iterates format -> llm -> adjust -> (optional tool calls) until the
   confidence threshold or max_iterations; the LLM is an injectable
   callable so the loop is fully testable offline.
+- Storage ownership: ``PhasedInvestigationAgent.investigate`` persists its
+  input (and the metric baselines it derives) once on entry and releases
+  them on exit, error included. The tools, detectors and formatter it
+  calls are lazy over that one cached frame, so the loop's Spark jobs do
+  not each re-read and re-parse the trace text. The only storage left
+  behind is ``rollback_analysis``'s own four ``localCheckpoint`` frames.
 
 Documented deviations from the reference (kept deliberately):
 - the reference's display sort key ``-(sev) if sev>=40 else -1000``
@@ -32,11 +38,13 @@ Documented deviations from the reference (kept deliberately):
 from __future__ import annotations
 
 import json
+import threading
 import time as _time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from pathlib import Path
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -134,9 +142,10 @@ def _iso(ts) -> str:
 
 
 def format_events_for_llm(events: DataFrame, display_limit: int = 20) -> str:
-    """Reference :608-741. Counts/time-range are one distributed agg;
-    only bounded heads are collected. Returns the exact report text shape
-    the reference feeds the LLM."""
+    """Reference :608-741. Counts/time-range are one distributed agg and
+    the four metric sections' counts one more; only bounded heads are
+    collected. Returns the exact report text shape the reference feeds
+    the LLM."""
     stats = events.agg(
         F.count(F.lit(1)).alias("total"),
         F.count_if(F.coalesce(F.col("severity"), F.lit(0)) >= 40).alias("n40"),
@@ -149,20 +158,30 @@ def format_events_for_llm(events: DataFrame, display_limit: int = 20) -> str:
         return "No events found."
 
     m = extract_metrics(events)
-    # Counts come from distributed aggregates (like n_negs/n_slows below)
-    # so they never saturate at a collect() limit; only the handful of
-    # display examples is ever collected.
+    # Section counts come from one distributed aggregate over the tagged
+    # union of the metric frames, so they never saturate at a collect()
+    # limit and cost one aggregation, not one count() each; only the
+    # handful of display examples is ever collected.
     spk = m["version_lag_spikes"]
-    n_spikes = spk.count()
-    n_crit = spk.filter(F.col("version_lag") > 1_000_000).count()
-    shown_src = spk.filter(F.col("version_lag") > 1_000_000) if n_crit else spk
+    crit = F.col("version_lag") > 1_000_000
+    tally = (
+        spk.select(F.when(crit, "crit").otherwise("spike").alias("k"))
+        .unionByName(m["negative_latencies"].select(F.lit("neg").alias("k")))
+        .unionByName(m["slow_ss_loops"].select(F.lit("slow").alias("k")))
+        .unionByName(m["throttling_reasons"].select(F.lit("throt").alias("k")))
+        .groupBy("k")
+        .count()
+        .collect()
+    )
+    n = {r["k"]: r["count"] for r in tally}
+    n_crit = n.get("crit", 0)
+    n_spikes = n_crit + n.get("spike", 0)
+    n_negs, n_slows, n_throts = n.get("neg", 0), n.get("slow", 0), n.get("throt", 0)
+    shown_src = spk.filter(crit) if n_crit else spk
     shown = shown_src.orderBy("ts", "event_id").limit(5).collect()
     negs = m["negative_latencies"].orderBy("ts", "event_id", "metric").limit(5).collect()
-    n_negs = m["negative_latencies"].count()
     slows = m["slow_ss_loops"].orderBy("ts", "event_id").limit(3).collect()
-    n_slows = m["slow_ss_loops"].count()
     throts = m["throttling_reasons"].orderBy("ts", "event_id", "reason").limit(5).collect()
-    n_throts = m["throttling_reasons"].count()
 
     sev = F.coalesce(F.col("severity"), F.lit(0))
     sort_key = F.when(sev >= 40, -sev).otherwise(F.lit(-1000))
@@ -558,6 +577,36 @@ def write_llm_output(
 # ---------------------------------------------------------------------------
 
 
+_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+_CACHED_PARTITIONING_LOCK = threading.Lock()
+
+
+def _own(df: DataFrame, owned: list[DataFrame]) -> DataFrame:
+    """Persist ``df`` and record it in ``owned`` for release, unless the
+    caller already holds it in storage.
+
+    By default Spark caches a plan without AQE's final-stage partition
+    coalescing, so a cached shuffle output (such as the per-file line
+    numbering of parsed trace text) keeps every raw shuffle partition,
+    most of them empty, and every later job runs a task per partition.
+    The plan is cached with that coalescing on instead (the setting is
+    read when the cache entry is made), so the cache holds the coalesced
+    partitions that the uncached plan's jobs read."""
+    if df.storageLevel == StorageLevel.NONE:
+        conf = df.sparkSession.conf
+        # serialised so that concurrent investigations on one session each
+        # restore the value that was set before any of them
+        with _CACHED_PARTITIONING_LOCK:
+            prev = conf.get(_CACHED_PARTITIONING)
+            conf.set(_CACHED_PARTITIONING, "true")
+            try:
+                df = df.persist()
+            finally:
+                conf.set(_CACHED_PARTITIONING, prev)
+        owned.append(df)
+    return df
+
+
 class PhasedInvestigationAgent:
     """The reference's full phased loop, Spark-first and LLM-injectable.
 
@@ -575,6 +624,11 @@ class PhasedInvestigationAgent:
     ``llm(prompt_text: str) -> str`` returns raw LLM text (parsed by L3);
     ``rag(query: str) -> str | None`` is the optional retriever. Both are
     plain callables so the whole loop is deterministic offline.
+
+    ``investigate`` owns its input's storage: it persists ``events`` (and
+    ``baselines`` when it derives them) on entry and unpersists them in a
+    ``finally`` on exit. A frame the caller passes in already persisted
+    is neither re-persisted nor released.
     """
 
     def __init__(
@@ -605,7 +659,25 @@ class PhasedInvestigationAgent:
 
     def investigate(
         self, events: DataFrame, question: str, baselines: DataFrame | None = None
-    ):
+    ) -> InvestigationResult:
+        """Run the phased loop over ``events``, holding it (and derived
+        ``baselines``) in storage for the loop's lifetime, so its Spark jobs
+        read the input from the block manager instead of each re-running
+        its lineage (for a trace file, the whole parse)."""
+        owned: list[DataFrame] = []
+        try:
+            return self._loop(_own(events, owned), question, baselines, owned)
+        finally:
+            for df in owned:
+                df.unpersist()
+
+    def _loop(
+        self,
+        events: DataFrame,
+        question: str,
+        baselines: DataFrame | None,
+        owned: list[DataFrame],
+    ) -> InvestigationResult:
         from ..detectors import detectors as D
         from ..sources.trace_logs import derive_event_metrics
         from . import tools as T
@@ -645,11 +717,15 @@ class PhasedInvestigationAgent:
                 top = T.top_events(events, severity_min=30, limit=500)
                 tools_used.append("scanner.top_events")
                 acc = top
-                additional.append(("severity_counts", T.severity_counts(events)))
+                # The scanner's severity counts, event histogram and time
+                # span are parts of its global summary: ask Spark once and
+                # keep the reference's per-tool evidence and tool trail.
+                summary = T.global_summary(events)
+                additional.append(("severity_counts", summary["severity_counts"]))
                 tools_used.append("scanner.severity_counts")
-                additional.append(("event_histogram", T.event_histogram(events, 10)))
+                additional.append(("event_histogram", summary["event_histogram"]))
                 tools_used.append("scanner.event_histogram")
-                span = T.time_span(events)
+                span = summary["time_span"]
                 additional.append(("time_span", span))
                 tools_used.append("scanner.time_span")
                 buckets = T.high_severity_buckets(
@@ -662,7 +738,6 @@ class PhasedInvestigationAgent:
                     if e not in glanced_300:
                         glanced_300.add(e)
                         dive_order.append((300, e))
-                summary = T.global_summary(events)
                 additional.append(("global_summary", summary))
                 tools_used.append("scanner.global_summary")
                 rb = D.rollback_analysis(events)
@@ -671,8 +746,10 @@ class PhasedInvestigationAgent:
                 tools_used.append("scanner.rollback_analysis")
                 event_metrics = derive_event_metrics(events)
                 if baselines is None:
-                    baselines = D.metric_baselines_table(
-                        events, event_metrics, min_count=20
+                    # counted here, then read by two phase-B detectors
+                    baselines = _own(
+                        D.metric_baselines_table(events, event_metrics, min_count=20),
+                        owned,
                     )
                 additional.append(
                     ("metric_baselines", {"rows": baselines.count()})

@@ -8,8 +8,13 @@ References:
 - context_window: context_analyzer.py:16-28 (already F1 — filters.time_window)
 
 Everything stays declarative; only bounded heads (LIMIT'd lists and 1-row
-summaries) are collected, so each tool is one or two small Spark jobs
-regardless of input scale.
+summaries) are collected, so a tool's Spark job count does not grow with
+input scale. It is still more than one job per call: with AQE on, an
+aggregate runs its shuffle map stage and its result as separate jobs
+(``severity_counts`` and ``time_span`` are two each, ``global_summary``
+six). Each call re-runs its input's lineage; none of these tools caches
+its input. A caller that runs many of them over one frame (the phased
+investigation) persists that frame once itself.
 """
 
 from __future__ import annotations
@@ -59,11 +64,14 @@ def time_span(events: DataFrame) -> dict:
 
 
 def global_summary(events: DataFrame) -> dict:
-    """Composite sweep summary (scanner.global_summary)."""
-    maxsev = events.agg(F.max("severity")).collect()[0][0]
+    """Composite sweep summary (scanner.global_summary). ``max_severity``
+    is read off the severity histogram's keys rather than asked of Spark
+    again: ``max`` skips NULLs and is None when nothing is left, and so
+    does this."""
+    counts = severity_counts(events)
     return {
-        "max_severity": maxsev,
-        "severity_counts": severity_counts(events),
+        "max_severity": max((s for s in counts if s is not None), default=None),
+        "severity_counts": counts,
         "event_histogram": event_histogram(events, 10),
         "time_span": time_span(events),
     }

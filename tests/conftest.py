@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 
 import pytest
@@ -28,10 +29,21 @@ def pytest_configure(config):
     )
 
 
+# an identifier in a pytest -m/-k expression (pytest's own token rule)
+_MARK_IDENT = re.compile(r"(?:\w|:|\+|-|\.|\[|\]|\\|/)+")
+
+
+def mentions_marker(expr: str | None, marker: str) -> bool:
+    """Whether the -m expression ``expr`` names ``marker`` as a whole
+    token: ``-m slow`` and ``-m "not slow"`` do, ``-m "not slowpath"``
+    does not."""
+    return marker in _MARK_IDENT.findall(expr or "")
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_RUN_SLOW"):
         return
-    if "slow" in (config.getoption("-m") or ""):
+    if mentions_marker(config.getoption("-m"), "slow"):
         return  # an explicit -m mentioning the marker takes over selection
     skip = pytest.mark.skip(
         reason="slow sweep/bank; run with SPARK_GRAFT_RUN_SLOW=1 or -m slow"

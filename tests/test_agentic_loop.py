@@ -170,6 +170,34 @@ def test_scanner_tools(scenario):
     assert [r["event_id"] for r in win] == [5, 6, 7]
 
 
+@pytest.mark.parametrize(
+    "severities, max_severity",
+    [([], None), ([None, None, None], None), ([None, 20, None, 40, 10], 40)],
+    ids=["empty", "all_null", "mixed_null"],
+)
+def test_global_summary_matches_separate_tools(spark, severities, max_severity):
+    """global_summary reads max_severity off the severity histogram's
+    keys; it must agree with Spark's NULL-skipping max, and each part must
+    equal what its own tool returns."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (i, T0 + dt.timedelta(seconds=i), s, f"Ev{i % 2}", None, {})
+        for i, s in enumerate(severities)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, severity int, event string, role string,"
+        "fields map<string,string>",
+    )
+    summary = T.global_summary(df)
+    assert summary["max_severity"] == max_severity
+    assert summary["max_severity"] == df.agg(F.max("severity")).collect()[0][0]
+    assert summary["severity_counts"] == T.severity_counts(df)
+    assert summary["event_histogram"] == T.event_histogram(df, 10)
+    assert summary["time_span"] == T.time_span(df)
+
+
 # ---------------------------------------------------------------------------
 # timeline builder
 # ---------------------------------------------------------------------------

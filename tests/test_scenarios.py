@@ -199,6 +199,106 @@ def test_sideband_phased_loop_surfaces_evidence(spark, clogged_sideband):
     assert any("recovery" in q.lower() for q in rag_queries)
 
 
+# One investigation over CloggedSideband runs 78 Spark jobs on a 4-core
+# local session; it ran 101 before investigate persisted its input, when
+# every job recomputed the input's lineage. The budget leaves a few jobs
+# of headroom for plan variation.
+SIDEBAND_JOB_BUDGET = 84
+
+
+def _sideband_llm(prompt):
+    return json.dumps({
+        "hypothesis": "CLUSTER 7 commit_proxy_pipeline_crash",
+        "confidence": 0.85,
+        "reasoning": "proxy terminated before master; recovery follows",
+    })
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.fixture(scope="module")
+def sideband_investigation(spark, clogged_sideband):
+    """One investigate over CloggedSideband under a test-owned job group:
+    its result, its job count and the persistent RDDs it left behind."""
+    sc = spark.sparkContext
+    group = "test_scenarios.sideband_investigation"
+    before = _persistent_rdds(spark)
+    sc.setJobGroup(group, "one CloggedSideband investigation")
+    try:
+        res = PhasedInvestigationAgent(_sideband_llm, max_iterations=6).investigate(
+            clogged_sideband, "What is the root cause of this incident?"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return res, jobs, _persistent_rdds(spark) - before
+
+
+def test_sideband_investigation_job_budget(sideband_investigation):
+    res, jobs, _ = sideband_investigation
+    assert "commit_proxy_pipeline_crash" in res.hypothesis
+    assert res.iterations == 2
+    assert 0 < jobs <= SIDEBAND_JOB_BUDGET, jobs
+
+
+def test_sideband_investigation_releases_its_storage(
+    spark, clogged_sideband, sideband_investigation
+):
+    """investigate persists its input (and the baselines it derives) and
+    releases both on exit: the only new persistent RDDs are
+    rollback_analysis's four stitched localCheckpoints (see
+    test_detectors.py::test_rollback_analysis_releases_input_persists)."""
+    from pyspark import StorageLevel
+
+    _, _, residue = sideband_investigation
+    assert len(residue) == 4
+    assert clogged_sideband.storageLevel == StorageLevel.NONE
+
+
+def test_investigation_releases_storage_when_llm_fails(spark, clogged_sideband):
+    from pyspark import StorageLevel
+
+    held = []
+
+    def broken_llm(prompt):
+        held.append(clogged_sideband.storageLevel)
+        raise RuntimeError("connection reset by peer")  # not a quota error
+
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="connection reset"):
+        PhasedInvestigationAgent(broken_llm, max_iterations=6).investigate(
+            clogged_sideband, "What is the root cause of this incident?"
+        )
+    # the input was held in storage while the loop ran, and released after
+    assert held and held[0] != StorageLevel.NONE
+    assert len(_persistent_rdds(spark) - before) == 4  # rollback_analysis only
+    assert clogged_sideband.storageLevel == StorageLevel.NONE
+
+
+def test_investigation_leaves_caller_storage_alone(spark, clogged_sideband):
+    from pyspark import StorageLevel
+
+    from db_loganalyzer_spark.agentic.investigation import _CACHED_PARTITIONING, _own
+
+    setting = spark.conf.get(_CACHED_PARTITIONING)
+    owned = []
+    cached = clogged_sideband.persist()
+    try:
+        assert _own(cached, owned) is cached and owned == []
+    finally:
+        cached.unpersist()
+    fresh = _own(clogged_sideband, owned)
+    try:
+        assert owned == [fresh]
+        assert fresh.storageLevel != StorageLevel.NONE
+    finally:
+        fresh.unpersist()
+    assert clogged_sideband.storageLevel == StorageLevel.NONE
+    assert spark.conf.get(_CACHED_PARTITIONING) == setting  # restored
+
+
 # ---------------------------------------------------------------------------
 # ClogWithRollbacks — Cluster 0 recovery_restart_cascade
 # ---------------------------------------------------------------------------
