@@ -6,7 +6,9 @@ role the reference's single-file DB plays.
 
 Commands
   init                      S10 — create database + five core tables
-  load LOG_PATH             S1-S7 — ingest trace logs, append core tables
+  load LOG_PATH             S1-S7 — parse trace logs once into events, then
+                            derive the four side tables from the stored
+                            events; appends by default
   query SQL_OR_FILE         S9  — ad-hoc SQL against the catalog
   stats                     A17 — totals, time range, severity/role/event
                             distributions (cli_wrapper/main.py:434-512)
@@ -76,20 +78,46 @@ def handle_init(args) -> int:
     return 0
 
 
-def handle_load(args) -> int:
-    from .sources.trace_logs import ingest, load_preprocessed_events
+def _save(spark: SparkSession, df, name: str, mode: str) -> None:
+    """saveAsTable; an append fills the columns the existing table has
+    and ``df`` lacks with NULL (``init`` creates the reference DDL, e.g.
+    event_metrics.unit, which ingest does not produce)."""
+    from pyspark.sql import functions as F
 
-    spark = _spark(args)
-    _use(spark, args)
+    if mode == "append" and spark.catalog.tableExists(name):
+        for f in spark.table(name).schema:
+            if f.name not in df.columns:
+                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+    df.write.mode(mode).saveAsTable(name)
+
+
+def handle_load(args) -> int:
+    from pyspark.sql import functions as F
+
+    from .sources.trace_logs import (
+        DERIVED_TABLES,
+        load_preprocessed_events,
+        read_trace_events,
+    )
+
     path = args.log_file
     if os.path.isdir(path):  # S5 multi-file load
         paths = sorted(
             os.path.join(path, f)
             for f in os.listdir(path)
             if f.endswith((".xml", ".json", ".jsonl", ".log", ".txt"))
+            and os.path.isfile(os.path.join(path, f))
         )
+        if not paths:
+            print(
+                f"error: no .xml/.json/.jsonl/.log/.txt files in {path}",
+                file=sys.stderr,
+            )
+            return 2
     else:
         paths = [path]
+    spark = _spark(args)
+    _use(spark, args)
     if args.preprocessed:
         events = load_preprocessed_events(spark, paths[0])
         events.write.mode(args.mode).saveAsTable("events")
@@ -98,15 +126,21 @@ def handle_load(args) -> int:
     # appending into a populated DB: continue event_ids past the current
     # max so ids stay unique across CLI invocations (the reference tracks
     # the DB's max id the same way, cli_wrapper/main.py:296-301)
-    id_offset = 0
+    prev_max = None
     if args.mode == "append" and spark.catalog.tableExists("events"):
-        from pyspark.sql import functions as F
-
-        cur = spark.table("events").agg(F.max("event_id")).first()[0]
-        id_offset = (cur or 0) + 1
-    tables = ingest(spark, paths, id_offset)
-    for name, df in tables.items():
-        df.write.mode(args.mode).saveAsTable(name)
+        prev_max = spark.table("events").agg(F.max("event_id")).first()[0]
+    id_offset = 0 if prev_max is None else prev_max + 1
+    # parse once: the side tables derive from the stored events (only the
+    # rows this load added), not from the lazy parse, which every write
+    # would otherwise re-run
+    events = read_trace_events(spark, paths, id_offset, per_file_offsets=True)
+    _save(spark, events, "events", args.mode)
+    stored = spark.table("events")
+    print(f"events: {stored.count()} rows")
+    if prev_max is not None:
+        stored = stored.filter(F.col("event_id") > prev_max)
+    for name, derive in DERIVED_TABLES.items():
+        _save(spark, derive(stored), name, args.mode)
         print(f"{name}: {spark.table(name).count()} rows")
     return 0
 

@@ -5,8 +5,14 @@ derived tables (event_metrics, events_wide, processes, process_roles).
 Reference behavior (tools/parser.py, tools/storage.py) re-expressed as one
 declarative pipeline: read all files at once, split the envelope from the
 open-ended payload (kept as MAP<STRING,STRING>), and derive the side
-tables as independent DataFrames — the reference's five synchronous
-per-row inserts (tools/storage.py:72-98) disappear entirely.
+tables (:data:`DERIVED_TABLES`) as DataFrames off ``events`` — the
+reference's five synchronous per-row inserts (tools/storage.py:72-98)
+disappear entirely.
+
+The derived frames are lazy: each one re-evaluates the whole parse
+(text scan + per-file line window) when it is materialized on its own.
+A caller that writes or collects several of them should materialize
+``events`` first and derive from the stored table, as ``cli load`` does.
 
 Scale notes: text/json/xml sources split by file blocks, so ingestion
 parallelism is (files x blocks); all derivations are narrow (no shuffle)
@@ -487,6 +493,15 @@ def derive_process_roles(events: DataFrame, strict_reference: bool = False) -> D
     )
 
 
+# the four S7 side tables, each derived from an ``events`` frame
+DERIVED_TABLES = {
+    "event_metrics": derive_event_metrics,
+    "events_wide": derive_events_wide,
+    "processes": derive_processes,
+    "process_roles": derive_process_roles,
+}
+
+
 def ingest(
     spark: SparkSession,
     paths,
@@ -495,14 +510,16 @@ def ingest(
 ) -> dict[str, DataFrame]:
     """S7 as one declarative pipeline: events + all derived tables.
     Multi-file loads get per-file id offsets by default (reference
-    parity: ids stay unique across files, cli_wrapper/main.py:296-301)."""
+    parity: ids stay unique across files, cli_wrapper/main.py:296-301).
+
+    Every frame is lazy over the trace text, so each derived frame
+    re-runs the parse when it is materialized on its own; to write or
+    collect several, materialize ``events`` first and apply
+    :data:`DERIVED_TABLES` to the stored table (see ``cli load``)."""
     events = read_trace_events(
         spark, paths, id_offset, per_file_offsets=per_file_offsets
     )
     return {
         "events": events,
-        "event_metrics": derive_event_metrics(events),
-        "events_wide": derive_events_wide(events),
-        "processes": derive_processes(events),
-        "process_roles": derive_process_roles(events),
+        **{name: derive(events) for name, derive in DERIVED_TABLES.items()},
     }

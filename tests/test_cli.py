@@ -1,23 +1,33 @@
 """End-to-end CLI parity: the reference's command surface
 (init/load/query/stats/export/rollup/chunk) driven in-process against a
-temp warehouse, using the reference's own sample trace XML."""
+temp warehouse. The load round trip runs on a small mixed XML + JSONL
+corpus written by the tests; the other commands use the reference's own
+sample trace XML when it is present."""
 
 import glob
+import json
+import math
 import os
+from collections import Counter
+from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import functions as F
 
 from db_loganalyzer_spark import cli
+from db_loganalyzer_spark.sources import trace_logs as TL
 
 REF_XML_DIR = "/root/reference/data/log_example/simlogs"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF_XML_DIR), reason="reference samples not present"
-)
+
+def _require_reference_samples():
+    if not os.path.isdir(REF_XML_DIR):
+        pytest.skip("reference samples not present")
 
 
 @pytest.fixture(scope="module")
 def warehouse(tmp_path_factory, spark):
+    _require_reference_samples()
     wh = str(tmp_path_factory.mktemp("wh"))
     base = ["--db", wh, "--database", "cli_test"]
     assert cli.main(base + ["init"]) == 0
@@ -153,6 +163,7 @@ def _oracle_rollup(attr_dicts, window=60):
 
 @pytest.fixture(scope="module")
 def ref_roundtrip(tmp_path_factory, spark):
+    _require_reference_samples()
     wh = str(tmp_path_factory.mktemp("wh_ref"))
     base = ["--db", wh, "--database", "cli_ref"]
     assert cli.main(base + ["init"]) == 0
@@ -242,3 +253,236 @@ def test_roundtrip_export_row_count(spark, ref_roundtrip, tmp_path):
     assert sum(r["n"] for r in rows if "n" in r) >= len(js) + len(xs) - sum(
         1 for a in js + xs if a.get("Type") is None
     )
+
+
+# ---------------------------------------------------------------------------
+# Load round trip on a corpus the tests write: two XML and two JSONL trace
+# files in one directory (plus a file load must skip), then one more JSONL
+# file appended by a second load. Every table load writes is compared, as a
+# multiset of rows, with what ingest() derives from the same files.
+# ---------------------------------------------------------------------------
+
+CORE = ("events", "event_metrics", "events_wide", "processes", "process_roles")
+
+# One overwrite load of the generated corpus runs 22 Spark jobs on a 4-core
+# local session; it ran 30 when every side-table write re-parsed the trace
+# text. The budget leaves a few jobs of headroom for plan variation.
+LOAD_JOB_BUDGET = 25
+
+
+def _trace_event(i, kind, machine, role=None, **extra):
+    e = {
+        "Severity": str((10, 20, 30, 40)[i % 4]),
+        "Time": f"{i}.5",
+        "DateTime": f"2025-11-23T03:{i // 60:02d}:{i % 60:02d}Z",
+        "Type": kind,
+        "Machine": machine,
+    }
+    if role:
+        e["Roles"] = role
+    e.update({k: str(v) for k, v in extra.items()})
+    return e
+
+
+def _xml(events):
+    body = "".join(
+        "<Event " + " ".join(f'{k}="{v}"' for k, v in e.items()) + " />\n"
+        for e in events
+    )
+    return '<?xml version="1.0"?>\n<Trace>\n' + body + "</Trace>\n"
+
+
+def _jsonl(events):
+    return "".join(json.dumps(e) + "\n" for e in events)
+
+
+def _write_corpus(root):
+    """batch 1: a directory of four trace files and one README; batch 2:
+    one JSONL file outside it. Machines recur across files and batches, so
+    processes and process_roles get rows for the same keys from each."""
+    logs = root / "logs"
+    logs.mkdir()
+    m1, m2, m3 = "10.0.0.1:4500", "10.0.0.2:4500", "10.0.0.3:4500"
+    (logs / "a.xml").write_text(_xml([
+        _trace_event(1, "Role", m1, "MS", As="Master", PID=41),
+        _trace_event(2, "StorageMetrics", m1, "SS", QueueSize=120, BytesInput=7,
+                     DurableLag="0.25", Ops=33),
+        _trace_event(3, "GRVLatencyMetrics", m1, "GP", Mean="0.002", P95="0.01"),
+    ]))
+    (logs / "b.xml").write_text(_xml([
+        _trace_event(4, "ProxyMetrics", m2, "CP", TxnCommitIn=55, Mutations=9),
+        _trace_event(5, "TLogMetrics", m2, "TL", Version=2000000,
+                     DurableVersion=1500000, Address=m2),
+    ]))
+    (logs / "c.jsonl").write_text(_jsonl([
+        _trace_event(6, "StorageMetrics", m3, "SS", QueueSize=80, DiskQueue=4096),
+        _trace_event(7, "SlowTask", m3, Duration="2.5"),
+    ]) + "\n" + "Severity=20 Type=SlowTask Machine=10.0.0.3:4500 Duration=1.5\n")
+    (logs / "d.json").write_text(_jsonl([
+        _trace_event(8, "Role", m1, "SS", As="StorageServer"),
+        _trace_event(9, "DataDistribution", m2, "DD", InFlightBytes=1024,
+                     WorstStorageServerQueue=600),
+    ]))
+    (logs / "README.md").write_text("not a trace file\n")
+    more = root / "more"
+    more.mkdir()
+    (more / "e.jsonl").write_text(_jsonl([
+        _trace_event(70, "StorageMetrics", m1, "SS", QueueSize=140, Ops=40),
+        _trace_event(71, "Role", m3, "TL", As="TLog"),
+    ]))
+    batch1 = sorted(str(logs / f) for f in ("a.xml", "b.xml", "c.jsonl", "d.json"))
+    return str(logs), batch1, str(more / "e.jsonl")
+
+
+def _cell(v):
+    if isinstance(v, dict):
+        return tuple(sorted(v.items()))
+    if isinstance(v, float) and math.isnan(v):
+        return "nan"
+    return v
+
+
+def _rows(df, columns):
+    return Counter(tuple(_cell(v) for v in r) for r in df.select(*columns).collect())
+
+
+def _snapshot(spark, db, like):
+    return {t: _rows(spark.table(f"{db}.{t}"), like[t].columns) for t in CORE}
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.fixture(scope="module")
+def generated_roundtrip(tmp_path_factory, spark):
+    """init, ``load DIR --mode overwrite`` under a test-owned job group,
+    then the default (append) ``load`` of one more file; the tables after
+    each load, the overwrite load's job count and the persistent RDDs it
+    left behind."""
+    root = tmp_path_factory.mktemp("gen")
+    logs, batch1, extra = _write_corpus(root)
+    db = "cli_gen"
+    base = ["--db", str(root / "wh"), "--database", db]
+    sc = spark.sparkContext
+    group = "test_cli.generated_load"
+    try:
+        assert cli.main(base + ["init"]) == 0
+        before = _persistent_rdds(spark)
+        sc.setJobGroup(group, "one overwrite load of the generated corpus")
+        try:
+            assert cli.main(base + ["load", logs, "--mode", "overwrite"]) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        residue = _persistent_rdds(spark) - before
+        want1 = TL.ingest(spark, batch1)
+        after1 = _snapshot(spark, db, want1)
+        max1 = spark.table(f"{db}.events").agg(F.max("event_id")).first()[0]
+        assert cli.main(base + ["load", extra]) == 0
+        after2 = _snapshot(spark, db, want1)
+        # today's rule for an append after a non-empty table: offset max + 1
+        want2 = TL.ingest(spark, [extra], id_offset=max1 + 1)
+        return SimpleNamespace(
+            jobs=jobs, residue=residue, after1=after1, after2=after2,
+            want1={t: _rows(df, df.columns) for t, df in want1.items()},
+            want2={t: _rows(df, df.columns) for t, df in want2.items()},
+        )
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+
+
+def test_load_overwrite_tables_equal_ingest(generated_roundtrip):
+    rt = generated_roundtrip
+    # 9 XML/JSON events + 1 k=v line; README.md and the blank line skipped
+    assert sum(rt.after1["events"].values()) == 10
+    for t in CORE:
+        assert rt.after1[t], t
+        assert rt.after1[t] == rt.want1[t], t
+
+
+def test_load_append_adds_one_batch(generated_roundtrip):
+    """The append derives side rows for its own batch only: each table is
+    the overwrite's rows plus one ingest() of the appended file."""
+    rt = generated_roundtrip
+    for t in CORE:
+        assert rt.want2[t], t
+        assert rt.after2[t] == rt.after1[t] + rt.want2[t], t
+
+
+def test_load_event_ids_unique_across_loads(generated_roundtrip):
+    ids = [row[0] for row in generated_roundtrip.after2["events"].elements()]
+    assert len(ids) == len(set(ids)) == 12
+
+
+def test_load_job_budget(generated_roundtrip):
+    jobs = generated_roundtrip.jobs
+    assert 0 < jobs <= LOAD_JOB_BUDGET, jobs
+
+
+def test_load_leaves_no_persistent_rdd(generated_roundtrip):
+    assert generated_roundtrip.residue == set()
+
+
+def test_load_after_init_numbers_like_overwrite(spark, tmp_path):
+    """The default (append) load into the empty tables init creates
+    numbers events from each file's first line, as an overwrite load
+    does, and fills init's extra columns (event_metrics.unit, ...) with
+    NULL."""
+    path = tmp_path / "one.jsonl"
+    path.write_text(_jsonl([
+        _trace_event(1, "Role", "10.0.0.1:4500", "MS", As="Master"),
+        _trace_event(2, "StorageMetrics", "10.0.0.1:4500", "SS", QueueSize=5),
+    ]))
+    db = "cli_init_append"
+    base = ["--db", str(tmp_path / "wh"), "--database", db]
+    try:
+        assert cli.main(base + ["init"]) == 0
+        assert cli.main(base + ["load", str(path)]) == 0
+        want = TL.ingest(spark, [str(path)])
+        for t, df in want.items():
+            assert _rows(spark.table(f"{db}.{t}"), df.columns) == _rows(df, df.columns), t
+        ids = spark.table(f"{db}.events").select("event_id").collect()
+        assert sorted(r[0] for r in ids) == [1, 2]
+        metrics = spark.table(f"{db}.event_metrics")
+        assert {"unit", "is_counter"} <= set(metrics.columns)
+        assert metrics.filter(F.col("unit").isNotNull()).count() == 0
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+
+
+def _tree(path):
+    return sorted(
+        (os.path.join(d, f), os.path.getmtime(os.path.join(d, f)))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+@pytest.mark.parametrize(
+    "content, flags",
+    [("notes", []), ("notes", ["--preprocessed"]), ("xml_named_dir", [])],
+)
+def test_load_without_trace_files_fails_closed(spark, tmp_path, capsys, content, flags):
+    """A directory that holds no trace file (a directory named ``*.xml``
+    is not one) is an error: exit code 2, a message on stderr and the
+    warehouse left as it was."""
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "notes.md").write_text("not a trace file\n")
+    if content == "xml_named_dir":
+        (bad / "old.xml").mkdir()
+        (bad / "old.xml" / "x.xml").write_text(
+            _xml([_trace_event(1, "Role", "10.0.0.1:4500", "MS")])
+        )
+    wh = tmp_path / "wh"
+    base = ["--db", str(wh), "--database", "cli_bad_input"]
+    try:
+        assert cli.main(base + ["init"]) == 0
+        capsys.readouterr()
+        before = _tree(wh)
+        assert cli.main(base + ["load", str(bad)] + flags) == 2
+        assert "error: no .xml/.json/.jsonl/.log/.txt files" in capsys.readouterr().err
+        assert _tree(wh) == before
+    finally:
+        spark.catalog.setCurrentDatabase("default")
