@@ -49,12 +49,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.trace_logs import py_float
+from .timeline import version_lag
 
 # reference: investigation_agent.py:239-240
 LLM_CONTEXT_CHAR_LIMIT = 120_000
 ADDITIONAL_DATA_MAX_ITEMS = 20
-
-_LAG_KEYS = ["VersionLag", "versionLag", "VersionLagValue", "Lag", "lag"]
 
 
 # ---------------------------------------------------------------------------
@@ -79,8 +78,7 @@ def extract_metrics(events: DataFrame) -> dict[str, DataFrame]:
     # coalesce short-circuits and the interpreted filter is pushed all
     # the way into the scan. On a real ingest table `fields` is a
     # stored column and the expression is small anyway. Keep coalesce.
-    lag = F.coalesce(*[py_float(F.element_at("fields", F.lit(k))) for k in _LAG_KEYS])
-    with_lag = events.withColumn("version_lag", lag)
+    with_lag = events.withColumn("version_lag", version_lag())
 
     version_lag_spikes = with_lag.filter(F.col("version_lag") > 100_000).select(
         "event_id", "ts", F.col("event").alias("event_type"),

@@ -12,12 +12,18 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.trace_logs import py_float
 
 _LAG_KEYS = ["VersionLag", "versionLag", "VersionLagValue", "Lag", "lag"]
+
+
+def version_lag() -> Column:
+    """The first of the payload's version-lag keys that parses as a
+    float (``fields`` column), else NULL."""
+    return F.coalesce(*[py_float(F.element_at("fields", F.lit(k))) for k in _LAG_KEYS])
 
 
 def _rel(ts, start) -> str:
@@ -35,10 +41,9 @@ def build_timeline(
     """Same output contract as the reference build(): first_anomaly,
     timeline items with relative timestamps, root_cause_signal,
     hot_buckets, detector_signals."""
-    lag = F.coalesce(*[py_float(F.element_at("fields", F.lit(k))) for k in _LAG_KEYS])
     sev = F.coalesce(F.col("severity"), F.lit(0))
     marks = (
-        events.withColumn("__lag", lag)
+        events.withColumn("__lag", version_lag())
         .agg(
             F.min("ts").alias("start_ts"),
             F.min(F.when(sev >= 30, F.col("ts"))).alias("severe_ts"),

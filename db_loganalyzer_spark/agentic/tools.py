@@ -77,46 +77,14 @@ def global_summary(events: DataFrame) -> dict:
     }
 
 
-def high_severity_buckets(
-    events: DataFrame,
-    min_severity: int = 20,
-    bucket_seconds: int = 600,
-    limit: int = 20,
-) -> list[dict]:
-    rows = (
-        A.bucket_heatmap(
-            events,
-            bucket_seconds,
-            min_max_severity=min_severity,
-            ordered=False,
-        )
-        .orderBy(F.desc("max_severity"), F.desc("n"), "bucket")
-        .limit(limit)
-        .collect()
-    )
-    return [
-        {
-            "bucket_start_epoch": r["bucket"],
-            "max_severity": r["max_severity"],
-            "count": r["n"],
-        }
-        for r in rows
-    ]
-
-
-def get_uncovered(
-    events: DataFrame,
-    inspected_buckets: list[int],
-    min_severity: int = 20,
-    bucket_seconds: int = 600,
-    limit: int | None = None,
-) -> list[dict]:
-    """High-severity buckets not yet inspected (hotspot_selector.get_uncovered)."""
+def _ranked_buckets(events, min_severity, bucket_seconds, limit, exclude=()) -> list[dict]:
+    """Heatmap buckets whose max severity reaches ``min_severity``, most
+    severe and busiest first, without the ``exclude`` bucket starts."""
     df = A.bucket_heatmap(
         events, bucket_seconds, min_max_severity=min_severity, ordered=False
     )
-    if inspected_buckets:
-        df = df.filter(~F.col("bucket").isin(inspected_buckets))
+    if exclude:
+        df = df.filter(~F.col("bucket").isin(exclude))
     df = df.orderBy(F.desc("max_severity"), F.desc("n"), "bucket")
     if limit is not None:
         df = df.limit(limit)
@@ -128,6 +96,26 @@ def get_uncovered(
         }
         for r in df.collect()
     ]
+
+
+def high_severity_buckets(
+    events: DataFrame,
+    min_severity: int = 20,
+    bucket_seconds: int = 600,
+    limit: int = 20,
+) -> list[dict]:
+    return _ranked_buckets(events, min_severity, bucket_seconds, limit)
+
+
+def get_uncovered(
+    events: DataFrame,
+    inspected_buckets: list[int],
+    min_severity: int = 20,
+    bucket_seconds: int = 600,
+    limit: int | None = None,
+) -> list[dict]:
+    """High-severity buckets not yet inspected (hotspot_selector.get_uncovered)."""
+    return _ranked_buckets(events, min_severity, bucket_seconds, limit, inspected_buckets)
 
 
 def context_window(

@@ -118,29 +118,34 @@ def handle_load(args) -> int:
         paths = [path]
     spark = _spark(args)
     _use(spark, args)
-    if args.preprocessed:
-        events = load_preprocessed_events(spark, paths[0])
-        events.write.mode(args.mode).saveAsTable("events")
-        print(f"loaded {spark.table('events').count()} preprocessed events")
-        return 0
-    # appending into a populated DB: continue event_ids past the current
-    # max so ids stay unique across CLI invocations (the reference tracks
-    # the DB's max id the same way, cli_wrapper/main.py:296-301)
     prev_max = None
-    if args.mode == "append" and spark.catalog.tableExists("events"):
-        prev_max = spark.table("events").agg(F.max("event_id")).first()[0]
-    id_offset = 0 if prev_max is None else prev_max + 1
-    # parse once: the side tables derive from the stored events (only the
-    # rows this load added), not from the lazy parse, which every write
-    # would otherwise re-run
-    events = read_trace_events(spark, paths, id_offset, per_file_offsets=True)
+    if args.preprocessed:
+        events = load_preprocessed_events(spark, paths)
+    else:
+        # appending into a populated DB: continue event_ids past the
+        # current max so ids stay unique across CLI invocations (the
+        # reference tracks the DB's max id the same way,
+        # cli_wrapper/main.py:296-301)
+        if args.mode == "append" and spark.catalog.tableExists("events"):
+            prev_max = spark.table("events").agg(F.max("event_id")).first()[0]
+        id_offset = 0 if prev_max is None else prev_max + 1
+        events = read_trace_events(spark, paths, id_offset, per_file_offsets=True)
     _save(spark, events, "events", args.mode)
     stored = spark.table("events")
     print(f"events: {stored.count()} rows")
-    if prev_max is not None:
-        stored = stored.filter(F.col("event_id") > prev_max)
+    # the side tables derive from the rows this load added. A trace load
+    # takes them from the stored table, not from the lazy parse, which
+    # every write would otherwise re-run. Preprocessed files carry their
+    # own ids, which need not exceed the table's max, so their rows are
+    # the frame the load read.
+    if args.preprocessed:
+        added = events
+    elif prev_max is None:
+        added = stored
+    else:
+        added = stored.filter(F.col("event_id") > prev_max)
     for name, derive in DERIVED_TABLES.items():
-        _save(spark, derive(stored), name, args.mode)
+        _save(spark, derive(added), name, args.mode)
         print(f"{name}: {spark.table(name).count()} rows")
     return 0
 

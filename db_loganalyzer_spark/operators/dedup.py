@@ -598,7 +598,15 @@ def minhash_signatures(
     hash_family: str = "portable",
 ) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of the
-    i-th hash of the shingle. One narrow pass — no shuffle.
+    i-th hash of the shingle. A batch input is not one narrow pass: the
+    per-seed minimum is a ``groupBy("id")`` with an id-keyed exchange
+    (BATCH SHAPE below), and an input scanned into fewer partitions than
+    the session's parallelism is first repartitioned (``_spread``). A
+    streaming input is one narrow pass, no shuffle.
+
+    ``id_col`` must be unique: rows that share an id are aggregated into
+    ONE signature, the element-wise min of their signatures (the
+    signature of their shingle union), not one signature per row.
 
     ``portable``: the i-th hash is the affine family
     ``((2i+1)*H(g) + (10007*i + 12345)) mod p`` over ONE portable base

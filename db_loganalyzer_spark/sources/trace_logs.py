@@ -330,16 +330,17 @@ def read_trace_events(
     return events_from_attrs(parsed, id_offset)
 
 
-def load_preprocessed_events(spark: SparkSession, path: str) -> DataFrame:
+def load_preprocessed_events(spark: SparkSession, paths) -> DataFrame:
     """S4 — preprocessed JSON-array load (reference tools/parser.py:91-126
-    ``load_event_models``): one JSON array of EventModel dicts, ISO
+    ``load_event_models``): each file (``paths`` is one path or a list)
+    one JSON array of EventModel dicts, ISO
     timestamps with an optional trailing Z, ``raw_json``/``fields_json``
     possibly double-encoded as strings.
 
     ``spark.read.json(multiLine=True)`` handles the array form natively;
     the nested JSON strings decode with ``from_json`` into the fields map
     (kept as MAP<STRING,STRING> like the ingest path)."""
-    raw = spark.read.option("multiLine", "true").json(path)
+    raw = spark.read.option("multiLine", "true").json(paths)
     cols = set(raw.columns)
 
     def m(name):

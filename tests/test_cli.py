@@ -451,6 +451,50 @@ def test_load_after_init_numbers_like_overwrite(spark, tmp_path):
         spark.catalog.setCurrentDatabase("default")
 
 
+def _preprocessed(i, kind, machine, role, ts, **fields):
+    return {
+        "event_id": i, "ts": ts, "severity": 10 + 10 * (i % 3), "event": kind,
+        "role": role, "machine_id": machine, "address": machine,
+        "fields_json": json.dumps({k: str(v) for k, v in fields.items()}),
+    }
+
+
+def test_load_preprocessed_dir_writes_every_file_and_side_table(spark, tmp_path):
+    """``load DIR --preprocessed`` after init reads every JSON-array file
+    in the directory and derives the four side tables from what it read:
+    each table is load_preprocessed_events(both files) plus DERIVED_TABLES
+    applied to it."""
+    pre = tmp_path / "pre"
+    pre.mkdir()
+    m1, m2 = "10.0.0.1:4500", "10.0.0.2:4500"
+    (pre / "a.json").write_text(json.dumps([
+        _preprocessed(1, "StorageMetrics", m1, "SS", "2025-11-23T03:00:01Z",
+                      QueueSize=120, DurableLag="0.25"),
+        _preprocessed(2, "Role", m1, "MS", "2025-11-23T03:00:02Z", As="Master"),
+    ]))
+    (pre / "b.json").write_text(json.dumps([
+        _preprocessed(7, "ProxyMetrics", m2, "CP", "2025-11-23T03:00:07Z",
+                      TxnCommitIn=55, Mutations=9),
+        _preprocessed(8, "GRVLatencyMetrics", m2, "GP", "2025-11-23T03:00:08Z",
+                      Mean="0.002", P95="0.01"),
+    ]))
+    db = "cli_preprocessed"
+    base = ["--db", str(tmp_path / "wh"), "--database", db]
+    try:
+        assert cli.main(base + ["init"]) == 0
+        assert cli.main(base + ["load", str(pre), "--preprocessed"]) == 0
+        events = TL.load_preprocessed_events(
+            spark, [str(pre / "a.json"), str(pre / "b.json")]
+        )
+        want = {"events": events, **{t: d(events) for t, d in TL.DERIVED_TABLES.items()}}
+        for t, df in want.items():
+            got = _rows(spark.table(f"{db}.{t}"), df.columns)
+            assert got, t
+            assert got == _rows(df, df.columns), t
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+
+
 def _tree(path):
     return sorted(
         (os.path.join(d, f), os.path.getmtime(os.path.join(d, f)))

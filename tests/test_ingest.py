@@ -4,10 +4,12 @@ using the reference's own sample files where available."""
 
 import json
 import os
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
+from db_loganalyzer_spark.model.schemas import MANDATORY_FIELDS
 from db_loganalyzer_spark.sources import trace_logs as TL
 
 REF_JSON = "/root/reference/data/sample_log.json"
@@ -209,6 +211,84 @@ def test_code_coverage_reference_sample(spark):
     assert all(r.severity == 10 for r in rows)
     assert all(r.src_file and r.src_line for r in rows)
     assert any("push between commits" in r.comment for r in rows)
+
+
+# ---------------------------------------------------------------------------
+# Counterparts of the reference-sample tests on an FDB-shaped corpus the
+# tests write: three XML trace files (``<?xml``/``<Trace>`` preamble, one
+# ``<Event/>`` per line, a few CodeCoverage tags) and one JSONL file.
+# ---------------------------------------------------------------------------
+
+_FDB_KINDS = ["Role", "StorageMetrics", "TLogMetrics", "SlowTask", "ProxyMetrics"]
+
+
+def _fdb_attrs(i, machine, kind):
+    a = {
+        "Severity": str((10, 10, 20, 30, 40)[i % 5]),
+        "Time": f"{1725570885 + i}.{i:06d}",
+        "DateTime": f"2024-09-05T21:{i // 60 % 60:02d}:{i % 60:02d}Z",
+        "Type": kind,
+        "ID": f"{i:016x}",
+        "Machine": machine,
+        "LogGroup": "default",
+        "Roles": ("CP,SS", "TL", "MS")[i % 3],
+    }
+    if kind == "CodeCoverage":
+        a.update(File=f"fdbserver/Actor{i}.actor.cpp", Line=str(100 + i),
+                 Comment=f"branch {i} taken")
+    else:
+        a.update(QueueSize=str(i * 7), Version=str(2_000_000 + i))
+    return a
+
+
+@pytest.fixture(scope="module")
+def fdb_corpus(tmp_path_factory):
+    d = tmp_path_factory.mktemp("fdb")
+    xml, n_xml, n_cov, i = [], 0, 0, 0
+    for f in range(3):
+        machine = f"2.0.1.{f}:4500"
+        lines = []
+        for j in range(40):
+            i += 1
+            kind = "CodeCoverage" if f < 2 and j % 17 == 3 else _FDB_KINDS[i % 5]
+            n_cov += kind == "CodeCoverage"
+            attrs = " ".join(f'{k}="{v}"' for k, v in _fdb_attrs(i, machine, kind).items())
+            lines.append(f"<Event {attrs} />")
+        path = d / f"trace.2.0.1.{f}.4500.{1725570885 + f}.xml"
+        path.write_text('<?xml version="1.0"?>\n<Trace>\n' + "\n".join(lines) + "\n</Trace>\n")
+        xml.append(str(path))
+        n_xml += len(lines)
+    jsonl = d / "trace.2.0.1.9.4500.json"
+    rows = [_fdb_attrs(i, "2.0.1.9:4500", _FDB_KINDS[i % 5]) for i in range(1, 121)]
+    jsonl.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    return SimpleNamespace(xml=xml, n_xml=n_xml, n_cov=n_cov, jsonl=str(jsonl), n_jsonl=len(rows))
+
+
+def _assert_envelope_split(ev):
+    assert ev.filter(F.col("event").isNull()).count() == 0
+    leaked = F.exists(F.map_keys("fields"), lambda k: k.isin(*MANDATORY_FIELDS))
+    assert ev.filter(leaked).count() == 0
+    assert ev.filter(F.col("ts").isNull() | F.col("machine_id").isNull()).count() == 0
+
+
+def test_generated_fdb_jsonl(spark, fdb_corpus):
+    ev = TL.read_trace_events(spark, fdb_corpus.jsonl)
+    assert ev.count() == fdb_corpus.n_jsonl
+    _assert_envelope_split(ev)
+
+
+def test_generated_fdb_xml(spark, fdb_corpus):
+    ev = TL.read_trace_events(spark, fdb_corpus.xml)
+    assert ev.count() == fdb_corpus.n_xml
+    _assert_envelope_split(ev)
+
+
+def test_code_coverage_generated_fdb_xml(spark, fdb_corpus):
+    rows = TL.extract_code_coverage(spark, fdb_corpus.xml).collect()
+    assert len(rows) == fdb_corpus.n_cov > 1
+    assert all(r.severity in (10, 20, 30, 40) for r in rows)
+    assert all(r.src_file and r.src_line for r in rows)
+    assert all(r.comment.startswith("branch ") for r in rows)
 
 
 def test_multi_file_per_file_offsets(spark, fixture_dir, tmp_path):
