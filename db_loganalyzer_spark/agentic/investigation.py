@@ -23,7 +23,7 @@ deterministic and is what this module re-expresses Spark-first:
   them on exit, error included. The tools, detectors and formatter it
   calls are lazy over that one cached frame, so the loop's Spark jobs do
   not each re-read and re-parse the trace text. The only storage left
-  behind is ``rollback_analysis``'s own four ``localCheckpoint`` frames.
+  behind is ``rollback_analysis``'s own ``localCheckpoint`` frame.
 
 Documented deviations from the reference (kept deliberately):
 - the reference's display sort key ``-(sev) if sev>=40 else -1000``

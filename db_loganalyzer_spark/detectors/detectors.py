@@ -548,82 +548,84 @@ def metric_anomalies(
 def rollback_analysis(events: DataFrame) -> dict[str, DataFrame]:
     """D9 — combine version-drop, version-reset and recovery-version
     regression scans into one status row (reference:
-    global_scanner.py:258-401). Ordering partitioned by machine_id keeps
-    the scan scalable; the reference's single global order is the
-    machine_id=constant special case."""
-    from ..operators.windows import (
-        lag_regressions_stitched,
-        value_drops_stitched,
-        value_resets_stitched,
-    )
+    global_scanner.py:258-401). The reference scans each version column
+    in one global ``(ts, event_id)`` order; here all three columns share
+    ONE stitched scan of that order (``windows.stitched_prev``: a range
+    shuffle plus one boundary-carry row per partition, no
+    single-partition window). ``prev_<col>`` is the column's last
+    non-null value before each row, which is the previous value among
+    the rows where the column is set — for RecoveryVersion, exactly the
+    reference's plain lag over RecoveryState rows."""
+    from ..operators.windows import stitched_prev
 
     def field_num(name):
         return py_float(F.element_at("fields", F.lit(name)))
 
-    # The narrow parsed frame is persisted because the stitched scans
-    # below run EAGER boundary-carry jobs at construction — without the
-    # persist each of those jobs re-runs the full log parse upstream
-    # (measured: 304 s; with it, the parse runs once — see
-    # OPTIMIZATION_r13.md). In-query persist only: rebuilt on every
-    # run, nothing cached across runs.
+    # The narrow parsed frame is persisted because the stitched scan runs
+    # EAGER range-sample and checkpoint jobs at construction — without
+    # the persist each of them re-runs the full log parse upstream (see
+    # OPTIMIZATION_r13.md). The not-null filter is applied on top of the
+    # persisted projection, not below it: pushed under the projection,
+    # Catalyst substitutes the three field parses into the filter and
+    # evaluates them twice (on d09's synthetic ``fields`` map at sf0.1,
+    # 4 cores, the first stage took 7.6 s of task time instead of 3.2 s).
     versions = events.select(
         "event_id", "ts",
         field_num("CommittedVersion").alias("committed"),
         field_num("DurableVersion").alias("durable"),
+        F.when(F.col("event") == "RecoveryState", field_num("RecoveryVersion")).alias("rv"),
     ).persist()
-    # The reference's version scans ARE a single global order
-    # (machine_id=constant special case, see docstring). The stitched
-    # operators compute that exact order DISTRIBUTED — range shuffle +
-    # one boundary-carry row per partition — instead of a
-    # single-partition sort: measured 49.2 s -> 1.0 s per scan on 10M
-    # events (OPTIMIZATION_r13.md), identical rows (w12's oracle pins
-    # the stitched form; d09's oracle pins this composition).
-    drops_c = value_drops_stitched(
-        versions.filter(F.col("committed").isNotNull()), "committed",
-        ts_col="ts", tiebreak="event_id",
+    c, d, rv = F.col("committed"), F.col("durable"), F.col("rv")
+    scan = stitched_prev(
+        versions.filter(c.isNotNull() | d.isNotNull() | rv.isNotNull()),
+        ["committed", "durable", "rv"], ts_col="ts", tiebreak="event_id",
     )
-    drops_d = value_drops_stitched(
-        versions.filter(F.col("durable").isNotNull()), "durable",
-        ts_col="ts", tiebreak="event_id",
-    )
-    resets = value_resets_stitched(
-        versions.filter(F.col("committed").isNotNull()), "committed",
-        high=1_000_000, low=1_000_000, ts_col="ts", tiebreak="event_id",
-    )
-    rv = events.filter(F.col("event") == "RecoveryState").select(
-        "event_id", "ts", field_num("RecoveryVersion").alias("rv")
-    ).filter(F.col("rv").isNotNull()).persist()
-    rv_regr = lag_regressions_stitched(
-        rv, "rv", ts_col="ts", tiebreak="event_id",
-    )
-    # Persist hygiene (VERDICT r13 item 8): the stitched operators
-    # localCheckpoint(eager=True) their range-sorted input at
-    # construction, so by this point every returned frame reads the
-    # checkpointed partitions, NOT the persisted lineage — the persists
-    # above exist only so the four eager construction jobs share one
-    # parse. Release them now instead of pinning two event-volume frames
-    # in executor storage for the rest of the session.
+    # The scan's localCheckpoint was taken eagerly at construction, so
+    # every frame below reads the checkpointed partitions, not the
+    # persisted lineage; release it instead of pinning an event-volume
+    # frame in executor storage for the rest of the session.
     versions.unpersist()
-    rv.unpersist()
 
-    drops = drops_c.select("event_id", "ts", F.lit("CommittedVersion").alias("column"),
-                           "prev_value", F.col("committed").alias("value"), "drop_amount")
-    drops = drops.unionByName(
-        drops_d.select("event_id", "ts", F.lit("DurableVersion").alias("column"),
-                       "prev_value", F.col("durable").alias("value"), "drop_amount")
+    def prev(v):
+        return F.col(f"prev_{v}")
+
+    def dropped(v):
+        return F.col(v).isNotNull() & prev(v).isNotNull() & (F.col(v) < prev(v))
+
+    def drop_amount(v):
+        return prev(v) - F.col(v)
+
+    is_reset = (prev("committed") > 1_000_000) & (c < 1_000_000)
+
+    def drop_rows(v, name):
+        return scan.filter(dropped(v)).select(
+            "event_id", "ts", F.lit(name).alias("column"), prev(v).alias("prev_value"),
+            F.col(v).alias("value"), drop_amount(v).alias("drop_amount"),
+        )
+
+    drops = drop_rows("committed", "CommittedVersion").unionByName(
+        drop_rows("durable", "DurableVersion")
     )
-    summary = (
-        drops.agg(
-            F.count(F.lit(1)).alias("num_drops"),
-            F.max("drop_amount").alias("max_drop"),
-        )
-        .crossJoin(resets.agg(F.count(F.lit(1)).alias("num_resets")))
-        .crossJoin(rv_regr.agg(F.count(F.lit(1)).alias("num_recovery_resets")))
-        .withColumn(
-            "detected",
-            (F.col("num_drops") > 0) | (F.col("num_resets") > 0)
-            | (F.col("num_recovery_resets") > 0),
-        )
+    resets = scan.filter(is_reset).select(
+        "event_id", "ts", "committed", "durable", prev("committed").alias("prev_value")
+    )
+    rv_regr = scan.filter(dropped("rv")).select(
+        "event_id", "ts", "rv", prev("rv").alias("prev_value"),
+        drop_amount("rv").alias("drop_amount"),
+    )
+
+    def max_drop(v):
+        return F.max(F.when(dropped(v), drop_amount(v)))
+
+    summary = scan.agg(
+        (F.count_if(dropped("committed")) + F.count_if(dropped("durable"))).alias("num_drops"),
+        F.greatest(max_drop("committed"), max_drop("durable")).alias("max_drop"),
+        F.count_if(is_reset).alias("num_resets"),
+        F.count_if(dropped("rv")).alias("num_recovery_resets"),
+    ).withColumn(
+        "detected",
+        (F.col("num_drops") > 0) | (F.col("num_resets") > 0)
+        | (F.col("num_recovery_resets") > 0),
     )
     return {"summary": summary, "drops": drops, "resets": resets, "recovery_regressions": rv_regr}
 

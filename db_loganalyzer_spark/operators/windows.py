@@ -420,54 +420,73 @@ def _pid_map(pairs: dict[int, object], value_type: str):
     return F.element_at(F.create_map(*entries), F.col("__pid"))
 
 
-def _last_value_carry(part: DataFrame, order, value_col: str, nonnull_only: bool):
-    """pid -> value to carry INTO each partition: the last (by total order)
-    value among all EARLIER partitions; last non-null when nonnull_only."""
-    src = part.filter(F.col(value_col).isNotNull()) if nonnull_only else part
+def _last_value_carries(part: DataFrame, order, value_cols: list[str], nonnull_only: bool):
+    """Per value column, pid -> value to carry INTO each partition: the
+    last (by total order) value among all EARLIER partitions; last
+    non-null when nonnull_only. One collect of one row per partition
+    serves every column."""
+    def last(c):
+        s = F.struct(*order, F.col(c).alias("__v"))
+        return F.max(F.when(F.col(c).isNotNull(), s) if nonnull_only else s)
+
     tail = (
-        src.groupBy("__pid")
-        .agg(F.max(F.struct(*order, F.col(value_col).alias("__v"))).alias("__s"))
-        .select("__pid", F.col("__s.__v").alias("__v"))
+        part.groupBy("__pid")
+        .agg(*[last(c).alias(f"__s{i}") for i, c in enumerate(value_cols)])
         .collect()
     )
-    lasts = {r["__pid"]: r["__v"] for r in tail}
-    # carry[pid] = last value of the nearest earlier partition that has one.
-    # A NULL carry (plain-lag mode, predecessor's last value is NULL) and an
-    # absent carry (no predecessor rows at all) both surface as NULL
-    # prev_value downstream, so None entries are simply dropped.
-    carry, running, seen = {}, None, False
-    for pid in range(part.rdd.getNumPartitions()):
-        if seen and running is not None:
-            carry[pid] = running
-        if pid in lasts:
-            running, seen = lasts[pid], True
-    return carry
+    n = part.rdd.getNumPartitions()
+    carries = []
+    for i in range(len(value_cols)):
+        lasts = {r["__pid"]: r[f"__s{i}"]["__v"] for r in tail if r[f"__s{i}"] is not None}
+        # carry[pid] = last value of the nearest earlier partition that has
+        # one. A NULL carry (plain-lag mode, predecessor's last value is
+        # NULL) and an absent carry (no predecessor rows at all) both
+        # surface as NULL prev downstream, so None entries are dropped.
+        carry, running, seen = {}, None, False
+        for pid in range(n):
+            if seen and running is not None:
+                carry[pid] = running
+            if pid in lasts:
+                running, seen = lasts[pid], True
+        carries.append(carry)
+    return carries
 
 
-def _stitched_prev(
+def stitched_prev(
     df: DataFrame,
-    value_col: str,
-    ts_col: str,
-    tiebreak: str | None,
-    num_partitions: int | None,
-    nonnull_only: bool,
-):
-    """df + global ``prev_value`` (last non-null before each row when
-    ``nonnull_only``, else plain lag-1), computed without any
-    single-partition window."""
+    value_cols: list[str],
+    ts_col: str = "ts",
+    tiebreak: str | None = "event_id",
+    num_partitions: int | None = None,
+    nonnull_only: bool = True,
+) -> DataFrame:
+    """df + a global ``prev_<col>`` for each of ``value_cols`` (the last
+    non-null value before each row when ``nonnull_only``, else plain
+    lag-1), computed without any single-partition window: one range sort
+    and checkpoint, one carry collect and one window for all columns."""
     part, order = _range_sorted(df, ts_col, tiebreak, num_partitions)
-    vtype = dict(df.dtypes)[value_col]
-    carry = _pid_map(_last_value_carry(part, order, value_col, nonnull_only), vtype)
+    types = dict(df.dtypes)
+    carries = _last_value_carries(part, order, value_cols, nonnull_only)
     w = Window.partitionBy("__pid").orderBy(*order)
-    if nonnull_only:
-        local_prev = F.last(F.col(value_col), ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prev = F.coalesce(local_prev, carry)
-    else:
+
+    def prev(c, carry):
+        carry = _pid_map(carry, types[c])
+        if nonnull_only:
+            local_prev = F.last(F.col(c), ignorenulls=True).over(
+                w.rowsBetween(Window.unboundedPreceding, -1)
+            )
+            return F.coalesce(local_prev, carry)
         rn = F.row_number().over(w)
-        prev = F.when(rn == 1, carry).otherwise(F.lag(F.col(value_col)).over(w))
-    return part.withColumn("prev_value", prev).drop("__pid")
+        return F.when(rn == 1, carry).otherwise(F.lag(F.col(c)).over(w))
+
+    return part.withColumns(
+        {f"prev_{c}": prev(c, carry) for c, carry in zip(value_cols, carries)}
+    ).drop("__pid")
+
+
+def _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, nonnull_only):
+    out = stitched_prev(df, [value_col], ts_col, tiebreak, num_partitions, nonnull_only)
+    return out.withColumnRenamed(f"prev_{value_col}", "prev_value")
 
 
 def value_drops_stitched(
@@ -478,7 +497,7 @@ def value_drops_stitched(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """W1 over a truly global order, no single-partition window."""
-    out = _stitched_prev(df, value_col, ts_col, tiebreak, num_partitions, True)
+    out = _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, True)
     return out.filter(
         F.col(value_col).isNotNull()
         & F.col("prev_value").isNotNull()
@@ -496,7 +515,7 @@ def value_resets_stitched(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """W2 over a truly global order."""
-    out = _stitched_prev(df, value_col, ts_col, tiebreak, num_partitions, True)
+    out = _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, True)
     return out.filter((F.col("prev_value") > high) & (F.col(value_col) < low))
 
 
@@ -508,7 +527,7 @@ def lag_regressions_stitched(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """W3 over a truly global order."""
-    out = _stitched_prev(df, value_col, ts_col, tiebreak, num_partitions, False)
+    out = _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, False)
     return out.filter(
         F.col("prev_value").isNotNull() & (F.col(value_col) < F.col("prev_value"))
     ).withColumn("drop_amount", F.col("prev_value") - F.col(value_col))

@@ -96,7 +96,13 @@ def main():
     if unknown:
         sys.exit(f"unknown entry name(s): {sorted(unknown)}")
 
-    spark = get_spark("oracle-check", shuffle_partitions=8)
+    # no console progress bar: its \r-redrawn "[Stage ...]" text would
+    # land at the front of the "ok"/"FAIL" lines this script prints
+    spark = get_spark(
+        "oracle-check",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

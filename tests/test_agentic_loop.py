@@ -198,6 +198,33 @@ def test_global_summary_matches_separate_tools(spark, severities, max_severity):
     assert summary["time_span"] == T.time_span(df)
 
 
+def test_scanner_key_order_is_canonical(spark):
+    """severity_counts keys come back in ascending severity with NULL last
+    on a frame spread over several partitions, from both the tool and
+    global_summary, so the prompt's two severity_counts blocks do not
+    depend on the partition layout. The event histogram keeps Spark's
+    order: count descending, then event ascending with NULL first."""
+    sevs = [40, None, 10, 30, 20, 5]
+    rows = [
+        (i, T0 + dt.timedelta(seconds=i), sevs[i % 6], [None, "Eb", "Ea"][i % 3], None, {})
+        for i in range(60)
+    ] + [(60, T0, 20, "Ec", None, {})]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, severity int, event string, role string,"
+        "fields map<string,string>",
+    ).repartition(5)
+    assert df.rdd.getNumPartitions() == 5
+    want = [5, 10, 20, 30, 40, None]
+    assert list(T.severity_counts(df)) == want
+    summary = T.global_summary(df)
+    assert list(summary["severity_counts"]) == want
+    assert list(summary["event_histogram"].items()) == [
+        (None, 20), ("Ea", 20), ("Eb", 20), ("Ec", 1)
+    ]
+    assert list(T.event_histogram(df, 2)) == [None, "Ea"]
+
+
 # ---------------------------------------------------------------------------
 # timeline builder
 # ---------------------------------------------------------------------------

@@ -129,21 +129,84 @@ def test_rollback_analysis(spark, log_events):
     assert s.num_recovery_resets == 1
 
 
+def test_rollback_analysis_matches_per_column_windows(spark):
+    """The one stitched scan over all three version columns returns the
+    same drops, resets and recovery regressions, with the same columns, as
+    the reference's separate single-partition scans: W1/W2 over the rows
+    that carry each version, W3 (plain lag) over RecoveryState rows."""
+    import random
+
+    from db_loganalyzer_spark.operators import windows as W
+    from db_loganalyzer_spark.sources.trace_logs import py_float
+
+    rng = random.Random(5)
+    rows = []
+    for i in range(160):
+        fields = {}
+        for key in ("CommittedVersion", "DurableVersion", "RecoveryVersion"):
+            if rng.random() < 0.5:
+                fields[key] = rng.choice([500, 900_000, 1_200_000, 2_000_000, 3_500_000])
+        event = rng.choice(["StorageMetrics", "RecoveryState", "ProxyMetrics"])
+        # ts ties every 3 rows; event_id breaks them
+        rows.append(_ev(i, i // 3, event, **fields))
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, severity int, event string, role string, "
+        "machine_id string, fields map<string,string>",
+    )
+
+    def num(name):
+        return py_float(F.element_at("fields", F.lit(name)))
+
+    v = df.select(
+        "event_id", "ts", num("CommittedVersion").alias("committed"),
+        num("DurableVersion").alias("durable"),
+    )
+    committed = v.filter(F.col("committed").isNotNull())
+
+    def drops_ref(col, name):
+        return W.value_drops(
+            v.filter(F.col(col).isNotNull()), col, allow_global_order=True
+        ).select("event_id", "ts", F.lit(name).alias("column"), "prev_value",
+                 F.col(col).alias("value"), "drop_amount")
+
+    rv = df.filter(F.col("event") == "RecoveryState").select(
+        "event_id", "ts", num("RecoveryVersion").alias("rv")
+    ).filter(F.col("rv").isNotNull())
+    want = {
+        "drops": drops_ref("committed", "CommittedVersion").unionByName(
+            drops_ref("durable", "DurableVersion")),
+        "resets": W.value_resets(committed, "committed", high=1_000_000, low=1_000_000,
+                                 allow_global_order=True),
+        "recovery_regressions": W.lag_regressions(rv, "rv", allow_global_order=True),
+    }
+    got = D.rollback_analysis(df)
+    for k, ref in want.items():
+        assert got[k].columns == ref.columns, k
+        assert sorted(got[k].collect()) == sorted(ref.collect()), k
+        assert ref.count() > 0, k
+    s = got["summary"].collect()[0]
+    drops = want["drops"].collect()
+    assert s.num_drops == len(drops)
+    assert s.max_drop == max(r.drop_amount for r in drops)
+    assert s.num_resets == want["resets"].count()
+    assert s.num_recovery_resets == want["recovery_regressions"].count()
+
 def test_rollback_analysis_releases_input_persists(spark, log_events):
     """Persist hygiene (VERDICT r13 item 8): rollback_analysis persists
-    its two narrow parsed frames only to share the parse across the four
-    stitched constructions; both must be unpersisted before it returns.
-    The only storage residue allowed is the stitched operators' own
-    localCheckpoints (one per scan — four), which the returned frames
-    read from."""
+    its narrow parsed frame only to share the parse across the stitched
+    scan's eager construction jobs; it must be unpersisted before it
+    returns. The only storage residue allowed is the scan's own
+    localCheckpoint (one scan for all three version columns), which the
+    returned frames read from."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     out = D.rollback_analysis(log_events)
     out["summary"].collect()
     after = set(jsc.getPersistentRDDs().keySet().toArray())
-    # new residue == the 4 eager localCheckpoints; the versions/rv
-    # persists would make this 6
-    assert len(after - before) == 4
+    # new residue == the one eager localCheckpoint; the versions persist
+    # would make this 2
+    assert len(after - before) == 1
 
 
 def test_recovery_episodes(spark, log_events):

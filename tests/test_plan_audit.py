@@ -36,7 +36,6 @@ SF_DIR = "/root/testdata/sf0.001"
 BNLJ_OK = {
     # 1-row global stat/threshold frames broadcast onto a big side
     "j02_global_stats_z",
-    "d09_rollback_analysis",
     "w09_relative_timeline",  # 1-row t0
     "t11_tfidf_terms",  # 1-row corpus-N
     "t12_bm25_search",  # 1-row avgdl

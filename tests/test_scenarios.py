@@ -199,11 +199,14 @@ def test_sideband_phased_loop_surfaces_evidence(spark, clogged_sideband):
     assert any("recovery" in q.lower() for q in rag_queries)
 
 
-# One investigation over CloggedSideband runs 78 Spark jobs on a 4-core
-# local session; it ran 101 before investigate persisted its input, when
-# every job recomputed the input's lineage. The budget leaves a few jobs
-# of headroom for plan variation.
-SIDEBAND_JOB_BUDGET = 84
+# Jobs one investigation runs on a 4-core local session, plus 6 of
+# headroom for plan variation. CloggedSideband runs 60 (101 before
+# investigate persisted its input, 78 before rollback_analysis shared one
+# stitched scan and the phase-A sweep became one aggregate);
+# ClogWithRollbacks runs 61 (was 82) and StoragePressure 55 (was 68).
+SIDEBAND_JOB_BUDGET = 66
+ROLLBACKS_JOB_BUDGET = 67
+PRESSURE_JOB_BUDGET = 61
 
 
 def _sideband_llm(prompt):
@@ -218,22 +221,25 @@ def _persistent_rdds(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
-@pytest.fixture(scope="module")
-def sideband_investigation(spark, clogged_sideband):
-    """One investigate over CloggedSideband under a test-owned job group:
-    its result, its job count and the persistent RDDs it left behind."""
+def _investigation(spark, events, group):
+    """One investigate over ``events`` under a test-owned job group: its
+    result, its job count and the persistent RDDs it left behind."""
     sc = spark.sparkContext
-    group = "test_scenarios.sideband_investigation"
     before = _persistent_rdds(spark)
-    sc.setJobGroup(group, "one CloggedSideband investigation")
+    sc.setJobGroup(group, "one investigation")
     try:
         res = PhasedInvestigationAgent(_sideband_llm, max_iterations=6).investigate(
-            clogged_sideband, "What is the root cause of this incident?"
+            events, "What is the root cause of this incident?"
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     return res, jobs, _persistent_rdds(spark) - before
+
+
+@pytest.fixture(scope="module")
+def sideband_investigation(spark, clogged_sideband):
+    return _investigation(spark, clogged_sideband, "test_scenarios.sideband_investigation")
 
 
 def test_sideband_investigation_job_budget(sideband_investigation):
@@ -247,13 +253,13 @@ def test_sideband_investigation_releases_its_storage(
     spark, clogged_sideband, sideband_investigation
 ):
     """investigate persists its input (and the baselines it derives) and
-    releases both on exit: the only new persistent RDDs are
-    rollback_analysis's four stitched localCheckpoints (see
+    releases both on exit: the only new persistent RDD is
+    rollback_analysis's one stitched localCheckpoint (see
     test_detectors.py::test_rollback_analysis_releases_input_persists)."""
     from pyspark import StorageLevel
 
     _, _, residue = sideband_investigation
-    assert len(residue) == 4
+    assert len(residue) == 1
     assert clogged_sideband.storageLevel == StorageLevel.NONE
 
 
@@ -273,7 +279,7 @@ def test_investigation_releases_storage_when_llm_fails(spark, clogged_sideband):
         )
     # the input was held in storage while the loop ran, and released after
     assert held and held[0] != StorageLevel.NONE
-    assert len(_persistent_rdds(spark) - before) == 4  # rollback_analysis only
+    assert len(_persistent_rdds(spark) - before) == 1  # rollback_analysis only
     assert clogged_sideband.storageLevel == StorageLevel.NONE
 
 
@@ -445,6 +451,15 @@ def test_rollbacks_rag_query_names_the_evidence(spark, clog_with_rollbacks):
     assert "rollback_analysis" in q
 
 
+def test_rollbacks_investigation_job_budget(spark, clog_with_rollbacks):
+    res, jobs, residue = _investigation(
+        spark, clog_with_rollbacks, "test_scenarios.rollbacks_investigation"
+    )
+    assert res.iterations == 2
+    assert 0 < jobs <= ROLLBACKS_JOB_BUDGET, jobs
+    assert len(residue) == 1
+
+
 # ---------------------------------------------------------------------------
 # Storage-engine pressure — Cluster 6 (the FIXTURES.md "required embedded
 # patterns" shape; the family every CloggedX ground-truth doc names as the
@@ -554,6 +569,15 @@ def test_pressure_timeline_marks_lag_escalation(spark, storage_pressure):
     i100 = notes.index("Lag exceeds 100k (storage pressure signal)")
     i1m = notes.index("Lag exceeds 1M (critical storage pressure)")
     assert i100 < i1m
+
+
+def test_pressure_investigation_job_budget(spark, storage_pressure):
+    res, jobs, residue = _investigation(
+        spark, storage_pressure, "test_scenarios.pressure_investigation"
+    )
+    assert res.iterations == 2
+    assert 0 < jobs <= PRESSURE_JOB_BUDGET, jobs
+    assert len(residue) == 1
 
 
 # ---------------------------------------------------------------------------

@@ -193,6 +193,59 @@ def test_stitched_equivalence_property(spark):
     check()
 
 
+def test_stitched_prev_columns_match_single_partition_windows(spark):
+    """The multi-column stitched helper, column by column, equals the
+    single-partition W1-W3 windows (W1/W2 in last-non-null mode, W3 in
+    plain-lag mode) over series with tied timestamps and columns that are
+    null on different rows. Small enough for the default gate; the slow
+    sweep above covers the one-column wrappers."""
+    import functools
+    from datetime import timedelta
+
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import DataFrame
+
+    cell = st.one_of(st.none(), st.integers(min_value=0, max_value=9).map(float))
+
+    @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+    @given(vals=st.lists(st.tuples(cell, cell), min_size=2, max_size=24),
+           nparts=st.integers(min_value=2, max_value=5), nonnull_only=st.booleans())
+    def check(vals, nparts, nonnull_only):
+        t0 = datetime(2024, 1, 1)
+        df = spark.createDataFrame(
+            # ts ties every 2 rows; event_id breaks them
+            [(i, t0 + timedelta(seconds=i // 2), a, b) for i, (a, b) in enumerate(vals)],
+            "event_id long, ts timestamp, a double, b double",
+        )
+        if nonnull_only:
+            refs = {
+                "drop": lambda c: W.value_drops(df, c, allow_global_order=True),
+                "reset": lambda c: W.value_resets(
+                    df, c, high=5.0, low=5.0, allow_global_order=True),
+            }
+        else:
+            refs = {"lag": lambda c: W.lag_regressions(df, c, allow_global_order=True)}
+        want = functools.reduce(DataFrame.union, [
+            ref(c).select(F.lit(kind), F.lit(c), "event_id", "prev_value")
+            for c in ("a", "b") for kind, ref in refs.items()
+        ])
+        got = set()
+        out = W.stitched_prev(df, ["a", "b"], num_partitions=nparts, nonnull_only=nonnull_only)
+        for r in out.collect():
+            for c in ("a", "b"):
+                v, prev = r[c], r[f"prev_{c}"]
+                if v is None or prev is None:
+                    continue
+                if v < prev:
+                    got.add(("drop" if nonnull_only else "lag", c, r.event_id, prev))
+                if nonnull_only and prev > 5.0 and v < 5.0:
+                    got.add(("reset", c, r.event_id, prev))
+        assert got == {tuple(r) for r in want.collect()}
+
+    check()
+
+
 def test_session_funnel_tie_and_session_semantics(spark):
     import datetime as dtm
 
