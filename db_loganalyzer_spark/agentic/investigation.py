@@ -6,9 +6,9 @@ deterministic and is what this module re-expresses Spark-first:
 
 - L2 metric extraction + event formatting (:528-741):
   ``extract_metrics`` is five declarative DataFrame derivations (the
-  reference loops rows in Python); ``format_events_for_llm`` aggregates
-  distributed (counts, time range) and collects only the bounded heads
-  (top-20 display, 5-per-metric examples) before string assembly.
+  reference loops rows in Python); ``format_events_for_llm`` gathers its
+  distributed counts, time range and the bounded heads (top-20 display,
+  5-per-metric examples) in one Spark action before string assembly.
 - L4 confidence heuristics (:862-903): ``adjust_confidence`` is a pure
   function over (hypothesis, reasoning, events_text, confidence).
 - L6 context budget (:239-240): ``LLM_CONTEXT_CHAR_LIMIT`` /
@@ -24,6 +24,20 @@ deterministic and is what this module re-expresses Spark-first:
   calls are lazy over that one cached frame, so the loop's Spark jobs do
   not each re-read and re-parse the trace text. The only storage left
   behind is ``rollback_analysis``'s own ``localCheckpoint`` frame.
+- One action per step: ``_collect_sections`` takes a ``{section: bounded
+  frame}`` map, tags every row as ``to_json(struct(*))`` (timestamps as
+  ``unix_micros``, NULL fields kept) with its section and a
+  ``monotonically_increasing_id``, unions the tagged rows, collects them
+  once and splits them back into sections on the driver, in row order,
+  with the values ``collect()`` would give. The formatter, phase A's
+  scanner tail (rollback summary, baselines row count, recovery-episode
+  head) and phase B's five one-row detector summaries each go through
+  it. With AQE every shuffle map stage is still its own job, so a union
+  saves actions, not every job. The grouped detector aggregates
+  (``zscore_hotspots``, ``baseline_window_anomalies``,
+  ``metric_anomalies``) stay out of the phase-B union and keep their own
+  collects: on ``perfbench``'s ``incident_rca`` pass (seed 1, 4 cores),
+  putting them in it raised ``peak_exec_mb`` from 201.6 to 403.0 MB.
 
 Documented deviations from the reference (kept deliberately):
 - the reference's display sort key ``-(sev) if sev>=40 else -1000``
@@ -42,11 +56,13 @@ import threading
 import time as _time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
 from pathlib import Path
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, DoubleType, TimestampType
 
 from ..sources.trace_logs import py_float
 from .timeline import version_lag
@@ -139,56 +155,107 @@ def _iso(ts) -> str:
     return ts.isoformat() if ts is not None else "N/A"
 
 
-def format_events_for_llm(events: DataFrame, display_limit: int = 20) -> str:
-    """Reference :608-741. Counts/time-range are one distributed agg and
-    the four metric sections' counts one more; only bounded heads are
-    collected. Returns the exact report text shape the reference feeds
-    the LLM."""
-    stats = events.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count_if(F.coalesce(F.col("severity"), F.lit(0)) >= 40).alias("n40"),
-        F.count_if(F.coalesce(F.col("severity"), F.lit(0)) == 30).alias("n30"),
-        F.count_if(F.coalesce(F.col("severity"), F.lit(0)) == 20).alias("n20"),
-        F.min("ts").alias("earliest"),
-        F.max("ts").alias("latest"),
-    ).collect()[0]
-    if stats["total"] == 0:
-        return "No events found."
+def _from_json(v, t: DataType):
+    """A top-level column value parsed from ``to_json`` back as
+    ``collect()`` returns it."""
+    if v is None:
+        return None
+    if isinstance(t, TimestampType):
+        return t.fromInternal(v)  # sent as unix_micros
+    if isinstance(t, DoubleType):
+        return float(v)  # NaN and the infinities arrive as strings
+    return v
 
+
+def _collect_sections(sections: dict[str, DataFrame]) -> dict[str, list[Row]]:
+    """Collect every bounded frame of ``{section: frame}`` in ONE Spark
+    action and return each section's rows as its own ``collect()`` would.
+
+    Each row is tagged with its section, a ``monotonically_increasing_id``
+    and ``to_json(struct(*))`` of its columns (top-level timestamps as
+    ``unix_micros``, NULL fields kept), the tagged frames are unioned and
+    collected once, and the driver splits the rows back out in id order,
+    so an ``orderBy(...).limit(k)`` head keeps its sort order. A section
+    with no rows comes back as ``[]``. Callers pass only bounded frames
+    (LIMIT'd heads and aggregates with a bounded number of groups) whose
+    columns are strings, integers, booleans, doubles, timestamps or
+    ``map<string,string>``."""
+    tagged = []
+    for name, df in sections.items():
+        cols = [
+            F.unix_micros(F.col(f.name)).alias(f.name)
+            if isinstance(f.dataType, TimestampType) else F.col(f.name)
+            for f in df.schema.fields
+        ]
+        tagged.append(df.select(
+            F.lit(name).alias("s"),
+            F.monotonically_increasing_id().alias("i"),
+            F.to_json(F.struct(*cols), {"ignoreNullFields": "false"}).alias("j"),
+        ))
+    rows = reduce(DataFrame.union, tagged).collect()
+    out: dict[str, list[Row]] = {name: [] for name in sections}
+    for r in sorted(rows, key=lambda r: r["i"]):
+        fields = sections[r["s"]].schema.fields
+        d = json.loads(r["j"])
+        out[r["s"]].append(
+            Row(**{f.name: _from_json(d[f.name], f.dataType) for f in fields})
+        )
+    return out
+
+
+def format_events_for_llm(events: DataFrame, display_limit: int = 20) -> str:
+    """Reference :608-741. The counts, time range, section tallies and
+    every bounded head (both VersionLag spike heads, the three other
+    metric heads and the display head) come from ONE Spark action
+    (``_collect_sections``). Returns the exact report text shape the
+    reference feeds the LLM."""
     m = extract_metrics(events)
     # Section counts come from one distributed aggregate over the tagged
     # union of the metric frames, so they never saturate at a collect()
-    # limit and cost one aggregation, not one count() each; only the
-    # handful of display examples is ever collected.
+    # limit; only the handful of display examples is ever collected.
     spk = m["version_lag_spikes"]
     crit = F.col("version_lag") > 1_000_000
-    tally = (
-        spk.select(F.when(crit, "crit").otherwise("spike").alias("k"))
-        .unionByName(m["negative_latencies"].select(F.lit("neg").alias("k")))
-        .unionByName(m["slow_ss_loops"].select(F.lit("slow").alias("k")))
-        .unionByName(m["throttling_reasons"].select(F.lit("throt").alias("k")))
-        .groupBy("k")
-        .count()
-        .collect()
-    )
-    n = {r["k"]: r["count"] for r in tally}
+    sev = F.coalesce(F.col("severity"), F.lit(0))
+    sort_key = F.when(sev >= 40, -sev).otherwise(F.lit(-1000))
+    got = _collect_sections({
+        "stats": events.agg(
+            F.count(F.lit(1)).alias("total"),
+            F.count_if(sev >= 40).alias("n40"),
+            F.count_if(sev == 30).alias("n30"),
+            F.count_if(sev == 20).alias("n20"),
+            F.min("ts").alias("earliest"),
+            F.max("ts").alias("latest"),
+        ),
+        "tally": (
+            spk.select(F.when(crit, "crit").otherwise("spike").alias("k"))
+            .unionByName(m["negative_latencies"].select(F.lit("neg").alias("k")))
+            .unionByName(m["slow_ss_loops"].select(F.lit("slow").alias("k")))
+            .unionByName(m["throttling_reasons"].select(F.lit("throt").alias("k")))
+            .groupBy("k")
+            .count()
+        ),
+        # the >1M head is shown when there is any, else the >100k head
+        "crit": spk.filter(crit).orderBy("ts", "event_id").limit(5),
+        "spikes": spk.orderBy("ts", "event_id").limit(5),
+        "negs": m["negative_latencies"].orderBy("ts", "event_id", "metric").limit(5),
+        "slows": m["slow_ss_loops"].orderBy("ts", "event_id").limit(3),
+        "throts": m["throttling_reasons"].orderBy("ts", "event_id", "reason").limit(5),
+        "display": (
+            events.withColumn("__k", sort_key)
+            .orderBy("__k", F.col("ts").asc_nulls_last(), "event_id")
+            .limit(display_limit)
+        ),
+    })
+    stats = got["stats"][0]
+    if stats["total"] == 0:
+        return "No events found."
+
+    n = {r["k"]: r["count"] for r in got["tally"]}
     n_crit = n.get("crit", 0)
     n_spikes = n_crit + n.get("spike", 0)
     n_negs, n_slows, n_throts = n.get("neg", 0), n.get("slow", 0), n.get("throt", 0)
-    shown_src = spk.filter(crit) if n_crit else spk
-    shown = shown_src.orderBy("ts", "event_id").limit(5).collect()
-    negs = m["negative_latencies"].orderBy("ts", "event_id", "metric").limit(5).collect()
-    slows = m["slow_ss_loops"].orderBy("ts", "event_id").limit(3).collect()
-    throts = m["throttling_reasons"].orderBy("ts", "event_id", "reason").limit(5).collect()
-
-    sev = F.coalesce(F.col("severity"), F.lit(0))
-    sort_key = F.when(sev >= 40, -sev).otherwise(F.lit(-1000))
-    display = (
-        events.withColumn("__k", sort_key)
-        .orderBy("__k", F.col("ts").asc_nulls_last(), "event_id")
-        .limit(display_limit)
-        .collect()
-    )
+    shown = got["crit"] if n_crit else got["spikes"]
+    negs, slows, throts, display = got["negs"], got["slows"], got["throts"], got["display"]
 
     lines: list[str] = []
     lines.append(f"Found {stats['total']} events:")
@@ -649,12 +716,6 @@ class PhasedInvestigationAgent:
         self.now = now
         self.sleep = sleep
 
-    @staticmethod
-    def _summary_dict(det: dict) -> dict:
-        """Collect a detector's 1-row summary frame into a plain dict."""
-        row = det["summary"].collect()
-        return dict(row[0].asDict()) if row else {}
-
     def investigate(
         self, events: DataFrame, question: str, baselines: DataFrame | None = None
     ) -> InvestigationResult:
@@ -698,7 +759,8 @@ class PhasedInvestigationAgent:
         bucket_data: list[dict] = []
         timeline_highlights: dict = {}
         timeline_summary: dict = {}
-        acc = None  # accumulated evidence events (DataFrame)
+        acc = None  # accumulated evidence events (DataFrame); set in phase A
+        fresh = None  # the last dive's events not yet in acc (lazy)
         context_dirty = True
         llm_calls = 0
         hotspot_inspected = False
@@ -739,22 +801,26 @@ class PhasedInvestigationAgent:
                 additional.append(("global_summary", summary))
                 tools_used.append("scanner.global_summary")
                 rb = D.rollback_analysis(events)
-                rollback_info = dict(rb["summary"].collect()[0].asDict())
-                additional.append(("rollback_analysis", rollback_info))
-                tools_used.append("scanner.rollback_analysis")
                 event_metrics = derive_event_metrics(events)
                 if baselines is None:
-                    # counted here, then read by two phase-B detectors
+                    # counted below, then read by two phase-B detectors
                     baselines = _own(
                         D.metric_baselines_table(events, event_metrics, min_count=20),
                         owned,
                     )
-                additional.append(
-                    ("metric_baselines", {"rows": baselines.count()})
-                )
+                # the scanner's tail is one action; it also fills the
+                # baselines' cache for phase B
+                tail = _collect_sections({
+                    "rollback": rb["summary"],
+                    "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),
+                    "episodes": D.recovery_episodes(events)["episodes"].limit(20),
+                })
+                rollback_info = tail["rollback"][0].asDict()
+                additional.append(("rollback_analysis", rollback_info))
+                tools_used.append("scanner.rollback_analysis")
+                additional.append(("metric_baselines", tail["baselines"][0].asDict()))
                 tools_used.append("scanner.metric_baselines")
-                eps = D.recovery_episodes(events)["episodes"]
-                ep_rows = [r.asDict() for r in eps.limit(20).collect()]
+                ep_rows = [r.asDict() for r in tail["episodes"]]
                 additional.append(("recovery_episodes", {"count": len(ep_rows)}))
                 tools_used.append("scanner.recovery_episodes")
 
@@ -773,22 +839,19 @@ class PhasedInvestigationAgent:
                 continue  # defer LLM to the next iteration (reference :1091)
 
             # ---- global detectors (reference :1100-1151) ----
-            det_results: dict[str, dict] = {}
-            det_results["storage_engine_pressure"] = self._summary_dict(
-                D.storage_engine_pressure(events, baselines)
-            )
-            det_results["recovery_loop"] = self._summary_dict(
-                D.recovery_loop(events)
-            )
-            det_results["ratekeeper_throttling"] = self._summary_dict(
-                D.ratekeeper_throttling(events)
-            )
-            det_results["missing_tlogs"] = self._summary_dict(
-                D.missing_tlogs(events)
-            )
-            det_results["coordination_loss"] = self._summary_dict(
-                D.coordination_loss(events)
-            )
+            # The five one-row summaries are one action. The grouped
+            # detectors below keep their own collects: in the same union
+            # they doubled the pass's peak execution memory.
+            summaries = _collect_sections({
+                "storage_engine_pressure": D.storage_engine_pressure(events, baselines)["summary"],
+                "recovery_loop": D.recovery_loop(events)["summary"],
+                "ratekeeper_throttling": D.ratekeeper_throttling(events)["summary"],
+                "missing_tlogs": D.missing_tlogs(events)["summary"],
+                "coordination_loss": D.coordination_loss(events)["summary"],
+            })
+            det_results: dict[str, dict] = {
+                k: rows[0].asDict() for k, rows in summaries.items()
+            }
             hot_rows = [
                 r.asDict()
                 for r in D.zscore_hotspots(events)["hotspots"].collect()
@@ -829,7 +892,7 @@ class PhasedInvestigationAgent:
             last_det = det_results
 
             timeline_summary = build_timeline(
-                acc if acc is not None else events,
+                acc,
                 det_results,
                 bucket_data,
                 timeline_highlights.get("recovery_episodes"),
@@ -856,10 +919,13 @@ class PhasedInvestigationAgent:
                 "suggested_tools": [],
                 "next_steps": "",
             }
+            if llm_calls < self.max_llm_calls and fresh is not None and not context_dirty:
+                # the last dive's new evidence, asked only when nothing
+                # else has already made the context dirty
+                context_dirty = fresh.limit(1).count() > 0
+            fresh = None
             if llm_calls < self.max_llm_calls and context_dirty:
-                events_text = format_events_for_llm(
-                    acc if acc is not None else events, display_limit=20
-                )
+                events_text = format_events_for_llm(acc, display_limit=20)
                 extra = "\n\nAdditional Investigation Data:\n" + "\n".join(
                     f"\n{name}:\n{json.dumps(data, indent=2, default=str)}"
                     for name, data in cap_items(additional)
@@ -948,17 +1014,10 @@ class PhasedInvestigationAgent:
                 around = epoch + 5.0  # mid-bucket for 10s buckets
                 win = T.context_window(events, around, 5.0, limit=200)
                 tools_used.append("context.context_window")
-                if acc is None:
-                    acc = win
-                    grew = win.limit(1).count() > 0
-                else:
-                    fresh = win.join(
-                        acc.select("event_id"), "event_id", "left_anti"
-                    )
-                    grew = fresh.limit(1).count() > 0
-                    acc = acc.unionByName(win).dropDuplicates(["event_id"])
-                if grew:
-                    context_dirty = True
+                # whether the window added evidence is asked at the next
+                # LLM gate, and only if that gate would otherwise skip
+                fresh = win.join(acc.select("event_id"), "event_id", "left_anti")
+                acc = acc.unionByName(win).dropDuplicates(["event_id"])
                 dived_10.add(epoch)
                 dive_order.append((10, epoch))
                 hotspot_inspected = True

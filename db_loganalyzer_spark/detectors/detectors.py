@@ -481,14 +481,18 @@ def metric_anomalies(
     Melt fields -> per-metric mean/stdev over positive values -> flag
     reasons: z>thr, z>3 extreme, absolute thresholds on Max/P99/P95/
     QueryQueue. The interesting-event prefilter keeps all events when no
-    interesting ones exist, like the reference.
+    interesting ones exist, like the reference. That fallback is part of
+    the plan (a whole-frame max over the ``limit`` head, at most ``limit``
+    rows), so building the frames runs no Spark job.
     """
     recent = events.orderBy(F.desc("ts"), F.desc("event_id")).limit(limit)
-    has_interesting = recent.filter(F.col("event").isin(*INTERESTING_EVENTS)).limit(1)
-    n_int = has_interesting.count()
-    pool = (
-        recent.filter(F.col("event").isin(*INTERESTING_EVENTS)) if n_int else recent
-    )
+    is_int = F.coalesce(F.col("event").isin(*INTERESTING_EVENTS), F.lit(False))
+    # is_int stays an expression, not a column: as a column that the window
+    # also reads, it is projected under the limit in two steps and the
+    # top-k is planned as a global sort of every event
+    pool = recent.withColumn(
+        "__any", F.max(is_int.cast("int")).over(Window.partitionBy())
+    ).filter(is_int | (F.col("__any") == 0))
 
     melted = (
         pool.select("event_id", "ts", "event", "severity", "role",

@@ -72,6 +72,48 @@ def test_format_events_report(scenario):
     assert " CRITICAL ERROR" in text
 
 
+def test_collect_sections_round_trips_every_value(spark):
+    """One action returns each section's rows exactly as its own
+    ``collect()`` does: timestamps to the microsecond, NULLs as present
+    keys, maps, non-finite doubles, empty sections and sorted heads."""
+    from db_loganalyzer_spark.agentic.investigation import _collect_sections
+
+    rows = [
+        (1, T0.replace(microsecond=123457), None, {"a": "1", "b": None}, float("nan")),
+        (2, None, "x", {}, float("inf")),
+        (3, T0 + dt.timedelta(seconds=5, microseconds=1), "y", None, float("-inf")),
+        (4, T0 - dt.timedelta(days=400, microseconds=999999), "z", {"k": "v"}, -0.1),
+        (5, T0, None, {"c": "3"}, 1e308),
+        (6, T0 + dt.timedelta(hours=1), "w", {"d": ""}, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, ts timestamp, s string, m map<string,string>, d double"
+    ).repartition(3)
+    assert df.rdd.getNumPartitions() == 3
+    sections = {
+        "all": df,
+        "empty": df.filter(F.col("id") < 0),
+        "head": df.orderBy(F.desc("d"), "id").limit(4),
+        "agg": df.agg(F.max("ts").alias("latest"), F.count("s").alias("n_s")),
+    }
+    got = _collect_sections(sections)
+    assert set(got) == set(sections)
+    assert got["empty"] == []
+    for name, frame in sections.items():
+        want = frame.collect()
+        if name == "all":  # row order across partitions is not pinned
+            want = sorted(want, key=lambda r: r["id"])
+            got[name] = sorted(got[name], key=lambda r: r["id"])
+        # repr tells 1 from 1.0 and compares NaN, unlike ==
+        assert repr(got[name]) == repr(want), name
+        assert [list(r.asDict()) for r in got[name]] == [list(r.asDict()) for r in want]
+    assert [r["id"] for r in got["head"]] == [1, 2, 5, 4]  # NaN sorts highest
+    by_id = {r["id"]: r for r in got["all"]}
+    assert by_id[1]["ts"].microsecond == 123457 and by_id[2]["ts"] is None
+    assert "s" in by_id[1].asDict() and by_id[1]["s"] is None
+    assert by_id[1]["m"] == {"a": "1", "b": None}
+
+
 def test_format_empty(spark):
     empty = spark.createDataFrame(
         [],

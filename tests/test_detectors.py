@@ -249,6 +249,43 @@ def test_metric_anomalies(spark, log_events):
         assert r.reasons
 
 
+def test_metric_anomalies_builds_without_a_job(spark, log_events):
+    """The interesting-event fallback is part of the plan, so building
+    the frames runs no Spark job; only the caller's action does."""
+    sc = spark.sparkContext
+    group = "test_detectors.metric_anomalies_build"
+    sc.setJobGroup(group, "build metric_anomalies")
+    try:
+        D.metric_anomalies(log_events)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_metric_anomalies_pool_falls_back_to_every_recent_event(spark):
+    """With no interesting event among the recent head every recent event
+    is scanned, a NULL event type included; once one is there, only the
+    interesting events are."""
+    def frame(extra):
+        rows = [(i, T0 + timedelta(seconds=i), 10, "Plain", "SS", {"Max": "0.5"})
+                for i in range(6)]
+        rows.append((6, T0 + timedelta(seconds=6), 10, None, "SS", {"Max": "4.0"}))
+        return spark.createDataFrame(
+            rows + extra,
+            "event_id long, ts timestamp, severity int, event string, role string,"
+            "fields map<string,string>",
+        )
+
+    def flagged(df):
+        return sorted(r.event_id for r in D.metric_anomalies(df)["anomalies"].collect())
+
+    assert flagged(frame([])) == [6]
+    rec = [(7 + k, T0 + timedelta(seconds=7 + k), 30, "MasterRecoveryState", "MS",
+            {"Max": "2.0"}) for k in range(3)]
+    assert flagged(frame(rec)) == [7, 8, 9]
+
+
 def test_baseline_window_anomalies(spark, log_events):
     em = derive_event_metrics(log_events)
     b = D.metric_baselines_table(log_events, em, min_count=5, top_n=100)

@@ -33,7 +33,9 @@ evidence the corresponding ground-truth doc names:
 """
 
 import datetime as dt
+import hashlib
 import json
+from collections import Counter
 
 import pytest
 
@@ -200,13 +202,15 @@ def test_sideband_phased_loop_surfaces_evidence(spark, clogged_sideband):
 
 
 # Jobs one investigation runs on a 4-core local session, plus 6 of
-# headroom for plan variation. CloggedSideband runs 60 (101 before
+# headroom for plan variation. CloggedSideband runs 45 (101 before
 # investigate persisted its input, 78 before rollback_analysis shared one
-# stitched scan and the phase-A sweep became one aggregate);
-# ClogWithRollbacks runs 61 (was 82) and StoragePressure 55 (was 68).
-SIDEBAND_JOB_BUDGET = 66
-ROLLBACKS_JOB_BUDGET = 67
-PRESSURE_JOB_BUDGET = 61
+# stitched scan and the phase-A sweep became one aggregate, 60 before the
+# formatter, phase A's scanner tail and phase B's detector summaries each
+# became one action); ClogWithRollbacks runs 46 (was 82, then 61) and
+# StoragePressure 41 (was 68, then 55).
+SIDEBAND_JOB_BUDGET = 51
+ROLLBACKS_JOB_BUDGET = 52
+PRESSURE_JOB_BUDGET = 47
 
 
 def _sideband_llm(prompt):
@@ -223,7 +227,8 @@ def _persistent_rdds(spark):
 
 def _investigation(spark, events, group):
     """One investigate over ``events`` under a test-owned job group: its
-    result, its job count and the persistent RDDs it left behind."""
+    result, the status store's name (the call site) of each of its jobs
+    and the persistent RDDs it left behind."""
     sc = spark.sparkContext
     before = _persistent_rdds(spark)
     sc.setJobGroup(group, "one investigation")
@@ -233,8 +238,17 @@ def _investigation(spark, events, group):
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    ssc = sc._jsc.sc()
+    ssc.listenerBus().waitUntilEmpty(60_000)
+    store = ssc.statusStore()
+    jobs = [store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup(group)]
     return res, jobs, _persistent_rdds(spark) - before
+
+
+def _assert_job_budget(jobs, budget):
+    """At most ``budget`` jobs; on failure, the job count per call site."""
+    sites = "\n".join(f"{n:4d}  {site}" for site, n in Counter(jobs).most_common())
+    assert 0 < len(jobs) <= budget, f"{len(jobs)} jobs > {budget}:\n{sites}"
 
 
 @pytest.fixture(scope="module")
@@ -246,7 +260,7 @@ def test_sideband_investigation_job_budget(sideband_investigation):
     res, jobs, _ = sideband_investigation
     assert "commit_proxy_pipeline_crash" in res.hypothesis
     assert res.iterations == 2
-    assert 0 < jobs <= SIDEBAND_JOB_BUDGET, jobs
+    _assert_job_budget(jobs, SIDEBAND_JOB_BUDGET)
 
 
 def test_sideband_investigation_releases_its_storage(
@@ -456,7 +470,7 @@ def test_rollbacks_investigation_job_budget(spark, clog_with_rollbacks):
         spark, clog_with_rollbacks, "test_scenarios.rollbacks_investigation"
     )
     assert res.iterations == 2
-    assert 0 < jobs <= ROLLBACKS_JOB_BUDGET, jobs
+    _assert_job_budget(jobs, ROLLBACKS_JOB_BUDGET)
     assert len(residue) == 1
 
 
@@ -576,8 +590,28 @@ def test_pressure_investigation_job_budget(spark, storage_pressure):
         spark, storage_pressure, "test_scenarios.pressure_investigation"
     )
     assert res.iterations == 2
-    assert 0 < jobs <= PRESSURE_JOB_BUDGET, jobs
+    _assert_job_budget(jobs, PRESSURE_JOB_BUDGET)
     assert len(residue) == 1
+
+
+# sha256 of format_events_for_llm's text on each fixture. The formatter
+# has no floating-point aggregate, so the text is exact: it must not
+# depend on how the input is partitioned.
+FORMATTER_DIGESTS = {
+    "clogged_sideband": "d8ea2eca720ea719a72df46ac9134547d7904cd6521db1d6769349c96fe101ca",
+    "clog_with_rollbacks": "3a441579f57e417209048532180d5d0c01175ecc52580e1831737896721f072c",
+    "storage_pressure": "c738a1c2ebdca73f3c3a50af0fbc7cad1d9ac719dfe40943611d6d4c65c7f0a8",
+}
+
+
+@pytest.mark.parametrize("fixture", sorted(FORMATTER_DIGESTS))
+def test_formatter_text_digest_is_pinned(request, fixture):
+    from db_loganalyzer_spark.agentic.investigation import format_events_for_llm
+
+    events = request.getfixturevalue(fixture)
+    for n in (1, 3, 7):
+        text = format_events_for_llm(events.repartition(n))
+        assert hashlib.sha256(text.encode()).hexdigest() == FORMATTER_DIGESTS[fixture], n
 
 
 # ---------------------------------------------------------------------------
