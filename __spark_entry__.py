@@ -6814,8 +6814,8 @@ GROUP BY 1
 
 
 def j15_auto_salted_join(spark, sf_dir):
-    """J15 — the a37 -> j13 loop CLOSED (joins.decide_salt_parts /
-    auto_salted_join): the salt factor S is chosen from the skew
+    """J15 — the a37 -> j13 loop CLOSED (joins.decide_salt_parts, then
+    joins.salted_join): the salt factor S is chosen from the skew
     report by a deterministic rule — no salt within 4x-of-mean skew
     (AQE's skewedPartitionFactor shape) or when the hottest key fits
     one task, else ceil(max_rows / target) rounded up to a power of

@@ -1,7 +1,6 @@
 from .investigation import (  # noqa: F401
     ADDITIONAL_DATA_MAX_ITEMS,
     LLM_CONTEXT_CHAR_LIMIT,
-    InvestigationAgent,
     InvestigationResult,
     PhasedInvestigationAgent,
     adjust_confidence,

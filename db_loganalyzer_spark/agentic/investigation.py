@@ -14,10 +14,10 @@ deterministic and is what this module re-expresses Spark-first:
 - L6 context budget (:239-240): ``LLM_CONTEXT_CHAR_LIMIT`` /
   ``ADDITIONAL_DATA_MAX_ITEMS`` enforced by ``truncate_context`` /
   ``cap_items``.
-- L1/L3/L5 loop skeleton (:242-527): ``InvestigationAgent.investigate``
-  iterates format -> llm -> adjust -> (optional tool calls) until the
-  confidence threshold or max_iterations; the LLM is an injectable
-  callable so the loop is fully testable offline.
+- L1 loop (:926-1327): ``PhasedInvestigationAgent.investigate`` (phase-A
+  sweep, then detectors, timeline, RAG (L5), gated LLM call (L3) and
+  hotspot dive); the LLM and the retriever are injectable callables so
+  the loop is fully testable offline.
 - Storage ownership: ``PhasedInvestigationAgent.investigate`` persists its
   input (and the metric baselines it derives) once on entry and releases
   them on exit, error included. The tools, detectors and formatter it
@@ -406,7 +406,7 @@ def cap_items(items: list, limit: int = ADDITIONAL_DATA_MAX_ITEMS) -> list:
 
 
 # ---------------------------------------------------------------------------
-# L1/L3/L5 — loop skeleton with injectable LLM
+# L1 — the loop's result
 # ---------------------------------------------------------------------------
 
 
@@ -422,70 +422,6 @@ class InvestigationResult:
     # Granularity is part of the coordinate — the same epoch int can appear
     # once per granularity without being a re-inspection.
     inspected_buckets: list = field(default_factory=list)
-
-
-class InvestigationAgent:
-    """Iterative investigate loop: format -> llm -> adjust -> tools.
-
-    ``llm(prompt: dict) -> dict`` is injectable (keys: events_text,
-    question, hypothesis, confidence; returns hypothesis/confidence/
-    reasoning/suggested_tools). ``tools`` maps tool names to callables
-    ``tool(events: DataFrame) -> DataFrame`` whose bounded summary is
-    appended to the next iteration's context."""
-
-    def __init__(
-        self,
-        llm,
-        tools: dict | None = None,
-        max_iterations: int = 10,
-        confidence_threshold: float = 0.8,
-    ):
-        self.llm = llm
-        self.tools = tools or {}
-        self.max_iterations = max_iterations
-        self.confidence_threshold = confidence_threshold
-
-    def investigate(self, events: DataFrame, question: str) -> InvestigationResult:
-        events_text = truncate_context(format_events_for_llm(events))
-        hypothesis, confidence, reasoning = "", 0.0, ""
-        tools_used: list[str] = []
-        iterations = 0
-        extra = ""
-
-        for _ in range(self.max_iterations):
-            iterations += 1
-            out = self.llm(
-                {
-                    "events_text": truncate_context(events_text + extra),
-                    "question": question,
-                    "hypothesis": hypothesis,
-                    "confidence": confidence,
-                }
-            )
-            hypothesis = out.get("hypothesis", "")
-            confidence = float(out.get("confidence", 0.0))
-            reasoning = out.get("reasoning", "")
-            confidence, reasoning = adjust_confidence(
-                hypothesis, reasoning, events_text, confidence
-            )
-            if confidence >= self.confidence_threshold:
-                break
-            for name in cap_items(out.get("suggested_tools", [])):
-                fn = self.tools.get(name)
-                if fn is None or name in tools_used:
-                    continue
-                tools_used.append(name)
-                head = fn(events).limit(ADDITIONAL_DATA_MAX_ITEMS).collect()
-                extra += f"\n\n[{name}] " + json.dumps(
-                    [r.asDict(recursive=True) for r in head], default=str
-                )
-        return InvestigationResult(
-            hypothesis=hypothesis,
-            confidence=confidence,
-            reasoning=reasoning,
-            tools_used=tools_used,
-            iterations=iterations,
-        )
 
 
 # ---------------------------------------------------------------------------

@@ -65,39 +65,6 @@ def fake_encoder_batch(texts, dim: int = 64):
     return out
 
 
-def projection_encoder(dim: int = 64, n_features: int = 4096, seed: int = 1234):
-    """A real classical embedding backend that needs no model wheel:
-    hashed character-trigram counts pushed through a seeded Gaussian
-    random projection (Johnson-Lindenstrauss), L2-normalized. Unlike
-    ``fake_encoder_batch`` (a test stand-in), this is an honest
-    similarity-preserving text embedding — near-duplicate strings land
-    at high cosine, unrelated strings near zero — so the wheel-less
-    integration lane can exercise the full embed→ANN→dedup path with
-    meaningful geometry. Returns ``encode(texts) -> list[list[float]]``;
-    the closure (a ~2 MB projection matrix) pickles to executors once
-    per task, same as a broadcast dict."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    proj = rng.standard_normal((n_features, dim)) / np.sqrt(dim)
-
-    def encode(texts):
-        rows = np.zeros((len(texts), n_features))
-        for i, t in enumerate(texts):
-            s = " " + (t or "").lower() + " "
-            for j in range(len(s) - 2):
-                h = 7
-                for ch in s[j : j + 3]:
-                    h = (h * 131 + ord(ch)) % 1_000_000_007
-                rows[i, h % n_features] += 1.0
-        out = rows @ proj
-        norms = np.linalg.norm(out, axis=1, keepdims=True)
-        out = np.where(norms > 1e-6, out / np.maximum(norms, 1e-12), out)
-        return [list(map(float, v)) for v in out]
-
-    return encode
-
-
 def embed_texts(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -118,17 +118,6 @@ def exact_dedup_groups(
     )
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep one document per distinct normalized content (the keeper =
-    min id: deterministic, unlike dropDuplicates' first-seen)."""
-    groups = exact_dedup_groups(df, id_col, text_col)
-    return df.join(
-        groups.select(F.col("keeper_id").alias(id_col)), id_col, "inner"
-    )
-
-
 def word_shingles(c: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of the normalized text."""
     col = F.col(c) if isinstance(c, str) else c
@@ -164,11 +153,14 @@ def _token_hash_pows(toks: Column) -> Column:
 
 def shingle_hashes_from_tp(tp: Column, n: int) -> Column:
     """Compose the n-gram hashes from a MATERIALIZED ``_token_hash_pows``
-    column. ``tp`` must be a bound column (attribute), not an expression:
-    HOF lambdas get no common-subexpression elimination, so an inline
-    expression here would be re-evaluated for every ``element_at`` — an
-    O(chars x shingles) blowup (measured 8x the whole pipeline). Against
-    an attribute each ``element_at`` is O(1) array indexing."""
+    column: ``portable_hash`` of every word n-gram, equal to
+    ``transform(word_shingles(c, n), portable_hash)`` up to multiplicity
+    (positions are kept). ``tp`` must be a bound column (attribute), not
+    an expression: HOF lambdas get no common-subexpression elimination,
+    so an inline expression here would be re-evaluated for every
+    ``element_at`` — an O(chars x shingles) blowup (measured 8x the whole
+    pipeline). Against an attribute each ``element_at`` is O(1) array
+    indexing."""
 
     def one(i):
         return F.aggregate(
@@ -186,26 +178,6 @@ def shingle_hashes_from_tp(tp: Column, n: int) -> Column:
     return F.when(F.size(tp) >= n, grams).otherwise(
         F.array().cast("array<long>")
     )
-
-
-def shingle_hashes(c: Column | str, n: int) -> Column:
-    """``portable_hash`` of every word n-gram of the normalized text,
-    WITHOUT materializing the n-gram strings: each token's characters are
-    folded once (``_token_hash_pows``), then each shingle's hash is
-    composed from n (hash, power) pairs plus the ``" "`` separator
-    (codepoint 32) — O(chars + n*shingles) instead of O(n*chars), with no
-    string slicing/joining. Bit-identical to
-    ``transform(word_shingles(c, n), portable_hash)`` up to multiplicity:
-    positions are kept (MinHash takes array_min, for which the duplicate
-    strings array_distinct would drop are irrelevant).
-
-    One-shot convenience for tests/small frames: inlines the token pass,
-    which re-evaluates per reference (see ``shingle_hashes_from_tp``) —
-    in a hot path project ``_token_hash_pows`` into its own column first,
-    as ``minhash_signatures`` does."""
-    col = F.col(c) if isinstance(c, str) else c
-    toks = F.split(normalize_text(col), " ")
-    return shingle_hashes_from_tp(_token_hash_pows(toks), n)
 
 
 def winnowing_fingerprint_arrays(
@@ -1722,48 +1694,3 @@ def duplicated_span_stats(
         .otherwise(F.lit(0.0))
         .alias("dup_fraction"),
     )
-
-
-def plan_lsh_bands(
-    threshold: float, num_hashes: int, grid: int = 1000
-) -> dict:
-    """Pick the (bands, rows) split of a MinHash signature that best
-    matches a target Jaccard ``threshold`` — the tuning every LSH
-    deployment hand-waves. For b bands of r rows the candidate
-    probability at similarity s is ``1 - (1 - s^r)^b``; the planner
-    scores every divisor split by the total misclassification mass
-    (integral of the curve below the threshold = expected false-
-    candidate rate under a uniform similarity prior, plus the integral
-    of (1 - curve) above it = expected miss rate) on a fixed grid, so
-    the choice is deterministic and engine-independent. Returns the
-    winning split, its crossover point ((1/b)^(1/r) — the rule-of-thumb
-    threshold the split natively encodes), and the per-split scores for
-    the caller's records.
-
-    Driver-side pure math (microseconds): the OUTPUT feeds
-    ``minhash_lsh_dedup(bands=...)``; nothing here touches data.
-    """
-    if not 0 < threshold < 1:
-        raise ValueError("threshold must be in (0, 1)")
-    splits = [b for b in range(1, num_hashes + 1) if num_hashes % b == 0]
-    scored = []
-    for b in splits:
-        r = num_hashes // b
-        fp = fn = 0.0
-        for i in range(grid):
-            s = (i + 0.5) / grid
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p
-            else:
-                fn += 1.0 - p
-        scored.append(
-            {
-                "bands": b,
-                "rows": r,
-                "crossover": (1.0 / b) ** (1.0 / r),
-                "error_mass": (fp + fn) / grid,
-            }
-        )
-    best = min(scored, key=lambda d: (d["error_mass"], d["bands"]))
-    return {**best, "candidates": scored}

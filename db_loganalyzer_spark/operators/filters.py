@@ -163,17 +163,6 @@ def field_probe(
     )
 
 
-def map_field(df_or_col, key: str, cast: str | None = None) -> Column:
-    """F8 — typed payload-field extraction from the fields map
-    (the reference's ``json_extract(fields_json, '$.K')``).
-
-    reference: global_scanner.py:274-287
-    """
-    col = df_or_col if isinstance(df_or_col, Column) else F.col(df_or_col)
-    out = F.element_at(col, key)
-    return out.cast(cast) if cast else out
-
-
 def finite(c: Column) -> Column:
     """F9 — isfinite + magnitude guard (reference: global_scanner.py:74)."""
     return c.isNotNull() & (~F.isnan(c)) & (F.abs(c) < F.lit(1e308))

@@ -582,40 +582,6 @@ def decide_salt_parts(
     )
 
 
-def auto_salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    salt_from: list[str],
-    *,
-    skew_threshold: float = 4.0,
-    target_rows_per_task: int = 5_000_000,
-    max_parts: int = 256,
-    how: str = "inner",
-) -> DataFrame:
-    """J15 — j13's salted join with the salt factor CHOSEN from a37's
-    skew report instead of hand-tuned (:func:`decide_salt_parts`):
-    the decision automation a real 100 TB job needs, since the right S
-    changes as the data drifts. When the rule says 1 the plain join
-    runs (no dim replication, no salt column); either way the result
-    is row-for-row the unsalted join, which is what the oracle states."""
-    s = decide_salt_parts(
-        fact, fact_key,
-        skew_threshold=skew_threshold,
-        target_rows_per_task=target_rows_per_task,
-        max_parts=max_parts,
-    )
-    if s <= 1:
-        joined = fact.join(dim, fact[fact_key] == dim[dim_key], how)
-        if fact_key == dim_key:
-            joined = joined.drop(dim[dim_key])
-        return joined
-    return salted_join(
-        fact, dim, fact_key, dim_key, salt_from, salt_parts=s, how=how
-    )
-
-
 def pit_lookup(
     facts: DataFrame,
     dim: DataFrame,

@@ -45,19 +45,6 @@ _DECODED_SCHEMA = (
 )
 
 
-def media_table_from_documents(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Deterministic media stand-in: utf-8 payload bytes from text (real
-    pipelines read payloads via spark.read.format('binaryFile'))."""
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.create_map(F.lit("source"), F.lit("synthetic")).alias("meta"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Real wheel-free codecs: 24-bit BMP and binary PPM/PGM
 # ---------------------------------------------------------------------------

@@ -162,24 +162,6 @@ def fingerprint(c: Column | str, mod: int = 1_000_000_007) -> Column:
     )
 
 
-def text_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """One-pass per-document stat sheet."""
-    return df.select(
-        id_col,
-        token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_bpe_tokens"),
-        F.length(text_col).alias("n_chars"),
-        mean_word_len(text_col).alias("mean_word_len"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        stopword_ratio(text_col, "en").alias("stopword_ratio_en"),
-        quality_score(text_col).alias("quality"),
-        detect_language(text_col).alias("lang_detected"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # PII redaction (training-data hygiene: scrub before training)
 # ---------------------------------------------------------------------------

@@ -7,8 +7,8 @@ you partition by a natural stream key (machine/trace_file/user) so no
 single task holds the whole ordering. When a truly global order is
 unavoidable, use the ``*_stitched`` variants below: they range-shuffle on
 the total order, run the window inside each range partition, and stitch
-the partition boundaries with per-partition carry values (last non-null /
-last row / session offsets) collected driver-side — one tiny row per
+the partition boundaries with per-partition carry values (last non-null
+value / running-sum prefix) collected driver-side — one tiny row per
 partition, the same machinery as ``severity_first_ranking``'s unbounded
 rank. Output is bit-identical to the single-partition window.
 """
@@ -299,28 +299,6 @@ def relative_timeline(
     )
 
 
-def first_matching(
-    df: DataFrame,
-    predicate,
-    partition_by: list[str] | None = None,
-    ts_col: str = "ts",
-    tiebreak: str | None = "event_id",
-    allow_global_order: bool = False,
-) -> DataFrame:
-    """W9b — first event satisfying a predicate (per partition): the
-    timeline builder's "first severe / first lag>100k / first Recovery".
-
-    reference: timeline_builder.py:50-71
-    """
-    w = _w(partition_by or [], ts_col, tiebreak, allow_global_order)
-    return (
-        df.filter(predicate)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def severity_first_ranking(
     df: DataFrame,
     severity_col: str = "severity",
@@ -390,7 +368,7 @@ def severity_first_ranking(
 
 
 # ---------------------------------------------------------------------------
-# Stitched global-order variants (W1-W3, W5 with no partition key).
+# Stitched global-order variants (W1 and a running sum, no partition key).
 #
 # Shared recipe: repartitionByRange on the total order + sortWithinPartitions
 # + localCheckpoint (pinning ONE physical partitioning — the RangePartitioner
@@ -420,14 +398,13 @@ def _pid_map(pairs: dict[int, object], value_type: str):
     return F.element_at(F.create_map(*entries), F.col("__pid"))
 
 
-def _last_value_carries(part: DataFrame, order, value_cols: list[str], nonnull_only: bool):
+def _last_value_carries(part: DataFrame, order, value_cols: list[str]):
     """Per value column, pid -> value to carry INTO each partition: the
-    last (by total order) value among all EARLIER partitions; last
-    non-null when nonnull_only. One collect of one row per partition
-    serves every column."""
+    last (by total order) non-null value among all EARLIER partitions.
+    One collect of one row per partition serves every column."""
     def last(c):
         s = F.struct(*order, F.col(c).alias("__v"))
-        return F.max(F.when(F.col(c).isNotNull(), s) if nonnull_only else s)
+        return F.max(F.when(F.col(c).isNotNull(), s))
 
     tail = (
         part.groupBy("__pid")
@@ -439,15 +416,13 @@ def _last_value_carries(part: DataFrame, order, value_cols: list[str], nonnull_o
     for i in range(len(value_cols)):
         lasts = {r["__pid"]: r[f"__s{i}"]["__v"] for r in tail if r[f"__s{i}"] is not None}
         # carry[pid] = last value of the nearest earlier partition that has
-        # one. A NULL carry (plain-lag mode, predecessor's last value is
-        # NULL) and an absent carry (no predecessor rows at all) both
-        # surface as NULL prev downstream, so None entries are dropped.
-        carry, running, seen = {}, None, False
+        # one; a partition with no non-null predecessor gets no entry
+        carry, running = {}, None
         for pid in range(n):
-            if seen and running is not None:
+            if running is not None:
                 carry[pid] = running
             if pid in lasts:
-                running, seen = lasts[pid], True
+                running = lasts[pid]
         carries.append(carry)
     return carries
 
@@ -458,35 +433,25 @@ def stitched_prev(
     ts_col: str = "ts",
     tiebreak: str | None = "event_id",
     num_partitions: int | None = None,
-    nonnull_only: bool = True,
 ) -> DataFrame:
     """df + a global ``prev_<col>`` for each of ``value_cols`` (the last
-    non-null value before each row when ``nonnull_only``, else plain
-    lag-1), computed without any single-partition window: one range sort
-    and checkpoint, one carry collect and one window for all columns."""
+    non-null value before each row), computed without any single-partition
+    window: one range sort and checkpoint, one carry collect and one
+    window for all columns."""
     part, order = _range_sorted(df, ts_col, tiebreak, num_partitions)
     types = dict(df.dtypes)
-    carries = _last_value_carries(part, order, value_cols, nonnull_only)
-    w = Window.partitionBy("__pid").orderBy(*order)
+    carries = _last_value_carries(part, order, value_cols)
+    local = Window.partitionBy("__pid").orderBy(*order).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
 
     def prev(c, carry):
-        carry = _pid_map(carry, types[c])
-        if nonnull_only:
-            local_prev = F.last(F.col(c), ignorenulls=True).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            )
-            return F.coalesce(local_prev, carry)
-        rn = F.row_number().over(w)
-        return F.when(rn == 1, carry).otherwise(F.lag(F.col(c)).over(w))
+        local_prev = F.last(F.col(c), ignorenulls=True).over(local)
+        return F.coalesce(local_prev, _pid_map(carry, types[c]))
 
     return part.withColumns(
         {f"prev_{c}": prev(c, carry) for c, carry in zip(value_cols, carries)}
     ).drop("__pid")
-
-
-def _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, nonnull_only):
-    out = stitched_prev(df, [value_col], ts_col, tiebreak, num_partitions, nonnull_only)
-    return out.withColumnRenamed(f"prev_{value_col}", "prev_value")
 
 
 def value_drops_stitched(
@@ -497,39 +462,12 @@ def value_drops_stitched(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """W1 over a truly global order, no single-partition window."""
-    out = _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, True)
+    out = stitched_prev(df, [value_col], ts_col, tiebreak, num_partitions)
+    out = out.withColumnRenamed(f"prev_{value_col}", "prev_value")
     return out.filter(
         F.col(value_col).isNotNull()
         & F.col("prev_value").isNotNull()
         & (F.col(value_col) < F.col("prev_value"))
-    ).withColumn("drop_amount", F.col("prev_value") - F.col(value_col))
-
-
-def value_resets_stitched(
-    df: DataFrame,
-    value_col: str,
-    high: float,
-    low: float,
-    ts_col: str = "ts",
-    tiebreak: str | None = "event_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """W2 over a truly global order."""
-    out = _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, True)
-    return out.filter((F.col("prev_value") > high) & (F.col(value_col) < low))
-
-
-def lag_regressions_stitched(
-    df: DataFrame,
-    value_col: str,
-    ts_col: str = "ts",
-    tiebreak: str | None = "event_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """W3 over a truly global order."""
-    out = _stitched_prev_value(df, value_col, ts_col, tiebreak, num_partitions, False)
-    return out.filter(
-        F.col("prev_value").isNotNull() & (F.col(value_col) < F.col("prev_value"))
     ).withColumn("drop_amount", F.col("prev_value") - F.col(value_col))
 
 
@@ -582,62 +520,6 @@ def running_sum_stitched(
         "running_sum",
         F.sum(F.col(value_col).cast("long")).over(w) + F.coalesce(carry, F.lit(0)),
     ).drop("__pid")
-
-
-def sessionize_stitched(
-    df: DataFrame,
-    gap_seconds: float,
-    ts_col: str = "ts",
-    tiebreak: str | None = "event_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """W5 over a truly global order: per-partition gaps-and-islands plus a
-    driver-stitched boundary — whether each partition's first row opens a
-    new session depends on the previous partition's last ts, and each
-    partition's session ids shift by the total sessions opened before it.
-    """
-    part, order = _range_sorted(df, ts_col, tiebreak, num_partitions)
-    w = Window.partitionBy("__pid").orderBy(*order)
-    gap = F.col(ts_col).cast("double") - F.lag(F.col(ts_col)).over(w).cast("double")
-    g = part.withColumn("__gap", gap)
-    summaries = {
-        r["__pid"]: r
-        for r in g.groupBy("__pid")
-        .agg(
-            F.min(F.col(ts_col)).alias("first_ts"),
-            F.max(F.col(ts_col)).alias("last_ts"),
-            F.count_if(F.col("__gap") > gap_seconds).alias("n_internal"),
-        )
-        .collect()
-    }
-    first_new, offsets = {}, {}
-    acc, prev_last = 0, None
-    for pid in range(part.rdd.getNumPartitions()):
-        s = summaries.get(pid)
-        if s is None:
-            continue
-        # timedelta subtraction, not .timestamp(): collected datetimes are
-        # naive (session-tz) and .timestamp() would reinterpret them in
-        # the driver's local zone — wrong by an hour across its DST edges
-        opens = (
-            prev_last is None
-            or (s["first_ts"] - prev_last).total_seconds() > gap_seconds
-        )
-        first_new[pid] = opens
-        offsets[pid] = acc
-        acc += s["n_internal"] + (1 if opens else 0)
-        prev_last = s["last_ts"]
-    rn = F.row_number().over(w)
-    is_new = F.when(
-        rn == 1, _pid_map(first_new, "boolean").cast("int")
-    ).otherwise((F.col("__gap") > gap_seconds).cast("int"))
-    local = F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return (
-        g.withColumn(
-            "session_id", (_pid_map(offsets, "long") + local - F.lit(1)).cast("long")
-        )
-        .drop("__gap", "__pid")
-    )
 
 
 def ewma(

@@ -1,13 +1,10 @@
-"""Egress + DDL surfaces (SURVEY §2.1 S6/S8/S10, §2.3 A7 persistence).
+"""Egress + DDL surfaces (SURVEY §2.1 S6/S8/S10).
 
 Reference:
 - S8 export sink: cli_wrapper/main.py:514-546 (query result -> csv/json/
   parquet file);
 - S10 DDL bootstrap: tools/storage.py:29-65 (drop + recreate the five
-  core tables);
-- A7 baseline persistence: global_scanner.py:126-170 (metric_baselines
-  upsert; in Spark the idiomatic equivalent is an overwrite of the
-  derived table — the table IS the upsert result).
+  core tables).
 
 Spark-first: every writer is ``df.write`` (distributed, partitioned
 files); ``single_file=True`` coalesces to one part for the reference's
@@ -18,7 +15,6 @@ write through one task.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 EXPORT_FORMATS = ("csv", "json", "parquet")
 
@@ -93,56 +89,3 @@ def bootstrap_tables(
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {database}.{t} ({_DDL[t]}) USING parquet"
         )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: pre-shuffle the data ONCE at write time so
-    every later join/agg on the bucket key is exchange-free.
-
-    At 100 TB the events ⋈ event_metrics join (J1) shuffles both sides on
-    event_id every time it runs; bucketing both tables by event_id with
-    the same bucket count lets Spark prove co-partitioning and plan a
-    SortMergeJoin with NO Exchange on either side (see
-    tests/test_sinks.py::test_bucketed_join_is_exchange_free). Same lever
-    for repeated groupBy(user_id) analytics. ``sort_cols`` additionally
-    sorts within buckets, dropping the join's per-task Sort."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned parquet layout — the 100 TB directory
-    design for the events table: partition by day (or day/hour), and a
-    time predicate prunes whole directories BEFORE any parquet footer is
-    read — Catalyst turns the filter into PartitionFilters at the scan
-    (pinned in tests/test_sinks.py::test_partitioned_scan_prunes). This
-    is the lever the reference's B-tree ts-index maps to (SURVEY §4):
-    coarse pruning from the directory tree, fine pruning from row-group
-    min/max stats within the surviving files."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_metric_baselines(
-    baselines: DataFrame, path: str, mode: str = "overwrite"
-) -> None:
-    """A7 — persist the metric_baselines derivation. The reference
-    row-upserts into DuckDB (global_scanner.py:126-170); in Spark the
-    deterministic equivalent is overwriting the derived table with the
-    freshly-computed stats plus an ``updated_at`` stamp."""
-    baselines.withColumn("updated_at", F.current_timestamp()).write.mode(
-        mode
-    ).parquet(path)

@@ -3,8 +3,8 @@
 The reference has NO streaming surface (SURVEY §2.12: rollups are one-shot
 CTAS, reference tools/storage.py:338-352, re-run per window size). This
 module is the §7.1 step-9 extension: the SAME aggregate expressions the
-batch operators use (A5 windowed rollup, W5 sessionization, A2 histogram,
-W1 value drops), re-expressed incrementally so a live log feed maintains
+batch operators use (A5 windowed rollup, W5 sessionization, W1 value
+drops), re-expressed incrementally so a live log feed maintains
 the tables continuously instead of re-scanning history.
 
 Design notes for scale:
@@ -211,14 +211,6 @@ def streaming_sessions(
         )
         .select(*keys, "start_ts_us", "end_ts_us", "duration_s", "n_events")
     )
-
-
-def streaming_event_histogram(
-    events: DataFrame, event_col: str = "event_type"
-) -> DataFrame:
-    """A2's streaming form — running histogram, ``outputMode("complete")``
-    (tiny cardinality result; state is one counter per event type)."""
-    return events.groupBy(event_col).agg(F.count(F.lit(1)).alias("n"))
 
 
 # ---------------------------------------------------------------------------
@@ -441,7 +433,7 @@ def run_available_now(
     """Drain everything currently available through the streaming plan
     (micro-batched), block until done, and return the result as a
     DataFrame (memory sink). This is the test/backfill harness; live
-    deployments use ``write_stream_parquet``."""
+    deployments start a checkpointed ``writeStream`` sink instead."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -452,26 +444,6 @@ def run_available_now(
     )
     q.awaitTermination()
     return df.sparkSession.table(name)
-
-
-def write_stream_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-    trigger_seconds: int | None = None,
-):
-    """Production sink: exactly-once parquet append via checkpointed
-    offsets + file-commit log. Returns the StreamingQuery handle."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 _GAPFILL_SCHEMA = T.StructType(

@@ -1,4 +1,4 @@
-"""Agentic loop deterministic core (L2/L4/L6 + loop skeleton) replaying a
+"""Agentic loop deterministic core (L2/L4/L6) replaying a
 reference-shaped scenario fixture."""
 
 import datetime as dt
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from db_loganalyzer_spark.agentic import (
     ADDITIONAL_DATA_MAX_ITEMS,
-    InvestigationAgent,
     adjust_confidence,
     cap_items,
     extract_metrics,
@@ -146,41 +145,3 @@ def test_context_budget():
     out = truncate_context("x" * 200, 100)
     assert len(out) == 100 and out.endswith("[truncated to context limit]")
     assert cap_items(list(range(100))) == list(range(ADDITIONAL_DATA_MAX_ITEMS))
-
-
-def test_investigation_loop_with_stub_llm(scenario):
-    calls = []
-
-    def stub_llm(prompt):
-        calls.append(prompt)
-        if len(calls) == 1:
-            return {
-                "hypothesis": "severity 30 file not found",
-                "confidence": 0.9,
-                "reasoning": "names look scary",
-                "suggested_tools": ["lag_spikes", "unknown_tool"],
-            }
-        return {
-            "hypothesis": "storage pressure from versionlag spike",
-            "confidence": 0.85,
-            "reasoning": "metrics dominate",
-            "suggested_tools": [],
-        }
-
-    agent = InvestigationAgent(
-        stub_llm,
-        tools={
-            "lag_spikes": lambda ev: extract_metrics(ev)["version_lag_spikes"]
-        },
-        max_iterations=5,
-        confidence_threshold=0.8,
-    )
-    res = agent.investigate(scenario, "why did recovery happen?")
-    # iteration 1: event-name hypothesis capped to 0.4 -> continues, runs tool
-    # iteration 2: metric hypothesis boosted to 0.95 -> stops
-    assert res.iterations == 2
-    assert res.confidence == pytest.approx(0.95)
-    assert res.tools_used == ["lag_spikes"]
-    assert res.hypothesis == "storage pressure from versionlag spike"
-    # tool output was appended to the second call's context
-    assert "[lag_spikes]" in calls[1]["events_text"]

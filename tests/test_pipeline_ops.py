@@ -18,7 +18,6 @@ from db_loganalyzer_spark.operators.multimodal import (
     decode_media,
     fake_decode_backend,
     frame_sample_plan,
-    media_table_from_documents,
     resize_plan,
     unavailable_decode_backend,
 )
@@ -41,9 +40,7 @@ def test_exact_dedup(spark, docs):
     groups = DD.exact_dedup_groups(docs).collect()
     n_groups = len(groups)
     assert n_groups == 5  # 0 and 1 collapse
-    kept = DD.exact_dedup(docs)
-    ids = {r.doc_id for r in kept.collect()}
-    assert ids == {0, 2, 3, 4, 5}  # keeper is min id
+    assert {r.keeper_id for r in groups} == {0, 2, 3, 4, 5}  # keeper is min id
 
 
 def test_ngram_jaccard(spark, docs):
@@ -390,7 +387,13 @@ def test_ivf_self_query_finds_near_copy(spark, vectors):
 
 
 def test_text_stats(spark, docs):
-    out = {r.doc_id: r for r in TS.text_stats(docs).collect()}
+    out = {r.doc_id: r for r in docs.select(
+        "doc_id",
+        TS.token_count("text").alias("n_tokens"),
+        TS.quality_score("text").alias("quality"),
+        TS.detect_language("text").alias("lang_detected"),
+        TS.fingerprint("text").alias("fingerprint"),
+    ).collect()}
     assert out[0].n_tokens == 9
     assert out[0].lang_detected == "en"
     assert out[5].n_tokens == 0
@@ -481,7 +484,12 @@ def test_chunk_summaries_accepts_real_tokenizer(spark, fake_encoder):
 
 
 def test_multimodal_plumbing(spark, docs):
-    media = media_table_from_documents(docs.filter(F.length("text") > 0))
+    media = docs.filter(F.length("text") > 0).select(
+        F.col("doc_id").alias("media_id"),
+        F.encode("text", "utf-8").alias("payload"),
+        F.lit("image").alias("media_type"),
+        F.create_map(F.lit("source"), F.lit("synthetic")).alias("meta"),
+    )
     decoded = decode_media(media, decode_backend=fake_decode_backend)
     rows = {r.media_id: r for r in decoded.collect()}
     assert rows[0].byte_len == len("The quick brown fox jumps over the lazy dog")
@@ -930,8 +938,10 @@ def test_corpus_report_rollup(spark):
 
 
 def test_shingle_hashes_compose_to_portable_hash(spark):
-    """The compositional per-token path must produce exactly the hash
-    values of portable_hash over the materialized n-gram strings (up to
+    """The compositional per-token path (shingle_hashes_from_tp over a
+    materialized _token_hash_pows column, as every MinHash/winnowing
+    caller builds it) must produce exactly the hash values of
+    portable_hash over the materialized n-gram strings (up to
     multiplicity — MinHash only consumes the value set via array_min)."""
     from pyspark.sql import functions as F
 
@@ -945,9 +955,15 @@ def test_shingle_hashes_compose_to_portable_hash(spark):
         ("short",),
     ]
     df = spark.createDataFrame(rows, "text string")
+    tp = df.select(
+        "text",
+        DD._token_hash_pows(F.split(DD.normalize_text("text"), " ")).alias("tp"),
+    )
     for n in (1, 2, 3):
-        got = df.select(
-            F.sort_array(F.array_distinct(DD.shingle_hashes("text", n))).alias("h")
+        got = tp.select(
+            F.sort_array(
+                F.array_distinct(DD.shingle_hashes_from_tp(F.col("tp"), n))
+            ).alias("h")
         ).collect()
         want = df.select(
             F.sort_array(
@@ -2221,11 +2237,11 @@ def test_choose_salt_parts_rule_pins():
 
 def test_auto_salted_join_decides_and_matches_plain(spark):
     """decide_salt_parts engages on constructed skew (pinned S) and
-    stays out on uniform keys; auto_salted_join's rows equal the plain
-    join on both branches."""
+    stays out on uniform keys; the salted join at the decided S (j15's
+    path) has the plain join's rows."""
     from db_loganalyzer_spark.operators.joins import (
-        auto_salted_join,
         decide_salt_parts,
+        salted_join,
     )
 
     # 60 rows on key 1, 1 row each on keys 2..21
@@ -2238,12 +2254,12 @@ def test_auto_salted_join_decides_and_matches_plain(spark):
     )
     # profile: max=60, total=80, n_keys=21 -> ratio 15.75 > 4;
     # ceil(60/10)=6 -> pow2 8
-    assert decide_salt_parts(fact, "k", target_rows_per_task=10) == 8
+    s = decide_salt_parts(fact, "k", target_rows_per_task=10)
+    assert s == 8
     got = sorted(
         (r["row_id"], r["v"], r["tag"])
-        for r in auto_salted_join(
-            fact, dim, "k", "k", salt_from=["row_id"],
-            target_rows_per_task=10,
+        for r in salted_join(
+            fact, dim, "k", "k", salt_from=["row_id"], salt_parts=s,
         ).select("row_id", "v", "tag").collect()
     )
     want = sorted(
@@ -2251,24 +2267,12 @@ def test_auto_salted_join_decides_and_matches_plain(spark):
         for r in fact.join(dim, "k").select("row_id", "v", "tag").collect()
     )
     assert got == want
-    # uniform fact: rule says 1, plain-join branch, same rows
+    # uniform fact: the rule says 1 (j15 then runs the plain join)
     uni = spark.createDataFrame(
         [(i, i % 20, float(i)) for i in range(80)],
         "row_id long, k long, v double",
     )
     assert decide_salt_parts(uni, "k", target_rows_per_task=10) == 1
-    got_u = sorted(
-        (r["row_id"], r["tag"])
-        for r in auto_salted_join(
-            uni, dim, "k", "k", salt_from=["row_id"],
-            target_rows_per_task=10,
-        ).select("row_id", "tag").collect()
-    )
-    want_u = sorted(
-        (r["row_id"], r["tag"])
-        for r in uni.join(dim, "k").select("row_id", "tag").collect()
-    )
-    assert got_u == want_u
 
 
 def test_salted_join_same_key_name_selectable(spark):
@@ -2873,30 +2877,6 @@ def test_json_schema_profile_roundtrip(spark):
         ).collect()
     }
     assert got == want and set(got) == {"k", "value", "code", "msg", "amount"}
-
-
-def test_plan_lsh_bands_sane():
-    from db_loganalyzer_spark.operators.dedup import plan_lsh_bands
-
-    p50 = DD.plan_lsh_bands(0.5, 32)
-    # the chosen split's native crossover should sit near the target
-    assert abs(p50["crossover"] - 0.5) < 0.2
-    assert p50["bands"] * p50["rows"] == 32
-    # higher target threshold -> fewer, longer bands (more selective)
-    p80 = DD.plan_lsh_bands(0.8, 32)
-    assert p80["bands"] <= p50["bands"] and p80["rows"] >= p50["rows"]
-    # lower threshold -> more, shorter bands (more permissive)
-    p20 = DD.plan_lsh_bands(0.2, 32)
-    assert p20["bands"] >= p50["bands"]
-    # error mass of the winner is minimal among its candidates
-    assert all(
-        p50["error_mass"] <= c["error_mass"] for c in p50["candidates"]
-    )
-    # degenerate inputs rejected
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        DD.plan_lsh_bands(1.5, 32)
 
 
 def test_heaps_fit_extremes(spark):

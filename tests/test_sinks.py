@@ -1,16 +1,14 @@
-"""Egress + DDL surfaces (S4/S8/S10/A7) smoke tests."""
+"""Egress + DDL surfaces (S4/S8/S10) smoke tests."""
 
 import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from db_loganalyzer_spark.sources.sinks import (
     CORE_TABLES,
     bootstrap_tables,
     export_result,
-    write_metric_baselines,
 )
 from db_loganalyzer_spark.sources.trace_logs import load_preprocessed_events
 
@@ -57,22 +55,6 @@ def test_bootstrap_creates_core_tables(spark):
     assert spark.table("t_boot.events").count() == 0
 
 
-def test_write_metric_baselines(spark, tmp_path):
-    base = spark.createDataFrame(
-        [("VersionLag", "SS", 1.0, 0.5, 2.0, 0.0, 3.0, 10)],
-        "metric_name string, role string, mean double, stddev double,"
-        "p95 double, min double, max double, count long",
-    )
-    path = str(tmp_path / "baselines")
-    write_metric_baselines(base, path)
-    back = spark.read.parquet(path)
-    assert back.count() == 1
-    assert "updated_at" in back.columns
-    # overwrite semantics: rewriting replaces, not appends
-    write_metric_baselines(base, path)
-    assert spark.read.parquet(path).count() == 1
-
-
 def test_load_preprocessed_events_string_and_null_fields(spark, tmp_path):
     rows = [
         {
@@ -103,58 +85,3 @@ def test_load_preprocessed_events_string_and_null_fields(spark, tmp_path):
     assert set(ev.columns) >= {
         "event_id", "ts", "severity", "event", "role", "fields",
     }
-
-
-def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
-    """Two tables bucketed by the join key with the same bucket count:
-    Spark proves co-partitioning, so the join plans with NO Exchange on
-    either side — the write-once/join-many lever for J1 at scale. With
-    sortBy the per-task Sort disappears too."""
-    from db_loganalyzer_spark.sources.sinks import write_bucketed
-    from db_loganalyzer_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    metrics = ev.select(
-        "event_id", (F.col("value") * 2).alias("metric_value")
-    )
-    write_bucketed(ev, "ev_bucketed", ["event_id"], 4, sort_cols=["event_id"])
-    write_bucketed(
-        metrics, "metrics_bucketed", ["event_id"], 4, sort_cols=["event_id"]
-    )
-    joined = spark.table("ev_bucketed").join(
-        spark.table("metrics_bucketed").hint("merge"), "event_id"
-    )
-    joined.collect()
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan  # bucket layout replaces the shuffle
-    n = joined.count()
-    assert n == ev.count()
-    spark.sql("DROP TABLE IF EXISTS ev_bucketed")
-    spark.sql("DROP TABLE IF EXISTS metrics_bucketed")
-
-
-def test_partitioned_scan_prunes(spark, sf_dir, tmp_path):
-    """Day-partitioned layout: a predicate on the partition column lands
-    in the scan's PartitionFilters — whole directories are skipped before
-    any parquet footer is read (the 100 TB time-slice path)."""
-    from db_loganalyzer_spark.sources.sinks import write_partitioned
-    from db_loganalyzer_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    path = str(tmp_path / "events_by_day")
-    write_partitioned(ev, path, ["event_date"])
-
-    back = spark.read.parquet(path)
-    one_day = ev.groupBy("event_date").count().orderBy("event_date").first()
-    sliced = back.filter(F.col("event_date") == F.lit(one_day["event_date"]))
-    plan = sliced._jdf.queryExecution().executedPlan().toString()
-    # the partition predicate must be a directory-level filter, not a
-    # row-level one: PartitionFilters carries it, PushedFilters does not
-    assert "PartitionFilters: [" in plan
-    assert "event_date" in plan.split("PartitionFilters")[1].split("]")[0]
-    assert sliced.count() == one_day["count"]

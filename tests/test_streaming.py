@@ -13,7 +13,6 @@ from db_loganalyzer_spark.sources.tables import load_table
 from db_loganalyzer_spark.streaming import (
     read_events_stream,
     run_available_now,
-    streaming_event_histogram,
     streaming_rollup,
     streaming_sessions,
     streaming_value_drops,
@@ -100,25 +99,6 @@ def test_streaming_sessions_match_batch(
         assert gr["end_ts_us"] == wr["end_ts_us"]
         assert gr["n_events"] == wr["n_events"]
         assert abs(gr["duration_s"] - wr["duration_s"]) < 1e-6
-
-
-def test_streaming_histogram_matches_batch(
-    spark, events_stream, events_batch, tmp_path_factory
-):
-    ck = str(tmp_path_factory.mktemp("ck_hist"))
-    got = run_available_now(
-        streaming_event_histogram(events_stream),
-        "hist_stream",
-        ck,
-        output_mode="complete",
-    )
-    want = {
-        r["event_type"]: r["n"]
-        for r in events_batch.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert {r["event_type"]: r["n"] for r in got.collect()} == want
 
 
 def test_streaming_value_drops_match_batch(

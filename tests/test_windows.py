@@ -74,12 +74,6 @@ def test_marker_chunks_marker_closes_chunk(spark):
     assert got == {0: 0, 1: 0, 2: 1, 3: 1}  # marker row 1 ends chunk 0
 
 
-def test_first_matching(spark):
-    df = _df(spark, [(0, 1.0), (1, 50.0), (2, 60.0)])
-    out = W.first_matching(df, F.col("value") >= 50).collect()
-    assert len(out) == 1 and out[0].event_id == 1
-
-
 # ---------------------------------------------------------------------------
 # Stitched global-order variants: must be bit-identical to the single-
 # partition global window at >= 2 range partitions, including null runs,
@@ -120,38 +114,10 @@ def test_value_drops_stitched_matches_global(spark):
     assert _sorted_rows(st) == _sorted_rows(glob)
 
 
-def test_value_resets_stitched_matches_global(spark):
-    df = _wide_df(spark, seed=11)
-    glob = W.value_resets(df, "value", high=40.0, low=10.0)
-    st = W.value_resets_stitched(df, "value", high=40.0, low=10.0, num_partitions=6)
-    assert _sorted_rows(st) == _sorted_rows(glob)
-
-
-def test_lag_regressions_stitched_matches_global(spark):
-    df = _wide_df(spark, seed=13)
-    glob = W.lag_regressions(df, "value")
-    st = W.lag_regressions_stitched(df, "value", num_partitions=5)
-    assert _sorted_rows(st) == _sorted_rows(glob)
-
-
-def test_sessionize_stitched_matches_global(spark):
-    df = _wide_df(spark, seed=17)
-    glob = W.sessionize(df, gap_seconds=2)
-    st = W.sessionize_stitched(df, gap_seconds=2, num_partitions=5)
-    assert _sorted_rows(st) == _sorted_rows(glob)
-
-
-def test_sessionize_stitched_boundary_continuation(spark):
-    # One long session spanning every partition: all ids must stay 0.
-    df = _df(spark, [(i, 1.0) for i in range(0, 40, 2)])
-    st = W.sessionize_stitched(df, gap_seconds=5, num_partitions=4)
-    assert {r.session_id for r in st.collect()} == {0}
-
-
 @pytest.mark.slow
 def test_stitched_equivalence_property(spark):
     """Randomized equivalence: for arbitrary (ts-tied, null-ridden)
-    series and partition counts, every stitched variant must equal its
+    series and partition counts, the stitched value drops must equal the
     single-partition global form. Hypothesis shrinks failures to minimal
     series; examples are capped so the suite stays fast."""
     from hypothesis import HealthCheck, given, settings
@@ -183,22 +149,16 @@ def test_stitched_equivalence_property(spark):
         assert _sorted_rows(
             W.value_drops_stitched(df, "value", num_partitions=nparts)
         ) == _sorted_rows(W.value_drops(df, "value"))
-        assert _sorted_rows(
-            W.lag_regressions_stitched(df, "value", num_partitions=nparts)
-        ) == _sorted_rows(W.lag_regressions(df, "value"))
-        assert _sorted_rows(
-            W.sessionize_stitched(df, gap_seconds=gap, num_partitions=nparts)
-        ) == _sorted_rows(W.sessionize(df, gap_seconds=gap))
 
     check()
 
 
 def test_stitched_prev_columns_match_single_partition_windows(spark):
     """The multi-column stitched helper, column by column, equals the
-    single-partition W1-W3 windows (W1/W2 in last-non-null mode, W3 in
-    plain-lag mode) over series with tied timestamps and columns that are
-    null on different rows. Small enough for the default gate; the slow
-    sweep above covers the one-column wrappers."""
+    single-partition W1/W2 windows (last non-null previous value) over
+    series with tied timestamps and columns that are null on different
+    rows. Small enough for the default gate; the slow sweep above covers
+    the one-column wrapper."""
     import functools
     from datetime import timedelta
 
@@ -210,36 +170,33 @@ def test_stitched_prev_columns_match_single_partition_windows(spark):
 
     @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
     @given(vals=st.lists(st.tuples(cell, cell), min_size=2, max_size=24),
-           nparts=st.integers(min_value=2, max_value=5), nonnull_only=st.booleans())
-    def check(vals, nparts, nonnull_only):
+           nparts=st.integers(min_value=2, max_value=5))
+    def check(vals, nparts):
         t0 = datetime(2024, 1, 1)
         df = spark.createDataFrame(
             # ts ties every 2 rows; event_id breaks them
             [(i, t0 + timedelta(seconds=i // 2), a, b) for i, (a, b) in enumerate(vals)],
             "event_id long, ts timestamp, a double, b double",
         )
-        if nonnull_only:
-            refs = {
-                "drop": lambda c: W.value_drops(df, c, allow_global_order=True),
-                "reset": lambda c: W.value_resets(
-                    df, c, high=5.0, low=5.0, allow_global_order=True),
-            }
-        else:
-            refs = {"lag": lambda c: W.lag_regressions(df, c, allow_global_order=True)}
+        refs = {
+            "drop": lambda c: W.value_drops(df, c, allow_global_order=True),
+            "reset": lambda c: W.value_resets(
+                df, c, high=5.0, low=5.0, allow_global_order=True),
+        }
         want = functools.reduce(DataFrame.union, [
             ref(c).select(F.lit(kind), F.lit(c), "event_id", "prev_value")
             for c in ("a", "b") for kind, ref in refs.items()
         ])
         got = set()
-        out = W.stitched_prev(df, ["a", "b"], num_partitions=nparts, nonnull_only=nonnull_only)
+        out = W.stitched_prev(df, ["a", "b"], num_partitions=nparts)
         for r in out.collect():
             for c in ("a", "b"):
                 v, prev = r[c], r[f"prev_{c}"]
                 if v is None or prev is None:
                     continue
                 if v < prev:
-                    got.add(("drop" if nonnull_only else "lag", c, r.event_id, prev))
-                if nonnull_only and prev > 5.0 and v < 5.0:
+                    got.add(("drop", c, r.event_id, prev))
+                if prev > 5.0 and v < 5.0:
                     got.add(("reset", c, r.event_id, prev))
         assert got == {tuple(r) for r in want.collect()}
 
