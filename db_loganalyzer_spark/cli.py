@@ -78,17 +78,31 @@ def handle_init(args) -> int:
     return 0
 
 
-def _save(spark: SparkSession, df, name: str, mode: str) -> None:
-    """saveAsTable; an append fills the columns the existing table has
-    and ``df`` lacks with NULL (``init`` creates the reference DDL, e.g.
-    event_metrics.unit, which ingest does not produce)."""
+def _save(
+    spark: SparkSession, df, name: str, mode: str, existing: int | None = None
+) -> int:
+    """saveAsTable, returning the table's row count after the write: the
+    rows written, counted by an Observation inside the write job, plus,
+    for an append into an existing table, the rows it held before
+    (``existing``, else one count before the write). An append fills the
+    columns the existing table has and ``df`` lacks with NULL (``init``
+    creates the reference DDL, e.g. event_metrics.unit, which ingest does
+    not produce)."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     if mode == "append" and spark.catalog.tableExists(name):
-        for f in spark.table(name).schema:
+        table = spark.table(name)
+        for f in table.schema:
             if f.name not in df.columns:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    df.write.mode(mode).saveAsTable(name)
+        if existing is None:
+            existing = table.count()
+    else:
+        existing = 0
+    written = Observation()
+    df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(mode).saveAsTable(name)
+    return existing + written.get["rows"]
 
 
 def handle_load(args) -> int:
@@ -118,26 +132,28 @@ def handle_load(args) -> int:
         paths = [path]
     spark = _spark(args)
     _use(spark, args)
-    prev_max = None
+    prev_max = prev_rows = None
     if args.preprocessed:
         events = load_preprocessed_events(spark, paths)
     else:
         # appending into a populated DB: continue event_ids past the
         # current max so ids stay unique across CLI invocations (the
         # reference tracks the DB's max id the same way,
-        # cli_wrapper/main.py:296-301)
+        # cli_wrapper/main.py:296-301); the same aggregate counts the
+        # rows the append adds to
         if args.mode == "append" and spark.catalog.tableExists("events"):
-            prev_max = spark.table("events").agg(F.max("event_id")).first()[0]
+            prev_max, prev_rows = spark.table("events").agg(
+                F.max("event_id"), F.count(F.lit(1))
+            ).first()
         id_offset = 0 if prev_max is None else prev_max + 1
         events = read_trace_events(spark, paths, id_offset, per_file_offsets=True)
-    _save(spark, events, "events", args.mode)
-    stored = spark.table("events")
-    print(f"events: {stored.count()} rows")
+    print(f"events: {_save(spark, events, 'events', args.mode, prev_rows)} rows")
     # the side tables derive from the rows this load added. A trace load
     # takes them from the stored table, not from the lazy parse, which
     # every write would otherwise re-run. Preprocessed files carry their
     # own ids, which need not exceed the table's max, so their rows are
     # the frame the load read.
+    stored = spark.table("events")
     if args.preprocessed:
         added = events
     elif prev_max is None:
@@ -145,8 +161,7 @@ def handle_load(args) -> int:
     else:
         added = stored.filter(F.col("event_id") > prev_max)
     for name, derive in DERIVED_TABLES.items():
-        _save(spark, derive(added), name, args.mode)
-        print(f"{name}: {spark.table(name).count()} rows")
+        print(f"{name}: {_save(spark, derive(added), name, args.mode)} rows")
     return 0
 
 
@@ -225,11 +240,8 @@ def handle_rollup(args) -> int:
         exact_percentile=not args.approx,
         deterministic_avg=False,  # reference parity: plain double AVG
     )
-    roll.write.mode("overwrite").saveAsTable(f"rollups_{args.window}s")
-    print(
-        f"rollups_{args.window}s: "
-        f"{spark.table(f'rollups_{args.window}s').count()} rows"
-    )
+    name = f"rollups_{args.window}s"
+    print(f"{name}: {_save(spark, roll, name, 'overwrite')} rows")
     return 0
 
 

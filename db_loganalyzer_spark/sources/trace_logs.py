@@ -3,11 +3,14 @@ FDB-style TraceEvent files -> normalized ``events`` DataFrame + the four
 derived tables (event_metrics, events_wide, processes, process_roles).
 
 Reference behavior (tools/parser.py, tools/storage.py) re-expressed as one
-declarative pipeline: read all files at once, split the envelope from the
-open-ended payload (kept as MAP<STRING,STRING>), and derive the side
-tables (:data:`DERIVED_TABLES`) as DataFrames off ``events`` — the
-reference's five synchronous per-row inserts (tools/storage.py:72-98)
-disappear entirely.
+declarative pipeline: read all files in one text scan, parse each line by
+its file's format, split the envelope from the open-ended payload (kept
+as MAP<STRING,STRING>), and derive the side tables
+(:data:`DERIVED_TABLES`) as DataFrames off ``events`` — the reference's
+five synchronous per-row inserts (tools/storage.py:72-98) disappear
+entirely. The plan is JVM-only: per-file id offsets enter as a literal
+map, not as a driver-built frame, so no Python worker starts and no
+side job runs to join them.
 
 The derived frames are lazy: each one re-evaluates the whole parse
 (text scan + per-file line window) when it is materialized on its own.
@@ -60,50 +63,64 @@ def read_trace_lines(spark: SparkSession, paths) -> DataFrame:
     """Raw lines + provenance. ``line_no`` is the 1-based line index per
     file (the reference's per-file event_id, tools/parser.py:47) —
     computed from the text source's split/row order, which follows file
-    order for uncompressed text."""
+    order for uncompressed text.
+
+    The window's partition key leads with "not an ``.xml`` file". That
+    is a function of the file, so ``line_no`` is the same as with the
+    file alone, but within an output partition the lines of XML files
+    come first. Float aggregates downstream (z-scores, baseline standard
+    deviations) sum in row order, so this fixed order keeps their last
+    digits, and the investigation prompts built from them, the same as
+    when each format was read by its own scan and the two unioned."""
     df = (
         spark.read.text(paths)
         .withColumn("trace_file", F.input_file_name())
         .withColumn("__mid", F.monotonically_increasing_id())
     )
-    w = Window.partitionBy("trace_file").orderBy("__mid")
+    is_xml = F.col("trace_file").endswith(".xml")
+    w = Window.partitionBy(~is_xml, "trace_file").orderBy("__mid")
     return df.withColumn("line_no", F.row_number().over(w)).drop("__mid")
 
 
-def parse_jsonl(lines: DataFrame, line_col: str = "value") -> DataFrame:
-    """S2 — one JSON object per line; on JSON failure fall back to the
-    plaintext ``k=v`` regex parse (tools/parser.py:42-56). Blank lines are
-    dropped (but keep their line numbers, matching enumerate-then-skip)."""
-    line = F.trim(F.col(line_col))
-    as_json = F.from_json(line, "map<string,string>")
+class _LineParser:
+    """One line-per-event trace format: which trimmed lines hold an event
+    (``keep``) and the attribute map of such a line (``attrs``). Called on
+    a lines frame it parses every line in this format; the one-scan
+    dispatch in :func:`read_trace_events` picks each line's rule by the
+    file the line came from."""
+
+    def __init__(self, keep, attrs):
+        self.keep, self.attrs = keep, attrs
+
+    def __call__(self, lines: DataFrame, line_col: str = "value") -> DataFrame:
+        line = F.trim(F.col(line_col))
+        return lines.filter(self.keep(line)).withColumn("attrs", self.attrs(line))
+
+
+def _json_or_kv(line: Column) -> Column:
     kv_pairs = F.regexp_extract_all(line, F.lit(_KV_RE), 0)
     as_kv = F.map_from_arrays(
         F.transform(kv_pairs, lambda p: F.regexp_extract(p, _KV_RE, 1)),
         F.transform(kv_pairs, lambda p: F.regexp_extract(p, _KV_RE, 2)),
     )
-    return (
-        lines.filter(F.length(line) > 0)
-        .withColumn("attrs", F.coalesce(as_json, as_kv))
-        .filter(F.size("attrs") >= 0)
-    )
+    return F.coalesce(F.from_json(line, "map<string,string>"), as_kv)
 
 
-def parse_xml(lines: DataFrame, line_col: str = "value") -> DataFrame:
-    """S1 — ``<Event .../>`` elements. CONTRACT: one complete element
-    per LINE (what FDB emits). A pretty-printed / multi-line trace
-    silently degrades here — each opener line yields an empty or
-    truncated attr bag — so route such files through
-    :func:`parse_xml_tolerant`, whose span assembly tolerates arbitrary
-    intra-tag formatting and exposes a quarantine lane instead of
-    dropping. Attribute extraction via regexp over the raw text — a
-    narrow, codegen'd map build; ``spark.read.format("xml")`` would
-    force a schema-inference pass and per-file union schemas for what
-    is an open-ended attribute bag."""
-    line = F.trim(F.col(line_col))
-    return (
-        lines.filter(line.startswith("<Event"))
-        .withColumn("attrs", _attrs_to_map(line))
-    )
+# S2 — one JSON object per line; on JSON failure fall back to the
+# plaintext ``k=v`` regex parse (tools/parser.py:42-56). Blank lines are
+# dropped (but keep their line numbers, matching enumerate-then-skip).
+parse_jsonl = _LineParser(keep=lambda line: F.length(line) > 0, attrs=_json_or_kv)
+
+# S1 — ``<Event .../>`` elements. CONTRACT: one complete element per LINE
+# (what FDB emits). A pretty-printed / multi-line trace silently degrades
+# here — each opener line yields an empty or truncated attr bag — so route
+# such files through :func:`parse_xml_tolerant`, whose span assembly
+# tolerates arbitrary intra-tag formatting and exposes a quarantine lane
+# instead of dropping. Attribute extraction via regexp over the raw text —
+# a narrow, codegen'd map build; ``spark.read.format("xml")`` would force
+# a schema-inference pass and per-file union schemas for what is an
+# open-ended attribute bag.
+parse_xml = _LineParser(keep=lambda line: line.startswith("<Event"), attrs=_attrs_to_map)
 
 
 def read_trace_event_spans(spark: SparkSession, paths) -> DataFrame:
@@ -263,71 +280,80 @@ def read_trace_events(
     per_file_offsets: bool = False,
     tolerant_xml: bool = False,
 ) -> DataFrame:
-    """S3 — unified entry: dispatch XML vs JSONL/plaintext by extension
-    (tools/parser.py:58-71), union the results. Accepts a str glob or a
-    list of paths. ``tolerant_xml`` routes .xml files through
-    :func:`parse_xml_tolerant` (multi-line / pretty-printed tags parse
-    instead of silently degrading; ``line_no`` then numbers EVENTS
-    rather than physical lines, so per_file_offsets keeps uniqueness
-    but not line identity).
+    """S3 — unified entry (tools/parser.py:58-71). Accepts a str glob or a
+    list of paths, read in one text scan with one per-file line window;
+    each line is parsed by the rule of the file it came from: a file
+    whose name ends in ``.xml`` by :data:`parse_xml`, any other by
+    :data:`parse_jsonl`, so a glob or directory that mixes formats parses
+    each file as its own format. ``tolerant_xml`` routes paths ending in
+    ``.xml`` through :func:`parse_xml_tolerant` instead (multi-line /
+    pretty-printed tags parse instead of silently degrading; ``line_no``
+    then numbers EVENTS rather than physical lines, so per_file_offsets
+    keeps uniqueness but not line identity) and unions its output with
+    the line parse of the other paths.
 
     ``per_file_offsets`` reproduces the reference's multi-file uniqueness
     scheme (cli_wrapper/main.py:296-301: each file's ids start past the
     previous files' total) without its sequential per-file loop: one tiny
-    count aggregate (one row per file) builds cumulative offsets in path
-    order driver-side, then a broadcast join attaches each file's offset.
-    Deliberate deviation: we offset by per-file LINE counts rather than
-    parsed-event counts — line-numbered ids can exceed the event count
-    (blank/non-event lines keep their numbers), so count-based offsets
-    could still collide; line-count offsets cannot."""
+    line-count aggregate (one row per file) builds cumulative offsets in
+    path order driver-side, and they enter the plan as a literal
+    ``file -> offset`` map looked up on each row's file. Deliberate
+    deviation: we offset by per-file LINE counts rather than parsed-event
+    counts — line-numbered ids can exceed the event count (blank/non-event
+    lines keep their numbers), so count-based offsets could still collide;
+    line-count offsets cannot."""
     if isinstance(paths, str):
         paths = [paths]
-    xml = [p for p in paths if p.endswith(".xml")]
-    other = [p for p in paths if not p.endswith(".xml")]
-    parts = []
-    if xml:
-        parts.append(
-            parse_xml_tolerant(spark, xml)
-            if tolerant_xml
-            else parse_xml(read_trace_lines(spark, xml))
-        )
-    if other:
-        parts.append(parse_jsonl(read_trace_lines(spark, other)))
-    if not parts:
+    if not paths:
         raise ValueError("no input paths")
-    parsed = parts[0]
-    for p in parts[1:]:
-        parsed = parsed.unionByName(p)
-    if per_file_offsets and len(paths) > 1:
-        lines = read_trace_lines(spark, paths)
-        counts = {
-            r["trace_file"]: r["n"]
-            for r in lines.groupBy("trace_file")
-            .agg(F.max("line_no").alias("n"))
-            .collect()
-        }
-
-        def match(path: str) -> str:
-            # input_file_name() yields a URI (file:///...); resolve each
-            # requested path to the URI it produced
-            for uri in counts:
-                if uri.endswith("/" + path.lstrip("/")) or uri == path:
-                    return uri
-            raise ValueError(f"no loaded file matches {path!r}")
-
-        acc, rows = id_offset, []
-        for p in paths:
-            uri = match(p)
-            rows.append((uri, acc))
-            acc += counts[uri]
-        offsets = spark.createDataFrame(rows, "trace_file string, __off long")
-        parsed = (
-            parsed.join(F.broadcast(offsets), "trace_file")
-            .withColumn("line_no", F.col("line_no") + F.col("__off"))
-            .drop("__off")
+    if tolerant_xml:
+        xml = [p for p in paths if p.endswith(".xml")]
+        other = [p for p in paths if not p.endswith(".xml")]
+        parts = []
+        if xml:
+            parts.append(parse_xml_tolerant(spark, xml))
+        if other:
+            parts.append(parse_jsonl(read_trace_lines(spark, other)))
+        parsed = parts[0]
+        for p in parts[1:]:
+            parsed = parsed.unionByName(p)
+    else:
+        is_xml = F.col("trace_file").endswith(".xml")
+        by_file = _LineParser(
+            keep=lambda ln: F.when(is_xml, parse_xml.keep(ln)).otherwise(parse_jsonl.keep(ln)),
+            attrs=lambda ln: F.when(is_xml, parse_xml.attrs(ln)).otherwise(parse_jsonl.attrs(ln)),
         )
-        return events_from_attrs(parsed, 0)
-    return events_from_attrs(parsed, id_offset)
+        parsed = by_file(read_trace_lines(spark, paths))
+    if not (per_file_offsets and len(paths) > 1):
+        return events_from_attrs(parsed, id_offset)
+    counts = {
+        r["trace_file"]: r["count"]
+        for r in spark.read.text(paths)
+        .groupBy(F.input_file_name().alias("trace_file"))
+        .count()
+        .collect()
+    }
+
+    def match(path: str) -> str:
+        # input_file_name() yields a URI (file:///...); resolve each
+        # requested path to the URI it produced
+        for uri in counts:
+            if uri.endswith("/" + path.lstrip("/")) or uri == path:
+                return uri
+        raise ValueError(f"no loaded file matches {path!r}")
+
+    acc, offsets = id_offset, {}
+    for p in paths:
+        uri = match(p)
+        offsets[uri] = acc
+        acc += counts[uri]
+    offset = F.element_at(
+        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
+        F.col("trace_file"),
+    )
+    return events_from_attrs(
+        parsed.withColumn("line_no", F.col("line_no") + offset.cast("long"))
+    )
 
 
 def load_preprocessed_events(spark: SparkSession, paths) -> DataFrame:
@@ -513,8 +539,9 @@ def ingest(
     Multi-file loads get per-file id offsets by default (reference
     parity: ids stay unique across files, cli_wrapper/main.py:296-301).
 
-    Every frame is lazy over the trace text, so each derived frame
-    re-runs the parse when it is materialized on its own; to write or
+    With offsets, the one line-count collect runs here; every frame is
+    otherwise lazy over the trace text, so each derived frame re-runs the
+    parse (one text scan) when it is materialized on its own. To write or
     collect several, materialize ``events`` first and apply
     :data:`DERIVED_TABLES` to the stored table (see ``cli load``)."""
     events = read_trace_events(

@@ -8,6 +8,7 @@ import glob
 import json
 import math
 import os
+import re
 from collections import Counter
 from types import SimpleNamespace
 
@@ -264,10 +265,13 @@ def test_roundtrip_export_row_count(spark, ref_roundtrip, tmp_path):
 
 CORE = ("events", "event_metrics", "events_wide", "processes", "process_roles")
 
-# One overwrite load of the generated corpus runs 22 Spark jobs on a 4-core
-# local session; it ran 30 when every side-table write re-parsed the trace
-# text. The budget leaves a few jobs of headroom for plan variation.
-LOAD_JOB_BUDGET = 25
+# One overwrite load of the generated corpus runs 10 Spark jobs on a 4-core
+# local session: the line-count collect and five writes, each counting its
+# rows inside the write job. It ran 22 when the per-file id offsets were a
+# broadcast Python-built frame and each table was counted after its write,
+# and 30 when every side-table write re-parsed the trace text. The budget
+# leaves two jobs of headroom for plan variation.
+LOAD_JOB_BUDGET = 12
 
 
 def _trace_event(i, kind, machine, role=None, **extra):
@@ -491,6 +495,46 @@ def test_load_preprocessed_dir_writes_every_file_and_side_table(spark, tmp_path)
             got = _rows(spark.table(f"{db}.{t}"), df.columns)
             assert got, t
             assert got == _rows(df, df.columns), t
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+
+
+def test_printed_counts_equal_table_counts(spark, tmp_path, capsys):
+    """Each ``name: N rows`` line that load and rollup print is the
+    table's row count after the command: after an overwrite load, after
+    each of two appends of trace files, after a preprocessed append and
+    after a rollup."""
+    logs, batch1, extra = _write_corpus(tmp_path)
+    pre = tmp_path / "pre.json"
+    pre.write_text(json.dumps([
+        _preprocessed(1001, "StorageMetrics", "10.0.0.9:4500", "SS",
+                      "2025-11-23T04:00:01Z", QueueSize=9, Ops=2),
+        _preprocessed(1002, "Role", "10.0.0.9:4500", "TL", "2025-11-23T04:00:02Z",
+                      As="TLog"),
+    ]))
+    db = "cli_counts"
+    base = ["--db", str(tmp_path / "wh"), "--database", db]
+    steps = [
+        ["load", logs, "--mode", "overwrite"],
+        ["load", extra, "--mode", "append"],
+        ["load", batch1[2], "--mode", "append"],
+        ["load", str(pre), "--mode", "append", "--preprocessed"],
+        ["rollup", "--window", "60"],
+    ]
+    try:
+        seen = []
+        for argv in steps:
+            capsys.readouterr()
+            assert cli.main(base + argv) == 0
+            out = capsys.readouterr().out
+            printed = dict(re.findall(r"^(\w+): (\d+) rows$", out, re.M))
+            want = CORE if argv[0] == "load" else ("rollups_60s",)
+            assert sorted(printed) == sorted(want), (argv, out)
+            for name, n in printed.items():
+                assert int(n) == spark.table(f"{db}.{name}").count(), (argv, name)
+            seen.append(int(printed.get("events", 0)))
+        # the appends grew events: 10, then +2, +3 and +2 rows
+        assert seen[:4] == [10, 12, 15, 17], seen
     finally:
         spark.catalog.setCurrentDatabase("default")
 

@@ -4,6 +4,8 @@ using the reference's own sample files where available."""
 
 import json
 import os
+from collections import Counter
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -311,6 +313,65 @@ def test_multi_file_per_file_offsets(spark, fixture_dir, tmp_path):
     legacy = TL.read_trace_events(spark, [str(a), str(b)], id_offset=100)
     ids = [r["event_id"] for r in legacy.collect()]
     assert sorted(ids) == [101, 101, 102, 103]
+
+
+def _row_multiset(df) -> Counter:
+    """Every row, all columns, with ts as its UTC text and fields sorted."""
+    rows = df.withColumn("ts", F.col("ts").cast("string")).collect()
+    return Counter(
+        tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+        for r in rows
+    )
+
+
+def test_mixed_glob_parses_each_file_as_its_format(spark, fixture_dir):
+    """A glob that matches an XML and a JSONL file gives the same rows as
+    naming the two files: each file is parsed by its own format, not by
+    the glob's extension."""
+    glob_ev = TL.read_trace_events(spark, f"{fixture_dir}/mini.*")
+    listed = TL.read_trace_events(
+        spark, [f"{fixture_dir}/mini.json", f"{fixture_dir}/mini.xml"]
+    )
+    assert _row_multiset(glob_ev) == _row_multiset(listed)
+    assert glob_ev.filter(F.col("event") == "Net2Starting").count() == 1
+
+
+def test_per_file_offsets_plan_is_one_jvm_scan(spark, fixture_dir):
+    """Ingest of a mixed XML + JSONL file list with per-file offsets is
+    one text scan with no Python-built frame, no broadcast and no Python
+    UDF, and every row, all 12 columns, is the frozen expectation."""
+    paths = [f"{fixture_dir}/mini.json", f"{fixture_dir}/mini.xml"]
+    ev = TL.read_trace_events(spark, paths, per_file_offsets=True)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        ev._jdf.queryExecution(), "extended"
+    )
+    for node in ("LogicalRDD", "ExistingRDD", "BroadcastExchange",
+                 "BatchEvalPython", "ArrowEvalPython"):
+        assert node not in plan, node
+    assert plan.count("FileScan text") == 1, plan
+    js, xs = (Path(p).as_uri() for p in paths)
+    want = [
+        (1, "2025-09-05 21:14:45", 10, "StorageMetrics", None, "SS", None,
+         "2.0.1.0:1", None, js, None,
+         (("BytesInput", "12 34 -1"), ("KvstoreBytesUsed", "inf"),
+          ("Roles", "SS"), ("VersionLag", "1200"))),
+        (2, "2025-09-05 21:14:46", 30, "GRVLatencyMetrics", None, "GP", None,
+         "2.0.1.0:2", None, js, None,
+         (("Mean", "0.002"), ("P95", "0.01"), ("Roles", "GP"))),
+        (3, None, 40, "TLogMetrics", None, None, None, "2.0.1.0:3",
+         "2.0.1.0:3", js, None,
+         (("DurableVersion", "1500000"), ("Version", "2000000"))),
+        (5, None, 20, "SlowTask", None, None, None, "1.2.3.4:1", None, js,
+         None, (("Duration", "2.5"),)),
+        (6, None, None, None, None, None, None, None, None, js, None, ()),
+        # mini.json spans 6 lines, so mini.xml's lines 3 and 4 are 9 and 10
+        (9, "2025-11-23 03:37:49", 10, "Net2Starting", None, None, None,
+         "172.17.0.3:4500", None, xs, None, (("ID", "0000"),)),
+        (10, "2025-11-23 03:37:50", 20, "Role", None, "MS", 42,
+         "172.17.0.3:4500", None, xs, None, (("As", "Master"), ("Roles", "MS"))),
+    ]
+    assert len(ev.columns) == 12
+    assert _row_multiset(ev) == Counter(want)
 
 
 # ---------------------------------------------------------------------------

@@ -233,8 +233,6 @@ BROADCAST_OK = {
         2, "per-group median + MAD frames over bounded group keys"),
     ("db_loganalyzer_spark/detectors/detectors.py", "seasonal_anomalies"): (
         1, "per-(metric, season-slot) profile frame, bounded grid"),
-    ("db_loganalyzer_spark/sources/trace_logs.py", "read_trace_events"): (
-        1, "per-input-file id-offset frame, one row per file"),
     ("db_loganalyzer_spark/sources/tables.py", "load_customer_geo"): (
         2, "nation (25 rows) and region (5 rows) — genuinely fixed dims"),
 }
