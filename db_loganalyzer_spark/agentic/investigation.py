@@ -20,10 +20,11 @@ deterministic and is what this module re-expresses Spark-first:
   the loop is fully testable offline.
 - Storage ownership: ``PhasedInvestigationAgent.investigate`` persists its
   input (and the metric baselines it derives) once on entry and releases
-  them on exit, error included. The tools, detectors and formatter it
-  calls are lazy over that one cached frame, so the loop's Spark jobs do
-  not each re-read and re-parse the trace text. The only storage left
-  behind is ``rollback_analysis``'s own ``localCheckpoint`` frame.
+  them on exit, error included, together with ``rollback_analysis``'s
+  ``localCheckpoint``; it leaves no storage behind and never frees the
+  caller's. The tools, detectors and formatter it calls are lazy over
+  that one cached frame, so the loop's Spark jobs do not each re-read
+  and re-parse the trace text.
 - One action per step: ``_collect_sections`` takes a ``{section: bounded
   frame}`` map, tags every row as ``to_json(struct(*))`` (timestamps as
   ``unix_micros``, NULL fields kept) with its section and a
@@ -31,13 +32,19 @@ deterministic and is what this module re-expresses Spark-first:
   once and splits them back into sections on the driver, in row order,
   with the values ``collect()`` would give. The formatter, phase A's
   scanner tail (rollback summary, baselines row count, recovery-episode
-  head) and phase B's five one-row detector summaries each go through
-  it. With AQE every shuffle map stage is still its own job, so a union
+  head) and the five one-row detector summaries each go through it.
+  With AQE every shuffle map stage is still its own job, so a union
   saves actions, not every job. The grouped detector aggregates
   (``zscore_hotspots``, ``baseline_window_anomalies``,
-  ``metric_anomalies``) stay out of the phase-B union and keep their own
-  collects: on ``perfbench``'s ``incident_rca`` pass (seed 1, 4 cores),
-  putting them in it raised ``peak_exec_mb`` from 201.6 to 403.0 MB.
+  ``metric_anomalies``) stay out of the detector union and keep their
+  own collects: on ``perfbench``'s ``incident_rca`` pass (seed 1, 4
+  cores), putting them in it raised ``peak_exec_mb`` from 201.6 to 403.0
+  MB. The detector summaries stay out of phase A's tail union too (in
+  it, the same pass ran 48 jobs, not 47).
+- The detectors read only the input, its event metrics and the
+  baselines, so one investigation runs them once and later iterations
+  reuse the results: with a low-confidence LLM, 6 iterations over an
+  ``incident_rca`` corpus (seed 7, 4 cores) run 66–70 jobs, not 122–130.
 
 Documented deviations from the reference (kept deliberately):
 - the reference's display sort key ``-(sev) if sev>=40 else -1000``
@@ -608,6 +615,62 @@ def _own(df: DataFrame, owned: list[DataFrame]) -> DataFrame:
     return df
 
 
+def _checkpoint_rdds(df: DataFrame) -> dict:
+    """The RDDs behind the ``LogicalRDD`` leaves of ``df``'s analyzed
+    plan (a ``localCheckpoint`` is one), by RDD id."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    rdds = [
+        leaf.rdd()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    ]
+    return {rdd.id(): rdd for rdd in rdds}
+
+
+def _detector_results(
+    events: DataFrame, event_metrics: DataFrame, baselines: DataFrame
+) -> dict[str, dict]:
+    """The eight global detectors' evidence (reference :1100-1151): the
+    five one-row summaries in one action, then the three grouped
+    detectors' own collects."""
+    from ..detectors import detectors as D
+
+    summaries = _collect_sections({
+        "storage_engine_pressure": D.storage_engine_pressure(events, baselines)["summary"],
+        "recovery_loop": D.recovery_loop(events)["summary"],
+        "ratekeeper_throttling": D.ratekeeper_throttling(events)["summary"],
+        "missing_tlogs": D.missing_tlogs(events)["summary"],
+        "coordination_loss": D.coordination_loss(events)["summary"],
+    })
+    det_results = {k: rows[0].asDict() for k, rows in summaries.items()}
+    hot_rows = D.zscore_hotspots(events)["hotspots"].collect()
+    det_results["zscore_hotspots"] = {
+        "detected": bool(hot_rows),
+        "hotspots": [
+            {
+                "bucket_start_epoch": r["bucket"],
+                "max_severity": r["max_severity"],
+                "count": r["count"],
+            }
+            for r in hot_rows
+        ],
+    }
+    bwa = [
+        r.asDict()
+        for r in D.baseline_window_anomalies(events, event_metrics, baselines)["anomalies"]
+        .limit(20)
+        .collect()
+    ]
+    det_results["baseline_window_anomalies"] = {
+        "detected": bool(bwa),
+        "count": len(bwa),
+        "first_anomaly": bwa[0] if bwa else None,
+    }
+    ma = D.metric_anomalies(events)["anomalies"].limit(20).collect()
+    det_results["metric_anomalies"] = {"detected": bool(ma), "count": len(ma)}
+    return det_results
+
+
 class PhasedInvestigationAgent:
     """The reference's full phased loop, Spark-first and LLM-injectable.
 
@@ -620,16 +683,20 @@ class PhasedInvestigationAgent:
     timeline build → RAG retrieval → gated LLM analysis (call budget,
     context-dirty skip) → confidence adjustment (L4) → z-score-guided
     hotspot dive via context windows → stop when confidence ≥ threshold
-    and a hotspot was inspected (or coverage is complete).
+    and a hotspot was inspected (or coverage is complete). The detectors
+    run on the first of these iterations only; every later one reuses
+    their results (and still reports them to the LLM and in
+    ``tools_used``), since nothing they read changes.
 
     ``llm(prompt_text: str) -> str`` returns raw LLM text (parsed by L3);
     ``rag(query: str) -> str | None`` is the optional retriever. Both are
     plain callables so the whole loop is deterministic offline.
 
     ``investigate`` owns its input's storage: it persists ``events`` (and
-    ``baselines`` when it derives them) on entry and unpersists them in a
-    ``finally`` on exit. A frame the caller passes in already persisted
-    is neither re-persisted nor released.
+    ``baselines`` when it derives them) on entry and, in a ``finally`` on
+    exit, unpersists them and releases the ``localCheckpoint`` under
+    ``rollback_analysis``'s frames. A frame the caller passes in already
+    persisted or checkpointed is neither re-persisted nor released.
     """
 
     def __init__(
@@ -663,8 +730,12 @@ class PhasedInvestigationAgent:
         try:
             return self._loop(_own(events, owned), question, baselines, owned)
         finally:
+            keep = _checkpoint_rdds(events)  # the caller's own checkpoints
             for df in owned:
                 df.unpersist()
+                for rdd_id, rdd in _checkpoint_rdds(df).items():
+                    if rdd_id not in keep:
+                        rdd.unpersist(False)
 
     def _loop(
         self,
@@ -680,159 +751,92 @@ class PhasedInvestigationAgent:
         from .timeline import build_timeline
 
         hypothesis, confidence, reasoning = "", 0.0, ""
+        if self.max_iterations < 1:
+            return InvestigationResult(hypothesis, confidence, reasoning)
         tools_used: list[str] = []
         additional: list[tuple[str, object]] = []
         # Bucket coverage is tracked PER GRANULARITY — a 300s heatmap epoch
         # and a 10s dive epoch are different coordinates even when the ints
-        # collide. glanced_300: phase-A heatmap rows (no events pulled — a
-        # glance, so it never blocks a dive). dived_10: 10s buckets whose
-        # events were actually context-windowed. exhausted_300: hotspots
-        # whose every eventful 10s sub-bucket has been dived.
-        glanced_300: set[int] = set()
+        # collide. dived_10: 10s buckets whose events were actually
+        # context-windowed. exhausted_300: hotspots whose every eventful 10s
+        # sub-bucket has been dived.
         dived_10: set[int] = set()
         exhausted_300: set[int] = set()
-        dive_order: list[tuple[int, int]] = []  # (bucket_seconds, epoch) log
-        bucket_data: list[dict] = []
-        timeline_highlights: dict = {}
-        timeline_summary: dict = {}
-        acc = None  # accumulated evidence events (DataFrame); set in phase A
+
+        # ---- phase A, iteration 1: the global sweep (reference :983-1091) ----
+        acc = T.top_events(events, severity_min=30, limit=500)  # the evidence events
+        tools_used.append("scanner.top_events")
+        # The scanner's severity counts, event histogram and time span are
+        # parts of its global summary: ask Spark once and keep the
+        # reference's per-tool evidence and tool trail.
+        summary = T.global_summary(events)
+        additional.append(("severity_counts", summary["severity_counts"]))
+        tools_used.append("scanner.severity_counts")
+        additional.append(("event_histogram", summary["event_histogram"]))
+        tools_used.append("scanner.event_histogram")
+        span = summary["time_span"]
+        additional.append(("time_span", span))
+        tools_used.append("scanner.time_span")
+        buckets = T.high_severity_buckets(
+            events, min_severity=0, bucket_seconds=300, limit=100
+        )
+        additional.append(("bucket_heatmap", buckets))
+        tools_used.append("scanner.bucket_heatmap")
+        # heatmap rows are distinct buckets: a glance (no events pulled),
+        # so it never blocks a dive
+        dive_order = [(300, int(b["bucket_start_epoch"])) for b in buckets[:10]]
+        additional.append(("global_summary", summary))
+        tools_used.append("scanner.global_summary")
+        rb = D.rollback_analysis(events)
+        owned.append(rb["summary"])  # released with its localCheckpoint
+        event_metrics = derive_event_metrics(events)
+        if baselines is None:
+            # counted below, then read by two detectors
+            baselines = _own(
+                D.metric_baselines_table(events, event_metrics, min_count=20), owned
+            )
+        # the scanner's tail is one action; it also fills the baselines'
+        # cache for the detectors
+        tail = _collect_sections({
+            "rollback": rb["summary"],
+            "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),
+            "episodes": D.recovery_episodes(events)["episodes"].limit(20),
+        })
+        rollback_info = tail["rollback"][0].asDict()
+        additional.append(("rollback_analysis", rollback_info))
+        tools_used.append("scanner.rollback_analysis")
+        additional.append(("metric_baselines", tail["baselines"][0].asDict()))
+        tools_used.append("scanner.metric_baselines")
+        ep_rows = [r.asDict() for r in tail["episodes"]]
+        additional.append(("recovery_episodes", {"count": len(ep_rows)}))
+        tools_used.append("scanner.recovery_episodes")
+        timeline_highlights = {
+            "time_span": span,
+            "top_event_types": list(summary.get("event_histogram", {}).items())[:5],
+            "hot_buckets": buckets[:5],
+            "rollback_detected": rollback_info.get("detected"),
+            "recovery_episodes": ep_rows,
+        }
+        # the LLM is deferred to the next iteration (reference :1091)
+
+        det_results: dict[str, dict] | None = None
         fresh = None  # the last dive's events not yet in acc (lazy)
         context_dirty = True
         llm_calls = 0
         hotspot_inspected = False
         coverage_complete = False
-        phase = "A"
-        iteration = 0
-        last_det: dict = {}
-        event_metrics = None
-
-        while iteration < self.max_iterations:
-            iteration += 1
-
-            if phase == "A":
-                top = T.top_events(events, severity_min=30, limit=500)
-                tools_used.append("scanner.top_events")
-                acc = top
-                # The scanner's severity counts, event histogram and time
-                # span are parts of its global summary: ask Spark once and
-                # keep the reference's per-tool evidence and tool trail.
-                summary = T.global_summary(events)
-                additional.append(("severity_counts", summary["severity_counts"]))
-                tools_used.append("scanner.severity_counts")
-                additional.append(("event_histogram", summary["event_histogram"]))
-                tools_used.append("scanner.event_histogram")
-                span = summary["time_span"]
-                additional.append(("time_span", span))
-                tools_used.append("scanner.time_span")
-                buckets = T.high_severity_buckets(
-                    events, min_severity=0, bucket_seconds=300, limit=100
-                )
-                additional.append(("bucket_heatmap", buckets))
-                tools_used.append("scanner.bucket_heatmap")
-                for b in buckets[:10]:
-                    e = int(b["bucket_start_epoch"])
-                    if e not in glanced_300:
-                        glanced_300.add(e)
-                        dive_order.append((300, e))
-                additional.append(("global_summary", summary))
-                tools_used.append("scanner.global_summary")
-                rb = D.rollback_analysis(events)
-                event_metrics = derive_event_metrics(events)
-                if baselines is None:
-                    # counted below, then read by two phase-B detectors
-                    baselines = _own(
-                        D.metric_baselines_table(events, event_metrics, min_count=20),
-                        owned,
-                    )
-                # the scanner's tail is one action; it also fills the
-                # baselines' cache for phase B
-                tail = _collect_sections({
-                    "rollback": rb["summary"],
-                    "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),
-                    "episodes": D.recovery_episodes(events)["episodes"].limit(20),
-                })
-                rollback_info = tail["rollback"][0].asDict()
-                additional.append(("rollback_analysis", rollback_info))
-                tools_used.append("scanner.rollback_analysis")
-                additional.append(("metric_baselines", tail["baselines"][0].asDict()))
-                tools_used.append("scanner.metric_baselines")
-                ep_rows = [r.asDict() for r in tail["episodes"]]
-                additional.append(("recovery_episodes", {"count": len(ep_rows)}))
-                tools_used.append("scanner.recovery_episodes")
-
-                bucket_data = buckets
-                timeline_highlights = {
-                    "time_span": span,
-                    "top_event_types": list(
-                        summary.get("event_histogram", {}).items()
-                    )[:5],
-                    "hot_buckets": buckets[:5],
-                    "rollback_detected": rollback_info.get("detected"),
-                    "recovery_episodes": ep_rows,
-                }
-                phase = "B"
-                context_dirty = True
-                continue  # defer LLM to the next iteration (reference :1091)
-
+        iteration = 1
+        for iteration in range(2, self.max_iterations + 1):
             # ---- global detectors (reference :1100-1151) ----
-            # The five one-row summaries are one action. The grouped
-            # detectors below keep their own collects: in the same union
-            # they doubled the pass's peak execution memory.
-            summaries = _collect_sections({
-                "storage_engine_pressure": D.storage_engine_pressure(events, baselines)["summary"],
-                "recovery_loop": D.recovery_loop(events)["summary"],
-                "ratekeeper_throttling": D.ratekeeper_throttling(events)["summary"],
-                "missing_tlogs": D.missing_tlogs(events)["summary"],
-                "coordination_loss": D.coordination_loss(events)["summary"],
-            })
-            det_results: dict[str, dict] = {
-                k: rows[0].asDict() for k, rows in summaries.items()
-            }
-            hot_rows = [
-                r.asDict()
-                for r in D.zscore_hotspots(events)["hotspots"].collect()
-            ]
-            det_results["zscore_hotspots"] = {
-                "detected": bool(hot_rows),
-                "hotspots": [
-                    {
-                        "bucket_start_epoch": r["bucket"],
-                        "max_severity": r["max_severity"],
-                        "count": r["count"],
-                    }
-                    for r in hot_rows
-                ],
-            }
-            bwa = [
-                r.asDict()
-                for r in D.baseline_window_anomalies(
-                    events, event_metrics, baselines
-                )["anomalies"]
-                .limit(20)
-                .collect()
-            ]
-            det_results["baseline_window_anomalies"] = {
-                "detected": bool(bwa),
-                "count": len(bwa),
-                "first_anomaly": bwa[0] if bwa else None,
-            }
-            ma = (
-                D.metric_anomalies(events)["anomalies"].limit(20).collect()
-            )
-            det_results["metric_anomalies"] = {
-                "detected": bool(ma),
-                "count": len(ma),
-            }
+            # They read only events, event_metrics and baselines, which no
+            # iteration changes: the first iteration computes them and the
+            # later ones reuse the results.
+            if det_results is None:
+                det_results = _detector_results(events, event_metrics, baselines)
             tools_used.extend(f"detectors.{k}" for k in det_results)
             additional.append(("detectors", det_results))
-            last_det = det_results
 
-            timeline_summary = build_timeline(
-                acc,
-                det_results,
-                bucket_data,
-                timeline_highlights.get("recovery_episodes"),
-            )
+            timeline_summary = build_timeline(acc, det_results, buckets, ep_rows)
             if timeline_summary:
                 additional.append(("timeline_builder", timeline_summary))
                 context_dirty = True
@@ -848,13 +852,6 @@ class PhasedInvestigationAgent:
                     context_dirty = True
 
             # ---- gated LLM analysis (reference :1183-1233) ----
-            analysis = {
-                "hypothesis": hypothesis,
-                "confidence": confidence,
-                "reasoning": reasoning,
-                "suggested_tools": [],
-                "next_steps": "",
-            }
             if llm_calls < self.max_llm_calls and fresh is not None and not context_dirty:
                 # the last dive's new evidence, asked only when nothing
                 # else has already made the context dirty
@@ -904,40 +901,37 @@ class PhasedInvestigationAgent:
             # glimpse. A hotspot is skipped only once exhausted — a phase-A
             # heatmap glance at the same epoch never suppresses the dive.
             chosen_epoch = None
-            zhot = last_det.get("zscore_hotspots", {})
-            if zhot.get("detected") and zhot.get("hotspots"):
-                # ONE distributed query per iteration covering ALL live
-                # hotspots at once (not one job per hotspot): restrict
-                # events to rows whose 300s bucket is a live hotspot,
-                # bucket THOSE at 10s, drop dived sub-buckets, then pick
-                # by (hotspot rank, epoch) driver-side — the candidate
-                # list is tiny (≤ 30 sub-buckets per hotspot).
-                live = [
-                    e
-                    for h in zhot["hotspots"]
-                    if (e := int(h["bucket_start_epoch"])) not in exhausted_300
-                ]
-                if live:
-                    in_live = events.filter(
-                        (F.floor(F.col("ts").cast("double") / 300) * 300)
-                        .cast("long")
-                        .isin(live)
-                    )
-                    sub = T.get_uncovered(
-                        in_live, sorted(dived_10), min_severity=0,
-                        bucket_seconds=10,
-                    )
-                    rank = {e: i for i, e in enumerate(live)}
-                    cands = sorted(
-                        (rank[s - s % 300], s)
-                        for s in (int(r["bucket_start_epoch"]) for r in sub)
-                    )
-                    if cands:
-                        chosen_epoch = cands[0][1]
-                    else:
-                        # no live hotspot has an uncovered eventful
-                        # sub-bucket left — all of them are exhausted
-                        exhausted_300.update(live)
+            # ONE distributed query per iteration covering ALL live hotspots
+            # at once (not one job per hotspot): restrict events to rows
+            # whose 300s bucket is a live hotspot, bucket THOSE at 10s, drop
+            # dived sub-buckets, then pick by (hotspot rank, epoch)
+            # driver-side — the candidate list is tiny (≤ 30 sub-buckets per
+            # hotspot).
+            live = [
+                e
+                for h in det_results["zscore_hotspots"]["hotspots"]
+                if (e := int(h["bucket_start_epoch"])) not in exhausted_300
+            ]
+            if live:
+                in_live = events.filter(
+                    (F.floor(F.col("ts").cast("double") / 300) * 300)
+                    .cast("long")
+                    .isin(live)
+                )
+                sub = T.get_uncovered(
+                    in_live, sorted(dived_10), min_severity=0, bucket_seconds=10
+                )
+                rank = {e: i for i, e in enumerate(live)}
+                cands = sorted(
+                    (rank[s - s % 300], s)
+                    for s in (int(r["bucket_start_epoch"]) for r in sub)
+                )
+                if cands:
+                    chosen_epoch = cands[0][1]
+                else:
+                    # no live hotspot has an uncovered eventful sub-bucket
+                    # left — all of them are exhausted
+                    exhausted_300.update(live)
             if chosen_epoch is None:
                 uncovered = T.get_uncovered(
                     events, sorted(dived_10), min_severity=10, bucket_seconds=10
@@ -946,16 +940,15 @@ class PhasedInvestigationAgent:
                 if uncovered:
                     chosen_epoch = int(uncovered[0]["bucket_start_epoch"])
             if chosen_epoch is not None:
-                epoch = chosen_epoch
-                around = epoch + 5.0  # mid-bucket for 10s buckets
+                around = chosen_epoch + 5.0  # mid-bucket for 10s buckets
                 win = T.context_window(events, around, 5.0, limit=200)
                 tools_used.append("context.context_window")
                 # whether the window added evidence is asked at the next
                 # LLM gate, and only if that gate would otherwise skip
                 fresh = win.join(acc.select("event_id"), "event_id", "left_anti")
                 acc = acc.unionByName(win).dropDuplicates(["event_id"])
-                dived_10.add(epoch)
-                dive_order.append((10, epoch))
+                dived_10.add(chosen_epoch)
+                dive_order.append((10, chosen_epoch))
                 hotspot_inspected = True
             else:
                 coverage_complete = True

@@ -10,10 +10,9 @@ matter how many events accumulated.
 
 from __future__ import annotations
 
-from datetime import datetime
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from ..sources.trace_logs import py_float
 
@@ -114,10 +113,11 @@ def build_timeline(
             continue
         ts = result.get("first_ts") or result.get("timestamp")
         if not ts and isinstance(result.get("first_anomaly"), dict):
-            fa = result["first_anomaly"]
-            ts = fa.get("bucket_start") or fa.get("bucket_start_epoch")
-            if isinstance(ts, (int, float)):
-                ts = datetime.utcfromtimestamp(ts)
+            # an epoch-second bucket, converted as collect() converts a
+            # timestamp
+            bucket = result["first_anomaly"].get("bucket")
+            if bucket is not None:
+                ts = TimestampType().fromInternal(bucket * 1_000_000)
         if not ts and result.get("first_high_ts"):
             ts = result["first_high_ts"]
         if ts:
@@ -148,21 +148,15 @@ def build_timeline(
     elif m["recovery_ts"] is not None:
         root_signal = "recovery_precedes_storage_pressure"
 
+    # rows of recovery_episodes' ``episodes`` frame
     for ep in recovery_episodes or []:
-        ep_start = ep.get("start")
-        if isinstance(ep_start, str):
-            try:
-                ep_start = datetime.fromisoformat(ep_start)
-            except ValueError:
-                ep_start = None
-        if ep_start:
-            items.append(
-                {
-                    "t": _rel(ep_start, start),
-                    "event": "RecoveryEpisode",
-                    "note": f"Recovery window ({ep.get('duration_seconds')}s)",
-                }
-            )
+        items.append(
+            {
+                "t": _rel(ep["start_ts"], start),
+                "event": "RecoveryEpisode",
+                "note": f"Recovery window ({ep['duration_s']}s)",
+            }
+        )
 
     return {
         "first_anomaly": {

@@ -243,6 +243,25 @@ def test_build_timeline_markers(scenario):
     assert tl["first_anomaly"]["event"] == "SlowSSLoopx100"  # first sev>=30
 
 
+def test_build_timeline_reads_detector_and_episode_rows(scenario):
+    """The loop hands build_timeline a baseline_window_anomalies row (its
+    ``bucket`` is an epoch second) and recovery_episodes rows (``start_ts``,
+    ``duration_s``); each becomes a timeline item."""
+    # a naive datetime's epoch, as createDataFrame stores it
+    bucket = int((T0 + dt.timedelta(seconds=30)).timestamp())
+    det = {"baseline_window_anomalies": {
+        "detected": True, "count": 1,
+        "first_anomaly": {"bucket": bucket, "role": "SS", "metric": "VersionLag"},
+    }}
+    episodes = [{"start_ts": T0 + dt.timedelta(seconds=6), "duration_s": 2.5}]
+    tl = build_timeline(scenario, det, recovery_episodes=episodes)
+    items = {i["event"]: i for i in tl["timeline"]}
+    assert items["baseline_window_anomalies"]["t"] == "+30.0s"
+    assert items["baseline_window_anomalies"]["note"] == "Detector triggered"
+    assert items["RecoveryEpisode"]["t"] == "+6.0s"
+    assert items["RecoveryEpisode"]["note"] == "Recovery window (2.5s)"
+
+
 def test_build_timeline_empty(spark):
     empty = spark.createDataFrame([], "event_id long, ts timestamp, severity int,"
                                   " event string, role string, fields map<string,string>")
@@ -254,7 +273,6 @@ def test_build_timeline_empty(spark):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.slow
 def test_phased_loop_end_to_end(scenario, tmp_path):
     prompts = []
     responses = iter(

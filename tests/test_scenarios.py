@@ -160,7 +160,6 @@ def test_sideband_timeline_story(spark, clogged_sideband):
     assert "Recovery activity begins" in notes
 
 
-@pytest.mark.slow
 def test_sideband_phased_loop_surfaces_evidence(spark, clogged_sideband):
     prompts, rag_queries = [], []
 
@@ -211,6 +210,10 @@ def test_sideband_phased_loop_surfaces_evidence(spark, clogged_sideband):
 SIDEBAND_JOB_BUDGET = 51
 ROLLBACKS_JOB_BUDGET = 52
 PRESSURE_JOB_BUDGET = 47
+# A 4-iteration CloggedSideband investigation with a low-confidence LLM
+# runs 54 jobs when the detectors run once (88 when every iteration
+# re-ran them).
+SIDEBAND_MULTI_JOB_BUDGET = 60
 
 
 def _sideband_llm(prompt):
@@ -225,7 +228,7 @@ def _persistent_rdds(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
-def _investigation(spark, events, group):
+def _investigation(spark, events, group, llm=_sideband_llm, max_iterations=6):
     """One investigate over ``events`` under a test-owned job group: its
     result, the status store's name (the call site) of each of its jobs
     and the persistent RDDs it left behind."""
@@ -233,7 +236,7 @@ def _investigation(spark, events, group):
     before = _persistent_rdds(spark)
     sc.setJobGroup(group, "one investigation")
     try:
-        res = PhasedInvestigationAgent(_sideband_llm, max_iterations=6).investigate(
+        res = PhasedInvestigationAgent(llm, max_iterations=max_iterations).investigate(
             events, "What is the root cause of this incident?"
         )
     finally:
@@ -263,17 +266,58 @@ def test_sideband_investigation_job_budget(sideband_investigation):
     _assert_job_budget(jobs, SIDEBAND_JOB_BUDGET)
 
 
+def _unsure_llm(prompt):
+    return json.dumps({
+        "hypothesis": "CLUSTER 7 commit_proxy_pipeline_crash",
+        "confidence": 0.2,
+        "reasoning": "needs more evidence",
+    })
+
+
+def test_sideband_multi_iteration_job_budget(spark, clogged_sideband):
+    """A low-confidence LLM keeps the loop running to ``max_iterations``.
+    The detectors run on the first phase-B iteration only, so each later
+    iteration costs its dive and LLM gate, not the detector suite again."""
+    res, jobs, residue = _investigation(
+        spark, clogged_sideband, "test_scenarios.sideband_multi_iteration",
+        llm=_unsure_llm, max_iterations=4,
+    )
+    assert res.iterations == 4
+    phase_a = [
+        "scanner.top_events", "scanner.severity_counts", "scanner.event_histogram",
+        "scanner.time_span", "scanner.bucket_heatmap", "scanner.global_summary",
+        "scanner.rollback_analysis", "scanner.metric_baselines",
+        "scanner.recovery_episodes",
+    ]
+    detectors = [
+        "detectors.storage_engine_pressure", "detectors.recovery_loop",
+        "detectors.ratekeeper_throttling", "detectors.missing_tlogs",
+        "detectors.coordination_loss", "detectors.zscore_hotspots",
+        "detectors.baseline_window_anomalies", "detectors.metric_anomalies",
+    ]
+    dive = ["hotspots.get_uncovered", "context.context_window"]
+    # two eventful 10s buckets are dived, then coverage is complete
+    assert res.tools_used == (
+        phase_a + 2 * (detectors + dive) + detectors + ["hotspots.get_uncovered"]
+    )
+    t0 = int(T0.timestamp())
+    assert res.inspected_buckets == [(300, t0), (10, t0 + 10), (10, t0)]
+    _assert_job_budget(jobs, SIDEBAND_MULTI_JOB_BUDGET)
+    assert len(residue) == 0
+
+
 def test_sideband_investigation_releases_its_storage(
     spark, clogged_sideband, sideband_investigation
 ):
     """investigate persists its input (and the baselines it derives) and
-    releases both on exit: the only new persistent RDD is
-    rollback_analysis's one stitched localCheckpoint (see
-    test_detectors.py::test_rollback_analysis_releases_input_persists)."""
+    releases both on exit, together with rollback_analysis's stitched
+    localCheckpoint (see
+    test_detectors.py::test_rollback_analysis_releases_input_persists):
+    no new persistent RDD is left."""
     from pyspark import StorageLevel
 
     _, _, residue = sideband_investigation
-    assert len(residue) == 1
+    assert len(residue) == 0
     assert clogged_sideband.storageLevel == StorageLevel.NONE
 
 
@@ -293,7 +337,7 @@ def test_investigation_releases_storage_when_llm_fails(spark, clogged_sideband):
         )
     # the input was held in storage while the loop ran, and released after
     assert held and held[0] != StorageLevel.NONE
-    assert len(_persistent_rdds(spark) - before) == 1  # rollback_analysis only
+    assert len(_persistent_rdds(spark) - before) == 0
     assert clogged_sideband.storageLevel == StorageLevel.NONE
 
 
@@ -317,6 +361,22 @@ def test_investigation_leaves_caller_storage_alone(spark, clogged_sideband):
         fresh.unpersist()
     assert clogged_sideband.storageLevel == StorageLevel.NONE
     assert spark.conf.get(_CACHED_PARTITIONING) == setting  # restored
+
+    # A caller's localCheckpointed input keeps its checkpoint: investigate
+    # releases only the checkpoint rollback_analysis made (phase A).
+    before = _persistent_rdds(spark)
+    checkpointed = clogged_sideband.localCheckpoint()
+    kept = _persistent_rdds(spark)
+    try:
+        PhasedInvestigationAgent(_sideband_llm, max_iterations=1).investigate(
+            checkpointed, "What is the root cause of this incident?"
+        )
+        assert _persistent_rdds(spark) == kept
+        assert checkpointed.count() == clogged_sideband.count()
+    finally:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        for rdd_id in kept - before:
+            rdds.get(rdd_id).unpersist(False)
 
 
 # ---------------------------------------------------------------------------
@@ -405,7 +465,6 @@ def test_rollbacks_version_rollback_detected(spark, clog_with_rollbacks):
     assert s.num_resets >= 1  # 5M -> 0.9M crosses the 1M reset line
 
 
-@pytest.mark.slow
 def test_rollbacks_loop_rejects_file_not_found_red_herring(
     spark, clog_with_rollbacks
 ):
@@ -471,7 +530,7 @@ def test_rollbacks_investigation_job_budget(spark, clog_with_rollbacks):
     )
     assert res.iterations == 2
     _assert_job_budget(jobs, ROLLBACKS_JOB_BUDGET)
-    assert len(residue) == 1
+    assert len(residue) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -591,7 +650,7 @@ def test_pressure_investigation_job_budget(spark, storage_pressure):
     )
     assert res.iterations == 2
     _assert_job_budget(jobs, PRESSURE_JOB_BUDGET)
-    assert len(residue) == 1
+    assert len(residue) == 0
 
 
 # sha256 of format_events_for_llm's text on each fixture. The formatter
@@ -815,7 +874,6 @@ def test_sidebandstatus_timeline_leads_with_proxy(spark, sideband_with_status):
     assert "Recovery activity begins" in notes
 
 
-@pytest.mark.slow
 def test_sidebandstatus_loop_confirms_cl7_over_cl0(spark, sideband_with_status):
     """The doc's interpretation rule: ClusterRecoveryRetrying without a
     preceding proxy kill would be CL0; WITH the proxy-led chain it is CL7.
@@ -957,7 +1015,6 @@ def test_cycle_rocksdb_ruleout_no_storage_pressure(spark, clogged_cycle):
     assert not s.detected
 
 
-@pytest.mark.slow
 def test_cycle_loop_lands_on_cl7_with_cl5_support(spark, clogged_cycle):
     prompts = []
     responses = [
