@@ -671,6 +671,16 @@ def _detector_results(
     return det_results
 
 
+def _add_if_changed(additional: list, name: str, value) -> bool:
+    """Append ``(name, value)`` to the LLM's additional data unless the
+    last ``name`` entry already holds ``value``; whether it appended."""
+    last = next((v for n, v in reversed(additional) if n == name), None)
+    if value == last:
+        return False
+    additional.append((name, value))
+    return True
+
+
 class PhasedInvestigationAgent:
     """The reference's full phased loop, Spark-first and LLM-injectable.
 
@@ -685,8 +695,11 @@ class PhasedInvestigationAgent:
     hotspot dive via context windows → stop when confidence ≥ threshold
     and a hotspot was inspected (or coverage is complete). The detectors
     run on the first of these iterations only; every later one reuses
-    their results (and still reports them to the LLM and in
-    ``tools_used``), since nothing they read changes.
+    their results (and still reports them in ``tools_used``), since
+    nothing they read changes. The LLM context gets the detectors block
+    once, and a timeline or RAG block only when it differs from the last
+    one added; only such a block, or events the last dive added, makes
+    the context dirty and so worth another LLM call.
 
     ``llm(prompt_text: str) -> str`` returns raw LLM text (parsed by L3);
     ``rag(query: str) -> str | None`` is the optional retriever. Both are
@@ -833,13 +846,12 @@ class PhasedInvestigationAgent:
             # later ones reuse the results.
             if det_results is None:
                 det_results = _detector_results(events, event_metrics, baselines)
+                additional.append(("detectors", det_results))
             tools_used.extend(f"detectors.{k}" for k in det_results)
-            additional.append(("detectors", det_results))
 
             timeline_summary = build_timeline(acc, det_results, buckets, ep_rows)
             if timeline_summary:
-                additional.append(("timeline_builder", timeline_summary))
-                context_dirty = True
+                context_dirty |= _add_if_changed(additional, "timeline_builder", timeline_summary)
 
             if self.rag is not None:
                 query = build_rag_query(
@@ -848,8 +860,7 @@ class PhasedInvestigationAgent:
                 retrieved = self.rag(query)
                 tools_used.append("rag.retrieve")
                 if retrieved:
-                    additional.append(("rag", retrieved))
-                    context_dirty = True
+                    context_dirty |= _add_if_changed(additional, "rag", retrieved)
 
             # ---- gated LLM analysis (reference :1183-1233) ----
             if llm_calls < self.max_llm_calls and fresh is not None and not context_dirty:

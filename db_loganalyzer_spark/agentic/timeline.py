@@ -10,6 +10,8 @@ matter how many events accumulated.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
@@ -25,12 +27,6 @@ def version_lag() -> Column:
     return F.coalesce(*[py_float(F.element_at("fields", F.lit(k))) for k in _LAG_KEYS])
 
 
-def _rel(ts, start) -> str:
-    if ts is None or start is None:
-        return "N/A"
-    return f"+{(ts - start).total_seconds():.1f}s"
-
-
 def build_timeline(
     events: DataFrame,
     detector_outputs: dict | None = None,
@@ -38,8 +34,9 @@ def build_timeline(
     recovery_episodes: list[dict] | None = None,
 ) -> dict:
     """Same output contract as the reference build(): first_anomaly,
-    timeline items with relative timestamps, root_cause_signal,
-    hot_buckets, detector_signals."""
+    timeline items with relative timestamps in time order (a stable sort,
+    so items at one time keep the order markers, detector marks,
+    recovery episodes), root_cause_signal, hot_buckets, detector_signals."""
     sev = F.coalesce(F.col("severity"), F.lit(0))
     marks = (
         events.withColumn("__lag", version_lag())
@@ -74,37 +71,34 @@ def build_timeline(
     severe_ts = m["severe_ts"] or start
     severe_event = m["severe_event"]
 
-    items: list[dict] = [
-        {
-            "t": _rel(severe_ts, start),
-            "event": severe_event,
-            "note": "Earliest notable/severe event",
-        }
-    ]
+    # (seconds after start, item)
+    timed: list[tuple[float, dict]] = []
+
+    def add(ts, event, note) -> None:
+        if hasattr(ts, "isoformat"):
+            at = (ts - start).total_seconds()
+            t = f"+{at:.1f}s"
+        else:
+            # a missing time reads N/A, a detector's time that is not a
+            # timestamp is shown as given; both sort after every timed item
+            at, t = math.inf, "N/A" if ts is None else ts
+        timed.append((at, {"t": t, "event": event, "note": note}))
+
+    add(severe_ts, severe_event, "Earliest notable/severe event")
     if m["lag100k_ts"] is not None:
-        items.append(
-            {
-                "t": _rel(m["lag100k_ts"], start),
-                "event": f"VersionLag={int(m['lag100k_val'])}",
-                "note": "Lag exceeds 100k (storage pressure signal)",
-            }
+        add(
+            m["lag100k_ts"],
+            f"VersionLag={int(m['lag100k_val'])}",
+            "Lag exceeds 100k (storage pressure signal)",
         )
     if m["lag1m_ts"] is not None:
-        items.append(
-            {
-                "t": _rel(m["lag1m_ts"], start),
-                "event": f"VersionLag={int(m['lag1m_val'])}",
-                "note": "Lag exceeds 1M (critical storage pressure)",
-            }
+        add(
+            m["lag1m_ts"],
+            f"VersionLag={int(m['lag1m_val'])}",
+            "Lag exceeds 1M (critical storage pressure)",
         )
     if m["recovery_ts"] is not None:
-        items.append(
-            {
-                "t": _rel(m["recovery_ts"], start),
-                "event": m["recovery_event"],
-                "note": "Recovery activity begins",
-            }
-        )
+        add(m["recovery_ts"], m["recovery_event"], "Recovery activity begins")
 
     # detector marks, from the 1-row summary dicts the loop collected
     detector_outputs = detector_outputs or {}
@@ -121,13 +115,7 @@ def build_timeline(
         if not ts and result.get("first_high_ts"):
             ts = result["first_high_ts"]
         if ts:
-            items.append(
-                {
-                    "t": _rel(ts, start) if hasattr(ts, "isoformat") else ts,
-                    "event": name,
-                    "note": "Detector triggered",
-                }
-            )
+            add(ts, name, "Detector triggered")
 
     hot_buckets = [
         {
@@ -150,13 +138,7 @@ def build_timeline(
 
     # rows of recovery_episodes' ``episodes`` frame
     for ep in recovery_episodes or []:
-        items.append(
-            {
-                "t": _rel(ep["start_ts"], start),
-                "event": "RecoveryEpisode",
-                "note": f"Recovery window ({ep['duration_s']}s)",
-            }
-        )
+        add(ep["start_ts"], "RecoveryEpisode", f"Recovery window ({ep['duration_s']}s)")
 
     return {
         "first_anomaly": {
@@ -164,7 +146,7 @@ def build_timeline(
             "event": severe_event,
             "meaning": "Earliest notable/severe event",
         },
-        "timeline": items,
+        "timeline": [item for _, item in sorted(timed, key=lambda p: p[0])],
         "root_cause_signal": root_signal,
         "hot_buckets": hot_buckets,
         "detector_signals": detector_outputs,

@@ -18,7 +18,10 @@ Measured on a persisted frame in a 4-core local session,
 ``global_summary`` run two jobs each; ``global_summary`` reduces all
 three facts from one sweep. In a phased investigation that sweep is the
 first job to read the persisted input, so it also fills the cache (six
-jobs on ``perfbench``'s ``incident_rca`` pass). Each call re-runs its
+jobs on ``perfbench``'s ``incident_rca`` pass). ``get_uncovered`` with no
+limit collects every bucket of its heatmap unordered and ranks them on
+the driver: two jobs, where a range-partitioned sort ran four. With a
+limit, the buckets are ranked by Spark's top-k. Each call re-runs its
 input's lineage; none of these tools caches its input. A caller that
 runs many of them over one frame (the phased investigation) persists
 that frame once itself.
@@ -134,16 +137,23 @@ def _ranked_buckets(events, min_severity, bucket_seconds, limit, exclude=()) -> 
     )
     if exclude:
         df = df.filter(~F.col("bucket").isin(exclude))
-    df = df.orderBy(F.desc("max_severity"), F.desc("n"), "bucket")
-    if limit is not None:
-        df = df.limit(limit)
+    if limit is None:
+        # every bucket is collected anyway, so rank them on the driver, in
+        # the order below (desc is NULLS LAST, asc NULLS FIRST): the
+        # collect is one aggregate, not a range-partitioned sort
+        rows = sorted(df.collect(), key=lambda r: (
+            r["max_severity"] is None, -(r["max_severity"] or 0), -r["n"],
+            r["bucket"] is not None, r["bucket"] or 0,
+        ))
+    else:
+        rows = df.orderBy(F.desc("max_severity"), F.desc("n"), "bucket").limit(limit).collect()
     return [
         {
             "bucket_start_epoch": r["bucket"],
             "max_severity": r["max_severity"],
             "count": r["n"],
         }
-        for r in df.collect()
+        for r in rows
     ]
 
 

@@ -11,9 +11,13 @@ Commands
                             events; appends by default
   query SQL_OR_FILE         S9  — ad-hoc SQL against the catalog
   stats                     A17 — totals, time range, severity/role/event
-                            distributions (cli_wrapper/main.py:434-512)
+                            distributions (cli_wrapper/main.py:434-512),
+                            from one GROUPING SETS aggregate collected once
+                            and rendered as DataFrame.show would
   export SQL --out PATH     S8  — query result → csv/json/parquet
-  rollup --window N         A5  — CTAS rollups_{N}s (tools/storage.py:328)
+  rollup --window N         A5  — CTAS rollups_{N}s (tools/storage.py:328);
+                            rows sorted by (window_start, role,
+                            metric_name) within each written file
   chunk                     M8/A15 — marker chunks + summaries
 """
 
@@ -21,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 from pyspark.sql import SparkSession
@@ -179,35 +184,111 @@ def handle_query(args) -> int:
     return 0
 
 
+_SHOW_ESCAPES = str.maketrans({
+    "\n": "\\n", "\r": "\\r", "\t": "\\t", "\f": "\\f", "\b": "\\b",
+    "\v": "\\v", "\a": "\\a",
+})
+
+
+# Spark's show() measures a cell as its UTF-16 length plus one for each
+# character in these full-width ranges (Utils.stringHalfWidth)
+_FULL_WIDTH = re.compile(
+    "[\u1100-\u115F\u2E80-\uA4CF\uAC00-\uD7A3\uF900-\uFAFF"
+    "\uFE10-\uFE19\uFE30-\uFE6F\uFF00-\uFF60\uFFE0-\uFFE6]"
+)
+
+
+def _utf16_len(s: str) -> int:
+    return len(s) + sum(ord(c) > 0xFFFF for c in s)
+
+
+def _show_string(columns, rows, truncate: bool = True) -> str:
+    """The table text ``DataFrame.show(20, truncate)`` prints for ``rows``
+    (a list of tuples) under ``columns``, less the newline ``print``
+    adds: NULL cells, control characters escaped, columns at least 3
+    wide and, when rows are left out, a footer line with no newline of
+    its own. With ``truncate``, cells over 20 UTF-16 units are cut to 17
+    plus ``...`` (a surrogate pair split by the cut prints as ``?``) and
+    right-aligned, else left-aligned. Widths count as Spark's do."""
+
+    def cell(v) -> str:
+        s = "NULL" if v is None else str(v).translate(_SHOW_ESCAPES)
+        if not truncate or _utf16_len(s) <= 20:
+            return s
+        out, units = [], 0
+        for c in s:
+            units += 1 + (ord(c) > 0xFFFF)
+            if units > 17:
+                if units == 18 and ord(c) > 0xFFFF:
+                    out.append("?")
+                break
+            out.append(c)
+        return "".join(out) + "..."
+
+    def width(s: str) -> int:
+        return _utf16_len(s) + len(_FULL_WIDTH.findall(s))
+
+    table = [[c.translate(_SHOW_ESCAPES) for c in columns]]
+    table += [[cell(v) for v in r] for r in rows[:20]]
+    widths = [max(3, *(width(r[i]) for r in table)) for i in range(len(columns))]
+
+    def pad(c: str, w: int) -> str:
+        fill = " " * (w - width(c))
+        return fill + c if truncate else c + fill
+
+    sep = "+" + "+".join("-" * w for w in widths) + "+\n"
+    lines = ["|" + "|".join(pad(c, w) for c, w in zip(r, widths)) + "|\n" for r in table]
+    out = sep + lines[0] + sep + "".join(lines[1:]) + sep
+    if len(rows) > 20:
+        out += "only showing top 20 rows"
+    return out
+
+
+# The four stats aggregates as one scan: grouping_id tells the sets apart
+# (3 = severity, 5 = event, 6 = role, 7 = the grand total), so a NULL key
+# is never mistaken for a rolled-up one. An empty table has no total row.
+_STATS_SQL = """
+SELECT grouping_id(severity, event, role) AS gid, severity, event, role,
+       COUNT(*) AS n,
+       CAST(MIN(ts) AS STRING) AS min_time, CAST(MAX(ts) AS STRING) AS max_time
+FROM events
+GROUP BY GROUPING SETS ((), (severity), (event), (role))
+"""
+
+
 def handle_stats(args) -> int:
     spark = _spark(args)
     _use(spark, args)
-    ev = spark.table("events")
-    total = ev.count()
+    sets: dict[int, list] = {3: [], 5: [], 6: [], 7: []}
+    for r in spark.sql(_STATS_SQL).collect():
+        sets[r["gid"]].append(r)
+    total = sets[7][0] if sets[7] else None
     print("=== Database Statistics ===")
     print(f"warehouse: {os.path.abspath(args.db)}")
-    print(f"\nTotal events: {total}")
+    print(f"\nTotal events: {total['n'] if total else 0}")
     if not total:
         return 0
+
+    def counts(key, rows, truncate=True):
+        print(_show_string([key, "count"], [(r[key], r["n"]) for r in rows], truncate))
+
+    # sections in Spark's ORDER BY order: ascending keys with NULL first,
+    # counts descending
     print("\nTime range:")
-    spark.sql(
-        "SELECT MIN(ts) AS min_time, MAX(ts) AS max_time FROM events"
-    ).show(truncate=False)
+    span = [(total["min_time"], total["max_time"])]
+    print(_show_string(["min_time", "max_time"], span, truncate=False))
     print("Severity distribution:")
-    spark.sql(
-        "SELECT severity, COUNT(*) AS count FROM events "
-        "GROUP BY severity ORDER BY severity"
-    ).show()
+    counts("severity", sorted(
+        sets[3], key=lambda r: (r["severity"] is not None, r["severity"] or 0)
+    ))
     print("Top 5 event types:")
-    spark.sql(
-        "SELECT event, COUNT(*) AS count FROM events "
-        "GROUP BY event ORDER BY count DESC, event LIMIT 5"
-    ).show(truncate=False)
+    counts("event", sorted(
+        sets[5], key=lambda r: (-r["n"], r["event"] is not None, r["event"] or "")
+    )[:5], truncate=False)
     print("Role distribution (top 10):")
-    spark.sql(
-        "SELECT role, COUNT(*) AS count FROM events WHERE role IS NOT NULL "
-        "GROUP BY role ORDER BY count DESC, role LIMIT 10"
-    ).show()
+    counts("role", sorted(
+        (r for r in sets[6] if r["role"] is not None), key=lambda r: (-r["n"], r["role"])
+    )[:10])
     return 0
 
 
@@ -232,14 +313,19 @@ def handle_rollup(args) -> int:
     joined = spark.table("events").join(
         spark.table("event_metrics"), "event_id"
     )
+    keys = ["role", "metric_name"]
+    # sorted within each written file, not range-partitioned: a global
+    # sort costs a sample job and a shuffle. An aggregate that lands in
+    # one partition, as a small corpus does, is stored in the global order.
     roll = windowed_rollup(
         joined,
         args.window,
-        ["role", "metric_name"],
+        keys,
         "metric_value",
         exact_percentile=not args.approx,
+        ordered=False,
         deterministic_avg=False,  # reference parity: plain double AVG
-    )
+    ).sortWithinPartitions("window_start", *keys)
     name = f"rollups_{args.window}s"
     print(f"{name}: {_save(spark, roll, name, 'overwrite')} rows")
     return 0

@@ -262,6 +262,31 @@ def test_build_timeline_reads_detector_and_episode_rows(scenario):
     assert items["RecoveryEpisode"]["note"] == "Recovery window (2.5s)"
 
 
+def test_build_timeline_items_in_time_order(scenario):
+    """Markers, detector marks and recovery episodes interleave by time;
+    items at one time keep their order, and an item with no timestamp
+    (an episode without a start, a detector's own string) comes last."""
+    det = {
+        "det_a": {"first_ts": T0 + dt.timedelta(seconds=1)},
+        "det_b": {"timestamp": "late"},
+    }
+    episodes = [
+        {"start_ts": None, "duration_s": 1.0},
+        {"start_ts": T0 + dt.timedelta(seconds=2), "duration_s": 4.0},
+    ]
+    tl = build_timeline(scenario, det, recovery_episodes=episodes)
+    assert [(i["t"], i["event"]) for i in tl["timeline"]] == [
+        ("+0.0s", "VersionLag=2500000"),  # lag over 100k
+        ("+0.0s", "VersionLag=2500000"),  # lag over 1M
+        ("+1.0s", "det_a"),
+        ("+2.0s", "RecoveryEpisode"),
+        ("+3.0s", "SlowSSLoopx100"),  # the first severity >= 30
+        ("+6.0s", "MasterRecoveryState"),
+        ("late", "det_b"),
+        ("N/A", "RecoveryEpisode"),
+    ]
+
+
 def test_build_timeline_empty(spark):
     empty = spark.createDataFrame([], "event_id long, ts timestamp, severity int,"
                                   " event string, role string, fields map<string,string>")

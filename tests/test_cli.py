@@ -574,3 +574,194 @@ def test_load_without_trace_files_fails_closed(spark, tmp_path, capsys, content,
         assert _tree(wh) == before
     finally:
         spark.catalog.setCurrentDatabase("default")
+
+
+# ---------------------------------------------------------------------------
+# stats and rollup: one scan each. ``stats`` collects one GROUPING SETS
+# aggregate and renders its four sections as DataFrame.show did; ``rollup``
+# sorts within each written file instead of range-partitioning.
+# ---------------------------------------------------------------------------
+
+# On a 4-core local session ``stats`` runs 2 Spark jobs (the aggregate's
+# shuffle map stage and its collect); as a count and four show() calls it
+# ran 10. ``rollup`` runs 3; with a global sort before the write it ran 5
+# (a range sample and a shuffle more).
+STATS_JOB_BUDGET = 2
+ROLLUP_JOB_BUDGET = 3
+
+# rows with no severity, no event type and no role, an event type with a
+# control character and a role longer than show()'s 20-character cut
+_ODD_ROWS = [
+    {"Machine": "10.0.0.4:4500", "Time": "1.0"},
+    {"Type": "Bad\tType", "Machine": "10.0.0.4:4500", "Roles": "StorageServerWithALongRoleName"},
+    {"Type": "Bad\tType", "Machine": "10.0.0.4:4500", "Roles": "StorageServerWithALongRoleName"},
+    {"Severity": "40", "Machine": "10.0.0.4:4500", "DateTime": "2025-11-23T05:00:00Z"},
+]
+
+# ``stats`` after loading _write_corpus's directory and appending
+# _ODD_ROWS plus one k=v line, as printed by the count and four
+# ``DataFrame.show`` calls it ran before (``{wh}`` is the warehouse path)
+STATS_GOLDEN = """\
+=== Database Statistics ===
+warehouse: {wh}
+
+Total events: 15
+
+Time range:
++-------------------+-------------------+
+|min_time           |max_time           |
++-------------------+-------------------+
+|2025-11-23 03:00:01|2025-11-23 05:00:00|
++-------------------+-------------------+
+
+Severity distribution:
++--------+-----+
+|severity|count|
++--------+-----+
+|    NULL|    4|
+|      10|    2|
+|      20|    4|
+|      30|    2|
+|      40|    3|
++--------+-----+
+
+Top 5 event types:
++--------------+-----+
+|event         |count|
++--------------+-----+
+|NULL          |3    |
+|Bad\\tType     |2    |
+|Role          |2    |
+|SlowTask      |2    |
+|StorageMetrics|2    |
++--------------+-----+
+
+Role distribution (top 10):
++--------------------+-----+
+|                role|count|
++--------------------+-----+
+|                  SS|    3|
+|StorageServerWith...|    2|
+|                  CP|    1|
+|                  DD|    1|
+|                  GP|    1|
+|                  MS|    1|
+|                  TL|    1|
++--------------------+-----+
+
+"""
+
+
+def _counted(spark, group, argv):
+    """``cli.main(argv)`` under a test-owned job group: its stdout and
+    the number of Spark jobs it ran."""
+    import contextlib
+    import io
+
+    sc = spark.sparkContext
+    buf = io.StringIO()
+    sc.setJobGroup(group, " ".join(argv[-3:]))
+    try:
+        with contextlib.redirect_stdout(buf):
+            assert cli.main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return buf.getvalue(), len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def stats_run(tmp_path_factory, spark):
+    """``stats`` on the empty tables ``init`` creates, then ``load`` of
+    the generated corpus and of _ODD_ROWS, ``stats`` and ``rollup``: each
+    command's stdout and job count."""
+    root = tmp_path_factory.mktemp("stats")
+    logs, _, _ = _write_corpus(root)
+    odd = root / "odd.jsonl"
+    odd.write_text(_jsonl(_ODD_ROWS) + "Machine=10.0.0.5:4500 Foo=1\n")
+    wh = str(root / "wh")
+    base = ["--db", wh, "--database", "cli_stats"]
+    try:
+        assert cli.main(base + ["init"]) == 0
+        empty = _counted(spark, "test_cli.stats_empty", base + ["stats"])
+        assert cli.main(base + ["load", logs, "--mode", "overwrite"]) == 0
+        assert cli.main(base + ["load", str(odd)]) == 0
+        stats = _counted(spark, "test_cli.stats", base + ["stats"])
+        rollup = _counted(spark, "test_cli.rollup", base + ["rollup", "--window", "60"])
+        rows = spark.table("cli_stats.rollups_60s").select(
+            "*", F.input_file_name().alias("_file")
+        ).collect()
+        return SimpleNamespace(wh=os.path.abspath(wh), empty=empty, stats=stats,
+                               rollup=rollup, rollup_rows=rows)
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+
+
+def test_stats_output_equals_show_golden(stats_run):
+    out, _ = stats_run.stats
+    assert out == STATS_GOLDEN.replace("{wh}", stats_run.wh)
+
+
+def test_stats_empty_events_prints_zero(stats_run):
+    out, _ = stats_run.empty
+    assert out == (
+        f"=== Database Statistics ===\nwarehouse: {stats_run.wh}\n\nTotal events: 0\n"
+    )
+
+
+def test_stats_job_budget(stats_run):
+    _, jobs = stats_run.stats
+    assert 0 < jobs <= STATS_JOB_BUDGET, jobs
+
+
+def test_rollup_job_budget(stats_run):
+    out, jobs = stats_run.rollup
+    assert out == f"rollups_60s: {len(stats_run.rollup_rows)} rows\n"
+    assert 0 < jobs <= ROLLUP_JOB_BUDGET, jobs
+
+
+def test_rollup_rows_sorted_within_each_file(stats_run):
+    """Each file the rollup writes holds its rows in (window_start, role,
+    metric_name) order. Only the order within a file is promised: an
+    aggregate spread over several partitions writes several files."""
+    by_file: dict[str, list] = {}
+    for r in stats_run.rollup_rows:
+        # Spark's ascending order: NULL first
+        key = tuple((v is not None, v) for v in (r["window_start"], r["role"], r["metric_name"]))
+        by_file.setdefault(r["_file"], []).append(key)
+    assert by_file
+    for f, keys in by_file.items():
+        assert keys == sorted(keys), f
+
+
+_SHOW_FRAMES = {
+    # NULLs, strings over 20 characters, control characters, a column
+    # narrower than 3 and more rows than show() prints
+    "mixed": (
+        "SELECT id AS i, IF(id % 3 = 0, NULL, repeat('x', CAST(id AS INT))) AS s, "
+        "IF(id % 5 = 0, concat('a', char(9), 'b'), NULL) AS t, "
+        "CAST(id * 1000000007 AS BIGINT) AS long_column_name "
+        "FROM range(25)"
+    ),
+    "one_row": "SELECT CAST(NULL AS STRING) AS a",
+    "exactly_20": "SELECT id, repeat('y', 21) AS s FROM range(20)",
+    "empty": "SELECT id AS n FROM range(0)",
+    # show() widths: a UTF-16 unit each, one more for a character in
+    # Spark's full-width ranges (CJK, Hangul, full-width forms) but not
+    # for other wide characters such as U+231A; a cut through a surrogate
+    # pair prints "?"
+    "wide": (
+        "SELECT * FROM VALUES ('\u65e5\u672c\u8a9e\u30ed\u30fc\u30eb', 1), "
+        "('\uff46\uff55\uff4c\uff4c', 2), ('\ud55c\uad6d\uc5b4', 3), "
+        "('\u231a\u231a', 4), ('\U0001d400\U0001d401', 5), "
+        "('e\u0301cole', 6), ('" + "x" * 16 + "\U0001f600yyyy', 7), "
+        "('" + "\u6f22\u5b57" * 11 + "', 8) AS t(`r\u00f4le\u6f22`, n)"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SHOW_FRAMES))
+@pytest.mark.parametrize("truncate", [True, False])
+def test_show_string_equals_spark_show(spark, name, truncate):
+    df = spark.sql(_SHOW_FRAMES[name])
+    rows = [tuple(r) for r in df.collect()]
+    assert cli._show_string(df.columns, rows, truncate) == df._show_string(20, truncate)

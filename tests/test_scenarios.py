@@ -35,6 +35,7 @@ evidence the corresponding ground-truth doc names:
 import datetime as dt
 import hashlib
 import json
+import re
 from collections import Counter
 
 import pytest
@@ -201,19 +202,20 @@ def test_sideband_phased_loop_surfaces_evidence(spark, clogged_sideband):
 
 
 # Jobs one investigation runs on a 4-core local session, plus 6 of
-# headroom for plan variation. CloggedSideband runs 45 (101 before
+# headroom for plan variation. CloggedSideband runs 43 (101 before
 # investigate persisted its input, 78 before rollback_analysis shared one
 # stitched scan and the phase-A sweep became one aggregate, 60 before the
 # formatter, phase A's scanner tail and phase B's detector summaries each
-# became one action); ClogWithRollbacks runs 46 (was 82, then 61) and
-# StoragePressure 41 (was 68, then 55).
-SIDEBAND_JOB_BUDGET = 51
-ROLLBACKS_JOB_BUDGET = 52
-PRESSURE_JOB_BUDGET = 47
+# became one action, 45 before get_uncovered ranked its buckets on the
+# driver); ClogWithRollbacks runs 44 (was 82, then 61, then 46) and
+# StoragePressure 39 (was 68, then 55, then 41).
+SIDEBAND_JOB_BUDGET = 49
+ROLLBACKS_JOB_BUDGET = 50
+PRESSURE_JOB_BUDGET = 45
 # A 4-iteration CloggedSideband investigation with a low-confidence LLM
-# runs 54 jobs when the detectors run once (88 when every iteration
-# re-ran them).
-SIDEBAND_MULTI_JOB_BUDGET = 60
+# runs 52 jobs when the detectors run once (88 when every iteration
+# re-ran them, 54 before get_uncovered ranked on the driver).
+SIDEBAND_MULTI_JOB_BUDGET = 58
 
 
 def _sideband_llm(prompt):
@@ -266,6 +268,21 @@ def test_sideband_investigation_job_budget(sideband_investigation):
     _assert_job_budget(jobs, SIDEBAND_JOB_BUDGET)
 
 
+_PHASE_A = [
+    "scanner.top_events", "scanner.severity_counts", "scanner.event_histogram",
+    "scanner.time_span", "scanner.bucket_heatmap", "scanner.global_summary",
+    "scanner.rollback_analysis", "scanner.metric_baselines",
+    "scanner.recovery_episodes",
+]
+_DETECTORS = [
+    "detectors.storage_engine_pressure", "detectors.recovery_loop",
+    "detectors.ratekeeper_throttling", "detectors.missing_tlogs",
+    "detectors.coordination_loss", "detectors.zscore_hotspots",
+    "detectors.baseline_window_anomalies", "detectors.metric_anomalies",
+]
+_DIVE = ["hotspots.get_uncovered", "context.context_window"]
+
+
 def _unsure_llm(prompt):
     return json.dumps({
         "hypothesis": "CLUSTER 7 commit_proxy_pipeline_crash",
@@ -283,27 +300,45 @@ def test_sideband_multi_iteration_job_budget(spark, clogged_sideband):
         llm=_unsure_llm, max_iterations=4,
     )
     assert res.iterations == 4
-    phase_a = [
-        "scanner.top_events", "scanner.severity_counts", "scanner.event_histogram",
-        "scanner.time_span", "scanner.bucket_heatmap", "scanner.global_summary",
-        "scanner.rollback_analysis", "scanner.metric_baselines",
-        "scanner.recovery_episodes",
-    ]
-    detectors = [
-        "detectors.storage_engine_pressure", "detectors.recovery_loop",
-        "detectors.ratekeeper_throttling", "detectors.missing_tlogs",
-        "detectors.coordination_loss", "detectors.zscore_hotspots",
-        "detectors.baseline_window_anomalies", "detectors.metric_anomalies",
-    ]
-    dive = ["hotspots.get_uncovered", "context.context_window"]
     # two eventful 10s buckets are dived, then coverage is complete
     assert res.tools_used == (
-        phase_a + 2 * (detectors + dive) + detectors + ["hotspots.get_uncovered"]
+        _PHASE_A + 2 * (_DETECTORS + _DIVE) + _DETECTORS + ["hotspots.get_uncovered"]
     )
     t0 = int(T0.timestamp())
     assert res.inspected_buckets == [(300, t0), (10, t0 + 10), (10, t0)]
     _assert_job_budget(jobs, SIDEBAND_MULTI_JOB_BUDGET)
     assert len(residue) == 0
+
+
+def test_sideband_prompts_carry_each_block_once(spark, clogged_sideband):
+    """Six low-confidence iterations: the LLM context gets the detectors
+    block once and a timeline block only when the timeline changed, so
+    no prompt repeats evidence. The loop's path is the same as when every
+    iteration re-added them (which made every prompt dirty and sent 4
+    prompts carrying the detectors block 1, 2, 3 and 4 times)."""
+    prompts = []
+
+    def llm(prompt):
+        prompts.append(prompt)
+        return _unsure_llm(prompt)
+
+    res = PhasedInvestigationAgent(llm, max_iterations=6).investigate(
+        clogged_sideband, "What is the root cause of this incident?"
+    )
+    assert res.iterations == 6
+    assert res.tools_used == (
+        _PHASE_A + 2 * (_DETECTORS + _DIVE) + 3 * (_DETECTORS + ["hotspots.get_uncovered"])
+    )
+    t0 = int(T0.timestamp())
+    assert res.inspected_buckets == [(300, t0), (10, t0 + 10), (10, t0)]
+    assert 0 < len(prompts) <= 4
+    for p in prompts:
+        blocks = re.findall(r"\n\n(\w+):\n", p.partition("Additional Investigation Data:")[2])
+        assert blocks.count("detectors") == 1
+        assert "timeline_builder" in blocks
+        # a later timeline block is there because the timeline changed
+        timelines = re.findall(r"\n\ntimeline_builder:\n(.*?)(?=\n\n\w+:\n|$)", p, re.S)
+        assert all(a != b for a, b in zip(timelines, timelines[1:]))
 
 
 def test_sideband_investigation_releases_its_storage(
