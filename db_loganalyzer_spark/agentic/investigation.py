@@ -20,31 +20,44 @@ deterministic and is what this module re-expresses Spark-first:
   the loop is fully testable offline.
 - Storage ownership: ``PhasedInvestigationAgent.investigate`` persists its
   input (and the metric baselines it derives) once on entry and releases
-  them on exit, error included, together with ``rollback_analysis``'s
-  ``localCheckpoint``; it leaves no storage behind and never frees the
-  caller's. The tools, detectors and formatter it calls are lazy over
-  that one cached frame, so the loop's Spark jobs do not each re-read
-  and re-parse the trace text.
+  them on exit, error included, together with the ``localCheckpoint``
+  that ``rollback_analysis`` takes over an input of several partitions;
+  it leaves no storage behind and never frees the caller's. The tools,
+  detectors and formatter it calls are lazy over that one cached frame,
+  so the loop's Spark jobs do not each re-read and re-parse the trace
+  text.
+- One partition, no exchanges: parsed trace text of an investigation's
+  size is cached as ONE partition (AQE coalesces it), but Spark plans it
+  as hash-partitioned, so every aggregate, whole-frame window and sort
+  over it would plan a shuffle, and with AQE every shuffle map stage is
+  its own job. The loop reads such an input through ``coalesce(1)``
+  (``_read_stored``), which Spark plans as a single partition: those
+  operators plan no exchange, and ``rollback_analysis``'s stitched scan
+  is one plain window. On ``perfbench``'s ``incident_rca`` pass (seed 1,
+  4 cores) an investigation runs 26 jobs, not 43. An input cached as
+  several partitions keeps the plans it had.
 - One action per step: ``_collect_sections`` takes a ``{section: bounded
   frame}`` map, tags every row as ``to_json(struct(*))`` (timestamps as
   ``unix_micros``, NULL fields kept) with its section and a
   ``monotonically_increasing_id``, unions the tagged rows, collects them
   once and splits them back into sections on the driver, in row order,
   with the values ``collect()`` would give. The formatter, phase A's
-  scanner tail (rollback summary, baselines row count, recovery-episode
-  head) and the five one-row detector summaries each go through it.
-  With AQE every shuffle map stage is still its own job, so a union
-  saves actions, not every job. The grouped detector aggregates
-  (``zscore_hotspots``, ``baseline_window_anomalies``,
-  ``metric_anomalies``) stay out of the detector union and keep their
-  own collects: on ``perfbench``'s ``incident_rca`` pass (seed 1, 4
-  cores), putting them in it raised ``peak_exec_mb`` from 201.6 to 403.0
+  scanner tail (baselines row count, recovery-episode head, and over
+  several partitions the rollback summary) and the five one-row detector
+  summaries each go through it. Over several partitions every shuffle
+  map stage is still its own job, so a union saves actions, not every
+  job. The grouped detector aggregates (``zscore_hotspots``,
+  ``baseline_window_anomalies``, ``metric_anomalies``) stay out of the
+  detector union and keep their own collects: on the ``incident_rca``
+  pass, putting them in it raised ``peak_exec_mb`` from 201.6 to 403.0
   MB. The detector summaries stay out of phase A's tail union too (in
-  it, the same pass ran 48 jobs, not 47).
+  it, the same pass ran one job more).
 - The detectors read only the input, its event metrics and the
   baselines, so one investigation runs them once and later iterations
   reuse the results: with a low-confidence LLM, 6 iterations over an
-  ``incident_rca`` corpus (seed 7, 4 cores) run 66–70 jobs, not 122–130.
+  ``incident_rca`` corpus (seed 7, 4 cores) run 43–45 jobs, counting
+  ``read_trace_events``' two (64–68 before the one-partition read,
+  122–130 when every iteration re-ran the detectors).
 
 Documented deviations from the reference (kept deliberately):
 - the reference's display sort key ``-(sev) if sev>=40 else -1000``
@@ -615,6 +628,18 @@ def _own(df: DataFrame, owned: list[DataFrame]) -> DataFrame:
     return df
 
 
+def _read_stored(df: DataFrame) -> DataFrame:
+    """``df``, a stored frame, read through ``coalesce(1)`` when its
+    storage holds one partition. Over one partition that is a no-op, but
+    Spark then plans the frame as a single partition, so the aggregates,
+    whole-frame windows and sorts over it plan no exchange (and no extra
+    job for it). A frame stored as several partitions is returned as is.
+
+    Asking for the partition count fills the cache: it runs the jobs the
+    frame's first reader would otherwise run, and no more."""
+    return df.coalesce(1) if df._jdf.rdd().getNumPartitions() == 1 else df
+
+
 def _checkpoint_rdds(df: DataFrame) -> dict:
     """The RDDs behind the ``LogicalRDD`` leaves of ``df``'s analyzed
     plan (a ``localCheckpoint`` is one), by RDD id."""
@@ -696,10 +721,14 @@ class PhasedInvestigationAgent:
     and a hotspot was inspected (or coverage is complete). The detectors
     run on the first of these iterations only; every later one reuses
     their results (and still reports them in ``tools_used``), since
-    nothing they read changes. The LLM context gets the detectors block
-    once, and a timeline or RAG block only when it differs from the last
-    one added; only such a block, or events the last dive added, makes
-    the context dirty and so worth another LLM call.
+    nothing they read changes. For the same reason the timeline is built
+    again only after a dive added to the evidence, and once the
+    whole-input ``get_uncovered`` finds nothing, later iterations reuse
+    that empty answer (still reported). The LLM context gets the
+    detectors block once, and a timeline or RAG block only when it
+    differs from the last one added; only such a block, or events the
+    last dive added, makes the context dirty and so worth another LLM
+    call.
 
     ``llm(prompt_text: str) -> str`` returns raw LLM text (parsed by L3);
     ``rag(query: str) -> str | None`` is the optional retriever. Both are
@@ -707,7 +736,7 @@ class PhasedInvestigationAgent:
 
     ``investigate`` owns its input's storage: it persists ``events`` (and
     ``baselines`` when it derives them) on entry and, in a ``finally`` on
-    exit, unpersists them and releases the ``localCheckpoint`` under
+    exit, unpersists them and releases any ``localCheckpoint`` under
     ``rollback_analysis``'s frames. A frame the caller passes in already
     persisted or checkpointed is neither re-persisted nor released.
     """
@@ -758,6 +787,7 @@ class PhasedInvestigationAgent:
         owned: list[DataFrame],
     ) -> InvestigationResult:
         from ..detectors import detectors as D
+        from ..operators.windows import planned_single_partition
         from ..sources.trace_logs import derive_event_metrics
         from . import tools as T
         from .knowledge_base import knowledge_base_text
@@ -766,6 +796,7 @@ class PhasedInvestigationAgent:
         hypothesis, confidence, reasoning = "", 0.0, ""
         if self.max_iterations < 1:
             return InvestigationResult(hypothesis, confidence, reasoning)
+        events = _read_stored(events)
         tools_used: list[str] = []
         additional: list[tuple[str, object]] = []
         # Bucket coverage is tracked PER GRANULARITY — a 300s heatmap epoch
@@ -810,11 +841,21 @@ class PhasedInvestigationAgent:
             )
         # the scanner's tail is one action; it also fills the baselines'
         # cache for the detectors
-        tail = _collect_sections({
+        sections = {
             "rollback": rb["summary"],
             "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),
             "episodes": D.recovery_episodes(events)["episodes"].limit(20),
-        })
+        }
+        tail = {}
+        if planned_single_partition(events):
+            # Over one partition the rollback summary is one stage and is
+            # collected first, on its own: the job that first parses
+            # ``fields`` pays a one-time cost, which two concurrent
+            # broadcast stages of the union each paid. (Over several, its
+            # scan parsed ``fields`` at construction, and apart it is one
+            # more job.)
+            tail = _collect_sections({"rollback": sections.pop("rollback")})
+        tail.update(_collect_sections(sections))
         rollback_info = tail["rollback"][0].asDict()
         additional.append(("rollback_analysis", rollback_info))
         tools_used.append("scanner.rollback_analysis")
@@ -833,6 +874,8 @@ class PhasedInvestigationAgent:
         # the LLM is deferred to the next iteration (reference :1091)
 
         det_results: dict[str, dict] | None = None
+        # the timeline reads acc: it is built again only after a dive
+        timeline_summary, acc_changed = None, True
         fresh = None  # the last dive's events not yet in acc (lazy)
         context_dirty = True
         llm_calls = 0
@@ -849,9 +892,13 @@ class PhasedInvestigationAgent:
                 additional.append(("detectors", det_results))
             tools_used.extend(f"detectors.{k}" for k in det_results)
 
-            timeline_summary = build_timeline(acc, det_results, buckets, ep_rows)
-            if timeline_summary:
-                context_dirty |= _add_if_changed(additional, "timeline_builder", timeline_summary)
+            if acc_changed:
+                acc_changed = False
+                timeline_summary = build_timeline(acc, det_results, buckets, ep_rows)
+                if timeline_summary:
+                    context_dirty |= _add_if_changed(
+                        additional, "timeline_builder", timeline_summary
+                    )
 
             if self.rag is not None:
                 query = build_rag_query(
@@ -944,7 +991,9 @@ class PhasedInvestigationAgent:
                     # left — all of them are exhausted
                     exhausted_300.update(live)
             if chosen_epoch is None:
-                uncovered = T.get_uncovered(
+                # Once this finds nothing, no later iteration dives, so
+                # dived_10 no longer changes and the answer stays empty.
+                uncovered = [] if coverage_complete else T.get_uncovered(
                     events, sorted(dived_10), min_severity=10, bucket_seconds=10
                 )
                 tools_used.append("hotspots.get_uncovered")
@@ -960,7 +1009,7 @@ class PhasedInvestigationAgent:
                 acc = acc.unionByName(win).dropDuplicates(["event_id"])
                 dived_10.add(chosen_epoch)
                 dive_order.append((10, chosen_epoch))
-                hotspot_inspected = True
+                hotspot_inspected = acc_changed = True
             else:
                 coverage_complete = True
 

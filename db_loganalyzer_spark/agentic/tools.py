@@ -11,16 +11,20 @@ Everything stays declarative; only bounded results are collected:
 LIMIT'd heads, 1-row summaries, and the scanner sweep's one row per
 ``(severity, event)`` pair, which the event-type vocabulary bounds, not
 the number of events. So a tool's Spark job count does not grow with
-input scale. It is still more than one job per call: with AQE on, an
-aggregate runs its shuffle map stage and its result as separate jobs.
-Measured on a persisted frame in a 4-core local session,
-``severity_counts``, ``event_histogram``, ``time_span`` and
-``global_summary`` run two jobs each; ``global_summary`` reduces all
-three facts from one sweep. In a phased investigation that sweep is the
-first job to read the persisted input, so it also fills the cache (six
-jobs on ``perfbench``'s ``incident_rca`` pass). ``get_uncovered`` with no
-limit collects every bucket of its heatmap unordered and ranks them on
-the driver: two jobs, where a range-partitioned sort ran four. With a
+input scale. Over a frame of several partitions it is still more than
+one job per call: with AQE on, an aggregate runs its shuffle map stage
+and its result as separate jobs. Measured on such a persisted frame in
+a 4-core local session, ``severity_counts``, ``event_histogram``,
+``time_span`` and ``global_summary`` run two jobs each;
+``global_summary`` reduces all three facts from one sweep. Over a frame
+Spark plans as one partition (a phased investigation reads a
+one-partition cached input through ``coalesce(1)``) an aggregate plans
+no exchange, and each of these tools, ``high_severity_buckets`` and
+``get_uncovered`` runs one job (on ``perfbench``'s ``incident_rca``
+pass, where the investigation has filled the cache before its first
+tool runs). ``get_uncovered`` with no limit collects every bucket of
+its heatmap unordered and ranks them on the driver: two jobs over
+several partitions, where a range-partitioned sort ran four. With a
 limit, the buckets are ranked by Spark's top-k. Each call re-runs its
 input's lineage; none of these tools caches its input. A caller that
 runs many of them over one frame (the phased investigation) persists

@@ -556,39 +556,46 @@ def rollback_analysis(events: DataFrame) -> dict[str, DataFrame]:
     in one global ``(ts, event_id)`` order; here all three columns share
     ONE stitched scan of that order (``windows.stitched_prev``: a range
     shuffle plus one boundary-carry row per partition, no
-    single-partition window). ``prev_<col>`` is the column's last
+    single-partition window; over an input planned as one partition, one
+    plain window). ``prev_<col>`` is the column's last
     non-null value before each row, which is the previous value among
     the rows where the column is set — for RecoveryVersion, exactly the
     reference's plain lag over RecoveryState rows."""
-    from ..operators.windows import stitched_prev
+    from ..operators.windows import planned_single_partition, stitched_prev
 
     def field_num(name):
         return py_float(F.element_at("fields", F.lit(name)))
 
-    # The narrow parsed frame is persisted because the stitched scan runs
-    # EAGER range-sample and checkpoint jobs at construction — without
-    # the persist each of them re-runs the full log parse upstream (see
-    # OPTIMIZATION_r13.md). The not-null filter is applied on top of the
-    # persisted projection, not below it: pushed under the projection,
-    # Catalyst substitutes the three field parses into the filter and
-    # evaluates them twice (on d09's synthetic ``fields`` map at sf0.1,
-    # 4 cores, the first stage took 7.6 s of task time instead of 3.2 s).
     versions = events.select(
         "event_id", "ts",
         field_num("CommittedVersion").alias("committed"),
         field_num("DurableVersion").alias("durable"),
         F.when(F.col("event") == "RecoveryState", field_num("RecoveryVersion")).alias("rv"),
-    ).persist()
+    )
+    # Unless the input is planned as one partition (then the scan is one
+    # lazy plain window), the stitched scan runs EAGER range-sample and
+    # checkpoint jobs at construction. Only for those is the narrow parsed
+    # frame persisted: without the persist each of them re-runs the full
+    # log parse upstream (see OPTIMIZATION_r13.md). The not-null filter is
+    # applied on top of the persisted projection, not below it: pushed
+    # under the projection, Catalyst substitutes the three field parses
+    # into the filter and evaluates them twice (on d09's synthetic
+    # ``fields`` map at sf0.1, 4 cores, the first stage took 7.6 s of task
+    # time instead of 3.2 s).
+    eager = not planned_single_partition(versions)
+    if eager:
+        versions = versions.persist()
     c, d, rv = F.col("committed"), F.col("durable"), F.col("rv")
     scan = stitched_prev(
         versions.filter(c.isNotNull() | d.isNotNull() | rv.isNotNull()),
         ["committed", "durable", "rv"], ts_col="ts", tiebreak="event_id",
     )
-    # The scan's localCheckpoint was taken eagerly at construction, so
-    # every frame below reads the checkpointed partitions, not the
-    # persisted lineage; release it instead of pinning an event-volume
-    # frame in executor storage for the rest of the session.
-    versions.unpersist()
+    if eager:
+        # The scan's localCheckpoint was taken eagerly at construction, so
+        # every frame below reads the checkpointed partitions, not the
+        # persisted lineage; release it instead of pinning an event-volume
+        # frame in executor storage for the rest of the session.
+        versions.unpersist()
 
     def prev(v):
         return F.col(f"prev_{v}")

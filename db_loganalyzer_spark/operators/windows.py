@@ -376,7 +376,17 @@ def severity_first_ranking(
 # hazard), then a per-range-partition window plus a boundary carry computed
 # from a collected per-partition summary (one row per partition). Every
 # stage is parallel; the driver only ever sees #partitions rows.
+# stitched_prev skips the recipe when its input is planned as ONE partition
+# (a scan over one partition is already the global window): one plain
+# window, no range sample, shuffle, checkpoint or carry collect.
 # ---------------------------------------------------------------------------
+
+
+def planned_single_partition(df: DataFrame) -> bool:
+    """Whether Spark plans ``df``'s output as exactly one partition (for
+    example a ``coalesce(1)`` read), so a whole-frame window or sort over
+    it needs no exchange. Reads the physical plan only: runs no job."""
+    return df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions() == 1
 
 
 def _range_sorted(df: DataFrame, ts_col: str, tiebreak: str | None, num_partitions: int | None):
@@ -435,9 +445,16 @@ def stitched_prev(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """df + a global ``prev_<col>`` for each of ``value_cols`` (the last
-    non-null value before each row), computed without any single-partition
-    window: one range sort and checkpoint, one carry collect and one
-    window for all columns."""
+    non-null value before each row). Over an input planned as one
+    partition it is one plain window; otherwise it runs no
+    single-partition window: one range sort and checkpoint, one carry
+    collect and one window for all columns."""
+    if planned_single_partition(df):
+        order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
+        w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
+        return df.withColumns(
+            {f"prev_{c}": F.last(F.col(c), ignorenulls=True).over(w) for c in value_cols}
+        )
     part, order = _range_sorted(df, ts_col, tiebreak, num_partitions)
     types = dict(df.dtypes)
     carries = _last_value_carries(part, order, value_cols)

@@ -209,6 +209,22 @@ def test_rollback_analysis_releases_input_persists(spark, log_events):
     assert len(after - before) == 1
 
 
+def test_rollback_analysis_one_partition_leaves_no_storage(spark, log_events):
+    """Over an input planned as one partition the stitched scan is one
+    lazy plain window: rollback_analysis persists nothing (no versions
+    frame, no localCheckpoint) and returns the same rows as over the
+    multi-partition input."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    got = D.rollback_analysis(log_events.coalesce(1))
+    got_rows = {k: sorted(df.collect()) for k, df in got.items()}
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+    want = D.rollback_analysis(log_events)
+    for k, df in want.items():
+        assert got_rows[k] == sorted(df.collect()), k
+    assert got_rows["summary"][0].detected
+
+
 def test_recovery_episodes(spark, log_events):
     eps = D.recovery_episodes(log_events)["episodes"].collect()
     assert len(eps) == 2

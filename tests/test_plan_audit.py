@@ -62,7 +62,10 @@ GLOBAL_WINDOW_OK = {
     "a31_cumulative_hll",  # one row per day bucket
     "d04_recovery_loop",  # bucket+halo form (detectors.py docstring)
     # d09's version scans run on the STITCHED (range-partitioned)
-    # operators since the r13 optimization round; it stays listed only
+    # operators since the r13 optimization round. (Over an input Spark
+    # plans as ONE partition, such as an investigation's coalesce(1)
+    # read, the scan is one plain window instead; the registry's file
+    # scan is never planned that way.) It stays listed only
     # because this lint's heuristic is a coarse conjunction
     # (SinglePartition anywhere + Window anywhere) and d09's plan still
     # carries 1-row aggregate-merge exchanges beside its __pid windows.

@@ -35,7 +35,9 @@ evidence the corresponding ground-truth doc names:
 import datetime as dt
 import hashlib
 import json
+import os
 import re
+import sys
 from collections import Counter
 
 import pytest
@@ -216,6 +218,10 @@ PRESSURE_JOB_BUDGET = 45
 # runs 52 jobs when the detectors run once (88 when every iteration
 # re-ran them, 54 before get_uncovered ranked on the driver).
 SIDEBAND_MULTI_JOB_BUDGET = 58
+# The same with 6 iterations runs 52 jobs, 2 of headroom under the 56 it
+# ran when the two iterations after coverage was complete asked
+# get_uncovered and built the timeline again.
+SIDEBAND_SIX_JOB_BUDGET = 54
 
 
 def _sideband_llm(prompt):
@@ -310,20 +316,38 @@ def test_sideband_multi_iteration_job_budget(spark, clogged_sideband):
     assert len(residue) == 0
 
 
-def test_sideband_prompts_carry_each_block_once(spark, clogged_sideband):
+def test_sideband_prompts_carry_each_block_once(spark, clogged_sideband, monkeypatch):
     """Six low-confidence iterations: the LLM context gets the detectors
     block once and a timeline block only when the timeline changed, so
     no prompt repeats evidence. The loop's path is the same as when every
     iteration re-added them (which made every prompt dirty and sent 4
-    prompts carrying the detectors block 1, 2, 3 and 4 times)."""
+    prompts carrying the detectors block 1, 2, 3 and 4 times).
+
+    After the fourth iteration finds coverage complete, the last two
+    reuse its empty whole-input ``get_uncovered`` and the timeline of the
+    unchanged evidence: 3 calls of each, where every iteration asking
+    again made 5 of each."""
+    from db_loganalyzer_spark.agentic import timeline as TL
+    from db_loganalyzer_spark.agentic import tools as TOOLS
+
+    calls = Counter()
+
+    def counted(name, fn):
+        def call(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return call
+
+    monkeypatch.setattr(TOOLS, "get_uncovered", counted("get_uncovered", TOOLS.get_uncovered))
+    monkeypatch.setattr(TL, "build_timeline", counted("build_timeline", TL.build_timeline))
     prompts = []
 
     def llm(prompt):
         prompts.append(prompt)
         return _unsure_llm(prompt)
 
-    res = PhasedInvestigationAgent(llm, max_iterations=6).investigate(
-        clogged_sideband, "What is the root cause of this incident?"
+    res, jobs, residue = _investigation(
+        spark, clogged_sideband, "test_scenarios.sideband_six_iterations", llm=llm
     )
     assert res.iterations == 6
     assert res.tools_used == (
@@ -331,6 +355,9 @@ def test_sideband_prompts_carry_each_block_once(spark, clogged_sideband):
     )
     t0 = int(T0.timestamp())
     assert res.inspected_buckets == [(300, t0), (10, t0 + 10), (10, t0)]
+    assert calls == {"get_uncovered": 3, "build_timeline": 3}
+    _assert_job_budget(jobs, SIDEBAND_SIX_JOB_BUDGET)
+    assert len(residue) == 0
     assert 0 < len(prompts) <= 4
     for p in prompts:
         blocks = re.findall(r"\n\n(\w+):\n", p.partition("Additional Investigation Data:")[2])
@@ -706,6 +733,83 @@ def test_formatter_text_digest_is_pinned(request, fixture):
     for n in (1, 3, 7):
         text = format_events_for_llm(events.repartition(n))
         assert hashlib.sha256(text.encode()).hexdigest() == FORMATTER_DIGESTS[fixture], n
+
+
+# ---------------------------------------------------------------------------
+# One investigation over parsed trace files. read_trace_events' output is
+# cached as ONE partition, so investigate reads it through coalesce(1):
+# its aggregates, windows and sorts plan no exchange, and
+# rollback_analysis's stitched scan is one plain window (no range sample
+# or localCheckpoint). The createDataFrame fixtures above are cached as
+# several partitions and keep their plans.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def rollbacks_trace_files(tmp_path_factory):
+    """A small seeded ClogWithRollbacks corpus from perfbench's generator:
+    two machines, one XML and one JSONL trace file, an hour."""
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+    import corpus as C
+
+    spec = C.Spec("clog_with_rollbacks", n_machines=2, files_per_machine=1,
+                  duration_s=3600, metric_period_s=30, incidents=["clog_with_rollbacks"])
+    return sorted(C.generate(spec, 7, str(tmp_path_factory.mktemp("rca"))).paths)
+
+
+# sha256 of every prompt, captured before investigate read a one-partition
+# input through coalesce(1): each grouped aggregate still merges one
+# buffer per group in the same row order, so not a byte may move. (They
+# depend on perfbench's generator: a change to it changes them.)
+TRACE_PROMPT_DIGESTS = ["f8ebf95d343c858fce326ebee228a79cbd23aba14acdac2826f3db6ec445d7f6"]
+# Jobs the investigation runs (not read_trace_events' own offset jobs) on
+# a 4-core local session: 25, plus 4 of headroom. Planning exchanges over
+# the one partition, and taking the stitched scan's range path, it ran 45.
+TRACE_JOB_BUDGET = 29
+
+
+def test_trace_file_investigation_one_partition(spark, rollbacks_trace_files):
+    from db_loganalyzer_spark.sources.trace_logs import read_trace_events
+
+    prompts = []
+
+    def llm(prompt):
+        prompts.append(hashlib.sha256(prompt.encode()).hexdigest())
+        return json.dumps({
+            "hypothesis": "CLUSTER 0 recovery_restart_cascade",
+            "confidence": 0.85,
+            "reasoning": "version rollbacks across repeated recovery windows",
+        })
+
+    events = read_trace_events(spark, rollbacks_trace_files, per_file_offsets=True)
+    res, jobs, residue = _investigation(
+        spark, events, "test_scenarios.trace_file_investigation", llm=llm
+    )
+    assert prompts == TRACE_PROMPT_DIGESTS
+    assert res.iterations == 2
+    # the z-score hotspot is dived: no whole-input get_uncovered
+    assert res.tools_used == _PHASE_A + _DETECTORS + ["context.context_window"]
+    t0 = 1709294400
+    heat = [2100, 1200, 1800, 3300, 1500, 300, 600, 900, 0, 2400]
+    assert res.inspected_buckets == [(300, t0 + d) for d in heat] + [(10, t0 + 2110)]
+    _assert_job_budget(jobs, TRACE_JOB_BUDGET)
+    assert not any(site.startswith("localCheckpoint") for site in jobs)
+    assert len(residue) == 0
+
+
+def test_trace_file_investigation_without_iterations_runs_no_job(
+    spark, rollbacks_trace_files
+):
+    """With no iteration to run, investigate does not even ask how many
+    partitions its stored input holds: no Spark job, nothing left stored."""
+    from db_loganalyzer_spark.sources.trace_logs import read_trace_events
+
+    events = read_trace_events(spark, rollbacks_trace_files, per_file_offsets=True)
+    res, jobs, residue = _investigation(
+        spark, events, "test_scenarios.trace_file_no_iterations", max_iterations=0
+    )
+    assert res.iterations == 0 and res.tools_used == []
+    assert jobs == [] and len(residue) == 0
 
 
 # ---------------------------------------------------------------------------

@@ -203,6 +203,31 @@ def test_stitched_prev_columns_match_single_partition_windows(spark):
     check()
 
 
+def test_stitched_prev_one_partition_is_one_plain_window(spark):
+    """Over an input planned as one partition (a ``coalesce(1)`` read)
+    stitched_prev is one plain window: the same rows and ``prev_<col>``
+    values as its range path on the same rows (ts ties, null runs), and
+    no localCheckpoint or any other persistent RDD left behind."""
+    df = _wide_df(spark).withColumn(
+        "b", F.when(F.col("event_id") % 5 != 0, F.col("event_id") % 7).cast("double")
+    )
+    jsc = spark.sparkContext._jsc
+    one = df.coalesce(1)
+    assert W.planned_single_partition(one) and not W.planned_single_partition(df)
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    got = W.stitched_prev(one, ["value", "b"])
+    rows = got.collect()
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+    assert got.columns == df.columns + ["prev_value", "prev_b"]
+    assert rows == sorted(rows, key=lambda r: (r.ts, r.event_id))  # in scan order
+    assert any(r.prev_value is not None and r.prev_b is not None for r in rows)
+    for nparts in (2, 3, 4, 5):
+        ranged = W.stitched_prev(df, ["value", "b"], num_partitions=nparts).collect()
+        assert sorted(ranged, key=lambda r: r.event_id) == sorted(
+            rows, key=lambda r: r.event_id
+        ), nparts
+
+
 def test_session_funnel_tie_and_session_semantics(spark):
     import datetime as dtm
 
