@@ -144,7 +144,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def a01_severity_histogram(spark, sf_dir):
-    return A.severity_histogram(_events(spark, sf_dir), ordered=False)
+    return A.severity_histogram(_events(spark, sf_dir))
 
 
 A01_SQL = """
@@ -222,7 +222,7 @@ GROUP BY 1, 2, 3
 
 def a06_metric_baselines(spark, sf_dir):
     return A.metric_baselines(
-        _events(spark, sf_dir), ["event_type"], "value", min_count=10, ordered=False
+        _events(spark, sf_dir), ["event_type"], "value", min_count=10
     )
 
 
@@ -237,7 +237,7 @@ FROM events GROUP BY 1 HAVING COUNT(value) >= 10
 
 
 def a08_bucket_heatmap(spark, sf_dir):
-    return A.bucket_heatmap(_events(spark, sf_dir), 300, ordered=False)
+    return A.bucket_heatmap(_events(spark, sf_dir), 300)
 
 
 A08_SQL = """
@@ -249,7 +249,7 @@ FROM events GROUP BY 1
 
 def a09_high_severity_buckets(spark, sf_dir):
     return A.bucket_heatmap(
-        _events(spark, sf_dir), 600, min_max_severity=49, ordered=False
+        _events(spark, sf_dir), 600, min_max_severity=49
     )
 
 
@@ -263,7 +263,7 @@ SELECT * FROM (
 
 
 def a10_zscore_hotspots(spark, sf_dir):
-    return A.zscore_hotspots(_events(spark, sf_dir), 300, min_z=1.5, ordered=False)
+    return A.zscore_hotspots(_events(spark, sf_dir), 300, min_z=1.5)
 
 
 A10_SQL = """
@@ -505,7 +505,6 @@ def j01_equi_join(spark, sf_dir):
             orders,
             cust.select("c_custkey", "c_mktsegment"),
             orders.o_custkey == F.col("c_custkey"),
-            broadcast_right=True,
         )
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n"), dsum("o_totalprice").alias("total"))
@@ -3731,7 +3730,7 @@ def w10_severity_first(spark, sf_dir):
     from db_loganalyzer_spark.operators.windows import severity_first_ranking
 
     lev = _log_events(spark, sf_dir).select("event_id", "ts", "severity")
-    return severity_first_ranking(lev, with_rank=True)
+    return severity_first_ranking(lev)
 
 
 W10_SQL = """

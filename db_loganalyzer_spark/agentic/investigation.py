@@ -42,9 +42,9 @@ deterministic and is what this module re-expresses Spark-first:
   ``monotonically_increasing_id``, unions the tagged rows, collects them
   once and splits them back into sections on the driver, in row order,
   with the values ``collect()`` would give. The formatter, phase A's
-  scanner tail (baselines row count, recovery-episode head, and over
-  several partitions the rollback summary) and the five one-row detector
-  summaries each go through it. Over several partitions every shuffle
+  rollback summary and the rest of its scanner tail (baselines row
+  count, recovery-episode head) as a second action, and the five one-row
+  detector summaries each go through it. Over several partitions every shuffle
   map stage is still its own job, so a union saves actions, not every
   job. The grouped detector aggregates (``zscore_hotspots``,
   ``baseline_window_anomalies``, ``metric_anomalies``) stay out of the
@@ -734,11 +734,12 @@ class PhasedInvestigationAgent:
     ``rag(query: str) -> str | None`` is the optional retriever. Both are
     plain callables so the whole loop is deterministic offline.
 
-    ``investigate`` owns its input's storage: it persists ``events`` (and
-    ``baselines`` when it derives them) on entry and, in a ``finally`` on
-    exit, unpersists them and releases any ``localCheckpoint`` under
-    ``rollback_analysis``'s frames. A frame the caller passes in already
-    persisted or checkpointed is neither re-persisted nor released.
+    ``investigate`` owns its input's storage: it persists ``events`` on
+    entry and the metric baselines it derives from them, and, in a
+    ``finally`` on exit, unpersists both and releases any
+    ``localCheckpoint`` under ``rollback_analysis``'s frames. An
+    ``events`` frame the caller passes in already persisted or
+    checkpointed is neither re-persisted nor released.
     """
 
     def __init__(
@@ -761,16 +762,14 @@ class PhasedInvestigationAgent:
         self.now = now
         self.sleep = sleep
 
-    def investigate(
-        self, events: DataFrame, question: str, baselines: DataFrame | None = None
-    ) -> InvestigationResult:
-        """Run the phased loop over ``events``, holding it (and derived
-        ``baselines``) in storage for the loop's lifetime, so its Spark jobs
+    def investigate(self, events: DataFrame, question: str) -> InvestigationResult:
+        """Run the phased loop over ``events``, holding it (and the derived
+        baselines) in storage for the loop's lifetime, so its Spark jobs
         read the input from the block manager instead of each re-running
         its lineage (for a trace file, the whole parse)."""
         owned: list[DataFrame] = []
         try:
-            return self._loop(_own(events, owned), question, baselines, owned)
+            return self._loop(_own(events, owned), question, owned)
         finally:
             keep = _checkpoint_rdds(events)  # the caller's own checkpoints
             for df in owned:
@@ -783,11 +782,9 @@ class PhasedInvestigationAgent:
         self,
         events: DataFrame,
         question: str,
-        baselines: DataFrame | None,
         owned: list[DataFrame],
     ) -> InvestigationResult:
         from ..detectors import detectors as D
-        from ..operators.windows import planned_single_partition
         from ..sources.trace_logs import derive_event_metrics
         from . import tools as T
         from .knowledge_base import knowledge_base_text
@@ -834,28 +831,20 @@ class PhasedInvestigationAgent:
         rb = D.rollback_analysis(events)
         owned.append(rb["summary"])  # released with its localCheckpoint
         event_metrics = derive_event_metrics(events)
-        if baselines is None:
-            # counted below, then read by two detectors
-            baselines = _own(
-                D.metric_baselines_table(events, event_metrics, min_count=20), owned
-            )
-        # the scanner's tail is one action; it also fills the baselines'
-        # cache for the detectors
-        sections = {
-            "rollback": rb["summary"],
+        # counted below, then read by two detectors
+        baselines = _own(
+            D.metric_baselines_table(events, event_metrics, min_count=20), owned
+        )
+        # The rollback summary is collected first, on its own: the job that
+        # first parses ``fields`` pays a one-time cost, which two concurrent
+        # broadcast stages of one union would each pay. The rest of the
+        # scanner's tail is one action; it also fills the baselines' cache
+        # for the detectors.
+        tail = _collect_sections({"rollback": rb["summary"]})
+        tail.update(_collect_sections({
             "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),
             "episodes": D.recovery_episodes(events)["episodes"].limit(20),
-        }
-        tail = {}
-        if planned_single_partition(events):
-            # Over one partition the rollback summary is one stage and is
-            # collected first, on its own: the job that first parses
-            # ``fields`` pays a one-time cost, which two concurrent
-            # broadcast stages of the union each paid. (Over several, its
-            # scan parsed ``fields`` at construction, and apart it is one
-            # more job.)
-            tail = _collect_sections({"rollback": sections.pop("rollback")})
-        tail.update(_collect_sections(sections))
+        }))
         rollback_info = tail["rollback"][0].asDict()
         additional.append(("rollback_analysis", rollback_info))
         tools_used.append("scanner.rollback_analysis")

@@ -136,9 +136,7 @@ def global_summary(events: DataFrame) -> dict:
 def _ranked_buckets(events, min_severity, bucket_seconds, limit, exclude=()) -> list[dict]:
     """Heatmap buckets whose max severity reaches ``min_severity``, most
     severe and busiest first, without the ``exclude`` bucket starts."""
-    df = A.bucket_heatmap(
-        events, bucket_seconds, min_max_severity=min_severity, ordered=False
-    )
+    df = A.bucket_heatmap(events, bucket_seconds, min_max_severity=min_severity)
     if exclude:
         df = df.filter(~F.col("bucket").isin(exclude))
     if limit is None:
@@ -175,10 +173,10 @@ def get_uncovered(
     inspected_buckets: list[int],
     min_severity: int = 20,
     bucket_seconds: int = 600,
-    limit: int | None = None,
 ) -> list[dict]:
-    """High-severity buckets not yet inspected (hotspot_selector.get_uncovered)."""
-    return _ranked_buckets(events, min_severity, bucket_seconds, limit, inspected_buckets)
+    """Every high-severity bucket not yet inspected
+    (hotspot_selector.get_uncovered)."""
+    return _ranked_buckets(events, min_severity, bucket_seconds, None, inspected_buckets)
 
 
 def context_window(

@@ -60,12 +60,6 @@ BASELINE_EXCLUDED_FIELDS = {
 }
 
 
-def _time_filter(df: DataFrame, start_time=None, end_time=None, ts_col="ts"):
-    if start_time is not None and end_time is not None:
-        return df.filter(F.col(ts_col).between(start_time, end_time))
-    return df
-
-
 def _finite(c):
     return c.isNotNull() & (~F.isnan(c)) & (F.abs(c) < F.lit(1e308))
 
@@ -80,14 +74,12 @@ def metric_baselines_table(
     event_metrics: DataFrame,
     min_count: int = 20,
     top_n: int = 500,
-    per_role: bool = True,
-    with_all_rows: bool = True,
 ) -> DataFrame:
     """metric_baselines: per (metric_name, role) mean/stddev/p95/min/max/
     count with finite guard, id-like fields excluded, top-N by count.
 
     reference: global_scanner.py:57-172 (upsert -> here just a DataFrame;
-    persist with .write where needed). ``with_all_rows`` additionally
+    persist with .write where needed). Besides the per-role rows it
     emits role='ALL' whole-population rows so the J6 fallback lookup has
     something to land on (the reference only gets 'ALL' rows from
     null-role events; the explicit union is strictly more useful and a
@@ -113,19 +105,13 @@ def metric_baselines_table(
             .filter(F.col("count") >= min_count)
         )
 
-    if per_role:
-        if with_all_rows:
-            # The whole-population aggregate below owns the 'ALL' row;
-            # null-role events must not ALSO produce a conflicting
-            # subset-'ALL' row (dropDuplicates between the two would be
-            # partition-order-dependent), so restrict the per-role branch
-            # to real roles and union is disjoint by construction.
-            out = agg(joined.filter(F.col("role").isNotNull()), F.col("role"))
-            out = out.unionByName(agg(joined, F.lit("ALL")))
-        else:
-            out = agg(joined, F.coalesce(F.col("role"), F.lit("ALL")))
-    else:
-        out = agg(joined, F.lit("ALL"))
+    # The whole-population aggregate owns the 'ALL' row; null-role
+    # events must not ALSO produce a conflicting subset-'ALL' row
+    # (dropDuplicates between the two would be partition-order-
+    # dependent), so the per-role branch takes real roles only and the
+    # union is disjoint by construction.
+    out = agg(joined.filter(F.col("role").isNotNull()), F.col("role"))
+    out = out.unionByName(agg(joined, F.lit("ALL")))
     return out.orderBy(F.desc("count"), "metric_name", "role").limit(top_n)
 
 
@@ -166,15 +152,11 @@ def storage_engine_pressure(
     baselines: DataFrame | None = None,
     lag_threshold: float = 50000,
     z_score_threshold: float = 3.0,
-    start_time=None,
-    end_time=None,
 ) -> dict[str, DataFrame]:
     """D1 — VersionLag on StorageMetrics events vs baseline z-score OR
     absolute threshold (reference: detectors.py:60-122; case-variant
     ``versionLag`` at :79)."""
-    sm = _time_filter(
-        events.filter(F.col("event") == "StorageMetrics"), start_time, end_time
-    )
+    sm = events.filter(F.col("event") == "StorageMetrics")
     lag = F.coalesce(
         py_float(F.element_at("fields", F.lit("VersionLag"))),
         py_float(F.element_at("fields", F.lit("versionLag"))),
@@ -230,16 +212,10 @@ def _class_scan_summary(hits: DataFrame) -> DataFrame:
     )
 
 
-def ratekeeper_throttling(
-    events: DataFrame, start_time=None, end_time=None
-) -> dict[str, DataFrame]:
+def ratekeeper_throttling(events: DataFrame) -> dict[str, DataFrame]:
     """D2 — Ratekeeper/Throttle class events where 'throttle' appears in
     the name or any payload key (reference: detectors.py:125-149)."""
-    cls = _time_filter(
-        events.filter(F.col("event").rlike("Ratekeeper|Throttle")),
-        start_time,
-        end_time,
-    )
+    cls = events.filter(F.col("event").rlike("Ratekeeper|Throttle"))
     hits = cls.filter(
         F.lower(F.col("event")).contains("throttle")
         | F.exists(F.map_keys("fields"), lambda k: F.lower(k).contains("throttle"))
@@ -247,33 +223,23 @@ def ratekeeper_throttling(
     return {"summary": _class_scan_summary(hits), "events": hits}
 
 
-def missing_tlogs(
-    events: DataFrame, start_time=None, end_time=None
-) -> dict[str, DataFrame]:
+def missing_tlogs(events: DataFrame) -> dict[str, DataFrame]:
     """D3 — TLog failure-shaped event names (reference: detectors.py:152-173)."""
-    hits = _time_filter(
-        events.filter(
-            F.col("event").like("%TLog%")
-            & (
-                F.col("event").like("%Missing%")
-                | F.col("event").like("%Failed%")
-                | F.col("event").like("%Error%")
-            )
-        ),
-        start_time,
-        end_time,
+    hits = events.filter(
+        F.col("event").like("%TLog%")
+        & (
+            F.col("event").like("%Missing%")
+            | F.col("event").like("%Failed%")
+            | F.col("event").like("%Error%")
+        )
     )
     return {"summary": _class_scan_summary(hits), "events": hits}
 
 
-def coordination_loss(
-    events: DataFrame, start_time=None, end_time=None
-) -> dict[str, DataFrame]:
+def coordination_loss(events: DataFrame) -> dict[str, DataFrame]:
     """D5 — Coordinator events with fail/lost in the name or stringified
     payload (reference: detectors.py:206-231)."""
-    cls = _time_filter(
-        events.filter(F.col("event").like("%Coordinator%")), start_time, end_time
-    )
+    cls = events.filter(F.col("event").like("%Coordinator%"))
     fields_str = F.lower(F.to_json(F.col("fields")))
     name = F.lower(F.col("event"))
     hits = cls.filter(
@@ -294,8 +260,6 @@ def recovery_loop(
     events: DataFrame,
     threshold: int = 3,
     window_seconds: float = 60,
-    start_time=None,
-    end_time=None,
     bucket_seconds: float | None = None,
 ) -> dict[str, DataFrame]:
     """D4 — count sliding windows of `threshold` MasterRecoveryState
@@ -315,9 +279,7 @@ def recovery_loop(
     fewer than k predecessors exist in it) and the true span necessarily
     exceeds ``window_seconds`` — excluded from the count either way.
     """
-    recs = _time_filter(
-        events.filter(F.col("event") == "MasterRecoveryState"), start_time, end_time
-    ).select("ts", "event_id")
+    recs = events.filter(F.col("event") == "MasterRecoveryState").select("ts", "event_id")
     if bucket_seconds is None:
         bucket_seconds = 16 * window_seconds
     if bucket_seconds < window_seconds:
@@ -402,13 +364,11 @@ def baseline_window_anomalies(
     bucket_seconds: int = 30,
     z_score_threshold: float = 3.0,
     min_samples: int = 3,
-    metrics: list[str] | None = None,
 ) -> dict[str, DataFrame]:
-    """D7 — bucket x role x metric means vs baselines z-score
-    (reference: detectors.py:288-352)."""
-    metrics = metrics or DEFAULT_WINDOW_METRICS
+    """D7 — bucket x role x metric means vs baselines z-score over
+    :data:`DEFAULT_WINDOW_METRICS` (reference: detectors.py:288-352)."""
     bucketed = (
-        event_metrics.filter(F.col("metric_name").isin(*metrics))
+        event_metrics.filter(F.col("metric_name").isin(*DEFAULT_WINDOW_METRICS))
         .filter(_finite(F.col("metric_value")))
         .join(events.select("event_id", "ts", "role"), "event_id")
         .groupBy(
@@ -716,7 +676,6 @@ def recovery_episodes(
 def detect_recoveries(
     events: DataFrame,
     look_back_seconds: float = 5.0,
-    include_codecoverage: bool = True,
 ) -> dict[str, DataFrame]:
     """D11 — per MasterRecoveryState: decode StatusCode to the named state
     and attribute a cause from the look-back window (reference:
@@ -733,9 +692,8 @@ def detect_recoveries(
     state_map = F.create_map(
         *[F.lit(x) for kv in RECOVERY_STATES.items() for x in kv]
     )
-    base = events if include_codecoverage else events.filter(F.col("event") != "CodeCoverage")
     recs = (
-        base.filter(F.col("event") == "MasterRecoveryState")
+        events.filter(F.col("event") == "MasterRecoveryState")
         .select(
             F.col("event_id").alias("recovery_id"),
             F.col("ts").alias("recovery_ts"),
@@ -768,7 +726,7 @@ def detect_recoveries(
         | name_lower.contains("terminated")
     )
     is_high_sev = has_name & F.col("severity").isNotNull() & (F.col("severity") >= 40)
-    cand = base.select(
+    cand = events.select(
         "event_id", "ts", "event", "severity",
         F.when(
             (F.col("event") == "CodeCoverage")

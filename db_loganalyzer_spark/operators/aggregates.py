@@ -22,20 +22,17 @@ from pyspark.sql import functions as F
 from ..functions.scalars import bucket_start
 
 
-def dsum(
-    c: Column | str, scale: int | None = None, wide: bool = False
-) -> Column:
+def dsum(c: Column | str) -> Column:
     """Order-independent sum: per-row quantize to integer micro-units
     (``FLOOR(v * 1e6 + 0.5)`` -> BIGINT), exact integer sum, back to
-    double — UNROUNDED by default. Every step is the same IEEE-754
+    double — UNROUNDED. Every step is the same IEEE-754
     operation in any engine (the double product ``v * 1e6`` is computed
     identically, FLOOR of a double is exact, and long addition is
     associative), so the result is bit-identical across engines and
     partitionings, whereas a final ROUND splits on half-way ties
     (Spark rounds the decimal string of the double HALF_UP, C-engines
     multiply-and-rint the binary value — measured divergence on
-    6-decimal sums and averages). Pass ``scale`` only for display
-    surfaces that never feed an oracle hash.
+    6-decimal sums and averages).
 
     The long-typed aggregation runs at native speed inside whole-stage
     codegen (~4x faster than a DECIMAL(18,6) accumulator, measured).
@@ -44,9 +41,7 @@ def dsum(
     — still deterministically and identically in every engine); the
     long accumulator overflows past ~9.2e18 micros total, which ANSI
     mode (Spark 4 default) turns into a loud ARITHMETIC_OVERFLOW, never
-    a wrong answer. Pass ``wide=True`` for columns whose TOTAL can
-    exceed 9.2e12 units (byte counters, epoch micros): DECIMAL(38,6)
-    handles ±10^32 at the slower decimal-aggregation cost.
+    a wrong answer.
 
     Oracle mirror (DuckDB):
     ``CAST(SUM(CAST(FLOOR(v * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
@@ -54,46 +49,30 @@ def dsum(
     double conversion agrees with Spark's long->double for any total
     that didn't already overflow Spark's guard)."""
     col = F.col(c) if isinstance(c, str) else c
-    if wide:
-        total = F.sum(col.cast("decimal(38,6)")).cast("double")
-    else:
-        micros = F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-        total = F.sum(micros).cast("double") / F.lit(1000000.0)
-    return total if scale is None else F.round(total, scale)
+    micros = F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("long")
+    return F.sum(micros).cast("double") / F.lit(1000000.0)
 
 
-def davg(
-    c: Column | str, scale: int | None = None, wide: bool = False
-) -> Column:
+def davg(c: Column | str) -> Column:
     """Order-independent mean built from the exact micro-unit sum /
-    exact count, UNROUNDED by default (see dsum — the raw double is
+    exact count, UNROUNDED (see dsum — the raw double is
     bitwise reproducible across engines: exact integer sum → nearest
     double → two IEEE divisions in a fixed order; rounding splits on
     half-way ties, measured at 4/3600 groups on sf0.1 event averages).
-    ``wide`` as in dsum. Oracle mirror: ``CAST(SUM(CAST(FLOOR(v *
+    Oracle mirror: ``CAST(SUM(CAST(FLOOR(v *
     1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0 / COUNT(v)``
     (division is left-associative in both engines)."""
     col = F.col(c) if isinstance(c, str) else c
-    if wide:
-        mean = F.sum(col.cast("decimal(38,6)")).cast("double") / F.count(col)
-    else:
-        micros = F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("long")
-        mean = (
-            F.sum(micros).cast("double") / F.lit(1000000.0) / F.count(col)
-        )
-    return mean if scale is None else F.round(mean, scale)
+    micros = F.floor(col * F.lit(1000000.0) + F.lit(0.5)).cast("long")
+    return F.sum(micros).cast("double") / F.lit(1000000.0) / F.count(col)
 
 
-def severity_histogram(
-    df: DataFrame, severity_col: str = "severity", ordered: bool = True
-) -> DataFrame:
-    """A1 — count per severity (reference: global_scanner.py:16-19).
-
-    ``ordered=False`` skips the presentation-level global sort — at scale a
-    sort nobody observes is a wasted range-shuffle, and order-insensitive
-    consumers (the oracle hash, downstream joins) never need it."""
-    out = df.groupBy(severity_col).agg(F.count(F.lit(1)).alias("n"))
-    return out.orderBy(severity_col) if ordered else out
+def severity_histogram(df: DataFrame, severity_col: str = "severity") -> DataFrame:
+    """A1 — count per severity (reference: global_scanner.py:16-19),
+    unsorted: at scale a sort nobody observes is a wasted range-shuffle,
+    and order-insensitive consumers (the oracle hash, downstream joins)
+    never need it."""
+    return df.groupBy(severity_col).agg(F.count(F.lit(1)).alias("n"))
 
 
 def event_histogram(df: DataFrame, k: int = 10, event_col: str = "event") -> DataFrame:
@@ -125,9 +104,9 @@ def time_span(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def global_max(df: DataFrame, col: str, alias: str | None = None) -> DataFrame:
+def global_max(df: DataFrame, col: str) -> DataFrame:
     """A4 — single global max (reference: global_scanner.py:45)."""
-    return df.agg(F.max(col).alias(alias or f"max_{col}"))
+    return df.agg(F.max(col).alias(f"max_{col}"))
 
 
 def windowed_rollup(
@@ -222,7 +201,6 @@ def multi_windowed_rollup(
     keys: list[str],
     value_col: str,
     ts_col: str = "ts",
-    exact_percentile: bool = True,
 ) -> DataFrame:
     """A5 extension — EVERY rollup granularity in one scan + one shuffle.
 
@@ -233,11 +211,6 @@ def multi_windowed_rollup(
     dimension inline amortizes the single scan across all granularities
     (output rows grow by len(window_sizes), the shuffle stays keyed by
     (size, window, keys) — no hot key)."""
-    pctl = (
-        F.percentile(value_col, 0.95)
-        if exact_percentile
-        else F.percentile_approx(value_col, 0.95)
-    )
     ws = F.col("window_seconds")
     exploded = df.select(
         ts_col,
@@ -254,7 +227,7 @@ def multi_windowed_rollup(
         F.count(F.lit(1)).alias("n"),
         davg(value_col).alias("avg_value"),
         F.max(value_col).alias("max_value"),
-        pctl.alias("p95_value"),
+        F.percentile(value_col, 0.95).alias("p95_value"),
     )
 
 
@@ -263,11 +236,9 @@ def metric_baselines(
     keys: list[str],
     value_col: str,
     min_count: int = 10,
-    with_p95: bool = True,
-    ordered: bool = True,
 ) -> DataFrame:
-    """A6/A7 — per-key baseline stats: mean/stddev/count/min/max (+p95),
-    HAVING count >= min_count.
+    """A6/A7 — per-key baseline stats: mean/stddev/count/min/max/p95,
+    HAVING count >= min_count, unsorted.
 
     reference: global_scanner.py:57-172 (upsert path) — here the result is
     just a DataFrame; persist with ``.write`` where the reference upserted.
@@ -275,17 +246,18 @@ def metric_baselines(
     # mean/p95 unrounded (rational — ROUND tie risk, see dsum); stddev
     # KEEPS its ROUND: sqrt output is irrational, ties are measure-zero,
     # and the raw value differs across engines' merge orders anyway.
-    aggs = [
-        davg(value_col).alias("mean"),
-        F.round(F.stddev_samp(value_col), 4).alias("stddev"),
-        F.count(value_col).alias("n"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
-    ]
-    if with_p95:
-        aggs.append(F.percentile(value_col, 0.95).alias("p95"))
-    out = df.groupBy(*keys).agg(*aggs).filter(F.col("n") >= min_count)
-    return out.orderBy(*keys) if ordered else out
+    return (
+        df.groupBy(*keys)
+        .agg(
+            davg(value_col).alias("mean"),
+            F.round(F.stddev_samp(value_col), 4).alias("stddev"),
+            F.count(value_col).alias("n"),
+            F.min(value_col).alias("min_value"),
+            F.max(value_col).alias("max_value"),
+            F.percentile(value_col, 0.95).alias("p95"),
+        )
+        .filter(F.col("n") >= min_count)
+    )
 
 
 def bucket_heatmap(
@@ -293,11 +265,10 @@ def bucket_heatmap(
     bucket_seconds: int = 300,
     ts_col: str = "ts",
     severity_col: str = "severity",
-    ordered: bool = True,
     min_max_severity: float | None = None,
 ) -> DataFrame:
-    """A8/A9 — epoch-bucket heatmap: max severity + count per bucket;
-    optional HAVING max >= floor (hotspot selector).
+    """A8/A9 — epoch-bucket heatmap: max severity + count per bucket,
+    unsorted; optional HAVING max >= floor (hotspot selector).
 
     reference: global_scanner.py:232-252; hotspot_selector.py:15-36
     """
@@ -309,7 +280,7 @@ def bucket_heatmap(
     )
     if min_max_severity is not None:
         out = out.filter(F.col("max_severity") >= min_max_severity)
-    return out.orderBy(F.desc("max_severity"), "bucket") if ordered else out
+    return out
 
 
 def zscore_hotspots(
@@ -317,10 +288,9 @@ def zscore_hotspots(
     bucket_seconds: int = 300,
     min_z: float = 2.0,
     ts_col: str = "ts",
-    ordered: bool = True,
 ) -> DataFrame:
     """A10 — z-score of per-bucket event counts vs the global bucket-count
-    distribution (reference: detectors.py:234-285).
+    distribution (reference: detectors.py:234-285), unsorted.
 
     The global stats attach via a whole-frame window over the BUCKET
     table, not the events: one plan, no separate broadcast-build job.
@@ -336,13 +306,12 @@ def zscore_hotspots(
     z = F.when(
         F.col("std_n") != 0, (F.col("n") - F.col("mean_n")) / F.col("std_n")
     )
-    out = (
+    return (
         buckets.withColumn("mean_n", F.avg("n").over(w))
         .withColumn("std_n", F.stddev_samp("n").over(w))
         .select("bucket", "n", F.round(z, 4).alias("zscore"))
         .filter(F.col("zscore") >= min_z)
     )
-    return out.orderBy(F.desc("zscore"), "bucket") if ordered else out
 
 
 def per_group_zscores(

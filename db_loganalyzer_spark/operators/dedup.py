@@ -265,7 +265,6 @@ def winnowing_index(
     text_col: str = "text",
     n: int = 2,
     w: int = 4,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """The standing corpus-side winnowing index st17 probes: one row
     per (fingerprint, corpus doc) with the doc's FULL fingerprint array
@@ -284,21 +283,7 @@ def winnowing_index(
     (measured: >120 s for what this shape does in 3 s at sf0.001 —
     the optimizer duplicates the non-cheap ``fps`` expression into
     both the Generate input and the carried projection, defeating the
-    staged-projection discipline the docstrings above describe).
-
-    ``max_doc_freq`` is m21's stop-fingerprint dial applied at INDEX
-    BUILD time: fingerprints present in more than that many corpus
-    docs (boilerplate headers, license blocks) are dropped from the
-    exploded join keys, so a probe can never fan out on them — the
-    join-cost cap for real corpora, where the hot set is a few
-    boilerplate runs. The carried arrays keep every fingerprint
-    (shared counts stay exact over the pairs that DO join). Know your
-    data before dialing it: on a wholesale-cloned corpus (the sf100r
-    replica stress) every fingerprint's frequency ~= the clone count,
-    so any effective cap also erases the true positives — there the
-    structural fix is a bucketed standing index + estimate scoring
-    (st14's pattern), not a frequency cap; disposition row in
-    bench_data/registry_sf100r_r12.jsonl."""
+    staged-projection discipline the docstrings above describe)."""
     arr = winnowing_fingerprint_arrays(docs, id_col, text_col, n, w)
     carried = F.transform(
         "fps",
@@ -306,19 +291,10 @@ def winnowing_index(
             x.alias("fingerprint"), F.col("fps").alias("corpus_fps")
         ),
     )
-    out = arr.select(
+    return arr.select(
         F.col(id_col).alias("corpus_id"),
         F.explode(carried).alias("e"),
     ).select("corpus_id", "e.fingerprint", "e.corpus_fps")
-    if max_doc_freq is not None:
-        hot = (
-            out.groupBy("fingerprint")
-            .agg(F.count(F.lit(1)).alias("doc_freq"))
-            .filter(F.col("doc_freq") > max_doc_freq)
-            .select("fingerprint")
-        )
-        out = out.join(F.broadcast(hot), "fingerprint", "left_anti")
-    return out
 
 
 def winnowing_overlap_pairs(
@@ -391,7 +367,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_doc_freq: int | None = None,
-    check_skew: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs via a shingle inverted index:
     explode distinct shingles, self-join on shingle (only co-occurring
@@ -425,13 +400,10 @@ def ngram_jaccard_pairs(
     O(corpus tokens) and spills to disk — the recompute-vs-storage
     trade is the same one the dedup fixpoint makes for its edge list.
 
-    On the uncapped path with ``check_skew`` (the default) this call is
-    EAGER: the clone-skew guard runs one Spark job (max shingle
-    doc-freq) at plan-construction time. The shingle index is persisted
-    first, so the guard job doubles as a cache warm for the returned
-    plan rather than double work; pass ``check_skew=False`` to build a
-    fully lazy, persist-free plan (callers composing plans they may
-    never execute)."""
+    On the uncapped path this call is EAGER: the clone-skew guard runs
+    one Spark job (max shingle doc-freq) at plan-construction time. The
+    shingle index is persisted first, so the guard job doubles as a
+    cache warm for the returned plan rather than double work."""
     df = _spread(df)
     sh = df.select(
         F.col(id_col).alias("id"),
@@ -450,7 +422,7 @@ def ngram_jaccard_pairs(
             sh = sh.persist()
         hot = _hot_shingles(sh, max_doc_freq)
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    elif check_skew:
+    else:
         # Runtime guard (VERDICT r6 item 5): one map-side-combinable agg
         # over the index the pipeline builds anyway — cheap next to the
         # self-join it is protecting, and it only runs on the uncapped
@@ -758,22 +730,10 @@ def _banded(signatures: DataFrame, bands: int, hash_family: str, carry_signature
     )
 
 
-def _cap_buckets(banded: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Drop rows in (band, bucket) groups larger than the cap — the
-    degenerate-bucket guard shared by the index and candidates paths."""
-    w_bucket = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-    return (
-        banded.withColumn("__bsz", w_bucket)
-        .filter(F.col("__bsz") <= max_bucket_size)
-        .drop("__bsz")
-    )
-
-
 def minhash_lsh_index(
     signatures: DataFrame,
     bands: int = 8,
     hash_family: str = "portable",
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """The STANDING LSH index over a corpus: one row per (band, bucket)
     membership — columns (id, signature, band, bucket). Build it once
@@ -782,36 +742,14 @@ def minhash_lsh_index(
     batch/stream against it (``streaming/streams.streaming_neardup_
     probe``) instead of re-running the corpus self-join per ingest —
     the standing-index shape of m15, minhashed. The signature column is
-    carried so probes can estimate-verify without a second join.
-
-    ``max_bucket_size``: a degenerate (band, bucket) group (boilerplate
-    docs collapsing to one band hash) makes EVERY probe that hits it
-    emit |bucket| join rows — the probe-side analogue of the capped
-    candidates' quadratic hazard. When set, index rows in groups larger
-    than the cap are dropped at build time (same documented recall
-    trade as ``minhash_lsh_candidates``: a pair is missed only if its
-    every shared band is degenerate). A capped index additionally
-    carries a ``bands_kept`` array (this id's surviving bands, sorted)
-    so the probe's minimal-band uniqueness filter can range over bands
-    that actually have index rows — without it, a pair whose FIRST
-    signature-matching band was dropped by the cap would be lost even
-    though a later shared band survives, silently exceeding the
-    documented recall trade. None keeps the exact index (no extra
-    column, no overhead)."""
-    out = _banded(signatures, bands, hash_family, carry_signature=True)
-    if max_bucket_size is not None:
-        out = _cap_buckets(out, max_bucket_size).withColumn(
-            "bands_kept",
-            F.sort_array(F.collect_set("band").over(Window.partitionBy("id"))),
-        )
-    return out
+    carried so probes can estimate-verify without a second join."""
+    return _banded(signatures, bands, hash_family, carry_signature=True)
 
 
 def minhash_lsh_candidates(
     signatures: DataFrame,
     bands: int = 8,
     hash_family: str = "portable",
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH banding: split each signature into `bands` rows of
     (band_id, band_hash); docs sharing any band bucket become candidate
@@ -821,21 +759,8 @@ def minhash_lsh_candidates(
     ``portable`` folds the band's values with the same rolling combine
     the t04 fingerprint uses (``(acc*31 + v) mod p``) so the bucket ids
     are reproducible in the oracle SQL; ``xxhash64`` hashes the band
-    slice's string form.
-
-    ``max_bucket_size``: the within-bucket pair join is quadratic in
-    bucket population, so one degenerate bucket (boilerplate/near-empty
-    docs collapsing to one signature band) owns a single join task with
-    |bucket|² pairs — the LSH analogue of the clone-skew hazard the
-    capped-Jaccard family guards (see ``CloneQuadraticWarning``). When
-    set, (band, bucket) groups holding more than this many docs are
-    dropped before the self-join: an explicit recall trade (pairs whose
-    EVERY shared band is degenerate are missed; anything sharing one
-    normal band survives). None (default) keeps exact-LSH semantics for
-    the oracle contract."""
+    slice's string form."""
     banded = _banded(signatures, bands, hash_family, carry_signature=False)
-    if max_bucket_size is not None:
-        banded = _cap_buckets(banded, max_bucket_size)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -858,7 +783,6 @@ def minhash_lsh_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_family: str = "portable",
-    max_bucket_size: int | None = None,
     verify: str = "exact",
     estimate_margin: float | None = None,
 ) -> DataFrame:
@@ -939,10 +863,7 @@ def minhash_lsh_dedup(
     corpus — ever reach a shuffle; AQE broadcast-converts the pruned
     sides when they are small enough. The persist is intentionally left
     to Spark's LRU eviction (the frame is tiny; unpersisting eagerly
-    would re-trigger the pipeline if the caller re-executes the plan).
-
-    ``max_bucket_size`` forwards to ``minhash_lsh_candidates`` — the
-    degenerate-bucket recall trade documented there."""
+    would re-trigger the pipeline if the caller re-executes the plan)."""
     if verify not in ("exact", "estimate", "hybrid"):
         raise ValueError(
             f"minhash_lsh_dedup: verify={verify!r} "
@@ -953,9 +874,7 @@ def minhash_lsh_dedup(
         # signatures feed BOTH the banding pipeline and both verify join
         # sides; persist so the (shingle -> minhash) work runs once.
         sigs = sigs.persist()
-    cands = minhash_lsh_candidates(
-        sigs, bands, hash_family, max_bucket_size=max_bucket_size
-    ).persist()
+    cands = minhash_lsh_candidates(sigs, bands, hash_family).persist()
     if verify != "exact":
         est_ids = (
             cands.select(F.col("id_a").alias("id"))

@@ -78,13 +78,10 @@ def dynamic_predicate(
     start_time=None,
     end_time=None,
     severity_min=None,
-    severity_max=None,
     event_type: str | None = None,
-    role: str | None = None,
     ts_col: str = "ts",
     severity_col: str = "severity",
     event_col: str = "event",
-    role_col: str = "role",
 ) -> DataFrame:
     """F4 — compose optional predicates; LIKE when the event pattern
     carries a ``%``, equality otherwise.
@@ -97,15 +94,11 @@ def dynamic_predicate(
         df = df.filter(F.col(ts_col) <= F.lit(end_time).cast("timestamp"))
     if severity_min is not None:
         df = df.filter(F.col(severity_col) >= severity_min)
-    if severity_max is not None:
-        df = df.filter(F.col(severity_col) <= severity_max)
     if event_type is not None:
         if "%" in event_type:
             df = df.filter(F.col(event_col).like(event_type))
         else:
             df = df.filter(F.col(event_col) == event_type)
-    if role is not None:
-        df = df.filter(F.col(role_col) == role)
     return df
 
 

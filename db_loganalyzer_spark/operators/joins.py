@@ -13,14 +13,14 @@ from pyspark.sql import functions as F
 
 
 def equi_join(
-    left: DataFrame, right: DataFrame, on, how: str = "inner", broadcast_right: bool = False
+    left: DataFrame, right: DataFrame, on, how: str = "inner"
 ) -> DataFrame:
-    """J1 — plain equi join; hint broadcast for dimension-sized right sides.
+    """J1 — plain equi join with a broadcast hint on the dimension-sized
+    right side.
 
     reference: tools/storage.py:349 (events JOIN event_metrics USING(event_id))
     """
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on, how)
+    return left.join(F.broadcast(right), on, how)
 
 
 def attach_global_stats(df: DataFrame, value_col: str) -> DataFrame:
@@ -248,7 +248,6 @@ def interval_concurrency(
     point_ts: str = "ts",
     start_col: str = "start_ts",
     end_col: str = "end_ts",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """J9 — for every point, the COUNT of intervals containing it
     (``start <= t <= end``), computed as a sweep-line instead of a join:
@@ -282,7 +281,6 @@ def interval_concurrency(
         starts.unionByName(ends).unionByName(pts),
         "__d",
         ["__t", "__k", "__pid_id"],
-        num_partitions,
     )
     return swept.filter(F.col("__k") == 1).select(
         F.col("__pid_id").alias(point_id),
@@ -589,10 +587,10 @@ def pit_lookup(
     probe_us: str = "probe_us",
     valid_from_us: str = "valid_from_us",
     valid_to_us: str = "valid_to_us",
-    state_cols: list[str] | None = None,
 ) -> DataFrame:
     """J14 — point-in-time (feature-store) lookup: each fact row joins
-    the dimension VERSION that was active at its probe time — equi join
+    the ``state`` of the dimension VERSION that was active at its probe
+    time — equi join
     on the key plus half-open containment ``valid_from <= probe <
     valid_to`` (open current version: NULL valid_to). The enrichment
     move that keeps training features free of serving skew: the model
@@ -610,12 +608,11 @@ def pit_lookup(
     by scanning backward per anchor (tools/recovery_detector.py:155-
     207); this is the set-based form over a versioned dimension.
     """
-    state_cols = list(state_cols or ["state"])
     d = dim.select(
         F.col(key).alias("__k"),
         F.col(valid_from_us).alias("__vf"),
         F.col(valid_to_us).alias("__vt"),
-        *state_cols,
+        "state",
     )
     cond = (
         (facts[key] == d["__k"])

@@ -204,7 +204,6 @@ def zorder_apply(
     out_dir: str,
     bits: int = 16,
     bucket_bits: int = 8,
-    write_options: dict | None = None,
 ) -> None:
     """OPT05 — EXECUTE the z-order layout :func:`zorder_layout_audit`
     audits and :func:`zorder_skip_estimate` prices: key every row by
@@ -259,10 +258,7 @@ def zorder_apply(
         .sortWithinPartitions("zbucket", "__z")
         .drop("__z")
     )
-    writer = shaped.write.mode("overwrite")
-    for k, v in (write_options or {}).items():
-        writer = writer.option(k, v)
-    writer.partitionBy("zbucket").parquet(out_dir)
+    shaped.write.mode("overwrite").partitionBy("zbucket").parquet(out_dir)
 
 
 def compaction_apply(

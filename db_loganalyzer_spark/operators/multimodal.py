@@ -1433,7 +1433,6 @@ def unavailable_decode_backend(payload: bytes, media_type: str) -> dict:
 def decode_media(
     media: DataFrame,
     decode_backend: Callable[[bytes, str], dict] = unavailable_decode_backend,
-    batch_size_hint: int | None = None,
 ) -> DataFrame:
     """Decode/feature-extract via mapInPandas: Arrow ships each partition
     as pandas batches, the backend runs per row inside the batch, output

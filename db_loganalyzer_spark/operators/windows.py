@@ -9,8 +9,7 @@ unavoidable, use the ``*_stitched`` variants below: they range-shuffle on
 the total order, run the window inside each range partition, and stitch
 the partition boundaries with per-partition carry values (last non-null
 value / running-sum prefix) collected driver-side — one tiny row per
-partition, the same machinery as ``severity_first_ranking``'s unbounded
-rank. Output is bit-identical to the single-partition window.
+partition, the same machinery as ``severity_first_ranking``'s rank. Output is bit-identical to the single-partition window.
 """
 
 from __future__ import annotations
@@ -235,14 +234,13 @@ def burst_windows(
     partition_by: list[str] | None = None,
     ts_col: str = "ts",
     tiebreak: str | None = "event_id",
-    allow_global_order: bool = False,
 ) -> DataFrame:
     """W6 — rows i where t[i] - t[i-k+1] <= window (k events within the
     window, sliding over the sorted stream) — the recovery-loop shape.
 
     reference: detectors.py:176-203
     """
-    w = _w(partition_by or [], ts_col, tiebreak, allow_global_order)
+    w = _w(partition_by or [], ts_col, tiebreak)
     t_prev = F.lag(F.col(ts_col), k - 1).over(w)
     span = F.col(ts_col).cast("double") - F.col("__t_prev").cast("double")
     return (
@@ -259,14 +257,13 @@ def marker_chunks(
     partition_by: list[str] | None = None,
     ts_col: str = "ts",
     tiebreak: str | None = "event_id",
-    allow_global_order: bool = False,
 ) -> DataFrame:
     """W8 — split the ordered stream into chunks that END at each marker
     row (marker belongs to the chunk it closes); adds ``chunk_id``.
 
     reference: tools/chunker.py:18-44
     """
-    w = _w(partition_by or [], ts_col, tiebreak, allow_global_order).rowsBetween(
+    w = _w(partition_by or [], ts_col, tiebreak).rowsBetween(
         Window.unboundedPreceding, -1
     )
     marker = F.when(marker_predicate, 1).otherwise(0)
@@ -304,78 +301,37 @@ def severity_first_ranking(
     severity_col: str = "severity",
     ts_col: str = "ts",
     high: int = 40,
-    limit: int | None = None,
     tiebreak: str | None = "event_id",
-    with_rank: bool = False,
 ) -> DataFrame:
-    """W10 — display ordering: severity>=high first, then by time.
+    """W10 — display ordering: severity>=high first, then by time,
+    materialized as a ``rank`` column (row_number over that total
+    order), which makes the ordering itself checkable by an
+    order-insensitive oracle.
 
-    ``with_rank`` additionally materializes the display position as a
-    ``rank`` column (row_number over the same total order), which makes
-    the ordering itself checkable by an order-insensitive oracle.
+    The rank is global WITHOUT a single-partition sort: range-shuffle on
+    the total order, rank within each range partition, then shift by the
+    (tiny, collected) per-partition row counts. Every stage is parallel;
+    the only driver-side data is one row count per partition.
 
     reference: investigation_agent.py:612-631
     """
     key = F.when(F.col(severity_col) >= high, 0).otherwise(1)
     order = [key, F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
-    if not with_rank:
-        out = df.orderBy(*order)
-        return out.limit(limit) if limit else out
-    if limit:
-        # Bounded head: orderBy+limit is TakeOrderedAndProject (per-
-        # partition top-k, no global sort); ranking the k survivors is a
-        # k-row window, not a full-table one.
-        head = df.orderBy(*order).limit(limit)
-        return head.withColumn(
-            "rank", F.row_number().over(Window.orderBy(*order)).cast("long")
-        )
-    # Unbounded global rank WITHOUT a single-partition sort: range-shuffle
-    # on the total order, rank within each range partition, then shift by
-    # the (tiny, collected) per-partition row counts. Every stage is
-    # parallel; the only driver-side data is one row count per partition.
-    #
-    # localCheckpoint(eager) pins ONE physical partitioning: the
-    # RangePartitioner samples with a seed derived from the per-execution
-    # RDD id, so without materialization the counts job and every later
-    # execution of the returned DataFrame would each re-sample — different
-    # boundaries, misaligned offsets, silently wrong ranks. Checkpointing
-    # makes the counted partitioning the same one all consumers read.
-    part = (
-        df.repartitionByRange(*order)
-        .sortWithinPartitions(*order)
-        .localCheckpoint(eager=True)
-    )
-    with_pid = part.withColumn("__pid", F.spark_partition_id())
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    if not counts:  # empty input: no map to build, rank column still typed
-        return with_pid.withColumn("rank", F.lit(None).cast("long")).drop("__pid")
-    offsets, acc = {}, 0
-    for pid, cnt in counts:
-        offsets[pid] = acc
-        acc += cnt
-    off_expr = F.element_at(
-        F.create_map(*[F.lit(x) for pid, off in offsets.items() for x in (pid, off)]),
-        F.col("__pid"),
-    )
+    part = _range_sorted(df, order, None)
+    (offsets,) = _prefix_carries(part, [F.count(F.lit(1))], lambda acc, n: acc + n, 0)
     w = Window.partitionBy("__pid").orderBy(*order)
-    return (
-        with_pid.withColumn("rank", (F.row_number().over(w) + off_expr).cast("long"))
-        .drop("__pid")
-    )
+    return part.withColumn(
+        "rank", (F.row_number().over(w) + _pid_map(offsets, "long")).cast("long")
+    ).drop("__pid")
 
 
 # ---------------------------------------------------------------------------
 # Stitched global-order variants (W1 and a running sum, no partition key).
 #
-# Shared recipe: repartitionByRange on the total order + sortWithinPartitions
-# + localCheckpoint (pinning ONE physical partitioning — the RangePartitioner
-# re-samples per execution otherwise, exactly the severity_first_ranking
-# hazard), then a per-range-partition window plus a boundary carry computed
-# from a collected per-partition summary (one row per partition). Every
-# stage is parallel; the driver only ever sees #partitions rows.
+# Shared recipe (also severity_first_ranking's rank): _range_sorted, then a
+# per-range-partition window plus a boundary carry computed from a
+# collected per-partition summary (one row per partition, _prefix_carries).
+# Every stage is parallel; the driver only ever sees #partitions rows.
 # stitched_prev skips the recipe when its input is planned as ONE partition
 # (a scan over one partition is already the global window): one plain
 # window, no range sample, shuffle, checkpoint or carry collect.
@@ -389,15 +345,45 @@ def planned_single_partition(df: DataFrame) -> bool:
     return df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions() == 1
 
 
-def _range_sorted(df: DataFrame, ts_col: str, tiebreak: str | None, num_partitions: int | None):
-    order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
+def _range_sorted(df: DataFrame, order: list, num_partitions: int | None) -> DataFrame:
+    """``df`` range-partitioned and sorted on ``order``, with its range
+    partition id as ``__pid``.
+
+    localCheckpoint(eager) pins ONE physical partitioning: the
+    RangePartitioner samples with a seed derived from the per-execution
+    RDD id, so without materialization the carry collect and every later
+    execution of the returned DataFrame would each re-sample — different
+    boundaries, misaligned carries, silently wrong results. Checkpointing
+    makes the summarized partitioning the same one all consumers read."""
     part = (
         df.repartitionByRange(num_partitions, *order)
         if num_partitions
         else df.repartitionByRange(*order)
     )
     part = part.sortWithinPartitions(*order).localCheckpoint(eager=True)
-    return part.withColumn("__pid", F.spark_partition_id()), order
+    return part.withColumn("__pid", F.spark_partition_id())
+
+
+def _prefix_carries(part: DataFrame, aggs: list, step, init) -> list[dict]:
+    """Per aggregate in ``aggs`` (one value per range partition of a
+    :func:`_range_sorted` frame), pid -> the fold by ``step`` from
+    ``init`` over the values of all EARLIER partitions, in pid order. A
+    pid whose fold is still None gets no entry. One collect of one row
+    per partition serves every aggregate; a partition with no rows has
+    nothing to carry into, so only the collected pids are folded."""
+    rows = sorted(
+        part.groupBy("__pid").agg(*[a.alias(f"__a{i}") for i, a in enumerate(aggs)]).collect(),
+        key=lambda r: r["__pid"],
+    )
+    carries = []
+    for i in range(len(aggs)):
+        carry, acc = {}, init
+        for r in rows:
+            if acc is not None:
+                carry[r["__pid"]] = acc
+            acc = step(acc, r[f"__a{i}"])
+        carries.append(carry)
+    return carries
 
 
 def _pid_map(pairs: dict[int, object], value_type: str):
@@ -406,35 +392,6 @@ def _pid_map(pairs: dict[int, object], value_type: str):
         return F.lit(None).cast(value_type)
     entries = [x for pid, v in pairs.items() for x in (F.lit(pid), F.lit(v).cast(value_type))]
     return F.element_at(F.create_map(*entries), F.col("__pid"))
-
-
-def _last_value_carries(part: DataFrame, order, value_cols: list[str]):
-    """Per value column, pid -> value to carry INTO each partition: the
-    last (by total order) non-null value among all EARLIER partitions.
-    One collect of one row per partition serves every column."""
-    def last(c):
-        s = F.struct(*order, F.col(c).alias("__v"))
-        return F.max(F.when(F.col(c).isNotNull(), s))
-
-    tail = (
-        part.groupBy("__pid")
-        .agg(*[last(c).alias(f"__s{i}") for i, c in enumerate(value_cols)])
-        .collect()
-    )
-    n = part.rdd.getNumPartitions()
-    carries = []
-    for i in range(len(value_cols)):
-        lasts = {r["__pid"]: r[f"__s{i}"]["__v"] for r in tail if r[f"__s{i}"] is not None}
-        # carry[pid] = last value of the nearest earlier partition that has
-        # one; a partition with no non-null predecessor gets no entry
-        carry, running = {}, None
-        for pid in range(n):
-            if running is not None:
-                carry[pid] = running
-            if pid in lasts:
-                running = lasts[pid]
-        carries.append(carry)
-    return carries
 
 
 def stitched_prev(
@@ -449,15 +406,25 @@ def stitched_prev(
     partition it is one plain window; otherwise it runs no
     single-partition window: one range sort and checkpoint, one carry
     collect and one window for all columns."""
+    order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
     if planned_single_partition(df):
-        order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
         w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
         return df.withColumns(
             {f"prev_{c}": F.last(F.col(c), ignorenulls=True).over(w) for c in value_cols}
         )
-    part, order = _range_sorted(df, ts_col, tiebreak, num_partitions)
+    part = _range_sorted(df, order, num_partitions)
     types = dict(df.dtypes)
-    carries = _last_value_carries(part, order, value_cols)
+
+    def last(c):
+        # the partition's last (by total order) non-null value
+        return F.max(F.when(F.col(c).isNotNull(), F.struct(*order, F.col(c).alias("__v"))))
+
+    carries = _prefix_carries(
+        part,
+        [last(c) for c in value_cols],
+        lambda acc, s: acc if s is None else s["__v"],
+        None,
+    )
     local = Window.partitionBy("__pid").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -488,12 +455,7 @@ def value_drops_stitched(
     ).withColumn("drop_amount", F.col("prev_value") - F.col(value_col))
 
 
-def running_sum_stitched(
-    df: DataFrame,
-    value_col: str,
-    order_by: list[str],
-    num_partitions: int | None = None,
-) -> DataFrame:
+def running_sum_stitched(df: DataFrame, value_col: str, order_by: list[str]) -> DataFrame:
     """Global prefix sum over an arbitrary total order with NO
     single-partition window: range-shuffle on the order, per-partition
     cumsum, plus a carry equal to the summed totals of all earlier
@@ -506,28 +468,9 @@ def running_sum_stitched(
     would materialize the quadratic pair set the sweep avoids.
     """
     order = [F.col(c) for c in order_by]
-    part = (
-        df.repartitionByRange(num_partitions, *order)
-        if num_partitions
-        else df.repartitionByRange(*order)
-    )
-    part = (
-        part.sortWithinPartitions(*order)
-        .localCheckpoint(eager=True)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    totals = {
-        r["__pid"]: r["__t"]
-        for r in part.groupBy("__pid")
-        .agg(F.sum(F.col(value_col).cast("long")).alias("__t"))
-        .collect()
-    }
-    prefix, run = {}, 0
-    for pid in range(part.rdd.getNumPartitions()):
-        if run:
-            prefix[pid] = run
-        run += totals.get(pid) or 0
-    carry = _pid_map(prefix, "long")
+    part = _range_sorted(df, order, None)
+    value = F.col(value_col).cast("long")
+    (prefix,) = _prefix_carries(part, [F.sum(value)], lambda acc, t: acc + (t or 0), 0)
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order)
@@ -535,7 +478,7 @@ def running_sum_stitched(
     )
     return part.withColumn(
         "running_sum",
-        F.sum(F.col(value_col).cast("long")).over(w) + F.coalesce(carry, F.lit(0)),
+        F.sum(value).over(w) + F.coalesce(_pid_map(prefix, "long"), F.lit(0)),
     ).drop("__pid")
 
 
@@ -582,7 +525,6 @@ def transition_matrix(
     partition_by: list[str],
     ts_col: str = "ts",
     tiebreak: str | None = "event_id",
-    allow_global_order: bool = False,
 ) -> DataFrame:
     """First-order Markov transition matrix over per-key event
     sequences: for each observed (from_state, to_state) pair of
@@ -596,7 +538,7 @@ def transition_matrix(
     frame. p = n / row_total is one exact-integer double division, so
     the probabilities hash-match across engines unrounded.
     """
-    w = _w(partition_by, ts_col, tiebreak, allow_global_order)
+    w = _w(partition_by, ts_col, tiebreak)
     prev = F.lag(F.col(state_col)).over(w)
     pairs = df.select(
         prev.alias("from_state"), F.col(state_col).alias("to_state")
@@ -833,7 +775,6 @@ def coalesce_intervals(
     partition_by: list[str],
     start_col: str = "start_us",
     end_col: str = "end_us",
-    tiebreak: str | None = None,
     half_open: bool = False,
 ) -> DataFrame:
     """W21 — interval coalescing (gaps-and-islands over INTERVALS):
@@ -865,10 +806,7 @@ def coalesce_intervals(
     the general interval form a downtime/maintenance-window rollup
     needs.
     """
-    order = [F.col(start_col), F.col(end_col)] + (
-        [F.col(tiebreak)] if tiebreak else []
-    )
-    w = Window.partitionBy(*partition_by).orderBy(*order)
+    w = Window.partitionBy(*partition_by).orderBy(F.col(start_col), F.col(end_col))
     prev_max_end = F.max(F.col(end_col)).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )

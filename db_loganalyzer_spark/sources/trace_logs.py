@@ -24,6 +24,8 @@ except processes/process_roles (one small groupBy/distinct each).
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -273,6 +275,39 @@ def events_from_attrs(parsed: DataFrame, id_offset: int = 0) -> DataFrame:
     )
 
 
+def _uri_key(scheme, authority, path) -> tuple:
+    """A file URI as (scheme, authority, decoded path): ``file:/x`` and
+    ``file:///x`` compare equal."""
+    return scheme or "", authority or "", path
+
+
+def _named_files(spark: SparkSession, paths: list[str]) -> dict[tuple, int]:
+    """Every file the requested paths name, keyed by :func:`_uri_key`, to
+    its place: files in the order of ``paths``, the files of one glob or
+    directory (recursively) in sorted order, a file named twice at its
+    first place. Asked of each path's Hadoop file system (glob, then list
+    a directory); runs no job."""
+    conf = spark._jsc.hadoopConfiguration()
+    places: dict[tuple, int] = {}
+    for p in paths:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
+        fs = jpath.getFileSystem(conf)
+        named = []
+        for st in fs.globStatus(jpath) or []:
+            if st.isDirectory():
+                it = fs.listFiles(st.getPath(), True)
+                while it.hasNext():
+                    named.append(it.next().getPath())
+            else:
+                named.append(st.getPath())
+        for uri in sorted(
+            _uri_key(u.getScheme(), u.getAuthority(), u.getPath())
+            for u in (fs.makeQualified(f).toUri() for f in named)
+        ):
+            places.setdefault(uri, len(places))
+    return places
+
+
 def read_trace_events(
     spark: SparkSession,
     paths,
@@ -295,9 +330,12 @@ def read_trace_events(
     ``per_file_offsets`` reproduces the reference's multi-file uniqueness
     scheme (cli_wrapper/main.py:296-301: each file's ids start past the
     previous files' total) without its sequential per-file loop: one tiny
-    line-count aggregate (one row per file) builds cumulative offsets in
-    path order driver-side, and they enter the plan as a literal
-    ``file -> offset`` map looked up on each row's file. Deliberate
+    line-count aggregate (one row per file read) builds cumulative offsets
+    driver-side, and they enter the plan as a literal ``file -> offset``
+    map looked up on each row's file. Files are offset in the order of
+    ``paths``; the files one glob or directory matches, in sorted URI
+    order (see :func:`_named_files`). Input naming one file needs no
+    offsets and runs no count. Deliberate
     deviation: we offset by per-file LINE counts rather than parsed-event
     counts — line-numbered ids can exceed the event count (blank/non-event
     lines keep their numbers), so count-based offsets could still collide;
@@ -324,7 +362,10 @@ def read_trace_events(
             attrs=lambda ln: F.when(is_xml, parse_xml.attrs(ln)).otherwise(parse_jsonl.attrs(ln)),
         )
         parsed = by_file(read_trace_lines(spark, paths))
-    if not (per_file_offsets and len(paths) > 1):
+    if not per_file_offsets:
+        return events_from_attrs(parsed, id_offset)
+    places = _named_files(spark, paths)
+    if len(places) == 1:
         return events_from_attrs(parsed, id_offset)
     counts = {
         r["trace_file"]: r["count"]
@@ -334,17 +375,16 @@ def read_trace_events(
         .collect()
     }
 
-    def match(path: str) -> str:
-        # input_file_name() yields a URI (file:///...); resolve each
-        # requested path to the URI it produced
-        for uri in counts:
-            if uri.endswith("/" + path.lstrip("/")) or uri == path:
-                return uri
-        raise ValueError(f"no loaded file matches {path!r}")
+    def place(uri: str) -> int:
+        # input_file_name() yields a percent-encoded URI (file:///...)
+        u = urlparse(uri)
+        key = _uri_key(u.scheme, u.netloc, unquote(u.path))
+        if key not in places:
+            raise ValueError(f"no requested path names loaded file {uri!r}")
+        return places[key]
 
     acc, offsets = id_offset, {}
-    for p in paths:
-        uri = match(p)
+    for uri in sorted(counts, key=place):
         offsets[uri] = acc
         acc += counts[uri]
     offset = F.element_at(
@@ -482,22 +522,19 @@ def derive_events_wide(events: DataFrame) -> DataFrame:
     )
 
 
-def _process_key(strict_reference: bool = False) -> Column:
+def _process_key() -> Column:
     """address, else machine_id. The reference falls back to
     fields_json["Machine"] (tools/storage.py:283-285) — which can never
     hit, because Machine is an envelope field stripped from fields_json
-    (event_dto.py:10-14); machine_id is that value. strict_reference=True
-    reproduces the literal (address-only) behavior."""
-    if strict_reference:
-        return F.col("address")
+    (event_dto.py:10-14); machine_id is that value."""
     return F.coalesce(F.col("address"), F.col("machine_id"))
 
 
-def derive_processes(events: DataFrame, strict_reference: bool = False) -> DataFrame:
+def derive_processes(events: DataFrame) -> DataFrame:
     """processes table: first/last seen per process key
     (tools/storage.py:271-303 upsert -> min/max aggregate)."""
     return (
-        events.withColumn("process_key", _process_key(strict_reference))
+        events.withColumn("process_key", _process_key())
         .filter(F.col("process_key").isNotNull())
         .groupBy("process_key")
         .agg(
@@ -508,12 +545,12 @@ def derive_processes(events: DataFrame, strict_reference: bool = False) -> DataF
     )
 
 
-def derive_process_roles(events: DataFrame, strict_reference: bool = False) -> DataFrame:
+def derive_process_roles(events: DataFrame) -> DataFrame:
     """process_roles: one row per distinct (process_key, role, ts) with a
     non-null role — the reference's PK is (process_key, role, start_ts)
     with ON CONFLICT DO NOTHING (tools/storage.py:305-325)."""
     return (
-        events.withColumn("process_key", _process_key(strict_reference))
+        events.withColumn("process_key", _process_key())
         .filter(F.col("process_key").isNotNull() & F.col("role").isNotNull())
         .select("process_key", "role", F.col("ts").alias("start_ts"))
         .distinct()
@@ -533,20 +570,17 @@ def ingest(
     spark: SparkSession,
     paths,
     id_offset: int = 0,
-    per_file_offsets: bool = True,
 ) -> dict[str, DataFrame]:
     """S7 as one declarative pipeline: events + all derived tables.
-    Multi-file loads get per-file id offsets by default (reference
-    parity: ids stay unique across files, cli_wrapper/main.py:296-301).
+    Multi-file loads get per-file id offsets (reference parity: ids stay
+    unique across files, cli_wrapper/main.py:296-301).
 
     With offsets, the one line-count collect runs here; every frame is
     otherwise lazy over the trace text, so each derived frame re-runs the
     parse (one text scan) when it is materialized on its own. To write or
     collect several, materialize ``events`` first and apply
     :data:`DERIVED_TABLES` to the stored table (see ``cli load``)."""
-    events = read_trace_events(
-        spark, paths, id_offset, per_file_offsets=per_file_offsets
-    )
+    events = read_trace_events(spark, paths, id_offset, per_file_offsets=True)
     return {
         "events": events,
         **{name: derive(events) for name, derive in DERIVED_TABLES.items()},

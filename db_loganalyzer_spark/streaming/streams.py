@@ -34,26 +34,16 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..operators.aggregates import davg
 
 
-def read_events_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over ``events.parquet`` in ``sf_dir``.
 
     A production deployment points this at a landing directory that
-    ingest appends parquet files into; ``maxFilesPerTrigger`` throttles
-    catch-up so one giant backlog doesn't produce one giant micro-batch.
+    ingest appends parquet files into.
     """
-    return read_table_stream(spark, sf_dir, "events", max_files_per_trigger)
+    return read_table_stream(spark, sf_dir, "events")
 
 
-def read_table_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source stream over any testdata table's parquet — the
     landing-directory model: ingest appends files, the stream picks them
     up. Schema comes from one batch footer read (no inference race);
@@ -64,10 +54,11 @@ def read_table_stream(
 
     _set_read_confs(spark)
     raw = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    reader = spark.readStream.schema(raw.schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+    df = (
+        spark.readStream.schema(raw.schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -124,7 +115,7 @@ def streaming_rollup(
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            davg(value_col, scale=None).alias("avg_value"),
+            davg(value_col).alias("avg_value"),
             F.max(value_col).alias("max_value"),
             F.round(F.percentile_approx(value_col, 0.95), 4).alias(
                 "p95_value"
@@ -168,7 +159,7 @@ def streaming_sliding_rollup(
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            davg(value_col, scale=None).alias("avg_value"),
+            davg(value_col).alias("avg_value"),
             F.max(value_col).alias("max_value"),
         )
         .select(
@@ -1119,7 +1110,6 @@ def streaming_enrich(
     dim: DataFrame,
     on: list[str],
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream-static dimension enrichment — the stateless join every
     monitoring/ingest pipeline runs (attach baselines, lookup tables,
@@ -1128,12 +1118,9 @@ def streaming_enrich(
     Spark's stream-static join keeps NO state: each micro-batch of the
     stream is joined against the batch ``dim`` plan, which is
     re-evaluated per trigger (a file-backed dim picks up updates
-    between triggers for free). ``broadcast_dim`` (default) pins the
-    dim to a broadcast so the STREAM side never shuffles — the right
-    plan whenever the dim is a genuine dimension (bounded: baselines,
-    type stats, config). Pass ``broadcast_dim=False`` for a fact-scale
-    static side; Spark then shuffles each micro-batch (state is still
-    zero — only the per-trigger shuffle cost grows).
+    between triggers for free). The dim is pinned to a broadcast so the
+    STREAM side never shuffles — the right plan whenever the dim is a
+    genuine dimension (bounded: baselines, type stats, config).
 
     ``how`` supports "inner" and "left" (stream side preserved); right/
     full joins against a static side are not streamable by definition.
@@ -1143,8 +1130,7 @@ def streaming_enrich(
             f"streaming_enrich: how={how!r} — stream-static joins "
             "support 'inner' and 'left' (stream side) only"
         )
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on=on, how=how)
+    return stream.join(F.broadcast(dim), on=on, how=how)
 
 
 def streaming_interval_join(
@@ -1250,9 +1236,7 @@ def streaming_neardup_probe(
 
     ``index`` must carry (id, signature, band, bucket) as built by
     ``minhash_lsh_index`` with the SAME (num_hashes, bands, n,
-    hash_family); a capped index additionally carries ``bands_kept``,
-    which this probe uses to keep the uniqueness filter consistent
-    with the rows the cap actually retained.
+    hash_family).
     """
     from ..operators.dedup import (
         _band_bucket_expr,
@@ -1281,33 +1265,20 @@ def streaming_neardup_probe(
         "new_id", "new_sig",
         F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"),
     )
-    # A capped index (max_bucket_size) carries bands_kept = the bands
-    # that SURVIVED the cap for each corpus id; the uniqueness filter
-    # must range over those, not all bands — otherwise a pair whose
-    # first signature-matching band was dropped by the cap loses its
-    # only surviving join rows (band != that first match) and the pair
-    # vanishes beyond the documented recall trade. Uncapped indexes
-    # have no such column; the domain is every band.
-    has_kept = "bands_kept" in index.columns
     idx = index.select(
         F.col("id").alias("corpus_id"),
         F.col("signature").alias("corpus_sig"),
         "band", "bucket",
-        *(["bands_kept"] if has_kept else []),
     )
     joined = probe.join(idx, ["band", "bucket"])
     # minimal-matching-band filter: this row survives only if its band
-    # is the FIRST index-surviving band where the two signatures'
-    # slices agree — every colliding pair emits exactly once, with
-    # zero streaming state. (Each join row's own band is always in the
-    # domain and agrees, so the filtered array is never empty.)
-    band_domain = (
-        F.col("bands_kept") if has_kept
-        else F.sequence(F.lit(0), F.lit(bands - 1))
-    )
+    # is the FIRST band where the two signatures' slices agree — every
+    # colliding pair emits exactly once, with zero streaming state.
+    # (Each join row's own band agrees, so the filtered array is never
+    # empty.)
     first_match = F.array_min(
         F.filter(
-            band_domain,
+            F.sequence(F.lit(0), F.lit(bands - 1)),
             lambda b: _band_bucket_expr(
                 _band_slice(F.col("new_sig"), b, bands), hash_family
             )
@@ -1505,10 +1476,9 @@ def streaming_winnowing_probe(
     fingerprint (the st14 dial — bucketed table storage is the durable
     form) so each micro-batch pays only the batch-side shuffle. Hot
     boilerplate fingerprints quadratically inflate the join like any
-    inverted index: apply m21's stop-fingerprint cap to BOTH the index
-    build and the probe side in production (dropped symmetrically the
-    semantics stay 'overlap over discriminative fingerprints'); the
-    oracle-paired entry runs uncapped to stay exactly restatable.
+    inverted index; the index is uncapped (m21's stop-fingerprint cap
+    is a batch option of ``winnowing_overlap_pairs``), which keeps the
+    oracle-paired entry exactly restatable.
     """
     from ..operators.dedup import winnowing_fingerprint_arrays
 

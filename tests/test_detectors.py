@@ -218,7 +218,9 @@ def test_rollback_analysis_one_partition_leaves_no_storage(spark, log_events):
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     got = D.rollback_analysis(log_events.coalesce(1))
     got_rows = {k: sorted(df.collect()) for k, df in got.items()}
-    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+    # no new persistent RDD; ids may leave the set meanwhile, when
+    # Spark's ContextCleaner unpersists what earlier tests dropped
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
     want = D.rollback_analysis(log_events)
     for k, df in want.items():
         assert got_rows[k] == sorted(df.collect()), k
@@ -249,7 +251,9 @@ def test_detect_recoveries_cause_attribution(spark, log_events):
 
 
 def test_detect_recoveries_challenge_mode(spark, log_events):
-    recs = D.detect_recoveries(log_events, include_codecoverage=False)["recoveries"]
+    recs = D.detect_recoveries(
+        log_events.filter(F.col("event") != "CodeCoverage")
+    )["recoveries"]
     causes = [r.cause for r in recs.collect()]
     assert all(c is None or "tLog failure" not in c for c in causes)
 

@@ -137,9 +137,6 @@ def test_processes_and_roles(spark, fixture_dir):
     assert "2.0.1.0:3" in procs and "2.0.1.0:1" in procs
     roles = {(r.process_key, r.role) for r in TL.derive_process_roles(ev).collect()}
     assert ("2.0.1.0:1", "SS") in roles and ("2.0.1.0:2", "GP") in roles
-    # strict reference mode: only rows with an Address column
-    strict = TL.derive_processes(ev, strict_reference=True).collect()
-    assert [r.process_key for r in strict] == ["2.0.1.0:3"]
 
 
 @pytest.mark.skipif(not os.path.exists(REF_JSON), reason="reference not present")
@@ -313,6 +310,31 @@ def test_multi_file_per_file_offsets(spark, fixture_dir, tmp_path):
     legacy = TL.read_trace_events(spark, [str(a), str(b)], id_offset=100)
     ids = [r["event_id"] for r in legacy.collect()]
     assert sorted(ids) == [101, 101, 102, 103]
+
+
+def test_glob_and_directory_reads_offset_each_file(spark, tmp_path):
+    """A glob or a directory gets the per-file offsets of the explicit
+    list of the files it matches, in sorted order; a glob inside a
+    longer list offsets its files at its place in the list."""
+    d = tmp_path / "traces"
+    d.mkdir()
+    for name, events in (("a", "E1 E2"), ("b", "E3 E4")):
+        (d / f"{name}.jsonl").write_text(
+            "".join(f'{{"Type":"{e}","Severity":"10"}}\n' for e in events.split())
+        )
+    (tmp_path / "c.jsonl").write_text('{"Type":"E5","Severity":"10"}\n')
+
+    def ids(paths):
+        ev = TL.read_trace_events(spark, paths, per_file_offsets=True)
+        return sorted((r["event_id"], r["event"]) for r in ev.collect())
+
+    listed = ids([str(d / "a.jsonl"), str(d / "b.jsonl")])
+    assert listed == [(1, "E1"), (2, "E2"), (3, "E3"), (4, "E4")]
+    assert ids(str(d / "*.jsonl")) == listed
+    assert ids(str(d)) == listed
+    assert ids([str(tmp_path / "c.jsonl"), str(d / "*.jsonl")]) == [
+        (1, "E5"), (2, "E1"), (3, "E2"), (4, "E3"), (5, "E4")
+    ]
 
 
 def _row_multiset(df) -> Counter:

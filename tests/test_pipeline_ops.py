@@ -230,23 +230,6 @@ def test_minhash_estimate_loose_regime_equals_candidates(spark, sf_dir):
     assert est == cands and len(cands) > 0
 
 
-def test_minhash_lsh_index_bucket_cap(spark, docs):
-    """The standing index's degenerate-bucket guard: docs 0/1 are exact
-    dups (identical signatures => co-located in every band bucket), so
-    max_bucket_size=1 must drop all their index rows while singleton
-    buckets survive untouched."""
-    sigs = DD.minhash_signatures(docs, 16, 2)
-    full = DD.minhash_lsh_index(sigs, bands=8)
-    capped = DD.minhash_lsh_index(sigs, bands=8, max_bucket_size=1)
-    fr = [(r.id, r.band, r.bucket) for r in full.collect()]
-    cr = [(r.id, r.band, r.bucket) for r in capped.collect()]
-    assert set(cr) < set(fr)
-    from collections import Counter
-
-    pop = Counter((b, k) for _, b, k in fr)
-    assert set(cr) == {t for t in fr if pop[(t[1], t[2])] <= 1}
-
-
 def test_minhash_hybrid_verify(spark, sf_dir):
     """verify='hybrid' = estimate-filter then exact-verify the survivors
     only. Every returned jaccard is TRUE Jaccard (precision exact), and
@@ -3512,32 +3495,6 @@ def test_mjpeg_avi_codec_closed_form_and_errors():
     with pytest.raises(ValueError):
         decode_avi(graft)
     assert decode_avi(bad)[0] == 5  # sanity: unmodified decodes
-
-
-def test_winnowing_index_stop_fingerprint_cap(spark):
-    """The index-build max_doc_freq dial: a fingerprint present in more
-    corpus docs than the cap disappears from the exploded join keys
-    (no probe fan-out on boilerplate), while discriminative
-    fingerprints and the carried arrays survive."""
-    from db_loganalyzer_spark.operators.dedup import winnowing_index
-
-    boiler = "common header line shared by every doc"
-    rows = [(i, f"{boiler} unique tail {i} {i} {i} {i}") for i in range(8)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    full = winnowing_index(docs, n=2, w=4)
-    capped = winnowing_index(docs, n=2, w=4, max_doc_freq=4)
-    hot = (
-        full.groupBy("fingerprint")
-        .count()
-        .filter(F.col("count") > 4)
-        .count()
-    )
-    assert hot > 0  # the boilerplate run produced >4-doc fingerprints
-    joined = capped.groupBy("fingerprint").count().filter(F.col("count") > 4)
-    assert joined.count() == 0  # all dropped from the join keys
-    # per-doc discriminative fingerprints survive with arrays intact
-    survivors = capped.filter(F.size("corpus_fps") > 0).count()
-    assert survivors > 0 and capped.count() < full.count()
 
 
 @settings(max_examples=15, deadline=None)

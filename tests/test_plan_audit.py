@@ -180,8 +180,6 @@ BROADCAST_OK = {
         1, "hot-shingle stop list: <= shingle_instances/cap rows by definition"),
     ("db_loganalyzer_spark/operators/dedup.py", "winnowing_overlap_pairs"): (
         1, "hot-fingerprint stop list (same bound as the shingle stop lists)"),
-    ("db_loganalyzer_spark/operators/dedup.py", "winnowing_index"): (
-        1, "hot-fingerprint stop list: <= fingerprint_instances/cap rows"),
     ("db_loganalyzer_spark/operators/layout.py", "compaction_apply"): (
         1, "the compaction plan: one row per FILE (manifest-sized), never rows"),
     ("db_loganalyzer_spark/operators/layout.py", "zorder_apply"): (
@@ -197,10 +195,9 @@ BROADCAST_OK = {
     ("db_loganalyzer_spark/operators/clustering.py", "cluster_representatives"): (
         2, "k-row centroid + k-row size frames"),
     ("db_loganalyzer_spark/operators/joins.py", "equi_join"): (
-        1, "explicit caller opt-in flag (broadcast_right), documented contract"),
+        1, "the dimension-sized right side, documented contract"),
     ("db_loganalyzer_spark/streaming/streams.py", "streaming_enrich"): (
-        1, "explicit caller opt-in flag (broadcast_dim, the dimension-table "
-           "contract); pass False for a fact-scale static side"),
+        1, "the static dimension side (the dimension-table contract)"),
     ("db_loganalyzer_spark/operators/joins.py", "attach_global_stats"): (
         1, "1-row global stats frame"),
     ("db_loganalyzer_spark/operators/textstats.py", "classifier_gate"): (

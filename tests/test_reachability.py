@@ -1,5 +1,7 @@
 """Every top-level function and class in the package is reached from an
-entry point, or is on an allowlist that says why it stays.
+entry point, or is on an allowlist that says why it stays; and every
+on/off or optional-branch parameter is set by a caller outside the
+tests, or is on an allowlist that says why it stays.
 
 The scan is pure ``ast`` (no imports, no Spark), name-based and closed
 over the package:
@@ -21,11 +23,20 @@ Matching is by bare name, so a definition counts as reached when any
 reached code mentions its name. The scan therefore over-approximates
 reachability: it can miss dead code, but a definition it reports as
 unreached is not named anywhere outside the tests.
+
+The option scan covers every parameter defaulted to ``True``, ``False``
+or ``None`` of a package function or method (nested ones included),
+except in the definitions ``ALLOWED`` keeps. Such a parameter is set
+when a call in a root or in package code passes it by keyword or by
+position; calls match by bare name (a class name calls its
+``__init__``), a method's positions count past ``self``, and a call
+with ``*args`` or ``**kwargs`` sets every parameter. Tests do not count.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -69,7 +80,46 @@ ALLOWED = {
     "agentic.retrieval.make_retriever": f"{_C}: L5",
 }
 
+_OA = "(a) test support for a path an entry point takes"
+_OB = "(b) input robustness"
+_OC = "(c) the reference path tests compare a reached path against"
+_OD = "(d) deployment setting"
+_OE = "(e) the hook of an allowlisted definition"
+_OF = "(f) the streaming twin of an option a root sets, pinned equal by a test"
+
+# Options no root or package call sets that stay, keyed
+# "<module>.<qualified function name>(<parameter>)", with the reason.
+OPTIONS_ALLOWED = {
+    "agentic.investigation.PhasedInvestigationAgent.__init__(io_log_dir)":
+        f"{_OD}: the directory the LLM prompts and answers are written to",
+    "detectors.detectors.recovery_loop(bucket_seconds)":
+        f"{_OA}: small buckets make a small input cross the halo boundaries",
+    "detectors.detectors.cusum_drift(ref)":
+        f"{_OC}: the batch form of streaming_cusum's fixed reference",
+    "operators.chunking.chunk_summaries(tokenizer)":
+        f"{_OE}: token_count_pudf (A15)",
+    "operators.multimodal.encode_png(compress_level)":
+        f"{_OE}: real-zlib PNGs for decode_png's golden tests",
+    "operators.sampling.padded_batches(length_sorted)":
+        f"{_OC}: the arrival-order batching the sorted form is measured against",
+    "operators.sketches.mix32_sql_select(passthrough)":
+        f"{_OA}: keys each hash by its input in the bit-identity test",
+    "operators.windows.value_drops(allow_global_order)":
+        f"{_OC}: the one-task global window the stitched forms must equal",
+    "operators.windows.value_resets(allow_global_order)":
+        f"{_OC}: the one-task global window the stitched forms must equal",
+    "operators.windows.lag_regressions(allow_global_order)":
+        f"{_OC}: the one-task global window rollback_analysis must equal",
+    "operators.windows.value_drops_stitched(num_partitions)":
+        f"{_OA}: forces several range partitions on a small input",
+    "sources.trace_logs.read_trace_events(tolerant_xml)":
+        f"{_OB}: pretty-printed XML whose tags span several lines",
+    "streaming.streams.streaming_interval_coalesce(half_open)":
+        f"{_OF}: coalesce_intervals(half_open=) (w22)",
+}
+
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
 def _mentions(node: ast.AST) -> set[str]:
@@ -86,20 +136,34 @@ def _mentions(node: ast.AST) -> set[str]:
     return out
 
 
+def _roots() -> set[Path]:
+    return {p for g in ROOT_GLOBS for p in REPO.glob(g)}
+
+
+@functools.cache
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
+def _modules():
+    """(module, relative path, tree) for every package file."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE)
+        yield ".".join(rel.with_suffix("").parts), rel, _parse(path)
+
+
 def unreached() -> dict[str, str]:
     """``{"<module>.<name>": "<path>:<line>"}`` for every top-level
     package definition no root reaches."""
-    roots = {p for g in ROOT_GLOBS for p in REPO.glob(g)}
+    roots = _roots()
     reached: set[str] = set()
     for path in roots:
-        reached |= _mentions(ast.parse(path.read_text(), str(path)))
+        reached |= _mentions(_parse(path))
     defs = []  # (key, location, node)
-    for path in sorted(PACKAGE.rglob("*.py")):
-        if path in roots:
+    for module, rel, tree in _modules():
+        if PACKAGE / rel in roots:
             continue
-        rel = path.relative_to(PACKAGE)
-        module = ".".join(rel.with_suffix("").parts)
-        for node in ast.parse(path.read_text(), str(path)).body:
+        for node in tree.body:
             if isinstance(node, _DEFS):
                 key = f"{module}.{node.name}"
                 defs.append((key, f"{PACKAGE.name}/{rel}:{node.lineno}", node))
@@ -111,6 +175,124 @@ def unreached() -> dict[str, str]:
             reached |= _mentions(node)
         pending = [d for d in pending if d not in hit]
     return {key: where for key, where, _ in pending}
+
+
+def _is_option(default) -> bool:
+    return isinstance(default, ast.Constant) and (
+        default.value is None or isinstance(default.value, bool)
+    )
+
+
+def _options(fn) -> list[tuple[str, int | None]]:
+    """(name, position or None for keyword-only) of each parameter of
+    ``fn`` defaulted to True, False or None."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [
+        (arg.arg, first + i)
+        for i, (arg, d) in enumerate(zip(pos[first:], a.defaults))
+        if _is_option(d)
+    ]
+    out += [(arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if _is_option(d)]
+    return out
+
+
+def _functions(node: ast.AST, prefix: str = "", cls: str | None = None):
+    """(function node, qualified name, enclosing class name or None) for
+    every function or method under ``node``."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, _FUNCS):
+            yield child, prefix + child.name, cls
+            yield from _functions(child, f"{prefix}{child.name}.")
+        elif isinstance(child, ast.ClassDef):
+            yield from _functions(child, f"{prefix}{child.name}.", child.name)
+        else:
+            yield from _functions(child, prefix, cls)
+
+
+def _option_defs():
+    """(key, location, call names, self offset, options) for every
+    package function or method with an option, outside ``ALLOWED``."""
+    for module, rel, tree in _modules():
+        for fn, qual, cls in _functions(tree):
+            opts = _options(fn)
+            if not opts or f"{module}.{qual.split('.')[0]}" in ALLOWED:
+                continue
+            static = any(
+                isinstance(d, ast.Name) and d.id == "staticmethod"
+                for d in fn.decorator_list
+            )
+            names = {fn.name} | ({cls} if cls and fn.name == "__init__" else set())
+            offset = 1 if cls and not static else 0
+            where = f"{PACKAGE.name}/{rel}:{fn.lineno}"
+            yield f"{module}.{qual}", where, names, offset, opts
+
+
+def _calls(paths) -> dict[str, list[tuple[int, set[str], bool, Path]]]:
+    """Call name -> (positional count, keyword names, star, path) of each
+    call in ``paths``."""
+    out: dict[str, list] = {}
+    for path in paths:
+        for n in ast.walk(_parse(path)):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            star = any(isinstance(a, ast.Starred) for a in n.args) or any(
+                k.arg is None for k in n.keywords
+            )
+            kws = {k.arg for k in n.keywords}
+            out.setdefault(name, []).append((len(n.args), kws, star, path))
+    return out
+
+
+def _setters(calls, names, offset, param, pos) -> set[Path]:
+    """The files of the calls in ``calls`` that set ``param``."""
+    return {
+        path
+        for name in names
+        for npos, kws, star, path in calls.get(name, ())
+        if star or param in kws or (pos is not None and npos + offset > pos)
+    }
+
+
+def unset_options() -> dict[str, tuple]:
+    """``{"<module>.<function>(<param>)": (location, call names, self
+    offset, param, position)}`` for every option no root or package call
+    sets."""
+    code = _calls(_roots() | set(PACKAGE.rglob("*.py")))
+    return {
+        f"{key}({param})": (where, names, offset, param, pos)
+        for key, where, names, offset, opts in _option_defs()
+        for param, pos in opts
+        if not _setters(code, names, offset, param, pos)
+    }
+
+
+def test_every_option_is_set_or_allowed():
+    found = unset_options()
+    new = sorted(set(found) - set(OPTIONS_ALLOWED))
+    stale = sorted(set(OPTIONS_ALLOWED) - set(found))
+    tests = _calls(sorted((REPO / "tests").rglob("*.py"))) if new else {}
+
+    def line(k):
+        where, names, offset, param, pos = found[k]
+        by = sorted(str(p.relative_to(REPO)) for p in _setters(tests, names, offset, param, pos))
+        fn = k.split("(")[0].rsplit(".", 1)[-1]
+        return f"  {where} {fn}({param}=)" + (f"  (set by {', '.join(by)})" if by else "")
+
+    assert not new, (
+        "options no entry point or package call sets (delete each with "
+        "the branch it selects, or allowlist it with a reason):\n"
+        + "\n".join(line(k) for k in new)
+    )
+    assert not stale, (
+        "allowlisted but now set or gone (drop from OPTIONS_ALLOWED):\n"
+        + "\n".join(f"  {k}" for k in stale)
+    )
 
 
 def test_every_package_definition_is_reached_or_allowed():

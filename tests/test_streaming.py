@@ -816,84 +816,6 @@ def test_st14_streaming_neardup_probe(spark, sf_dir, tmp_path_factory):
     assert got_n == want and len(want) > 0
 
 
-def test_st14_probe_respects_capped_index_bands_kept(spark, sf_dir):
-    """Regression (round-9 review): with a CAPPED standing index, the
-    minimal-matching-band uniqueness filter must range over the bands
-    the cap RETAINED (index.bands_kept), not all bands — otherwise a
-    pair whose first signature-matching band was dropped loses its only
-    surviving join rows and vanishes beyond the documented recall trade
-    ('a pair is missed only if its EVERY shared band is degenerate').
-    Probe output is checked pair-for-pair against a python ground truth
-    rebuilt from the signatures + the capped index rows, and the
-    fixture must actually exercise the dropped-minimal-band case."""
-    import db_loganalyzer_spark.operators.dedup as DD
-    from db_loganalyzer_spark.streaming import streaming_neardup_probe
-
-    PMOD = DD._PMOD
-    kw = dict(threshold=0.2, num_hashes=16, bands=8, n=2)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    new = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    corpus_sigs = DD.minhash_signatures(corpus, kw["num_hashes"], kw["n"])
-    index = DD.minhash_lsh_index(
-        corpus_sigs, bands=kw["bands"], max_bucket_size=2
-    )
-    assert "bands_kept" in index.columns
-
-    # probe is pure DataFrame logic — run it batch-side
-    got = streaming_neardup_probe(new, index, **kw).collect()
-    pairs = [(r.new_id, r.corpus_id) for r in got]
-    assert len(pairs) == len(set(pairs))  # exactly-once per pair
-
-    def bucket(sig, b):
-        r = len(sig) // kw["bands"]
-        acc = 0
-        for v in sig[b * r:(b + 1) * r]:
-            acc = (acc * 31 + v) % PMOD
-        return acc
-
-    new_sigs = {
-        r.id: r.signature
-        for r in DD.minhash_signatures(
-            new, kw["num_hashes"], kw["n"]
-        ).collect()
-    }
-    kept = {}  # corpus id -> {band: bucket} of rows surviving the cap
-    for r in index.collect():
-        kept.setdefault(r.id, {})[r.band] = r.bucket
-    csigs = {r.id: r.signature for r in corpus_sigs.collect()}
-    # ground truth: emit (n, c) iff some RETAINED band's buckets agree
-    # and the signature-agreement estimate clears the threshold; the
-    # bug case = the first agreeing band over ALL bands was dropped by
-    # the cap while a later shared band survives (the old filter kept
-    # no row for these pairs)
-    want = set()
-    exercises_bug = False
-    for nid, nsig in new_sigs.items():
-        for cid, cbands in kept.items():
-            all_match = [
-                b for b in range(kw["bands"])
-                if bucket(nsig, b) == bucket(csigs[cid], b)
-            ]
-            shared_kept = [b for b in all_match if b in cbands]
-            if not shared_kept:
-                continue
-            if all_match[0] not in cbands:
-                exercises_bug = True
-            est = sum(
-                1 for x, y in zip(nsig, csigs[cid]) if x == y
-            ) / len(nsig)
-            if est >= kw["threshold"]:
-                want.add((nid, cid))
-    assert set(pairs) == want and len(want) > 0
-    assert exercises_bug, (
-        "fixture no longer exercises the dropped-minimal-band case; "
-        "lower max_bucket_size or revisit the corpus split"
-    )
-
-
 def test_streaming_interval_coalesce_state_crosses_batches(
     spark, tmp_path, tmp_path_factory
 ):

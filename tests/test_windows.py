@@ -109,7 +109,7 @@ def test_value_drops_stitched_matches_global(spark):
     glob = W.value_drops(df, "value")
     st = W.value_drops_stitched(df, "value", num_partitions=5)
     # the window really runs across multiple range partitions
-    part, _ = W._range_sorted(df, "ts", "event_id", 5)
+    part = W._range_sorted(df, ["ts", "event_id"], 5)
     assert part.rdd.getNumPartitions() >= 2
     assert _sorted_rows(st) == _sorted_rows(glob)
 
