@@ -835,11 +835,13 @@ class PhasedInvestigationAgent:
         baselines = _own(
             D.metric_baselines_table(events, event_metrics, min_count=20), owned
         )
-        # The rollback summary is collected first, on its own: the job that
-        # first parses ``fields`` pays a one-time cost, which two concurrent
-        # broadcast stages of one union would each pay. The rest of the
-        # scanner's tail is one action; it also fills the baselines' cache
-        # for the detectors.
+        # The rollback summary is collected first, on its own. The job
+        # that first parses ``fields`` pays one-time costs that two
+        # concurrent broadcast stages of one union would each pay; the
+        # largest was ICU's case-table build for ``py_float``'s ``lower``
+        # (~1.8 s in one task), gone since ``get_spark`` maps case by the
+        # JVM. The rest of the scanner's tail is one action; it also fills
+        # the baselines' cache for the detectors.
         tail = _collect_sections({"rollback": rb["summary"]})
         tail.update(_collect_sections({
             "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),

@@ -4,6 +4,29 @@ Local testing runs ``local[N]`` in one JVM; the configs below are chosen so
 the same code scales to a real cluster: AQE for runtime re-planning and skew
 joins, UTC session timezone (matches the DuckDB oracle and the reference's
 UTC trace timestamps), Arrow for the few pandas-UDF paths.
+
+Two defaults remove costs that a fresh session pays and that no result
+depends on (measured on a 4-core host, one cold pass of ``perfbench``'s
+``incident_rca`` and ``warehouse_load`` at seed 1):
+
+- ``spark.sql.icu.caseMappings.enabled=false``: ``lower``/``upper`` use
+  the JVM's case mapping, as Spark <= 3.5 always did. With ICU, the
+  first ``lower`` in a process builds ICU's case tables
+  (``CollationAwareUTF8String.<clinit>``) inside a single task: that
+  job's task time falls from 2.06 to 0.28 s (``incident_rca``'s
+  rollback summary) and from 2.39 to 0.37 s (``warehouse_load``'s
+  ``event_metrics`` write). Trade-off: over every non-surrogate code
+  point the two settings differ on 134, all case pairs that came with
+  Unicode 14-16 (e.g. U+A7C0, U+10570-U+105BC), which now case-map by
+  the JVM's Unicode tables; and a non-ASCII string is case-mapped in the
+  JVM's default locale (ASCII strings take a locale-free path).
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark stops
+  capturing the Python stack on every ``Column``/``functions`` call
+  (four py4j round trips and a failed ``import ipykernel`` each; the
+  first one also imports IPython). ``incident_rca``'s pass made 17,218
+  py4j round trips with it and 6,998 without. Trade-off: a DataFrame
+  error's query context loses the Python call site; the Python
+  traceback is unchanged.
 """
 
 from __future__ import annotations
@@ -50,6 +73,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # see the module docstring for these two
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

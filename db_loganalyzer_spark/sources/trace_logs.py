@@ -461,16 +461,21 @@ def derive_event_metrics(events: DataFrame) -> DataFrame:
 _QUEUE_KEYS = ["BytesInput", "QueueSize", "WorstStorageServerQueue", "WorstTLogQueue"]
 _TXN_KEYS = ["Committed", "Mutations", "TxnCommitIn", "TxnRequestIn"]
 _DUR_KEYS = ["DurableLag", "DurabilityLag", "WorstStorageServerDurabilityLag"]
+# every payload key events_wide reads, for presence or for its value
+_WIDE_KEYS = [
+    "Mean", "P95", "GRVLatency", "grvLatency", *_DUR_KEYS, "DurableVersion",
+    "Version", *_TXN_KEYS, *_QUEUE_KEYS, "InFlightBytes", "DiskQueue", "Ops",
+]
 
 
-def _first_present(fields: Column, keys: list[str]) -> Column:
-    """safe_float of the FIRST PRESENT key (presence, not null-ness,
+def _first_present(parsed: Column, keys: list[str]) -> Column:
+    """The parsed value of the FIRST PRESENT key (presence, not null-ness,
     drives the precedence — a present-but-unparseable key stops the
     chain, exactly like the reference's if/elif)."""
     expr = F.lit(None).cast("double")
     for k in reversed(keys):
         expr = F.when(
-            F.map_contains_key(fields, k), safe_float(F.element_at(fields, k))
+            F.map_contains_key(parsed, k), F.element_at(parsed, k)
         ).otherwise(expr)
     return expr
 
@@ -480,45 +485,58 @@ def derive_events_wide(events: DataFrame) -> DataFrame:
     derivation — no join, no shuffle (the reference's J4 FK join is
     subsumed by deriving in the same select).
 
+    Each payload value it reads is parsed once: one ``safe_float`` inside
+    ``transform_values`` over the ``fields`` entries whose key it reads,
+    in a projection of its own. The columns then read that parsed map;
+    a key is present in it exactly when it is present in ``fields``.
+    ``CollapseProject`` keeps that projection apart (the map is not a
+    cheap expression and the columns read it many times), so the plan
+    parses each value once, not once per use.
+
     Quirk preserved: grv_latency_ms is NULL when Mean parses to 0.0 (the
     reference guards with truthiness, not None-ness).
     """
-    f = F.col("fields")
-    get = lambda k: F.element_at(f, k)  # noqa: E731
-    has = lambda k: F.map_contains_key(f, k)  # noqa: E731
+    parsed = events.select(
+        "event_id",
+        F.transform_values(
+            F.map_filter("fields", lambda k, _: k.isin(_WIDE_KEYS)),
+            lambda _, v: safe_float(v),
+        ).alias("parsed"),
+    )
+    p = F.col("parsed")
+    get = lambda k: F.element_at(p, k)  # noqa: E731
+    has = lambda k: F.map_contains_key(p, k)  # noqa: E731
 
     grv = (
         F.when(
             has("Mean") & has("P95"),
-            F.when(
-                safe_float(get("Mean")).isNotNull() & (safe_float(get("Mean")) != 0),
-                safe_float(get("Mean")) * 1000.0,
-            ),
+            F.when(get("Mean").isNotNull() & (get("Mean") != 0), get("Mean") * 1000.0),
         )
-        .when(has("GRVLatency"), safe_float(get("GRVLatency")))
-        .when(has("grvLatency"), safe_float(get("grvLatency")))
+        .when(has("GRVLatency"), get("GRVLatency"))
+        .when(has("grvLatency"), get("grvLatency"))
     )
-    durability = F.when(
-        has("DurableLag"), safe_float(get("DurableLag"))
-    ).when(
-        has("DurabilityLag"), safe_float(get("DurabilityLag"))
-    ).when(
-        has("WorstStorageServerDurabilityLag"),
-        safe_float(get("WorstStorageServerDurabilityLag")),
-    ).when(
-        has("DurableVersion") & has("Version"),
-        (safe_float(get("Version")) - safe_float(get("DurableVersion"))) / 1e5,
+    durability = (
+        F.when(has("DurableLag"), get("DurableLag"))
+        .when(has("DurabilityLag"), get("DurabilityLag"))
+        .when(
+            has("WorstStorageServerDurabilityLag"),
+            get("WorstStorageServerDurabilityLag"),
+        )
+        .when(
+            has("DurableVersion") & has("Version"),
+            (get("Version") - get("DurableVersion")) / 1e5,
+        )
     )
 
-    return events.select(
+    return parsed.select(
         "event_id",
         grv.alias("grv_latency_ms"),
-        _first_present(f, _TXN_KEYS).alias("txn_volume"),
-        _first_present(f, _QUEUE_KEYS).alias("queue_bytes"),
+        _first_present(p, _TXN_KEYS).alias("txn_volume"),
+        _first_present(p, _QUEUE_KEYS).alias("queue_bytes"),
         durability.alias("durability_lag_s"),
-        safe_float(get("InFlightBytes")).alias("data_move_in_flight"),
-        safe_float(get("DiskQueue")).alias("disk_queue_bytes"),
-        safe_float(get("Ops")).alias("kv_ops"),
+        get("InFlightBytes").alias("data_move_in_flight"),
+        get("DiskQueue").alias("disk_queue_bytes"),
+        get("Ops").alias("kv_ops"),
     )
 
 

@@ -3,6 +3,7 @@ checked against the reference's documented semantics (SURVEY §2.1, §3.1)
 using the reference's own sample files where available."""
 
 import json
+import math
 import os
 from collections import Counter
 from pathlib import Path
@@ -11,6 +12,7 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql import functions as F
 
+from db_loganalyzer_spark.functions.safe_float import safe_float_py
 from db_loganalyzer_spark.model.schemas import MANDATORY_FIELDS
 from db_loganalyzer_spark.sources import trace_logs as TL
 
@@ -128,6 +130,81 @@ def test_events_wide_precedence(spark, fixture_dir):
     assert w[1].queue_bytes == 34.0
     # Version/DurableVersion -> (v - dv)/1e5
     assert w[3].durability_lag_s == pytest.approx(5.0)
+
+
+def _wide_py(fields):
+    """events_wide's columns by the reference's if/elif chains
+    (tools/storage.py:176-268) over ``safe_float_py``."""
+    if fields is None:
+        return (None,) * 7
+
+    def sf(k):
+        # safe_float's documented deviation: an underscore token such as
+        # "1_0" is unparseable (Python's float() reads it as 10.0)
+        v = fields.get(k)
+        return safe_float_py(v.replace("_", "x") if v is not None else v)
+
+    def first(keys):
+        return next((sf(k) for k in keys if k in fields), None)
+
+    grv = None
+    if "Mean" in fields and "P95" in fields:
+        m = sf("Mean")
+        grv = m * 1000.0 if m else None  # truthiness: Mean 0 gives NULL
+    elif "GRVLatency" in fields:
+        grv = sf("GRVLatency")
+    elif "grvLatency" in fields:
+        grv = sf("grvLatency")
+    dur = None
+    if any(k in fields for k in TL._DUR_KEYS):
+        dur = first(TL._DUR_KEYS)
+    elif "DurableVersion" in fields and "Version" in fields:
+        v, dv = sf("Version"), sf("DurableVersion")
+        dur = None if v is None or dv is None else (v - dv) / 1e5
+    return (
+        grv, first(TL._TXN_KEYS), first(TL._QUEUE_KEYS), dur,
+        sf("InFlightBytes"), sf("DiskQueue"), sf("Ops"),
+    )
+
+
+EDGE_MAPS = [
+    {"Mean": "0", "P95": "0.5"},
+    {"Mean": "inf -1 3", "P95": "1"},
+    {"GRVLatency": "nan", "grvLatency": "7"},
+    {"Version": "1e400", "DurableVersion": "100"},
+    {"Committed": "n/a", "Mutations": "5", "TxnCommitIn": "6"},
+    {"QueueSize": " -1  -1 ", "WorstTLogQueue": "9"},
+    {"WorstTLogQueue": "Infinity", "Ops": "-inf", "DiskQueue": "1_0",
+     "InFlightBytes": ""},
+    {"DurabilityLag": "x", "DurableVersion": "1", "Version": "2"},
+    {},
+    None,
+]
+
+
+def _edge_wide(spark):
+    ev = spark.createDataFrame(
+        list(enumerate(EDGE_MAPS)), "event_id long, fields map<string,string>"
+    )
+    return TL.derive_events_wide(ev)
+
+
+def test_events_wide_edge_values(spark):
+    got = {r[0]: tuple(r[1:]) for r in _edge_wide(spark).collect()}
+    for i, fields in enumerate(EDGE_MAPS):
+        want = _wide_py(fields)
+        for g, w in zip(got[i], want):
+            if isinstance(w, float) and math.isnan(w):
+                assert g is not None and math.isnan(g), (fields, got[i], want)
+            else:
+                assert g == w, (fields, got[i], want)
+
+
+def test_events_wide_parses_each_value_once(spark):
+    # the parsed map is one projection: CollapseProject has not inlined
+    # a parse into every column
+    plan = _edge_wide(spark)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("transform_values(") == 1, plan
 
 
 def test_processes_and_roles(spark, fixture_dir):
