@@ -1885,8 +1885,8 @@ def m03_minhash_lsh_dedup(spark, sf_dir):
     rolling fold — every stage (signatures, banding, candidate join,
     exact-Jaccard verify) is exact integer/rational arithmetic, so the
     FULL approximate pipeline, recall loss included, is hash-checked
-    against the DuckDB oracle below. The xxhash64 family remains as the
-    wider/faster option, pytest-verified."""
+    against the DuckDB oracle below. It is the only family: every
+    stage stays restatable in the oracle."""
     from db_loganalyzer_spark.operators.dedup import minhash_lsh_dedup
 
     docs = _t(spark, sf_dir, "documents")
@@ -5245,12 +5245,11 @@ def st09_streaming_gap_fill(spark, sf_dir):
     retract), holes going out with the carried value. Drained
     in-order the output equals batch w13 minus each key's final
     still-open bucket — which is exactly what the oracle states
-    (the grid stops one bucket short of each key's max). Runs the
-    key-BUCKETED batched-state form (n_buckets=32): packed frontier
-    arrays per bucket, segmented vectorized fold — same output, the
-    per-group constant amortized (pinned in tests/test_streaming)."""
+    (the grid stops one bucket short of each key's max). State is
+    key-bucketed: packed frontier arrays per state group, segmented
+    vectorized fold (the ``_bucketed`` note in streams.py)."""
     stream = ST.read_events_stream(spark, sf_dir)
-    out = ST.streaming_gap_fill(stream, 21600, "user_id", n_buckets=32)
+    out = ST.streaming_gap_fill(stream, 21600, "user_id")
     return _drain(out, "st09")
 
 
@@ -5915,14 +5914,12 @@ def st10_streaming_counter_rates(spark, sf_dir):
     key — two scalars whatever the volume — and every sample emits
     exactly once, its rate depending only on its predecessor, so the
     drained stream equals batch w17 row-for-row. Oracle: the identical
-    SQL as w17 (no closed-window subtlety). Runs the key-BUCKETED
-    batched-state form (n_buckets=32, the executor-sizing dial): state
-    groups = pmod(hash(key), 32), each holding a packed array of
-    per-key scalars, so the applyInPandasWithState per-group
-    Python/Arrow constant amortizes over ~keys/32 keys per micro-batch;
-    per-key == bucketed equivalence is pinned in tests/test_streaming."""
+    SQL as w17 (no closed-window subtlety). State groups are
+    pmod(hash(key), 32), each holding a packed array of per-key
+    scalars, so the applyInPandasWithState per-group Python/Arrow
+    constant amortizes over ~keys/32 keys per micro-batch."""
     stream = ST.read_events_stream(spark, sf_dir)
-    out = ST.streaming_counter_rates(stream, n_buckets=32)
+    out = ST.streaming_counter_rates(stream)
     return _drain(out, "st10")
 
 
@@ -5934,12 +5931,10 @@ def st11_streaming_cusum(spark, sf_dir):
     Fixed reference (35.0 ~ the global value median) stands in for the
     batch form's per-key median — the realistic monitoring deployment
     seeds it from a batch baseline. Oracle: the batch closed form with
-    the same fixed ref. Runs the key-BUCKETED batched-state form
-    (n_buckets=32): packed (C, Cmin) arrays per bucket, segmented
-    vectorized fold — same exact integers, the per-group constant
-    amortized (per-key == bucketed pinned in tests/test_streaming)."""
+    the same fixed ref. State is key-bucketed: packed (C, Cmin) arrays
+    per state group, segmented vectorized fold."""
     stream = ST.read_events_stream(spark, sf_dir)
-    out = ST.streaming_cusum(stream, ref=35.0, threshold=1000.0, n_buckets=32)
+    out = ST.streaming_cusum(stream, ref=35.0, threshold=1000.0)
     return _drain(out, "st11")
 
 

@@ -573,14 +573,23 @@ def write_llm_input(
     now=_utcnow,
 ) -> str | None:
     """Reference tools/agentic_loop/llm_input_logger.py:7-17 — persist the
-    prompt to a timestamped file; ``now`` is injectable for determinism."""
+    prompt to a timestamped file; ``now`` is injectable for determinism.
+    The name is to the second, so a later write in the same second takes
+    the next free ``_<n>`` suffix (created exclusively) instead of
+    overwriting the first."""
     if not prompt_text:
         return None
     ts = now().strftime("%Y%m%dT%H%M%SZ")
     Path(output_dir).mkdir(parents=True, exist_ok=True)
-    path = Path(output_dir) / f"{prefix}_{ts}.txt"
-    path.write_text(prompt_text)
-    return str(path)
+    n = 0
+    while True:
+        path = Path(output_dir) / f"{prefix}_{ts}{f'_{n}' if n else ''}.txt"
+        try:
+            with path.open("x") as f:
+                f.write(prompt_text)
+            return str(path)
+        except FileExistsError:
+            n += 1
 
 
 def write_llm_output(

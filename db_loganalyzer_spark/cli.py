@@ -31,6 +31,20 @@ import sys
 from pyspark.sql import SparkSession
 
 
+_IDENTIFIER = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _identifier(name: str) -> str:
+    """argparse type of ``--database``: a Spark unquoted identifier, ASCII
+    only (``str.isidentifier`` also accepts non-ASCII letters), checked
+    before any session starts."""
+    if not _IDENTIFIER.fullmatch(name):
+        raise argparse.ArgumentTypeError(
+            f"{name!r} is not a database name ([A-Za-z_][A-Za-z0-9_]*)"
+        )
+    return name
+
+
 def _spark(args) -> SparkSession:
     from .session import get_spark
 
@@ -48,9 +62,11 @@ def _db_location(args) -> str:
 
 
 def _use(spark: SparkSession, args) -> None:
+    from .sources.sinks import sql_string
+
     spark.sql(
         f"CREATE DATABASE IF NOT EXISTS {args.database} "
-        f"LOCATION '{_db_location(args)}'"
+        f"LOCATION {sql_string(_db_location(args))}"
     )
     spark.sql(f"USE {args.database}")
     # The default catalog is session-scoped: tables written by a previous
@@ -65,7 +81,7 @@ def _use(spark: SparkSession, args) -> None:
             if not spark.catalog.tableExists(f"{args.database}.{name}"):
                 spark.sql(
                     f"CREATE TABLE {args.database}.{name} "
-                    f"USING parquet LOCATION '{tdir}'"
+                    f"USING parquet LOCATION {sql_string(tdir)}"
                 )
 
 
@@ -360,7 +376,7 @@ def build_parser() -> argparse.ArgumentParser:
         default="spark-warehouse",
         help="warehouse directory (default: spark-warehouse)",
     )
-    p.add_argument("--database", default="loganalyzer")
+    p.add_argument("--database", default="loganalyzer", type=_identifier)
     sub = p.add_subparsers(title="subcommands", dest="command")
 
     sp = sub.add_parser("init", help="initialize database + core tables")

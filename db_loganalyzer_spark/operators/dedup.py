@@ -14,15 +14,11 @@ comments, log_analysis/cluster_code_coverage.py:33-47) to the shapes a
 - SimHash           : 64-bit fingerprint; near-dups = small Hamming
                       distance (bucketed by rotated prefixes).
 
-Two hash families, both JVM-side column expressions (no Python in any
-hot path):
-
-- ``portable`` (default): polynomial codepoint hashes mod a 31-bit prime
-  — exact integer arithmetic any SQL engine reproduces, so MinHash/LSH
-  and SimHash outputs (candidate generation included) are verifiable
-  against an ANSI-SQL oracle end to end.
-- ``xxhash64``: Spark's native seeded hash — faster per byte and 64-bit
-  wide, but engine-specific (pytest-verified only).
+One hash family, all JVM-side column expressions (no Python in any hot
+path): polynomial codepoint hashes mod a 31-bit prime — exact integer
+arithmetic any SQL engine reproduces, so MinHash/LSH and SimHash outputs
+(candidate generation included) are verifiable against an ANSI-SQL
+oracle end to end.
 """
 
 from __future__ import annotations
@@ -539,7 +535,6 @@ def minhash_signatures(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_family: str = "portable",
 ) -> DataFrame:
     """MinHash signature per document: sig[i] = min over shingles of the
     i-th hash of the shingle. A batch input is not one narrow pass: the
@@ -552,21 +547,18 @@ def minhash_signatures(
     ONE signature, the element-wise min of their signatures (the
     signature of their shingle union), not one signature per row.
 
-    ``portable``: the i-th hash is the affine family
+    The i-th hash is the affine family
     ``((2i+1)*H(g) + (10007*i + 12345)) mod p`` over ONE portable base
     hash H per shingle — (2i+1) is odd so every coefficient is a unit
     mod p, and H is computed once then reused by all num_hashes members
-    (cheap AND restatable in the DuckDB oracle). ``xxhash64``:
-    ``xxhash64(g, i)`` — the (shingle, seed-index) pair indexes the
-    family without unrolling num_hashes expression copies.
+    (cheap AND restatable in the DuckDB oracle).
 
-    The shingle (or hashed-shingle) array is materialized in a first
-    projection so the num_hashes per-seed expressions reference a column,
-    not num_hashes inlined copies of the whole normalize/split/shingle
-    chain — keeps the expression tree (and codegen time) linear in
-    num_hashes. The portable branch never builds shingle strings at all:
-    ``shingle_hashes_from_tp`` composes each n-gram's hash from
-    once-folded per-token hashes.
+    The hashed-shingle array is materialized in a first projection so
+    the num_hashes per-seed expressions reference a column, not
+    num_hashes inlined copies of the whole normalize/split/shingle chain
+    — keeps the expression tree (and codegen time) linear in num_hashes.
+    No shingle string is ever built: ``shingle_hashes_from_tp`` composes
+    each n-gram's hash from once-folded per-token hashes.
 
     Documents too short to have any shingle are dropped by a CHEAP
     pre-filter on the token count, never by ``filter(signature IS NOT
@@ -600,49 +592,6 @@ def minhash_signatures(
     introduce."""
     toks = F.split(normalize_text(text_col), " ")
     df = _spread(df.filter(F.size(toks) >= n))
-    if hash_family == "xxhash64":
-        grams_df = df.select(
-            F.col(id_col).alias("id"), word_shingles(text_col, n).alias("grams")
-        )
-        if not grams_df.isStreaming:
-            # explode_OUTER on purpose: plain explode makes Catalyst's
-            # InferFiltersFromGenerate add `size(grams) > 0 AND
-            # isnotnull(grams)` and push it through the projections to
-            # the scan — with the whole interpreted shingle expression
-            # INLINED into the filter, evaluated twice per document
-            # below the repartition (the same pushed-predicate blowup
-            # documented above; observed live when this shape first ran
-            # with a plain explode). The outer variant infers nothing,
-            # and is value-identical here: the pre-filter guarantees a
-            # non-empty array, so no null-expansion row can exist.
-            ex = grams_df.select("id", F.explode_outer("grams").alias("g"))
-            mins = [
-                F.min(F.xxhash64(F.col("g"), F.lit(i))).alias(f"__s{i}")
-                for i in range(num_hashes)
-            ]
-            return (
-                ex.groupBy("id")
-                .agg(*mins)
-                .select(
-                    "id",
-                    F.array(
-                        *[F.col(f"__s{i}") for i in range(num_hashes)]
-                    ).alias("signature"),
-                )
-            )
-        sig = F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(F.col("grams"), lambda g: F.xxhash64(g, i))
-            ),
-        )
-        # the size() guard is always true (pre-filter) but adds a second
-        # reference to `grams`, which stops CollapseProject from inlining
-        # the shingle expression into the per-seed lambda (where it would
-        # be re-evaluated num_hashes times per row)
-        return grams_df.select(
-            "id", F.when(F.size("grams") > 0, sig).alias("signature")
-        )
     tp_df = df.select(
         F.col(id_col).alias("id"), _token_hash_pows(toks).alias("tp")
     )
@@ -650,7 +599,14 @@ def minhash_signatures(
         "id", shingle_hashes_from_tp(F.col("tp"), n).alias("hs")
     )
     if not hs_df.isStreaming:
-        # explode_outer, not explode — see the xxhash64 branch comment
+        # explode_OUTER on purpose: plain explode makes Catalyst's
+        # InferFiltersFromGenerate add `size(hs) > 0 AND isnotnull(hs)`
+        # and push it through the projections to the scan — with the
+        # whole shingle-hash expression INLINED into the filter,
+        # evaluated twice per document below the repartition (the
+        # pushed-predicate blowup documented above). The outer variant
+        # infers nothing, and is value-identical here: the pre-filter
+        # guarantees a non-empty array, so no null-expansion row exists.
         ex = hs_df.select("id", F.explode_outer("hs").alias("h"))
         mins = [
             F.min(
@@ -683,13 +639,10 @@ def minhash_signatures(
     return hs_df.select("id", F.when(F.size("hs") > 0, sig).alias("signature"))
 
 
-def _band_bucket_expr(band_slice: Column, hash_family: str) -> Column:
+def _band_bucket_expr(band_slice: Column) -> Column:
     """One band's bucket id from its signature slice — the rolling
-    ``(acc*31 + v) mod p`` fold (portable, oracle-restatable) or
-    xxhash64 of the slice's string form. Shared by the batch LSH
-    banding and the streaming probe's minimal-band filter."""
-    if hash_family == "xxhash64":
-        return F.xxhash64(band_slice.cast("string"))
+    ``(acc*31 + v) mod p`` fold (oracle-restatable). Shared by the batch
+    LSH banding and the streaming probe's minimal-band filter."""
     return F.aggregate(
         band_slice,
         F.lit(0).cast("long"),
@@ -704,7 +657,7 @@ def _band_slice(sig: Column, b: Column, bands: int) -> Column:
     return F.slice(sig, b * rows + 1, rows)
 
 
-def _banded(signatures: DataFrame, bands: int, hash_family: str, carry_signature: bool) -> DataFrame:
+def _banded(signatures: DataFrame, bands: int, carry_signature: bool) -> DataFrame:
     """One row per (id, band, bucket) membership — THE banding used by
     the index, the candidates self-join, and (via the same two helpers)
     the streaming probe's minimal-band filter. Single definition so the
@@ -719,7 +672,7 @@ def _banded(signatures: DataFrame, bands: int, hash_family: str, carry_signature
                 lambda b: F.struct(
                     b.alias("band"),
                     _band_bucket_expr(
-                        _band_slice(F.col("signature"), b, bands), hash_family
+                        _band_slice(F.col("signature"), b, bands)
                     ).alias("bucket"),
                 ),
             )
@@ -730,11 +683,7 @@ def _banded(signatures: DataFrame, bands: int, hash_family: str, carry_signature
     )
 
 
-def minhash_lsh_index(
-    signatures: DataFrame,
-    bands: int = 8,
-    hash_family: str = "portable",
-) -> DataFrame:
+def minhash_lsh_index(signatures: DataFrame, bands: int = 8) -> DataFrame:
     """The STANDING LSH index over a corpus: one row per (band, bucket)
     membership — columns (id, signature, band, bucket). Build it once
     over the ingested corpus (persist, or write bucketed by (band,
@@ -743,24 +692,19 @@ def minhash_lsh_index(
     probe``) instead of re-running the corpus self-join per ingest —
     the standing-index shape of m15, minhashed. The signature column is
     carried so probes can estimate-verify without a second join."""
-    return _banded(signatures, bands, hash_family, carry_signature=True)
+    return _banded(signatures, bands, carry_signature=True)
 
 
-def minhash_lsh_candidates(
-    signatures: DataFrame,
-    bands: int = 8,
-    hash_family: str = "portable",
-) -> DataFrame:
+def minhash_lsh_candidates(signatures: DataFrame, bands: int = 8) -> DataFrame:
     """LSH banding: split each signature into `bands` rows of
     (band_id, band_hash); docs sharing any band bucket become candidate
     pairs. Equi-join on (band, hash) => shuffle is hash-partitioned, no
     cross product. Returns distinct candidate (id_a < id_b) pairs.
 
-    ``portable`` folds the band's values with the same rolling combine
-    the t04 fingerprint uses (``(acc*31 + v) mod p``) so the bucket ids
-    are reproducible in the oracle SQL; ``xxhash64`` hashes the band
-    slice's string form."""
-    banded = _banded(signatures, bands, hash_family, carry_signature=False)
+    A band's bucket folds its values with the same rolling combine the
+    t04 fingerprint uses (``(acc*31 + v) mod p``) so the bucket ids are
+    reproducible in the oracle SQL."""
+    banded = _banded(signatures, bands, carry_signature=False)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -782,7 +726,6 @@ def minhash_lsh_dedup(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_family: str = "portable",
     verify: str = "exact",
     estimate_margin: float | None = None,
 ) -> DataFrame:
@@ -840,7 +783,7 @@ def minhash_lsh_dedup(
       verify stage cost collapses from O(candidates * array_bytes) to
       O(output * array_bytes).
 
-    The portable family verifies over the DISTINCT SHINGLE-HASH sets
+    Exact verify runs over the DISTINCT SHINGLE-HASH sets
     rather than the shingle strings: the hash family is shared with the
     oracle SQL, so both engines see the same sets, and Jaccard over them
     equals string-set Jaccard except under a 31-bit hash collision inside
@@ -869,12 +812,12 @@ def minhash_lsh_dedup(
             f"minhash_lsh_dedup: verify={verify!r} "
             "(want 'exact', 'estimate' or 'hybrid')"
         )
-    sigs = minhash_signatures(df, num_hashes, n, id_col, text_col, hash_family)
+    sigs = minhash_signatures(df, num_hashes, n, id_col, text_col)
     if verify != "exact":
         # signatures feed BOTH the banding pipeline and both verify join
         # sides; persist so the (shingle -> minhash) work runs once.
         sigs = sigs.persist()
-    cands = minhash_lsh_candidates(sigs, bands, hash_family).persist()
+    cands = minhash_lsh_candidates(sigs, bands).persist()
     if verify != "exact":
         est_ids = (
             cands.select(F.col("id_a").alias("id"))
@@ -914,20 +857,14 @@ def minhash_lsh_dedup(
         .union(cands.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    if hash_family == "portable":
-        toks = F.split(normalize_text(text_col), " ")
-        tp_df = _spread(df.filter(F.size(toks) >= n)).select(
-            F.col(id_col).alias("id"), _token_hash_pows(toks).alias("tp")
-        )
-        sh = tp_df.select(
-            "id",
-            F.array_distinct(shingle_hashes_from_tp(F.col("tp"), n)).alias("sh"),
-        )
-    else:
-        sh = _spread(df).select(
-            F.col(id_col).alias("id"), word_shingles(text_col, n).alias("sh")
-        )
-    sh = sh.join(cand_ids, "id", "left_semi")
+    toks = F.split(normalize_text(text_col), " ")
+    tp_df = _spread(df.filter(F.size(toks) >= n)).select(
+        F.col(id_col).alias("id"), _token_hash_pows(toks).alias("tp")
+    )
+    sh = tp_df.select(
+        "id",
+        F.array_distinct(shingle_hashes_from_tp(F.col("tp"), n)).alias("sh"),
+    ).join(cand_ids, "id", "left_semi")
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -946,17 +883,16 @@ def simhash(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 64,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """SimHash fingerprint per document: per token-hash bit j, sum +1/-1
     across tokens; bit j of the fingerprint = (sum > 0).
 
-    ``portable`` token hash: two independent 31-bit polynomial hashes
-    (bases 131/137, inits 7/11, mod the Mersenne prime 2^31-1) packed as
-    ``h1 << 31 | h2`` — 62 usable bits, every operation exact signed
-    64-bit integer arithmetic, so the fingerprints (and the candidate
-    buckets built on them) are restatable in the DuckDB oracle.
-    ``xxhash64`` gives the full 64 bits but is engine-specific.
+    Token hash: two independent 31-bit polynomial hashes (bases
+    131/137, inits 7/11, mod the Mersenne prime 2^31-1) packed as
+    ``h1 << 31 | h2`` — 62 usable bits (``bits`` is capped there), every
+    operation exact signed 64-bit integer arithmetic, so the
+    fingerprints (and the candidate buckets built on them) are
+    restatable in the DuckDB oracle.
 
     Implemented as an explode + single groupBy with one conditional sum
     per bit — one shuffle keyed by doc id; near-dup = small Hamming
@@ -967,23 +903,17 @@ def simhash(
             F.array_distinct(F.split(normalize_text(text_col), " "))
         ).alias("tok"),
     ).filter(F.col("tok") != "")
-    if hash_family == "xxhash64":
-        toks = toks.withColumn("h", F.xxhash64("tok"))
-    else:
-        bits = min(bits, 62)
-        # Affine post-mix: a raw polynomial hash of a short token is a
-        # SMALL integer (high bits all zero), which would correlate
-        # fingerprints of short-token documents. Multiplying by a large
-        # constant mod p redistributes any value across the full 31-bit
-        # range while staying exact signed-64 arithmetic.
-        h1 = (
-            portable_hash("tok", base=131, init=7, mod=_P31) * 1103515245
-            + 12345
-        ) % _P31
-        h2 = (
-            portable_hash("tok", base=137, init=11, mod=_P31) * 69069 + 1
-        ) % _P31
-        toks = toks.withColumn("h", F.shiftleft(h1, 31) + h2)
+    bits = min(bits, 62)
+    # Affine post-mix: a raw polynomial hash of a short token is a SMALL
+    # integer (high bits all zero), which would correlate fingerprints of
+    # short-token documents. Multiplying by a large constant mod p
+    # redistributes any value across the full 31-bit range while staying
+    # exact signed-64 arithmetic.
+    h1 = (
+        portable_hash("tok", base=131, init=7, mod=_P31) * 1103515245 + 12345
+    ) % _P31
+    h2 = (portable_hash("tok", base=137, init=11, mod=_P31) * 69069 + 1) % _P31
+    toks = toks.withColumn("h", F.shiftleft(h1, 31) + h2)
 
     def bit(j):
         return F.shiftleft(F.lit(1).cast("long"), j)
@@ -1007,12 +937,11 @@ def simhash_near_dups(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, bucketed by 16-bit
     chunks (a pair within Hamming<=3 shares at least one of 4 chunks —
     pigeonhole), so the join is equi on (chunk_index, chunk_value)."""
-    fps = simhash(df, id_col, text_col, hash_family=hash_family)
+    fps = simhash(df, id_col, text_col)
     chunks = fps.select(
         "id",
         "simhash",

@@ -457,9 +457,8 @@ def salted_join(
     dim_key: str,
     salt_from: list[str],
     salt_parts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """J13 — manually salted repartition join for skewed fact keys.
+    """J13 — manually salted repartition inner join for skewed fact keys.
 
     A plain shuffle join hashes both sides on the key, so one hot key
     (a customer with 10^8 orders at 100 TB) lands its entire fact slice
@@ -470,8 +469,8 @@ def salted_join(
     times via one explode, and the join key becomes (key, salt). Every
     (key, salt) group holds ~1/salt_parts of the hot key's rows; each
     fact row still meets exactly one replica of its dim row, so the
-    result is ROW-FOR-ROW the plain join (inner and left supported) —
-    which is also why the oracle is simply the unsalted SQL.
+    result is ROW-FOR-ROW the plain inner join — which is also why the
+    oracle is simply the unsalted SQL.
 
     The trade, stated: the dim side shuffles salt_parts× its size, so
     this pays off when fact >> dim but dim is past broadcast range.
@@ -487,8 +486,6 @@ def salted_join(
     (log_analysis/log_loader.py-style SQL) where skew is invisible;
     this is the distributed restatement of the same equi-join contract.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     salt = F.pmod(
         F.xxhash64(*[F.col(c) for c in salt_from]), F.lit(salt_parts)
     ).cast("int")
@@ -499,13 +496,11 @@ def salted_join(
     joined = f.join(
         d,
         (f[fact_key] == d[dim_key]) & (f["__fsalt"] == d["__dsalt"]),
-        how,
     )
     if fact_key == dim_key:
         # the condition-form join keeps BOTH same-named key columns;
         # drop the dim side's so a post-join select of the key is not
-        # ambiguous (for inner/left the fact side's value is the one a
-        # USING join would keep)
+        # ambiguous (the keys are equal on every inner-join row)
         joined = joined.drop(d[dim_key])
     return joined.drop("__fsalt", "__dsalt")
 

@@ -18,6 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 EXPORT_FORMATS = ("csv", "json", "parquet")
 
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash and quote escaped),
+    so a path holding ``'`` cannot end the literal early."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
 # Core tables of the reference schema (data/schema.sql:1-68), in
 # creation order; dropped in reverse like storage.py:46-52.
 CORE_TABLES = ("processes", "events", "event_metrics", "events_wide", "process_roles")
@@ -80,7 +86,7 @@ def bootstrap_tables(
     warehouse conf is static and cannot change on a live session)."""
     if drop_existing:
         spark.sql(f"DROP DATABASE IF EXISTS {database} CASCADE")
-    loc = f" LOCATION '{location}'" if location else ""
+    loc = f" LOCATION {sql_string(location)}" if location else ""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}{loc}")
     if drop_existing:
         for t in reversed(CORE_TABLES):

@@ -450,120 +450,44 @@ _GAPFILL_EMPTY = pd.DataFrame(
     {f.name: [] for f in _GAPFILL_SCHEMA}
 )
 
-_GAPFILL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_bucket", T.LongType()),
-        T.StructField("last_value", T.DoubleType()),
-    ]
-)
-
-
-def _gapfill_fn_factory(bucket_seconds: int):
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        """w13's streaming form. State per key: the OPEN bucket
-        (bucket, value). A bucket's row is emitted only when a LATER
-        bucket arrives — append mode cannot retract, so emitting the
-        frontier immediately would duplicate it if a same-bucket row
-        landed in a later micro-batch. On emit, holes up to the new
-        bucket go out with the carried value.
-
-        Late-data policy (explicit, tested): a row whose bucket is
-        below the open bucket is DROPPED — its row is already final,
-        the same contract as the watermarked append-mode operators.
-        In-order arrival per key (Kafka per-key partitions;
-        time-ordered file landing) is the deployment assumption, as
-        for st05's EWMA.
-        """
-        import numpy as np
-
-        bs = bucket_seconds
-        last_b = state.get[0] if state.exists else None
-        last_v = state.get[1] if state.exists else None
-        # One pandas frame per key per micro-batch: with many keys the
-        # per-group constant factors ARE the cost — skip the concat for
-        # the common single-chunk case and reuse one empty result frame.
-        chunks = list(pdfs)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        uid = int(key[0])
-
-        # Vectorized fold (measured 40x the per-row loop this replaced):
-        # after the (ts, event_id) sort, bucket ids are non-decreasing
-        # within the batch, so "late" can only mean below the carried
-        # open bucket — one boolean filter. The per-bucket winner is the
-        # LAST row of each bucket run (later (ts, event_id) wins), and
-        # every consecutive unique-bucket pair (u_i, u_{i+1}) emits
-        # exactly (u_{i+1}-u_i)/bs rows: the real u_i row plus its holes.
-        pdf = pdf[pdf["value"].notna()]
-        # normalize to us first — Arrow may deliver ns- OR us-resolution
-        # pandas timestamps depending on pyarrow/pandas versions, and a
-        # raw int64 view of a us series would shift buckets by 1000x
-        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-        b = (ts_us // (bs * 1_000_000)) * bs
-        v = pdf["value"].astype("float64").to_numpy()
-        if last_b is not None:
-            keep = b >= last_b
-            b, v = b[keep], v[keep]
-            b = np.concatenate(([last_b], b))
-            v = np.concatenate(([last_v], v))
-        if len(b) == 0:
-            yield _GAPFILL_EMPTY
-            return
-        run_last = np.append(b[1:] != b[:-1], True)  # last row per bucket
-        u, w = b[run_last], v[run_last]
-        state.update((int(u[-1]), float(w[-1])))
-        if len(u) < 2:
-            yield _GAPFILL_EMPTY
-            return
-        counts = (u[1:] - u[:-1]) // bs  # rows per closed bucket (>= 1)
-        within = np.arange(counts.sum()) - np.repeat(
-            np.cumsum(counts) - counts, counts
-        )
-        yield pd.DataFrame(
-            {
-                "user_id": np.full(int(counts.sum()), uid, dtype="int64"),
-                "bucket": np.repeat(u[:-1], counts) + within * bs,
-                "value": np.repeat(w[:-1], counts),
-                "is_gap": within > 0,
-            }
-        )
-
-    return fn
-
-
 # ---------------------------------------------------------------------------
-# _bucketed: key-bucketed batched state for the per-row stateful forms.
+# _bucketed: key-bucketed state for the per-row stateful forms (st09-st11).
 #
-# Measured (scripts/bench_streaming.py, round 6): st09/st11 sustain only
-# 16-25k rows/s while their numpy folds take milliseconds — the cost is
-# the PER-GROUP constant of applyInPandasWithState (one Arrow round-trip
-# + one Python function call + one state get/update per key per
-# micro-batch). Fix: group by pmod(hash(key), n_buckets) instead of the
-# raw key, so each state group holds ~distinct_keys/n_buckets keys and
-# the constant amortizes across all of them. State becomes one PACKED
-# set of arrays per bucket (keys sorted ascending + one array per
-# scalar), and the fold is the same vectorized computation SEGMENTED by
-# key — pandas groupby cumsum/cummin and numpy boundary masks, still no
-# per-row Python.
+# applyInPandasWithState pays a PER-GROUP constant every micro-batch (one
+# Arrow round-trip + one Python function call + one state get/update), so
+# grouping by the raw key makes that constant the whole cost: the key-per-
+# group folds sustained ~10k rows/s on 1M rows while their numpy folds
+# took milliseconds (bench_data/stream_r8.jsonl). These operators group by
+# pmod(hash(key), _STATE_GROUPS) instead: each state group holds one
+# PACKED set of arrays (keys sorted ascending + one array per carried
+# scalar), and the fold is one vectorized pass SEGMENTED by key — numpy
+# boundary masks and pandas groupby cummin, no per-row Python.
 #
-# Per-key semantics are preserved exactly: rows are sorted (key, ts,
-# event_id) inside the bucket, every per-key recurrence reads only that
-# key's carried scalars (np.searchsorted lookup into the sorted state
-# arrays), and outputs are bit-identical to the per-key forms (pinned in
-# tests/test_streaming.py). n_buckets is the executor-sizing dial: it
-# bounds state-group count (and thus the Python/Arrow constants paid per
-# micro-batch) and should be ~a few x total executor cores — NOT grown
-# with key count; state per bucket is O(keys/n_buckets) scalars.
+# Per-key semantics hold exactly: rows are sorted (key, ts, event_id)
+# inside the group, and every per-key recurrence reads only that key's
+# carried scalars (np.searchsorted lookup into the sorted state keys), so
+# a drained stream equals the batch operator (pinned in
+# tests/test_streaming.py and the oracle gate).
+#
+# _STATE_GROUPS is a module constant, not a parameter and not derived
+# from the session: the key -> state-group map is part of the checkpointed
+# state, and a restarted query must find each key's carried scalars in
+# the group that wrote them. 32 bounds the groups (and the constants paid
+# per micro-batch) at a few times a small cluster's cores; it does not
+# grow with key count, and state per group is O(keys/32) scalars.
 # ---------------------------------------------------------------------------
+
+_STATE_GROUPS = 32
+
 
 def _require_int_key(df: DataFrame, key: str, fn_name: str) -> None:
-    """The stateful per-key operators pack keys as int64 numpy arrays
-    (and, bucketed, as ArrayType(LongType) state), so a non-integral key
-    column would only fail deep inside an executor with an opaque Arrow
-    cast error. Validate on the driver instead, where the schema is
-    known. Null keys are likewise unsupported (they would NaN-poison the
-    packed arrays) — that is a data contract documented per-function,
-    not checkable from the schema alone."""
+    """The stateful operators pack keys as int64 numpy arrays (and the
+    key-bucketed ones as ArrayType(LongType) state), so a non-integral
+    key column would only fail deep inside an executor with an opaque
+    Arrow cast error. Validate on the driver instead, where the schema
+    is known. Null keys are likewise unsupported (they would NaN-poison
+    the packed arrays) — a data contract documented per-function, not
+    checkable from the schema alone."""
     field = df.schema[key]
     if not isinstance(
         field.dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -574,7 +498,27 @@ def _require_int_key(df: DataFrame, key: str, fn_name: str) -> None:
         )
 
 
-_GAPFILL_BSTATE_SCHEMA = T.StructType(
+def _bucketed_state(
+    events: DataFrame, key: str, fn_name: str, fn, out_schema, state_schema
+) -> DataFrame:
+    """Run the fold ``fn`` over ``events``' (key, event_id, ts, value)
+    rows grouped into ``_STATE_GROUPS`` key buckets."""
+    cols = events.select(key, "event_id", "ts", "value")
+    _require_int_key(cols, key, fn_name)
+    return (
+        cols.withColumn("__kb", F.pmod(F.hash(F.col(key)), F.lit(_STATE_GROUPS)))
+        .groupBy("__kb")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+_GAPFILL_STATE_SCHEMA = T.StructType(
     [
         T.StructField("keys", T.ArrayType(T.LongType())),
         T.StructField("last_buckets", T.ArrayType(T.LongType())),
@@ -619,34 +563,49 @@ def _merge_state(sk, old_vals, nk, new_vals):
     return (allk,) + tuple(out)
 
 
+def _packed_state(state: GroupState, *dtypes):
+    """A key bucket's carried state: its sorted int64 keys, then one
+    array per carried scalar (``dtypes``); empty before its first batch."""
+    import numpy as np
+
+    got = state.get if state.exists else [[]] * (len(dtypes) + 1)
+    return tuple(
+        np.asarray(a, dtype=d) for a, d in zip(got, (np.int64,) + dtypes)
+    )
+
+
+def _valued_rows(pdfs: Iterable[pd.DataFrame], key_col: str) -> pd.DataFrame:
+    """A key bucket's micro-batch rows, NULL/NaN values dropped, sorted
+    (key, ts, event_id). One chunk is the common case: skip the concat."""
+    chunks = list(pdfs)
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+    pdf = pdf[pdf["value"].notna()]
+    return pdf.sort_values([key_col, "ts", "event_id"], kind="mergesort")
+
+
 def _make_gapfill_bucket_fn(bucket_seconds: int, key_col: str):
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        """st09's fold over a KEY BUCKET: identical per-key recurrence
+        """st09's fold over a key bucket: the per-key recurrence
         (open-bucket LOCF, late rows below the frontier dropped), run
         segmented over every key in the bucket in one vectorized pass.
         The carried frontier row of each present key is injected as a
-        synthetic row sorted before its batch rows — exactly the
-        per-key form's ``concatenate(([last_b], b))`` prepend."""
+        synthetic row sorted before its batch rows. Within a key, the
+        (ts, event_id) sort makes bucket ids non-decreasing, the LAST
+        row of each bucket run wins, and every consecutive unique-bucket
+        pair (u_i, u_{i+1}) emits (u_{i+1}-u_i)/bs rows: the real u_i
+        row plus its holes."""
         import numpy as np
 
         bs = bucket_seconds
-        if state.exists:
-            g = state.get
-            sk = np.asarray(g[0], dtype=np.int64)
-            sb = np.asarray(g[1], dtype=np.int64)
-            sv = np.asarray(g[2], dtype=np.float64)
-        else:
-            sk = np.empty(0, dtype=np.int64)
-            sb = np.empty(0, dtype=np.int64)
-            sv = np.empty(0, dtype=np.float64)
-        chunks = list(pdfs)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        pdf = pdf[pdf["value"].notna()]
+        sk, sb, sv = _packed_state(state, np.int64, np.float64)
+        pdf = _valued_rows(pdfs, key_col)
         if len(pdf) == 0:
             yield _GAPFILL_EMPTY
             return
-        pdf = pdf.sort_values([key_col, "ts", "event_id"], kind="mergesort")
         uid = pdf[key_col].to_numpy(dtype=np.int64)
+        # normalize to us first — Arrow may deliver ns- OR us-resolution
+        # pandas timestamps depending on pyarrow/pandas versions, and a
+        # raw int64 view of a us series would shift buckets by 1000x
         ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
         b = (ts_us // (bs * 1_000_000)) * bs
         v = pdf["value"].astype("float64").to_numpy()
@@ -707,47 +666,28 @@ def _make_gapfill_bucket_fn(bucket_seconds: int, key_col: str):
 
 
 def streaming_gap_fill(
-    events: DataFrame,
-    bucket_seconds: int,
-    key: str = "user_id",
-    n_buckets: int | None = None,
+    events: DataFrame, bucket_seconds: int, key: str = "user_id"
 ) -> DataFrame:
     """w13's streaming form: per-key LOCF resampling as a custom
-    stateful operator (applyInPandasWithState) — emits one row per
-    bucket as soon as a later bucket is observed, holes filled with
-    the carried value. State is the open (bucket, value) per key, two
-    scalars whatever the volume. Drained in-order, the output equals
-    batch w13 minus each key's final (still-open) bucket row — exact
-    equivalence pinned in tests and the oracle gate.
+    stateful operator (applyInPandasWithState over key buckets, see the
+    ``_bucketed`` note) — emits one row per bucket as soon as a later
+    bucket is observed, holes filled with the carried value. State is
+    the open (bucket, value) per key, two scalars whatever the volume:
+    append mode cannot retract, so a bucket is emitted only once a later
+    one arrives. Drained in-order, the output equals batch w13 minus
+    each key's final (still-open) bucket row — exact equivalence pinned
+    in tests and the oracle gate.
 
-    ``n_buckets`` switches to key-bucketed batched state (see
-    ``_bucketed`` module note): same output, the per-group Python/Arrow
-    constant amortized over ~keys/n_buckets keys per state group.
+    Late-data policy (explicit, tested): a row whose bucket is below the
+    key's open bucket is DROPPED — its row is already final, the same
+    contract as the watermarked append-mode operators. In-order arrival
+    per key (Kafka per-key partitions; time-ordered file landing) is the
+    deployment assumption, as for st05's EWMA.
     """
-    cols = events.select(key, "event_id", "ts", "value")
-    _require_int_key(cols, key, "streaming_gap_fill")
-    if n_buckets is not None:
-        return (
-            cols.withColumn("__kb", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-            .groupBy("__kb")
-            .applyInPandasWithState(
-                _make_gapfill_bucket_fn(bucket_seconds, key),
-                outputStructType=_GAPFILL_SCHEMA,
-                stateStructType=_GAPFILL_BSTATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-    return (
-        cols
-        .groupBy(key)
-        .applyInPandasWithState(
-            _gapfill_fn_factory(bucket_seconds),
-            outputStructType=_GAPFILL_SCHEMA,
-            stateStructType=_GAPFILL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _bucketed_state(
+        events, key, "streaming_gap_fill",
+        _make_gapfill_bucket_fn(bucket_seconds, key),
+        _GAPFILL_SCHEMA, _GAPFILL_STATE_SCHEMA,
     )
 
 
@@ -765,47 +705,6 @@ _RATE_SCHEMA = T.StructType(
 
 _RATE_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("prev_t", T.LongType()),
-        T.StructField("prev_v", T.DoubleType()),
-    ]
-)
-
-
-def _rate_fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-    """w17's streaming fold: state is the previous sample (t, v) per
-    key — every arriving sample emits exactly one row whose rate
-    depends only on its predecessor, so the drained stream equals the
-    batch operator row-for-row (no open-frontier subtlety as in
-    st09). Same reset / zero-dt / NaN rules as the batch path."""
-    import math
-
-    prev_t = state.get[0] if state.exists else None
-    prev_v = state.get[1] if state.exists else None
-    pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-    out = []
-    uid = int(key[0])
-    for _, row in pdf.iterrows():
-        v = row["value"]
-        if pd.isna(v) or math.isnan(float(v)):
-            continue
-        v = float(v)
-        t = int(row["ts"].timestamp() * 1_000_000)
-        if prev_v is None:
-            rate, reset = None, False
-        else:
-            reset = v < prev_v
-            inc = v - prev_v if v >= prev_v else v
-            dt = t - prev_t
-            rate = inc / (dt / 1_000_000.0) if dt > 0 else None
-        out.append((uid, int(row["event_id"]), t, v, prev_v, reset, rate))
-        prev_t, prev_v = t, v
-    if prev_v is not None:
-        state.update((int(prev_t), float(prev_v)))
-    yield pd.DataFrame(out, columns=[f.name for f in _RATE_SCHEMA])
-
-
-_RATE_BSTATE_SCHEMA = T.StructType(
-    [
         T.StructField("keys", T.ArrayType(T.LongType())),
         T.StructField("prev_ts", T.ArrayType(T.LongType())),
         T.StructField("prev_vs", T.ArrayType(T.DoubleType())),
@@ -815,29 +714,18 @@ _RATE_BSTATE_SCHEMA = T.StructType(
 
 def _make_rate_bucket_fn(key_col: str):
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        """st10's fold over a key bucket, fully vectorized (the per-key
-        form's row loop replaced by a shift-within-segment): each row's
+        """st10's fold over a key bucket, fully vectorized (a shift
+        within each key segment, no row loop): each row's
         predecessor is the previous row of its key segment, seeded at
         segment starts from the carried (t, v); NaN prev marks
         'no predecessor' (values are NaN-filtered so a real prev is
         never NaN)."""
         import numpy as np
 
-        if state.exists:
-            g = state.get
-            sk = np.asarray(g[0], dtype=np.int64)
-            st_t = np.asarray(g[1], dtype=np.int64)
-            st_v = np.asarray(g[2], dtype=np.float64)
-        else:
-            sk = np.empty(0, dtype=np.int64)
-            st_t = np.empty(0, dtype=np.int64)
-            st_v = np.empty(0, dtype=np.float64)
-        chunks = list(pdfs)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        pdf = pdf[pdf["value"].notna()]
+        sk, st_t, st_v = _packed_state(state, np.int64, np.float64)
+        pdf = _valued_rows(pdfs, key_col)
         if len(pdf) == 0:
             return
-        pdf = pdf.sort_values([key_col, "ts", "event_id"], kind="mergesort")
         uid = pdf[key_col].to_numpy(dtype=np.int64)
         t = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
         v = pdf["value"].astype("float64").to_numpy()
@@ -885,42 +773,17 @@ def _make_rate_bucket_fn(key_col: str):
     return fn
 
 
-def streaming_counter_rates(
-    events: DataFrame, key: str = "user_id", n_buckets: int | None = None
-) -> DataFrame:
+def streaming_counter_rates(events: DataFrame, key: str = "user_id") -> DataFrame:
     """w17's streaming form (timeseries.counter_rates): per-sample
-    counter rate as a custom stateful operator — state is the previous
-    (t, v) per key, two scalars whatever the volume; each sample emits
-    exactly once. Drained in-order the output equals the batch
-    operator exactly (oracle-checked).
-
-    ``n_buckets`` switches to key-bucketed batched state (see
-    ``_bucketed`` module note) — same output, vectorized fold, the
-    per-group constant amortized over ~keys/n_buckets keys."""
-    cols = events.select(key, "event_id", "ts", "value")
-    _require_int_key(cols, key, "streaming_counter_rates")
-    if n_buckets is not None:
-        return (
-            cols.withColumn("__kb", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-            .groupBy("__kb")
-            .applyInPandasWithState(
-                _make_rate_bucket_fn(key),
-                outputStructType=_RATE_SCHEMA,
-                stateStructType=_RATE_BSTATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-    return (
-        cols
-        .groupBy(key)
-        .applyInPandasWithState(
-            _rate_fn,
-            outputStructType=_RATE_SCHEMA,
-            stateStructType=_RATE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    counter rate as a custom stateful operator over key buckets (see the
+    ``_bucketed`` note) — state is the previous (t, v) per key, two
+    scalars whatever the volume; each sample emits exactly once, and its
+    rate depends only on its predecessor, so drained in-order the output
+    equals the batch operator row-for-row (oracle-checked). Same reset /
+    zero-dt / NaN rules as the batch path."""
+    return _bucketed_state(
+        events, key, "streaming_counter_rates",
+        _make_rate_bucket_fn(key), _RATE_SCHEMA, _RATE_STATE_SCHEMA,
     )
 
 
@@ -937,54 +800,6 @@ _CUSUM_SCHEMA = T.StructType(
 
 _CUSUM_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("c", T.LongType()),
-        T.StructField("cmin", T.LongType()),
-    ]
-)
-
-
-def _make_cusum_fn(ref_us: int, k_us: int, threshold: float):
-    def _cusum_fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        """d14's streaming fold with a fixed reference: the prefix-min
-        closed form ``s_t = C_t - min(0, min_{j<=t} C_j)`` carries
-        across micro-batches as exactly TWO BIGINT scalars per key
-        (running deviation sum C and its running min). The fold is
-        numpy-vectorized (cumsum + minimum.accumulate); every row
-        emits exactly once, so the drained stream equals the batch
-        operator with the same ``ref`` row-for-row."""
-        import numpy as np
-
-        c0, cmin0 = (state.get if state.exists else (0, 0))
-        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        pdf = pdf[pdf["value"].notna()]
-        if len(pdf) == 0:
-            return
-        vus = np.floor(pdf["value"].to_numpy() * 1e6 + 0.5).astype(np.int64)
-        c_arr = c0 + np.cumsum(vus - ref_us - k_us)
-        cmin_arr = np.minimum(cmin0, np.minimum.accumulate(c_arr))
-        s_arr = c_arr - np.minimum(0, cmin_arr)
-        state.update((int(c_arr[-1]), int(cmin_arr[-1])))
-        cus = s_arr.astype(np.float64) / 1e6
-        yield pd.DataFrame(
-            {
-                "user_id": np.full(len(pdf), int(key[0]), dtype=np.int64),
-                # robust to ns- or us-resolution pandas timestamps
-                "ts_us": pdf["ts"]
-                .to_numpy()
-                .astype("datetime64[us]")
-                .astype(np.int64),
-                "event_id": pdf["event_id"].to_numpy(dtype=np.int64),
-                "value": pdf["value"].to_numpy(dtype=np.float64),
-                "cusum": cus,
-                "is_drift": cus > threshold,
-            }
-        )
-
-    return _cusum_fn
-
-
-_CUSUM_BSTATE_SCHEMA = T.StructType(
-    [
         T.StructField("keys", T.ArrayType(T.LongType())),
         T.StructField("cs", T.ArrayType(T.LongType())),
         T.StructField("cmins", T.ArrayType(T.LongType())),
@@ -994,28 +809,18 @@ _CUSUM_BSTATE_SCHEMA = T.StructType(
 
 def _make_cusum_bucket_fn(ref_us: int, k_us: int, threshold: float, key_col: str):
     def fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        """st11's fold over a key bucket: the same integer prefix-min
-        closed form, segmented by key — one global cumsum re-based at
+        """st11's fold over a key bucket: the integer prefix-min closed
+        form ``s_t = C_t - min(0, min_{j<=t} C_j)`` (C the running
+        deviation sum), segmented by key — one global cumsum re-based at
         segment starts plus a per-segment running min (pandas groupby
         cummin, C-vectorized), seeded from the packed carried (C, Cmin)
-        scalars. Bit-identical to the per-key form."""
+        scalars."""
         import numpy as np
 
-        if state.exists:
-            g = state.get
-            sk = np.asarray(g[0], dtype=np.int64)
-            sc = np.asarray(g[1], dtype=np.int64)
-            sm = np.asarray(g[2], dtype=np.int64)
-        else:
-            sk = np.empty(0, dtype=np.int64)
-            sc = np.empty(0, dtype=np.int64)
-            sm = np.empty(0, dtype=np.int64)
-        chunks = list(pdfs)
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        pdf = pdf[pdf["value"].notna()]
+        sk, sc, sm = _packed_state(state, np.int64, np.int64)
+        pdf = _valued_rows(pdfs, key_col)
         if len(pdf) == 0:
             return
-        pdf = pdf.sort_values([key_col, "ts", "event_id"], kind="mergesort")
         uid = pdf[key_col].to_numpy(dtype=np.int64)
         n = len(uid)
         vus = np.floor(pdf["value"].to_numpy() * 1e6 + 0.5).astype(np.int64)
@@ -1063,57 +868,28 @@ def streaming_cusum(
     threshold: float,
     key: str = "user_id",
     k: float = 0.0,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """d14's streaming form (detectors.cusum_drift with ``ref=``): the
     sequential drift score maintained live per key with O(1) state —
     two BIGINT scalars however many samples have streamed, vs the
     batch form's full-history window. A monitoring deployment seeds
     ``ref`` from a batch baseline (a06/a27) and gets the same exact
-    integer arithmetic the batch/oracle pair pins.
-
-    ``n_buckets`` switches to key-bucketed batched state (see
-    ``_bucketed`` module note) — same exact integers, the per-group
-    Python/Arrow constant amortized over ~keys/n_buckets keys."""
+    integer arithmetic the batch/oracle pair pins. State lives in key
+    buckets (see the ``_bucketed`` note); every row emits exactly once,
+    so the drained stream equals the batch operator row-for-row."""
     ref_us = int(round(ref * 1_000_000))
     kk_us = int(round(k * 1_000_000))
-    cols = events.select(key, "event_id", "ts", "value")
-    _require_int_key(cols, key, "streaming_cusum")
-    if n_buckets is not None:
-        return (
-            cols.withColumn("__kb", F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
-            .groupBy("__kb")
-            .applyInPandasWithState(
-                _make_cusum_bucket_fn(ref_us, kk_us, threshold, key),
-                outputStructType=_CUSUM_SCHEMA,
-                stateStructType=_CUSUM_BSTATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-    fn = _make_cusum_fn(ref_us, kk_us, threshold)
-    return (
-        cols
-        .groupBy(key)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_CUSUM_SCHEMA,
-            stateStructType=_CUSUM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _bucketed_state(
+        events, key, "streaming_cusum",
+        _make_cusum_bucket_fn(ref_us, kk_us, threshold, key),
+        _CUSUM_SCHEMA, _CUSUM_STATE_SCHEMA,
     )
 
 
-def streaming_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-static dimension enrichment — the stateless join every
-    monitoring/ingest pipeline runs (attach baselines, lookup tables,
-    model thresholds to a live feed).
+def streaming_enrich(stream: DataFrame, dim: DataFrame, on: list[str]) -> DataFrame:
+    """Stream-static dimension enrichment — the stateless inner join
+    every monitoring/ingest pipeline runs (attach baselines, lookup
+    tables, model thresholds to a live feed).
 
     Spark's stream-static join keeps NO state: each micro-batch of the
     stream is joined against the batch ``dim`` plan, which is
@@ -1121,16 +897,8 @@ def streaming_enrich(
     between triggers for free). The dim is pinned to a broadcast so the
     STREAM side never shuffles — the right plan whenever the dim is a
     genuine dimension (bounded: baselines, type stats, config).
-
-    ``how`` supports "inner" and "left" (stream side preserved); right/
-    full joins against a static side are not streamable by definition.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"streaming_enrich: how={how!r} — stream-static joins "
-            "support 'inner' and 'left' (stream side) only"
-        )
-    return stream.join(F.broadcast(dim), on=on, how=how)
+    return stream.join(F.broadcast(dim), on=on)
 
 
 def streaming_interval_join(
@@ -1199,7 +967,6 @@ def streaming_neardup_probe(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_family: str = "portable",
 ) -> DataFrame:
     """ST14 — ingest-time NEAR-dup detection: each arriving document is
     probed against a STANDING MinHash-LSH index of the already-ingested
@@ -1235,8 +1002,7 @@ def streaming_neardup_probe(
     num_hashes/bands, or re-verify emitted pairs exactly downstream.
 
     ``index`` must carry (id, signature, band, bucket) as built by
-    ``minhash_lsh_index`` with the SAME (num_hashes, bands, n,
-    hash_family).
+    ``minhash_lsh_index`` with the SAME (num_hashes, bands, n).
     """
     from ..operators.dedup import (
         _band_bucket_expr,
@@ -1244,9 +1010,7 @@ def streaming_neardup_probe(
         minhash_signatures,
     )
 
-    sigs = minhash_signatures(
-        docs, num_hashes, n, id_col, text_col, hash_family
-    )
+    sigs = minhash_signatures(docs, num_hashes, n, id_col, text_col)
     probe = sigs.select(
         F.col("id").alias("new_id"),
         F.col("signature").alias("new_sig"),
@@ -1256,7 +1020,7 @@ def streaming_neardup_probe(
                 lambda b: F.struct(
                     b.alias("band"),
                     _band_bucket_expr(
-                        _band_slice(F.col("signature"), b, bands), hash_family
+                        _band_slice(F.col("signature"), b, bands)
                     ).alias("bucket"),
                 ),
             )
@@ -1279,12 +1043,8 @@ def streaming_neardup_probe(
     first_match = F.array_min(
         F.filter(
             F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: _band_bucket_expr(
-                _band_slice(F.col("new_sig"), b, bands), hash_family
-            )
-            == _band_bucket_expr(
-                _band_slice(F.col("corpus_sig"), b, bands), hash_family
-            ),
+            lambda b: _band_bucket_expr(_band_slice(F.col("new_sig"), b, bands))
+            == _band_bucket_expr(_band_slice(F.col("corpus_sig"), b, bands)),
         )
     )
     matches = F.size(
@@ -1426,8 +1186,8 @@ def streaming_interval_coalesce(
     ``intervals`` must carry (key, start_us, end_us) with integer
     bounds; NULL-valued rows must be filtered upstream. Scale: the
     applyInPandasWithState per-GROUP Arrow constant dominates at many
-    keys — the key-bucketed batched-state pattern documented on
-    streaming_gap_fill applies unchanged if needed.
+    keys — the key-bucketed state of the ``_bucketed`` note applies
+    unchanged if needed.
 
     ``half_open=True`` uses the [start, end) convention — adjacent
     intervals do not merge — matching batch

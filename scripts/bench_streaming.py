@@ -153,19 +153,20 @@ def main():
         )
         print(json.dumps(drain_with_progress(hll, "st07_hll", workdir, n)))
 
-        # st09: per-key LOCF gap-fill — state is 2 scalars per key
+        # st09, st11, st10: the key-bucketed stateful folds — 2 scalars
+        # of state per key, packed into streams._STATE_GROUPS state groups
         gap = ST.streaming_gap_fill(
             stream_from(spark, land, template), bucket_seconds=300
         )
         print(json.dumps(drain_with_progress(gap, "st09_gap_fill", workdir, n)))
 
-        # st11: per-key CUSUM — state is 2 BIGINT scalars per key
+        # st11: CUSUM — 2 BIGINT scalars per key
         cus = ST.streaming_cusum(
             stream_from(spark, land, template), ref=35.0, threshold=1000.0
         )
         print(json.dumps(drain_with_progress(cus, "st11_cusum", workdir, n)))
 
-        # st10: per-sample counter rates — the remaining per-row form
+        # st10: per-sample counter rates — one output row per input row
         rat = ST.streaming_counter_rates(stream_from(spark, land, template))
         print(json.dumps(drain_with_progress(rat, "st10_rates", workdir, n)))
 
@@ -208,34 +209,6 @@ def main():
                 drain_with_progress(sij, "st13_interval_join", workdir, n)
             )
         )
-
-        # Key-bucketed batched-state twins (VERDICT r6 item 4): same
-        # outputs (equivalence pinned in tests/test_streaming.py), the
-        # per-group Python/Arrow constant amortized over ~keys/n_buckets
-        # keys. n_buckets is the executor-sizing dial — a few x total
-        # cores, NOT grown with key count.
-        nb = int(os.environ.get("SPARK_GRAFT_STREAM_BUCKETS", "64"))
-        gap_b = ST.streaming_gap_fill(
-            stream_from(spark, land, template), bucket_seconds=300, n_buckets=nb
-        )
-        r = drain_with_progress(gap_b, "st09b_gap_fill_bucketed", workdir, n)
-        r["n_buckets"] = nb
-        print(json.dumps(r))
-        cus_b = ST.streaming_cusum(
-            stream_from(spark, land, template),
-            ref=35.0,
-            threshold=1000.0,
-            n_buckets=nb,
-        )
-        r = drain_with_progress(cus_b, "st11b_cusum_bucketed", workdir, n)
-        r["n_buckets"] = nb
-        print(json.dumps(r))
-        rat_b = ST.streaming_counter_rates(
-            stream_from(spark, land, template), n_buckets=nb
-        )
-        r = drain_with_progress(rat_b, "st10b_rates_bucketed", workdir, n)
-        r["n_buckets"] = nb
-        print(json.dumps(r))
 
         # st04: streaming exact dedup over the DOCUMENTS feed — state is
         # one row per distinct content hash (32 B key + min-id + count;

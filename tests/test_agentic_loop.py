@@ -8,6 +8,7 @@ deterministically offline.
 
 import datetime as dt
 import json
+from pathlib import Path
 
 import pytest
 
@@ -20,6 +21,7 @@ from db_loganalyzer_spark.agentic import (
     knowledge_base_text,
     parse_llm_response,
     write_llm_input,
+    write_llm_output,
 )
 from db_loganalyzer_spark.agentic import tools as T
 
@@ -145,6 +147,27 @@ def test_llm_io_logger(tmp_path):
     assert p.endswith("llm_input_20240115T120000Z.txt")
     assert (tmp_path / "llm_input_20240115T120000Z.txt").read_text() == "prompt body"
     assert write_llm_input("", str(tmp_path)) is None
+
+
+def test_llm_io_logger_same_second_keeps_every_write(tmp_path):
+    """Two prompts and two answers in one second leave four files: the
+    first of each keeps the reference's name, the second takes ``_1``."""
+    fixed = dt.datetime(2024, 1, 15, 12, 0, 0, tzinfo=dt.timezone.utc)
+    paths = [
+        write_llm_input("prompt 1", str(tmp_path), now=lambda: fixed),
+        write_llm_input("prompt 2", str(tmp_path), now=lambda: fixed),
+        write_llm_output("answer 1", str(tmp_path), now=lambda: fixed),
+        write_llm_output("answer 2", str(tmp_path), now=lambda: fixed),
+    ]
+    assert [Path(p).name for p in paths] == [
+        "llm_input_20240115T120000Z.txt",
+        "llm_input_20240115T120000Z_1.txt",
+        "llm_output_20240115T120000Z.txt",
+        "llm_output_20240115T120000Z_1.txt",
+    ]
+    assert [Path(p).read_text() for p in paths] == [
+        "prompt 1", "prompt 2", "answer 1", "answer 2",
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -576,6 +576,41 @@ def test_load_without_trace_files_fails_closed(spark, tmp_path, capsys, content,
         spark.catalog.setCurrentDatabase("default")
 
 
+@pytest.mark.parametrize("name", ["a-b", "x;DROP", "ünï", "1db", ""])
+def test_database_must_be_an_identifier(monkeypatch, capsys, name):
+    """``--database`` is spliced into SQL unquoted: anything but
+    [A-Za-z_][A-Za-z0-9_]* exits 2 with a message from argparse, before
+    any session starts."""
+    def no_session(args):
+        raise AssertionError("a session started")
+
+    monkeypatch.setattr(cli, "_spark", no_session)
+    with pytest.raises(SystemExit) as exit_:
+        cli.main(["--database", name, "stats"])
+    assert exit_.value.code == 2
+    assert "is not a database name" in capsys.readouterr().err
+
+
+def test_db_path_with_quote_is_escaped(spark, tmp_path, capsys):
+    """A ``--db`` path holding ``'`` stays one SQL string literal in every LOCATION: init creates the database there,
+    and a later command re-attaches a table directory found under it."""
+    wh = tmp_path / "it's wh"
+    db = "cli_quoted_path"
+    base = ["--db", str(wh), "--database", db]
+    try:
+        assert cli.main(base + ["init"]) == 0
+        loc = wh / f"{db}.db"
+        assert loc.is_dir()
+        spark.range(3).write.parquet(str(loc / "extra"))
+        assert cli.main(base + ["query", "SELECT COUNT(*) AS n FROM extra"]) == 0
+        assert "\n|3  |\n" in capsys.readouterr().out
+        got = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.extra").collect()
+        where = {r[0]: r[1] for r in got}["Location"]
+        assert where.endswith(f"{db}.db/extra") and "it's wh" in where
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+
+
 # ---------------------------------------------------------------------------
 # stats and rollup: one scan each. ``stats`` collects one GROUPING SETS
 # aggregate and renders its four sections as DataFrame.show did; ``rollup``

@@ -140,11 +140,11 @@ def test_portable_hash_triple_engine_contract(spark, strings):
         assert got[s] == want == duck, (s, got[s], want, duck)
 
 
-@pytest.mark.parametrize("family", ["portable", "xxhash64"])
+@pytest.mark.parametrize("family", ["portable"])
 def test_minhash_lsh_finds_near_dups(spark, docs, family):
     got = {(r.id_a, r.id_b) for r in
            DD.minhash_lsh_dedup(docs, threshold=0.3, num_hashes=16, bands=8,
-                                n=2, hash_family=family).collect()}
+                                n=2).collect()}
     # exact duplicates are always caught (identical signatures)
     assert (0, 1) in got
     # verified jaccard means no false positives vs exact
@@ -153,7 +153,7 @@ def test_minhash_lsh_finds_near_dups(spark, docs, family):
     assert got <= exact
 
 
-@pytest.mark.parametrize("family", ["portable", "xxhash64"])
+@pytest.mark.parametrize("family", ["portable"])
 def test_minhash_estimate_verify_invariants(spark, docs, family):
     """verify='estimate' replaces the exact-Jaccard verify join with the
     MinHash component-match estimator (never shuffles shingle arrays —
@@ -162,17 +162,14 @@ def test_minhash_estimate_verify_invariants(spark, docs, family):
     (same banding); the whole pipeline is deterministic (no RNG)."""
     est = {(r.id_a, r.id_b): r.jaccard for r in
            DD.minhash_lsh_dedup(docs, threshold=0.3, num_hashes=16,
-                                bands=8, n=2, hash_family=family,
-                                verify="estimate").collect()}
+                                bands=8, n=2, verify="estimate").collect()}
     assert est[(0, 1)] == 1.0
     cands = {(r.id_a, r.id_b) for r in DD.minhash_lsh_candidates(
-        DD.minhash_signatures(docs, 16, 2, hash_family=family),
-        bands=8, hash_family=family).collect()}
+        DD.minhash_signatures(docs, 16, 2), bands=8).collect()}
     assert set(est) <= cands
     again = {(r.id_a, r.id_b): r.jaccard for r in
              DD.minhash_lsh_dedup(docs, threshold=0.3, num_hashes=16,
-                                  bands=8, n=2, hash_family=family,
-                                  verify="estimate").collect()}
+                                  bands=8, n=2, verify="estimate").collect()}
     assert est == again
 
 
@@ -249,17 +246,16 @@ def test_minhash_hybrid_verify(spark, sf_dir):
         assert abs(j - exact[p]) < 1e-12  # true Jaccard, not an estimate
 
 
-@pytest.mark.parametrize("family", ["portable", "xxhash64"])
+@pytest.mark.parametrize("family", ["portable"])
 def test_simhash_invariants(spark, docs, family):
     fps = {r.id: r.simhash for r in
-           DD.simhash(docs, hash_family=family).collect()}
+           DD.simhash(docs).collect()}
     assert fps[0] == fps[1]  # identical normalized token sets
     ham02 = bin(fps[0] ^ fps[2]).count("1")
     ham03 = bin(fps[0] ^ fps[3]).count("1")
     assert ham02 < ham03  # near dup closer than unrelated doc
     pairs = {(r.id_a, r.id_b) for r in
-             DD.simhash_near_dups(docs, max_hamming=0,
-                                  hash_family=family).collect()}
+             DD.simhash_near_dups(docs, max_hamming=0).collect()}
     assert (0, 1) in pairs
 
 
@@ -2142,8 +2138,8 @@ def test_weighted_priority_sample_deterministic_and_biased(spark):
 
 def test_salted_join_equals_plain_join(spark):
     """J13 equivalence contract: salted (key, salt) join is row-for-row
-    the plain join — inner drops dim-less fact keys, left keeps them as
-    nulls — and the hot key's fact rows genuinely spread across salts."""
+    the plain inner join — dim-less fact keys drop — and the hot key's
+    fact rows genuinely spread across salts."""
     from db_loganalyzer_spark.operators.joins import salted_join
 
     fact = spark.createDataFrame(
@@ -2154,21 +2150,16 @@ def test_salted_join_equals_plain_join(spark):
     dim = spark.createDataFrame(
         [(1, "hot"), (2, "a"), (3, "b"), (4, "c")], "k long, tag string"
     )
-    for how in ("inner", "left"):
-        got = salted_join(
-            fact, dim, "k", "k", salt_from=["row_id"], salt_parts=4, how=how
-        )
-        got_rows = sorted(
-            (r["row_id"], r["v"], r["tag"])
-            for r in got.select("row_id", "v", "tag").collect()
-        )
-        want_rows = sorted(
-            (r["row_id"], r["v"], r["tag"])
-            for r in fact.join(dim, "k", how)
-            .select("row_id", "v", "tag")
-            .collect()
-        )
-        assert got_rows == want_rows, how
+    got = salted_join(fact, dim, "k", "k", salt_from=["row_id"], salt_parts=4)
+    got_rows = sorted(
+        (r["row_id"], r["v"], r["tag"])
+        for r in got.select("row_id", "v", "tag").collect()
+    )
+    want_rows = sorted(
+        (r["row_id"], r["v"], r["tag"])
+        for r in fact.join(dim, "k").select("row_id", "v", "tag").collect()
+    )
+    assert got_rows == want_rows
     # the hot key (40 fact rows) must occupy more than one salt bucket
     n_salts = (
         fact.filter("k = 1")
@@ -2177,13 +2168,6 @@ def test_salted_join_equals_plain_join(spark):
         .count()
     )
     assert n_salts > 1
-
-
-def test_salted_join_rejects_unsupported_how():
-    from db_loganalyzer_spark.operators.joins import salted_join
-
-    with pytest.raises(ValueError):
-        salted_join(None, None, "k", "k", salt_from=["x"], how="full")
 
 
 def test_choose_salt_parts_rule_pins():
@@ -2272,12 +2256,6 @@ def test_salted_join_same_key_name_selectable(spark):
     assert out.columns.count("k") == 1
     got = sorted((r["k"], r["row_id"], r["tag"]) for r in out.collect())
     assert got == [(1, 1, "a"), (1, 2, "a"), (2, 3, "b")]
-    # left join: dim-less fact keys keep the FACT side's key value
-    left = salted_join(
-        fact, dim, "k", "k", salt_from=["row_id"], salt_parts=3, how="left"
-    )
-    got_left = sorted((r["k"], r["row_id"], r["tag"]) for r in left.collect())
-    assert got_left == [(1, 1, "a"), (1, 2, "a"), (2, 3, "b"), (7, 4, None)]
 
 
 def test_wav_codec_roundtrip_golden_and_errors():

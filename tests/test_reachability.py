@@ -1,7 +1,8 @@
 """Every top-level function and class in the package is reached from an
-entry point, or is on an allowlist that says why it stays; and every
-on/off or optional-branch parameter is set by a caller outside the
-tests, or is on an allowlist that says why it stays.
+entry point, or is on an allowlist that says why it stays; every on/off
+or optional-branch parameter is set by a caller outside the tests, and
+every value a string selector tests for is passed by a caller outside
+the tests, or the parameter is on an allowlist that says why it stays.
 
 The scan is pure ``ast`` (no imports, no Spark), name-based and closed
 over the package:
@@ -31,6 +32,15 @@ when a call in a root or in package code passes it by keyword or by
 position; calls match by bare name (a class name calls its
 ``__init__``), a method's positions count past ``self``, and a call
 with ``*args`` or ``**kwargs`` sets every parameter. Tests do not count.
+
+The selector scan covers every parameter of a package function or
+method (same exceptions) whose default is a string and that the
+function compares (``==``, ``!=``, ``in``, ``not in``) with string
+literals. Each compared literal other than the default must be passed
+as that literal by a call in a root or in package code: a
+``param="literal"`` keyword in any call, or the literal at the
+parameter's position in a call by the function's name. A selector with
+a value no such call passes is listed. Tests do not count.
 """
 
 from __future__ import annotations
@@ -118,6 +128,15 @@ OPTIONS_ALLOWED = {
         f"{_OF}: coalesce_intervals(half_open=) (w22)",
 }
 
+# String selectors with a compared value no root or package call passes
+# as a literal, keyed like OPTIONS_ALLOWED, with the reason they stay.
+SELECTORS_ALLOWED = {
+    "operators.multimodal.encode_jpeg(subsampling)":
+        f"{_OA}: the 4:2:0 fixture for decode_jpeg's real-world chroma path",
+    "sources.sinks.export_result(format)":
+        "the CLI passes it through from argparse choices (cli export --format)",
+}
+
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
@@ -183,19 +202,21 @@ def _is_option(default) -> bool:
     )
 
 
-def _options(fn) -> list[tuple[str, int | None]]:
-    """(name, position or None for keyword-only) of each parameter of
-    ``fn`` defaulted to True, False or None."""
+def _defaulted(fn) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, position or None for keyword-only, default) of each
+    parameter of ``fn`` that has a default."""
     a = fn.args
     pos = a.posonlyargs + a.args
     first = len(pos) - len(a.defaults)
-    out = [
-        (arg.arg, first + i)
-        for i, (arg, d) in enumerate(zip(pos[first:], a.defaults))
-        if _is_option(d)
-    ]
-    out += [(arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if _is_option(d)]
+    out = [(arg.arg, first + i, d) for i, (arg, d) in enumerate(zip(pos[first:], a.defaults))]
+    out += [(arg.arg, None, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
     return out
+
+
+def _options(fn) -> list[tuple[str, int | None]]:
+    """(name, position or None for keyword-only) of each parameter of
+    ``fn`` defaulted to True, False or None."""
+    return [(name, i) for name, i, d in _defaulted(fn) if _is_option(d)]
 
 
 def _functions(node: ast.AST, prefix: str = "", cls: str | None = None):
@@ -211,13 +232,14 @@ def _functions(node: ast.AST, prefix: str = "", cls: str | None = None):
             yield from _functions(child, prefix, cls)
 
 
-def _option_defs():
-    """(key, location, call names, self offset, options) for every
-    package function or method with an option, outside ``ALLOWED``."""
+def _package_functions():
+    """(function node, key, location, call names, self offset) for every
+    package function or method outside ``ALLOWED``: a call reaches it by
+    its name (a class name calls its ``__init__``), and a method's
+    positions count past ``self``."""
     for module, rel, tree in _modules():
         for fn, qual, cls in _functions(tree):
-            opts = _options(fn)
-            if not opts or f"{module}.{qual.split('.')[0]}" in ALLOWED:
+            if f"{module}.{qual.split('.')[0]}" in ALLOWED:
                 continue
             static = any(
                 isinstance(d, ast.Name) and d.id == "staticmethod"
@@ -226,7 +248,15 @@ def _option_defs():
             names = {fn.name} | ({cls} if cls and fn.name == "__init__" else set())
             offset = 1 if cls and not static else 0
             where = f"{PACKAGE.name}/{rel}:{fn.lineno}"
-            yield f"{module}.{qual}", where, names, offset, opts
+            yield fn, f"{module}.{qual}", where, names, offset
+
+
+def _option_defs():
+    """(key, location, call names, self offset, options) for every
+    package function or method with an option, outside ``ALLOWED``."""
+    for fn, key, where, names, offset in _package_functions():
+        if opts := _options(fn):
+            yield key, where, names, offset, opts
 
 
 def _calls(paths) -> dict[str, list[tuple[int, set[str], bool, Path]]]:
@@ -270,6 +300,98 @@ def unset_options() -> dict[str, tuple]:
         for param, pos in opts
         if not _setters(code, names, offset, param, pos)
     }
+
+
+_COMPARE_OPS = (ast.Eq, ast.NotEq, ast.In, ast.NotIn)
+
+
+def _str_literals(node: ast.AST) -> set[str]:
+    """The string constants ``node`` is, or holds as a tuple/list/set."""
+    items = node.elts if isinstance(node, (ast.Tuple, ast.List, ast.Set)) else [node]
+    return {
+        e.value for e in items if isinstance(e, ast.Constant) and isinstance(e.value, str)
+    }
+
+
+def _compared_literals(fn, param: str) -> set[str]:
+    """The string literals ``fn`` compares ``param`` with."""
+    out = set()
+    for n in ast.walk(fn):
+        if not isinstance(n, ast.Compare) or not all(isinstance(o, _COMPARE_OPS) for o in n.ops):
+            continue
+        sides = [n.left, *n.comparators]
+        if any(isinstance(x, ast.Name) and x.id == param for x in sides):
+            for x in sides:
+                out |= _str_literals(x)
+    return out
+
+
+def _selectors(fn) -> list[tuple[str, int | None, str]]:
+    """(name, position or None for keyword-only, default) of each
+    parameter of ``fn`` defaulted to a string."""
+    return [
+        (name, i, d.value)
+        for name, i, d in _defaulted(fn)
+        if isinstance(d, ast.Constant) and isinstance(d.value, str)
+    ]
+
+
+def _passed_literals(paths) -> tuple[dict, dict]:
+    """(keyword -> string literals passed by it in any call; call name ->
+    list of the string literal or None at each position) over ``paths``."""
+    by_kw: dict[str, set[str]] = {}
+    by_pos: dict[str, list[list]] = {}
+    for path in paths:
+        for n in ast.walk(_parse(path)):
+            if not isinstance(n, ast.Call):
+                continue
+            for k in n.keywords:
+                if k.arg is not None:
+                    by_kw.setdefault(k.arg, set()).update(_str_literals(k.value))
+            f = n.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is not None:
+                by_pos.setdefault(name, []).append([
+                    a.value if isinstance(a, ast.Constant) and isinstance(a.value, str) else None
+                    for a in n.args
+                ])
+    return by_kw, by_pos
+
+
+def unpassed_selectors() -> dict[str, tuple[str, list[str]]]:
+    """``{"<module>.<function>(<param>)": (location, values)}`` for every
+    string selector with compared values no root or package call passes."""
+    by_kw, by_pos = _passed_literals(_roots() | set(PACKAGE.rglob("*.py")))
+    found = {}
+    for fn, key, where, names, offset in _package_functions():
+        for param, pos, default in _selectors(fn):
+            passed = set(by_kw.get(param, ()))
+            if pos is not None:
+                passed.update(
+                    args[pos - offset]
+                    for name in names
+                    for args in by_pos.get(name, ())
+                    if 0 <= pos - offset < len(args) and args[pos - offset]
+                )
+            if missing := sorted(_compared_literals(fn, param) - {default} - passed):
+                found[f"{key}({param})"] = (where, missing)
+    return found
+
+
+def test_every_selector_value_is_passed_or_allowed():
+    found = unpassed_selectors()
+    new = sorted(set(found) - set(SELECTORS_ALLOWED))
+    stale = sorted(set(SELECTORS_ALLOWED) - set(found))
+    assert not new, (
+        "string selectors that test for a value no entry point or package "
+        "call passes (delete the value with its branch, or allowlist the "
+        "parameter with a reason):\n"
+        + "\n".join(f"  {found[k][0]} {k}: {', '.join(map(repr, found[k][1]))}" for k in new)
+    )
+    assert not stale, (
+        "allowlisted but now passed or gone (drop from SELECTORS_ALLOWED):\n"
+        + "\n".join(f"  {k}" for k in stale)
+    )
 
 
 def test_every_option_is_set_or_allowed():

@@ -445,22 +445,26 @@ def test_streaming_cusum_state_crosses_batches(spark, tmp_path, tmp_path_factory
 
 
 # ---------------------------------------------------------------------------
-# Key-bucketed batched state (VERDICT r6 item 4): the n_buckets forms of
-# st09/st10/st11 must be bit-identical to the per-key forms across
-# micro-batch boundaries — n_buckets chosen SMALLER than the key count so
-# every state group actually holds several keys, exercising the packed
-# arrays, the segmented folds, and the carried-state merge.
+# Key-bucketed state: st09/st10/st11 drained across micro-batch
+# boundaries must equal their batch operators, which are the independent
+# reference. The source holds MORE keys than streams._STATE_GROUPS, so at
+# least one state group packs several keys, exercising the packed arrays,
+# the segmented folds, and the carried-state merge.
 # ---------------------------------------------------------------------------
+
+_LATE_KEY, _LATE_EID = 3, 9100
 
 
 @pytest.fixture(scope="module")
 def bucketed_src(spark, tmp_path_factory):
-    """Two landed files (= two micro-batches), 7 keys, with the nasty
-    rows on purpose: NULL/NaN values, counter resets, equal-ts ties,
-    same-bucket duplicates, a key appearing in only one batch, and a
-    LATE row below a key's frontier."""
+    """Two landed files (= two micro-batches), 40 keys, with the nasty
+    rows on purpose: NULL and NaN values, counter resets, equal-ts ties,
+    same-bucket duplicates, a key missing from each batch, and a LATE
+    row below a key's frontier."""
     import datetime as dtm
     import os
+
+    from db_loganalyzer_spark.streaming.streams import _STATE_GROUPS
 
     schema = "event_id long, ts timestamp, user_id long, value double"
     src = str(tmp_path_factory.mktemp("bucketed_src") / "src")
@@ -469,21 +473,33 @@ def bucketed_src(spark, tmp_path_factory):
     def t(s):
         return dtm.datetime(2024, 1, 1, 0, 0, 0) + dtm.timedelta(seconds=s)
 
+    n_keys = _STATE_GROUPS + 8
     b1, b2, eid = [], [], 0
-    for u in range(7):
-        for s, v in [(2, 10.0), (14, 12.0 + u), (14, None), (27, 9.0)]:
+    for u in range(n_keys - 1):
+        for s, v in [(2, 10.0), (14, 12.0 + u), (14, None), (20, float("nan")),
+                     (27, 9.0)]:
             eid += 1
             b1.append((eid, t(s + u), u, v))
     # key 2: same-bucket duplicate + equal-ts tie in batch 1
     b1 += [(9001, t(3 + 2), 2, 11.0), (9002, t(2 + 2), 2, 10.5)]
-    for u in range(6):  # key 6 absent from batch 2
+    # the next-to-last key is absent from batch 2, the last from batch 1
+    for u in [*range(n_keys - 2), n_keys - 1]:
         for s, v in [(41, 30.0), (55, 3.0), (55 + 1, 3.0)]:
             eid += 1
             b2.append((eid, t(s + u), u, v))
-    b2.append((9100, t(1), 3, 99.0))  # late: below key 3's frontier
+    b2.append((_LATE_EID, t(1), _LATE_KEY, 99.0))  # below key 3's frontier
     spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/b1")
     spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{src}/b2")
-    return src, schema
+    batch = spark.read.schema(schema).option(
+        "recursiveFileLookup", "true"
+    ).parquet(src)
+    per_group = (
+        batch.select("user_id").distinct()
+        .groupBy(F.pmod(F.hash("user_id"), F.lit(_STATE_GROUPS)))
+        .count()
+    )
+    assert per_group.agg(F.max("count")).first()[0] >= 2
+    return src, schema, batch
 
 
 def _mk_stream(spark, src, schema):
@@ -500,123 +516,105 @@ def _drained_rows(spark, df, name, tmp_path_factory):
 
     ck = str(tmp_path_factory.mktemp(f"ck_{name}"))
     out = run_available_now(df, name, ck)
-    cols = out.columns
-    return sorted(
-        tuple(None if v is None else v for v in (r[c] for c in cols))
-        for r in out.collect()
-    )
+    return sorted(tuple(r) for r in out.collect())
+
+
+def _valued(batch):
+    """The stateful stream folds drop NULL and NaN values."""
+    return batch.filter(F.col("value").isNotNull() & ~F.isnan("value"))
 
 
 def test_bucketed_gap_fill_equals_per_key(spark, bucketed_src, tmp_path_factory):
+    """Per key, the drained stream equals batch gap_fill less the key's
+    final (still-open) bucket. The late row is dropped by the stream's
+    documented policy, so the reference input drops it too and every
+    key, the late one included, is compared."""
+    from db_loganalyzer_spark.operators.timeseries import gap_fill
     from db_loganalyzer_spark.streaming import streaming_gap_fill
 
-    src, schema = bucketed_src
-    per_key = _drained_rows(
+    src, schema, batch = bucketed_src
+    got = _drained_rows(
         spark,
         streaming_gap_fill(_mk_stream(spark, src, schema), 10),
-        "gf_perkey",
-        tmp_path_factory,
-    )
-    bucketed = _drained_rows(
-        spark,
-        streaming_gap_fill(_mk_stream(spark, src, schema), 10, n_buckets=3),
         "gf_bucketed",
         tmp_path_factory,
     )
-    assert bucketed == per_key and len(per_key) > 20
+    ref = gap_fill(
+        _valued(batch).filter(F.col("event_id") != _LATE_EID), 10, ["user_id"]
+    )
+    last = ref.groupBy("user_id").agg(F.max("bucket").alias("last"))
+    want = sorted(
+        tuple(r)
+        for r in ref.join(last, "user_id")
+        .filter(F.col("bucket") < F.col("last"))
+        .select("user_id", "bucket", "value", "is_gap")
+        .collect()
+    )
+    assert got == want and len(want) > 200
 
 
 def test_bucketed_cusum_equals_per_key_and_batch(
     spark, bucketed_src, tmp_path_factory
 ):
+    """The drained stream equals the batch closed form with the same
+    fixed ref for every key whose rows arrived in ts order (the late
+    key is excluded: the stream folds in ARRIVAL order — the documented
+    in-order deployment assumption — while batch sorts globally by ts)."""
     from db_loganalyzer_spark.detectors.detectors import cusum_drift
     from db_loganalyzer_spark.streaming import streaming_cusum
 
-    src, schema = bucketed_src
-    per_key = _drained_rows(
+    src, schema, batch = bucketed_src
+    got = _drained_rows(
         spark,
         streaming_cusum(_mk_stream(spark, src, schema), ref=10.0, threshold=6.0),
-        "cu_perkey",
-        tmp_path_factory,
-    )
-    bucketed = _drained_rows(
-        spark,
-        streaming_cusum(
-            _mk_stream(spark, src, schema), ref=10.0, threshold=6.0, n_buckets=3
-        ),
         "cu_bucketed",
         tmp_path_factory,
     )
-    assert bucketed == per_key and len(per_key) > 20
-    # and both equal the batch closed form for every key whose rows
-    # arrived in ts order (key 3 has the deliberate out-of-order row:
-    # the stream folds in ARRIVAL order — the documented in-order
-    # deployment assumption — while batch sorts globally by ts)
-    batch = spark.read.schema(schema).option(
-        "recursiveFileLookup", "true"
-    ).parquet(src)
     want = sorted(
-        (r["user_id"], r["ts_us"], r["event_id"], r["value"], r["cusum"],
-         r["is_drift"])
-        for r in cusum_drift(
-            batch, "value", ["user_id"], threshold=6.0, ref=10.0
-        )
+        tuple(r)
+        for r in cusum_drift(batch, "value", ["user_id"], threshold=6.0, ref=10.0)
         .select("user_id", "ts_us", "event_id", "value", "cusum", "is_drift")
         .collect()
-        if r["user_id"] != 3
     )
-    got = sorted(
-        (r[0], r[1], r[2], r[3], r[4], r[5]) for r in bucketed if r[0] != 3
-    )
-    assert got == want and len(want) > 15
+    drop_late = [r for r in got if r[0] != _LATE_KEY]
+    assert drop_late == [r for r in want if r[0] != _LATE_KEY]
+    assert len(drop_late) > 200
 
 
 def test_bucketed_counter_rates_equals_per_key(
     spark, bucketed_src, tmp_path_factory
 ):
+    """The drained stream equals batch counter_rates over the valued
+    rows, row for row, for every key but the late one (arrival order,
+    as for cusum)."""
+    import math
+
+    from db_loganalyzer_spark.operators.timeseries import counter_rates
     from db_loganalyzer_spark.streaming import streaming_counter_rates
 
-    src, schema = bucketed_src
-    per_key = _drained_rows(
+    src, schema, batch = bucketed_src
+    got = _drained_rows(
         spark,
         streaming_counter_rates(_mk_stream(spark, src, schema)),
-        "cr_perkey",
-        tmp_path_factory,
-    )
-    bucketed = _drained_rows(
-        spark,
-        streaming_counter_rates(_mk_stream(spark, src, schema), n_buckets=3),
         "cr_bucketed",
         tmp_path_factory,
     )
-
-    def canon(rows):
-        # NaN != NaN would fail tuple equality; fold NaN/None together
-        # (the per-key form emits None via pandas object columns where
-        # the vectorized form emits NaN — same null semantics post-sink)
-        import math
-
-        return [
-            tuple(
-                None
-                if v is None or (isinstance(v, float) and math.isnan(v))
-                else v
-                for v in r
-            )
-            for r in rows
-        ]
-
-    # The equivalence above relies on the sink masking float NaN to SQL
-    # NULL; pin that masking itself so a future Arrow/sink change that
-    # starts preserving NaN (making the two forms genuinely diverge)
-    # fails here instead of slipping through the canon() fold.
-    import math
-
-    for rows in (per_key, bucketed):
-        assert not any(
-            isinstance(v, float) and math.isnan(v) for r in rows for v in r
-        ), "sink leaked a float NaN — NULL-masking contract broken"
-    assert canon(bucketed) == canon(per_key) and len(per_key) > 20
+    # The fold emits NaN for "no predecessor / no rate"; equality with
+    # the batch operator's NULLs relies on the sink masking float NaN to
+    # SQL NULL. Pin that masking itself so a future Arrow/sink change
+    # that starts preserving NaN fails here.
+    assert not any(
+        isinstance(v, float) and math.isnan(v) for r in got for v in r
+    ), "sink leaked a float NaN — NULL-masking contract broken"
+    want = sorted(
+        tuple(r)
+        for r in counter_rates(_valued(batch), "value", ["user_id"]).collect()
+    )
+    drop_late = [r for r in got if r[0] != _LATE_KEY]
+    assert drop_late == [r for r in want if r[0] != _LATE_KEY]
+    assert len(drop_late) > 200
+    assert any(r[5] for r in drop_late)  # resets seen
+    assert any(r[6] is None and r[4] is not None for r in drop_late)  # zero dt
 
 
 def test_streaming_enrich_matches_batch(
@@ -645,14 +643,6 @@ def test_streaming_enrich_matches_batch(
         map(tuple, want.collect())
     )
     assert got.count() == events_batch.count()  # inner join, dim covers all
-
-
-def test_streaming_enrich_rejects_unstreamable_how(spark, events_stream):
-    from db_loganalyzer_spark.streaming import streaming_enrich
-
-    dim = spark.range(3).select(F.col("id").alias("event_type"))
-    with pytest.raises(ValueError, match="stream-static"):
-        streaming_enrich(events_stream, dim, on=["event_type"], how="right")
 
 
 def test_streaming_interval_join_rejects_empty_keys(spark, events_stream):
