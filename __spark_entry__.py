@@ -52,6 +52,7 @@ from db_loganalyzer_spark.operators import filters as FL
 from db_loganalyzer_spark.operators import joins as J
 from db_loganalyzer_spark.operators import windows as W
 from db_loganalyzer_spark.operators.aggregates import davg, dsum
+from db_loganalyzer_spark.session import hold, hold_checkpoint
 from db_loganalyzer_spark.sources import tables
 from db_loganalyzer_spark.sources.tables import load_table
 from db_loganalyzer_spark import streaming as ST
@@ -3791,7 +3792,7 @@ def s04_preprocessed_load(spark, sf_dir):
         json.dump(rows, f)
     try:
         ev = load_preprocessed_events(spark, path)
-        ev = ev.localCheckpoint(eager=True)  # detach from the temp file
+        ev = hold_checkpoint(ev)  # detach from the temp file
     finally:
         os.unlink(path)
     return ev.select(
@@ -6483,7 +6484,7 @@ def pipe02_neardup_corpus(spark, sf_dir):
     kept = docs.join(
         quality_gate(docs).filter(F.col("keep")).select("doc_id"), "doc_id"
     )
-    pairs = minhash_lsh_dedup(
+    pairs = hold(minhash_lsh_dedup(
         kept,
         threshold=0.5,
         num_hashes=32,
@@ -6491,7 +6492,7 @@ def pipe02_neardup_corpus(spark, sf_dir):
         n=2,
         verify="hybrid",
         estimate_margin=11 / 32,
-    ).persist()
+    ))
     comps = dedup_components(pairs)
     reps = dedup_representatives(
         kept, pairs, quality_score("text"), components=comps

@@ -18,14 +18,10 @@ deterministic and is what this module re-expresses Spark-first:
   sweep, then detectors, timeline, RAG (L5), gated LLM call (L3) and
   hotspot dive); the LLM and the retriever are injectable callables so
   the loop is fully testable offline.
-- Storage ownership: ``PhasedInvestigationAgent.investigate`` persists its
-  input (and the metric baselines it derives) once on entry and releases
-  them on exit, error included, together with the ``localCheckpoint``
-  that ``rollback_analysis`` takes over an input of several partitions;
-  it leaves no storage behind and never frees the caller's. The tools,
-  detectors and formatter it calls are lazy over that one cached frame,
-  so the loop's Spark jobs do not each re-read and re-parse the trace
-  text.
+- Storage ownership: ``PhasedInvestigationAgent.investigate`` is one
+  ``session.held()`` scope holding its input, over which the tools,
+  detectors and formatter are lazy, so its jobs do not each re-parse
+  the trace text.
 - One partition, no exchanges: parsed trace text of an investigation's
   size is cached as ONE partition (AQE coalesces it), but Spark plans it
   as hash-partitioned, so every aggregate, whole-frame window and sort
@@ -79,11 +75,11 @@ from datetime import datetime, timezone
 from functools import reduce
 from pathlib import Path
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, DoubleType, TimestampType
 
+from ..session import held, hold
 from ..sources.trace_logs import py_float
 from .timeline import version_lag
 
@@ -611,30 +607,24 @@ _CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitionin
 _CACHED_PARTITIONING_LOCK = threading.Lock()
 
 
-def _own(df: DataFrame, owned: list[DataFrame]) -> DataFrame:
-    """Persist ``df`` and record it in ``owned`` for release, unless the
-    caller already holds it in storage.
-
-    By default Spark caches a plan without AQE's final-stage partition
-    coalescing, so a cached shuffle output (such as the per-file line
-    numbering of parsed trace text) keeps every raw shuffle partition,
-    most of them empty, and every later job runs a task per partition.
-    The plan is cached with that coalescing on instead (the setting is
-    read when the cache entry is made), so the cache holds the coalesced
+def _own(df: DataFrame) -> DataFrame:
+    """``hold(df)`` with AQE's final-stage partition coalescing kept in
+    the cached plan. By default Spark caches a plan without it, so a
+    cached shuffle output (such as the per-file line numbering of parsed
+    trace text) keeps every raw shuffle partition, most of them empty,
+    and every later job runs a task per partition. The setting is read
+    when the cache entry is made, so the cache holds the coalesced
     partitions that the uncached plan's jobs read."""
-    if df.storageLevel == StorageLevel.NONE:
-        conf = df.sparkSession.conf
-        # serialised so that concurrent investigations on one session each
-        # restore the value that was set before any of them
-        with _CACHED_PARTITIONING_LOCK:
-            prev = conf.get(_CACHED_PARTITIONING)
-            conf.set(_CACHED_PARTITIONING, "true")
-            try:
-                df = df.persist()
-            finally:
-                conf.set(_CACHED_PARTITIONING, prev)
-        owned.append(df)
-    return df
+    conf = df.sparkSession.conf
+    # serialised so that concurrent investigations on one session each
+    # restore the value that was set before any of them
+    with _CACHED_PARTITIONING_LOCK:
+        prev = conf.get(_CACHED_PARTITIONING)
+        conf.set(_CACHED_PARTITIONING, "true")
+        try:
+            return hold(df)
+        finally:
+            conf.set(_CACHED_PARTITIONING, prev)
 
 
 def _read_stored(df: DataFrame) -> DataFrame:
@@ -647,18 +637,6 @@ def _read_stored(df: DataFrame) -> DataFrame:
     Asking for the partition count fills the cache: it runs the jobs the
     frame's first reader would otherwise run, and no more."""
     return df.coalesce(1) if df._jdf.rdd().getNumPartitions() == 1 else df
-
-
-def _checkpoint_rdds(df: DataFrame) -> dict:
-    """The RDDs behind the ``LogicalRDD`` leaves of ``df``'s analyzed
-    plan (a ``localCheckpoint`` is one), by RDD id."""
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    rdds = [
-        leaf.rdd()
-        for leaf in (leaves.apply(i) for i in range(leaves.size()))
-        if leaf.nodeName() == "LogicalRDD"
-    ]
-    return {rdd.id(): rdd for rdd in rdds}
 
 
 def _detector_results(
@@ -743,12 +721,8 @@ class PhasedInvestigationAgent:
     ``rag(query: str) -> str | None`` is the optional retriever. Both are
     plain callables so the whole loop is deterministic offline.
 
-    ``investigate`` owns its input's storage: it persists ``events`` on
-    entry and the metric baselines it derives from them, and, in a
-    ``finally`` on exit, unpersists both and releases any
-    ``localCheckpoint`` under ``rollback_analysis``'s frames. An
-    ``events`` frame the caller passes in already persisted or
-    checkpointed is neither re-persisted nor released.
+    ``investigate`` owns its storage (see its docstring); an input the
+    caller already stored stays the caller's.
     """
 
     def __init__(
@@ -772,27 +746,13 @@ class PhasedInvestigationAgent:
         self.sleep = sleep
 
     def investigate(self, events: DataFrame, question: str) -> InvestigationResult:
-        """Run the phased loop over ``events``, holding it (and the derived
-        baselines) in storage for the loop's lifetime, so its Spark jobs
-        read the input from the block manager instead of each re-running
-        its lineage (for a trace file, the whole parse)."""
-        owned: list[DataFrame] = []
-        try:
-            return self._loop(_own(events, owned), question, owned)
-        finally:
-            keep = _checkpoint_rdds(events)  # the caller's own checkpoints
-            for df in owned:
-                df.unpersist()
-                for rdd_id, rdd in _checkpoint_rdds(df).items():
-                    if rdd_id not in keep:
-                        rdd.unpersist(False)
+        """Run the phased loop over ``events`` in a ``held()`` scope that
+        holds it and the derived baselines, so its Spark jobs read the input
+        from the block manager, not each re-running its lineage (the parse)."""
+        with held():
+            return self._loop(_own(events), question)
 
-    def _loop(
-        self,
-        events: DataFrame,
-        question: str,
-        owned: list[DataFrame],
-    ) -> InvestigationResult:
+    def _loop(self, events: DataFrame, question: str) -> InvestigationResult:
         from ..detectors import detectors as D
         from ..sources.trace_logs import derive_event_metrics
         from . import tools as T
@@ -838,12 +798,9 @@ class PhasedInvestigationAgent:
         additional.append(("global_summary", summary))
         tools_used.append("scanner.global_summary")
         rb = D.rollback_analysis(events)
-        owned.append(rb["summary"])  # released with its localCheckpoint
         event_metrics = derive_event_metrics(events)
         # counted below, then read by two detectors
-        baselines = _own(
-            D.metric_baselines_table(events, event_metrics, min_count=20), owned
-        )
+        baselines = _own(D.metric_baselines_table(events, event_metrics, min_count=20))
         # The rollback summary is collected first, on its own. The job
         # that first parses ``fields`` pays one-time costs that two
         # concurrent broadcast stages of one union would each pay; the

@@ -25,10 +25,8 @@ pass, where the investigation has filled the cache before its first
 tool runs). ``get_uncovered`` with no limit collects every bucket of
 its heatmap unordered and ranks them on the driver: two jobs over
 several partitions, where a range-partitioned sort ran four. With a
-limit, the buckets are ranked by Spark's top-k. Each call re-runs its
-input's lineage; none of these tools caches its input. A caller that
-runs many of them over one frame (the phased investigation) persists
-that frame once itself.
+limit, the buckets are ranked by Spark's top-k. No tool stores its
+input: a caller that runs many over one frame holds it (``session.py``).
 """
 
 from __future__ import annotations

@@ -45,6 +45,16 @@ def _identifier(name: str) -> str:
     return name
 
 
+def _warehouse_dir(path: str) -> str:
+    """argparse type of ``--db``, checked before any session starts: Spark
+    cannot re-attach tables under a path with a backslash (PATH_NOT_FOUND)."""
+    if "\\" in path:
+        raise argparse.ArgumentTypeError(
+            f"{path!r} holds a backslash, which table locations do not resolve"
+        )
+    return path
+
+
 def _spark(args) -> SparkSession:
     from .session import get_spark
 
@@ -374,6 +384,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--db",
         default="spark-warehouse",
+        type=_warehouse_dir,
         help="warehouse directory (default: spark-warehouse)",
     )
     p.add_argument("--database", default="loganalyzer", type=_identifier)

@@ -28,6 +28,8 @@ import warnings
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import hold, hold_checkpoint
+
 
 class CloneQuadraticWarning(UserWarning):
     """The uncapped shingle inverted index is about to self-join a hot
@@ -379,22 +381,20 @@ def ngram_jaccard_pairs(
     estimate of the uncapped value. Default None keeps the exact
     semantics the DuckDB oracle checks.
 
-    On the capped path the EXPLODED (id, shingle) index is persisted
-    (in-query only, rebuilt every run): the index is referenced by the
-    hot-shingle aggregate, the sizes aggregate, and both self-join
-    sides, and ``word_shingles`` is an interpreted higher-order
-    expression (~1.2 ms/doc) — without the persist those sub-DAGs each
-    re-run it (event-log attribution: 4 x ~650-870 task-seconds per
-    entry at 500k docs, bench_data/probe_heavy_r14.jsonl for
-    m13/m14/m08c/t14). The exploded rows are what is cached — skinny
-    (long, string) rows dictionary-compress in the columnar cache;
-    caching the pre-explode ARRAY frame instead was measured 2.7-3.1x
-    WORSE (t14 96->303 s, m13 117->311 s at 500k docs): complex-typed
-    cache batches at the session's 65536-row batch size balloon the
-    heap and the build GC-thrashes. Eviction is left to LRU like the
-    uncapped guard persist below; at 100 TB this cache is
-    O(corpus tokens) and spills to disk — the recompute-vs-storage
-    trade is the same one the dedup fixpoint makes for its edge list.
+    On the capped path the EXPLODED (id, shingle) index is persisted: it
+    is referenced by the hot-shingle aggregate, the sizes aggregate, and
+    both self-join sides, and ``word_shingles`` is an interpreted
+    higher-order expression (~1.2 ms/doc) — without the persist those
+    sub-DAGs each re-run it (event-log attribution: 4 x ~650-870
+    task-seconds per entry at 500k docs, bench_data/probe_heavy_r14.jsonl
+    for m13/m14/m08c/t14). The exploded rows are what is cached — skinny
+    (long, string) rows dictionary-compress in the columnar cache; caching
+    the pre-explode ARRAY frame instead was measured 2.7-3.1x WORSE (t14
+    96->303 s, m13 117->311 s at 500k docs): complex-typed cache batches
+    at the session's 65536-row batch size balloon the heap and the build
+    GC-thrashes. At 100 TB this cache is O(corpus tokens) and spills to
+    disk — the recompute-vs-storage trade is the same one the dedup
+    fixpoint makes for its edge list.
 
     On the uncapped path this call is EAGER: the clone-skew guard runs
     one Spark job (max shingle doc-freq) at plan-construction time. The
@@ -406,27 +406,15 @@ def ngram_jaccard_pairs(
         F.explode(word_shingles(text_col, n)).alias("shingle"),
     )
     if max_doc_freq is not None:
-        # capped path: persist the EXPLODED index once (docstring
-        # above). Skinny (id, shingle) rows cache as dictionary-
-        # compressed columnar batches; caching the pre-explode ARRAY
-        # frame instead was measured 2.7-3.1x WORSE at 500k docs
-        # (t14 96->303 s, m13 117->311 s): complex-typed cache batches
-        # at the session's 65536-row batch size balloon the heap and
-        # the build GC-thrashes. Same exploded-persist pattern as the
-        # uncapped guard below.
-        if not sh.isStreaming:
-            sh = sh.persist()
+        sh = hold(sh)  # the EXPLODED index, once (docstring above)
         hot = _hot_shingles(sh, max_doc_freq)
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
     else:
         # Runtime guard (VERDICT r6 item 5): one map-side-combinable agg
         # over the index the pipeline builds anyway — cheap next to the
         # self-join it is protecting, and it only runs on the uncapped
-        # exact-oracle path that should never see clone-heavy data. The
-        # persist makes the guard's job materialize the index once for
-        # both the guard AND the returned plan (left to LRU eviction —
-        # eager unpersist would undo exactly that reuse).
-        sh = sh.persist()
+        # exact-oracle path that should never see clone-heavy data.
+        sh = hold(sh)
         row = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -488,13 +476,9 @@ def shingle_containment_pairs(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(text_col, n)).alias("shingle"),
     )
-    if not sh.isStreaming:
-        # the index feeds the hot/sizes aggregates and both self-join
-        # sides — persist the EXPLODED rows once (see
-        # ngram_jaccard_pairs: same interpreted-HOF recompute, same
-        # in-query LRU trade, and the same measured rejection of
-        # caching the pre-explode array frame)
-        sh = sh.persist()
+    # the EXPLODED index feeds the hot/sizes aggregates and both
+    # self-join sides (the persist of ngram_jaccard_pairs' docstring)
+    sh = hold(sh)
     if max_doc_freq is not None:
         hot = _hot_shingles(sh, max_doc_freq)
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
@@ -804,9 +788,7 @@ def minhash_lsh_dedup(
     /root reg100 probe). With it, only candidate docs' arrays — bounded
     by the LSH collision count, orders of magnitude smaller than the
     corpus — ever reach a shuffle; AQE broadcast-converts the pruned
-    sides when they are small enough. The persist is intentionally left
-    to Spark's LRU eviction (the frame is tiny; unpersisting eagerly
-    would re-trigger the pipeline if the caller re-executes the plan)."""
+    sides when they are small enough."""
     if verify not in ("exact", "estimate", "hybrid"):
         raise ValueError(
             f"minhash_lsh_dedup: verify={verify!r} "
@@ -816,8 +798,8 @@ def minhash_lsh_dedup(
     if verify != "exact":
         # signatures feed BOTH the banding pipeline and both verify join
         # sides; persist so the (shingle -> minhash) work runs once.
-        sigs = sigs.persist()
-    cands = minhash_lsh_candidates(sigs, bands).persist()
+        sigs = hold(sigs)
+    cands = hold(minhash_lsh_candidates(sigs, bands))
     if verify != "exact":
         est_ids = (
             cands.select(F.col("id_a").alias("id"))
@@ -847,10 +829,9 @@ def minhash_lsh_dedup(
         # shingle arrays are ever shuffled for exact verification.
         if estimate_margin is None:
             estimate_margin = 4.0 * (0.25 / num_hashes) ** 0.5
-        cands = (
+        cands = hold(
             est.filter(F.col("jaccard") >= threshold - estimate_margin)
             .select("id_a", "id_b")
-            .persist()
         )
     cand_ids = (
         cands.select(F.col("id_a").alias("id"))
@@ -1055,7 +1036,7 @@ def dedup_components(
     # shingle self-join) re-executes per round — measured 45s for a 4.9s
     # pipeline at sf0.1. The edge list is the iteration's working set and
     # is bounded by the near-dup pair count, far smaller than the corpus.
-    edges = edges.localCheckpoint(eager=True)
+    edges = hold_checkpoint(edges)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -1065,11 +1046,11 @@ def dedup_components(
         nbr = edges.join(
             cur.withColumnRenamed("id", "src"), "src"
         ).select(F.col("dst").alias("id"), "component_id")
-        nxt = (
+        nxt = hold_checkpoint(
             cur.unionByName(nbr)
             .groupBy("id")
             .agg(F.min("component_id").alias("component_id"))
-        ).localCheckpoint(eager=True)
+        )
         moved = (
             nxt.alias("n")
             .join(cur.alias("o"), "id")

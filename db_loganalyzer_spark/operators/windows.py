@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import hold_checkpoint
+
 
 class GlobalOrderWarning(UserWarning):
     """An operator was asked for a whole-frame (no partition key) window:
@@ -349,7 +351,7 @@ def _range_sorted(df: DataFrame, order: list, num_partitions: int | None) -> Dat
     """``df`` range-partitioned and sorted on ``order``, with its range
     partition id as ``__pid``.
 
-    localCheckpoint(eager) pins ONE physical partitioning: the
+    The eager checkpoint pins ONE physical partitioning: the
     RangePartitioner samples with a seed derived from the per-execution
     RDD id, so without materialization the carry collect and every later
     execution of the returned DataFrame would each re-sample — different
@@ -360,7 +362,7 @@ def _range_sorted(df: DataFrame, order: list, num_partitions: int | None) -> Dat
         if num_partitions
         else df.repartitionByRange(*order)
     )
-    part = part.sortWithinPartitions(*order).localCheckpoint(eager=True)
+    part = hold_checkpoint(part.sortWithinPartitions(*order))
     return part.withColumn("__pid", F.spark_partition_id())
 
 

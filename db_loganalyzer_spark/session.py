@@ -27,13 +27,23 @@ depends on (measured on a 4-core host, one cold pass of ``perfbench``'s
   py4j round trips with it and 6,998 without. Trade-off: a DataFrame
   error's query context loses the Python call site; the Python
   traceback is unchanged.
+
+Cached storage has one rule: code that stores a frame for reuse takes
+the storage through :func:`hold` (``persist``) or :func:`hold_checkpoint`
+(``localCheckpoint``), and the innermost open :func:`held` scope of the
+calling context, the frame's reader, releases it on exit. With no scope
+open it stays until Spark's LRU evicts it. ``tables.cache_tables`` pins
+tables for the process's lifetime outside this rule.
 """
 
 from __future__ import annotations
 
+import contextvars
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -83,3 +93,43 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# the release callbacks of the innermost open held() scope of each context
+_SCOPE: contextvars.ContextVar[list | None] = contextvars.ContextVar("held", default=None)
+
+
+def _register(df: DataFrame, release) -> DataFrame:
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(release)
+    return df
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """``df`` persisted until the enclosing :func:`held` scope exits;
+    returned as is when it is streaming or already stored (the caller's)."""
+    if df.isStreaming or df.storageLevel != StorageLevel.NONE:
+        return df
+    return _register(df.persist(), df.unpersist)
+
+
+def hold_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``; :func:`held` frees its RDD, the
+    returned frame's one ``LogicalRDD``."""
+    df = df.localCheckpoint(eager=True)
+    return _register(df, lambda: df._jdf.queryExecution().analyzed().rdd().unpersist(False))
+
+
+@contextmanager
+def held():
+    """On exit, error included, release newest first what :func:`hold`
+    and :func:`hold_checkpoint` took in this scope, not in a nested one."""
+    scope: list = []
+    token = _SCOPE.set(scope)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for release in reversed(scope):
+            release()

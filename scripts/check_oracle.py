@@ -90,7 +90,7 @@ def main():
             only.update(s for s in a.split(",") if s)
 
     import __spark_entry__ as mod
-    from db_loganalyzer_spark.session import get_spark
+    from db_loganalyzer_spark.session import get_spark, held
 
     unknown = only - set(mod.queries())
     if unknown:
@@ -116,7 +116,8 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with held():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {e}")

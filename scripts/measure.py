@@ -49,6 +49,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from bench import DUCKDB_TABLES, HEADLINE
+from db_loganalyzer_spark.session import held
 
 # Known-quadratic entries, skipped by default (pass --skip "" to force):
 # the scale dirs make_scale_data.py builds are N verbatim replicas of
@@ -67,17 +68,17 @@ def _noop_write(df) -> None:
 def run_entry(spark, sf_dir, name, fn, act=_noop_write, stages=False):
     """Run ``act`` on the DataFrame ``fn`` builds, under the job group
     ``name``; return ``({"query", "sec"[, "error"][, "stages"]}, act's
-    result)``. An exception is recorded, not raised. For ``stages`` the
-    listener bus is drained first, so the status store has seen every
-    job. Afterwards every RDD still held is unpersisted: several dedup/LSH operators
-    persist intermediates and leave eviction to LRU, which a long sweep
-    would otherwise accumulate."""
+    result)``. An exception is recorded, not raised. The entry is built
+    and run in one ``held()`` scope, which releases the storage it took.
+    For ``stages`` the listener bus is drained first, so the status store
+    has seen every job."""
     sc = spark.sparkContext
     sc.setJobGroup(name, name)
     t0 = time.time()
     out, err = None, None
     try:
-        out = act(fn(spark, sf_dir))
+        with held():
+            out = act(fn(spark, sf_dir))
     except Exception as e:  # record and keep sweeping
         err = f"{type(e).__name__}: {str(e)[:200]}"
     rec = {"query": name, "sec": round(time.time() - t0, 2)}
@@ -87,8 +88,6 @@ def run_entry(spark, sf_dir, name, fn, act=_noop_write, stages=False):
     if stages:
         sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
         rec["stages"] = stage_rows(spark, name)[:MAX_STAGES]
-    for rdd in list(sc._jsc.getPersistentRDDs().values()):
-        rdd.unpersist(False)
     return rec, out
 
 

@@ -60,5 +60,12 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def persistent_rdds(spark):
+    """A callable: the ids of the RDDs the session holds in storage now."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

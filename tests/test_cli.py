@@ -354,12 +354,8 @@ def _snapshot(spark, db, like):
     return {t: _rows(spark.table(f"{db}.{t}"), like[t].columns) for t in CORE}
 
 
-def _persistent_rdds(spark):
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-
 @pytest.fixture(scope="module")
-def generated_roundtrip(tmp_path_factory, spark):
+def generated_roundtrip(tmp_path_factory, spark, persistent_rdds):
     """init, ``load DIR --mode overwrite`` under a test-owned job group,
     then the default (append) ``load`` of one more file; the tables after
     each load, the overwrite load's job count and the persistent RDDs it
@@ -372,14 +368,14 @@ def generated_roundtrip(tmp_path_factory, spark):
     group = "test_cli.generated_load"
     try:
         assert cli.main(base + ["init"]) == 0
-        before = _persistent_rdds(spark)
+        before = persistent_rdds()
         sc.setJobGroup(group, "one overwrite load of the generated corpus")
         try:
             assert cli.main(base + ["load", logs, "--mode", "overwrite"]) == 0
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        residue = _persistent_rdds(spark) - before
+        residue = persistent_rdds() - before
         want1 = TL.ingest(spark, batch1)
         after1 = _snapshot(spark, db, want1)
         max1 = spark.table(f"{db}.events").agg(F.max("event_id")).first()[0]
@@ -589,6 +585,21 @@ def test_database_must_be_an_identifier(monkeypatch, capsys, name):
         cli.main(["--database", name, "stats"])
     assert exit_.value.code == 2
     assert "is not a database name" in capsys.readouterr().err
+
+
+def test_db_path_with_backslash_is_rejected(monkeypatch, capsys, tmp_path):
+    """Spark creates a database under a ``--db`` path holding ``\\``, but
+    every later command fails ``PATH_NOT_FOUND`` on its table directories:
+    such a path exits 2 with a message from argparse, before any session
+    starts."""
+    def no_session(args):
+        raise AssertionError("a session started")
+
+    monkeypatch.setattr(cli, "_spark", no_session)
+    with pytest.raises(SystemExit) as exit_:
+        cli.main(["--db", str(tmp_path / "a\\b"), "stats"])
+    assert exit_.value.code == 2
+    assert "holds a backslash" in capsys.readouterr().err
 
 
 def test_db_path_with_quote_is_escaped(spark, tmp_path, capsys):

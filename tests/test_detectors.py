@@ -192,35 +192,33 @@ def test_rollback_analysis_matches_per_column_windows(spark):
     assert s.num_resets == want["resets"].count()
     assert s.num_recovery_resets == want["recovery_regressions"].count()
 
-def test_rollback_analysis_releases_input_persists(spark, log_events):
+def test_rollback_analysis_releases_input_persists(persistent_rdds, log_events):
     """Persist hygiene (VERDICT r13 item 8): rollback_analysis persists
     its narrow parsed frame only to share the parse across the stitched
     scan's eager construction jobs; it must be unpersisted before it
     returns. The only storage residue allowed is the scan's own
     localCheckpoint (one scan for all three version columns), which the
     returned frames read from."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = persistent_rdds()
     out = D.rollback_analysis(log_events)
     out["summary"].collect()
-    after = set(jsc.getPersistentRDDs().keySet().toArray())
+    after = persistent_rdds()
     # new residue == the one eager localCheckpoint; the versions persist
     # would make this 2
     assert len(after - before) == 1
 
 
-def test_rollback_analysis_one_partition_leaves_no_storage(spark, log_events):
+def test_rollback_analysis_one_partition_leaves_no_storage(persistent_rdds, log_events):
     """Over an input planned as one partition the stitched scan is one
     lazy plain window: rollback_analysis persists nothing (no versions
     frame, no localCheckpoint) and returns the same rows as over the
     multi-partition input."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = persistent_rdds()
     got = D.rollback_analysis(log_events.coalesce(1))
     got_rows = {k: sorted(df.collect()) for k, df in got.items()}
     # no new persistent RDD; ids may leave the set meanwhile, when
     # Spark's ContextCleaner unpersists what earlier tests dropped
-    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+    assert persistent_rdds() - before == set()
     want = D.rollback_analysis(log_events)
     for k, df in want.items():
         assert got_rows[k] == sorted(df.collect()), k

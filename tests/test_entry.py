@@ -18,10 +18,17 @@ def test_registry_well_formed():
 
 
 @pytest.mark.slow
-def test_all_queries_run_sf0001(spark, sf_dir):
+def test_all_queries_run_sf0001(spark, sf_dir, persistent_rdds):
+    """Every entry runs, and, built and counted in its own held() scope,
+    leaves no new persistent RDD behind."""
+    from db_loganalyzer_spark.session import held
+
+    before = persistent_rdds()
     for name, fn in entry_mod.queries().items():
-        df = fn(spark, sf_dir)
-        assert df.count() >= 0, name
+        with held():
+            df = fn(spark, sf_dir)
+            assert df.count() >= 0, name
+        assert persistent_rdds() - before == set(), name
 
 
 def test_registry_md_matches_generator():

@@ -15,6 +15,7 @@ import re
 import pytest
 
 import __spark_entry__ as entry_mod
+from db_loganalyzer_spark.session import held
 from db_loganalyzer_spark.sources import tables
 
 
@@ -26,9 +27,12 @@ def plan_str(spark, df, mode: str = "formatted") -> str:
 
 @pytest.fixture()
 def cold_cache():
+    """No pinned tables, and the storage an entry's build takes is
+    released after the test (a plan-only build never fills it)."""
     saved = dict(tables._CACHE)
     tables._CACHE.clear()
-    yield
+    with held():
+        yield
     tables._CACHE.clear()
     tables._CACHE.update(saved)
 

@@ -232,16 +232,12 @@ def _sideband_llm(prompt):
     })
 
 
-def _persistent_rdds(spark):
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-
-def _investigation(spark, events, group, llm=_sideband_llm, max_iterations=6):
+def _investigation(persistent_rdds, events, group, llm=_sideband_llm, max_iterations=6):
     """One investigate over ``events`` under a test-owned job group: its
     result, the status store's name (the call site) of each of its jobs
     and the persistent RDDs it left behind."""
-    sc = spark.sparkContext
-    before = _persistent_rdds(spark)
+    sc = events.sparkSession.sparkContext
+    before = persistent_rdds()
     sc.setJobGroup(group, "one investigation")
     try:
         res = PhasedInvestigationAgent(llm, max_iterations=max_iterations).investigate(
@@ -253,7 +249,7 @@ def _investigation(spark, events, group, llm=_sideband_llm, max_iterations=6):
     ssc.listenerBus().waitUntilEmpty(60_000)
     store = ssc.statusStore()
     jobs = [store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup(group)]
-    return res, jobs, _persistent_rdds(spark) - before
+    return res, jobs, persistent_rdds() - before
 
 
 def _assert_job_budget(jobs, budget):
@@ -263,8 +259,8 @@ def _assert_job_budget(jobs, budget):
 
 
 @pytest.fixture(scope="module")
-def sideband_investigation(spark, clogged_sideband):
-    return _investigation(spark, clogged_sideband, "test_scenarios.sideband_investigation")
+def sideband_investigation(persistent_rdds, clogged_sideband):
+    return _investigation(persistent_rdds, clogged_sideband, "test_scenarios.sideband_investigation")
 
 
 def test_sideband_investigation_job_budget(sideband_investigation):
@@ -297,12 +293,12 @@ def _unsure_llm(prompt):
     })
 
 
-def test_sideband_multi_iteration_job_budget(spark, clogged_sideband):
+def test_sideband_multi_iteration_job_budget(persistent_rdds, clogged_sideband):
     """A low-confidence LLM keeps the loop running to ``max_iterations``.
     The detectors run on the first phase-B iteration only, so each later
     iteration costs its dive and LLM gate, not the detector suite again."""
     res, jobs, residue = _investigation(
-        spark, clogged_sideband, "test_scenarios.sideband_multi_iteration",
+        persistent_rdds, clogged_sideband, "test_scenarios.sideband_multi_iteration",
         llm=_unsure_llm, max_iterations=4,
     )
     assert res.iterations == 4
@@ -316,7 +312,7 @@ def test_sideband_multi_iteration_job_budget(spark, clogged_sideband):
     assert len(residue) == 0
 
 
-def test_sideband_prompts_carry_each_block_once(spark, clogged_sideband, monkeypatch):
+def test_sideband_prompts_carry_each_block_once(persistent_rdds, clogged_sideband, monkeypatch):
     """Six low-confidence iterations: the LLM context gets the detectors
     block once and a timeline block only when the timeline changed, so
     no prompt repeats evidence. The loop's path is the same as when every
@@ -347,7 +343,7 @@ def test_sideband_prompts_carry_each_block_once(spark, clogged_sideband, monkeyp
         return _unsure_llm(prompt)
 
     res, jobs, residue = _investigation(
-        spark, clogged_sideband, "test_scenarios.sideband_six_iterations", llm=llm
+        persistent_rdds, clogged_sideband, "test_scenarios.sideband_six_iterations", llm=llm
     )
     assert res.iterations == 6
     assert res.tools_used == (
@@ -383,7 +379,7 @@ def test_sideband_investigation_releases_its_storage(
     assert clogged_sideband.storageLevel == StorageLevel.NONE
 
 
-def test_investigation_releases_storage_when_llm_fails(spark, clogged_sideband):
+def test_investigation_releases_storage_when_llm_fails(persistent_rdds, clogged_sideband):
     from pyspark import StorageLevel
 
     held = []
@@ -392,48 +388,46 @@ def test_investigation_releases_storage_when_llm_fails(spark, clogged_sideband):
         held.append(clogged_sideband.storageLevel)
         raise RuntimeError("connection reset by peer")  # not a quota error
 
-    before = _persistent_rdds(spark)
+    before = persistent_rdds()
     with pytest.raises(RuntimeError, match="connection reset"):
         PhasedInvestigationAgent(broken_llm, max_iterations=6).investigate(
             clogged_sideband, "What is the root cause of this incident?"
         )
     # the input was held in storage while the loop ran, and released after
     assert held and held[0] != StorageLevel.NONE
-    assert len(_persistent_rdds(spark) - before) == 0
+    assert len(persistent_rdds() - before) == 0
     assert clogged_sideband.storageLevel == StorageLevel.NONE
 
 
-def test_investigation_leaves_caller_storage_alone(spark, clogged_sideband):
+def test_investigation_leaves_caller_storage_alone(spark, persistent_rdds, clogged_sideband):
     from pyspark import StorageLevel
 
     from db_loganalyzer_spark.agentic.investigation import _CACHED_PARTITIONING, _own
+    from db_loganalyzer_spark.session import held
 
     setting = spark.conf.get(_CACHED_PARTITIONING)
-    owned = []
     cached = clogged_sideband.persist()
     try:
-        assert _own(cached, owned) is cached and owned == []
+        with held():
+            assert _own(cached) is cached
+        assert cached.storageLevel != StorageLevel.NONE  # not released
     finally:
         cached.unpersist()
-    fresh = _own(clogged_sideband, owned)
-    try:
-        assert owned == [fresh]
-        assert fresh.storageLevel != StorageLevel.NONE
-    finally:
-        fresh.unpersist()
+    with held():
+        assert _own(clogged_sideband).storageLevel != StorageLevel.NONE
     assert clogged_sideband.storageLevel == StorageLevel.NONE
     assert spark.conf.get(_CACHED_PARTITIONING) == setting  # restored
 
     # A caller's localCheckpointed input keeps its checkpoint: investigate
     # releases only the checkpoint rollback_analysis made (phase A).
-    before = _persistent_rdds(spark)
+    before = persistent_rdds()
     checkpointed = clogged_sideband.localCheckpoint()
-    kept = _persistent_rdds(spark)
+    kept = persistent_rdds()
     try:
         PhasedInvestigationAgent(_sideband_llm, max_iterations=1).investigate(
             checkpointed, "What is the root cause of this incident?"
         )
-        assert _persistent_rdds(spark) == kept
+        assert persistent_rdds() == kept
         assert checkpointed.count() == clogged_sideband.count()
     finally:
         rdds = spark.sparkContext._jsc.getPersistentRDDs()
@@ -586,9 +580,9 @@ def test_rollbacks_rag_query_names_the_evidence(spark, clog_with_rollbacks):
     assert "rollback_analysis" in q
 
 
-def test_rollbacks_investigation_job_budget(spark, clog_with_rollbacks):
+def test_rollbacks_investigation_job_budget(persistent_rdds, clog_with_rollbacks):
     res, jobs, residue = _investigation(
-        spark, clog_with_rollbacks, "test_scenarios.rollbacks_investigation"
+        persistent_rdds, clog_with_rollbacks, "test_scenarios.rollbacks_investigation"
     )
     assert res.iterations == 2
     _assert_job_budget(jobs, ROLLBACKS_JOB_BUDGET)
@@ -706,9 +700,9 @@ def test_pressure_timeline_marks_lag_escalation(spark, storage_pressure):
     assert i100 < i1m
 
 
-def test_pressure_investigation_job_budget(spark, storage_pressure):
+def test_pressure_investigation_job_budget(persistent_rdds, storage_pressure):
     res, jobs, residue = _investigation(
-        spark, storage_pressure, "test_scenarios.pressure_investigation"
+        persistent_rdds, storage_pressure, "test_scenarios.pressure_investigation"
     )
     assert res.iterations == 2
     _assert_job_budget(jobs, PRESSURE_JOB_BUDGET)
@@ -768,7 +762,7 @@ TRACE_PROMPT_DIGESTS = ["f8ebf95d343c858fce326ebee228a79cbd23aba14acdac2826f3db6
 TRACE_JOB_BUDGET = 29
 
 
-def test_trace_file_investigation_one_partition(spark, rollbacks_trace_files):
+def test_trace_file_investigation_one_partition(spark, persistent_rdds, rollbacks_trace_files):
     from db_loganalyzer_spark.sources.trace_logs import read_trace_events
 
     prompts = []
@@ -783,7 +777,7 @@ def test_trace_file_investigation_one_partition(spark, rollbacks_trace_files):
 
     events = read_trace_events(spark, rollbacks_trace_files, per_file_offsets=True)
     res, jobs, residue = _investigation(
-        spark, events, "test_scenarios.trace_file_investigation", llm=llm
+        persistent_rdds, events, "test_scenarios.trace_file_investigation", llm=llm
     )
     assert prompts == TRACE_PROMPT_DIGESTS
     assert res.iterations == 2
@@ -798,7 +792,7 @@ def test_trace_file_investigation_one_partition(spark, rollbacks_trace_files):
 
 
 def test_trace_file_investigation_without_iterations_runs_no_job(
-    spark, rollbacks_trace_files
+    spark, persistent_rdds, rollbacks_trace_files
 ):
     """With no iteration to run, investigate does not even ask how many
     partitions its stored input holds: no Spark job, nothing left stored."""
@@ -806,7 +800,7 @@ def test_trace_file_investigation_without_iterations_runs_no_job(
 
     events = read_trace_events(spark, rollbacks_trace_files, per_file_offsets=True)
     res, jobs, residue = _investigation(
-        spark, events, "test_scenarios.trace_file_no_iterations", max_iterations=0
+        persistent_rdds, events, "test_scenarios.trace_file_no_iterations", max_iterations=0
     )
     assert res.iterations == 0 and res.tools_used == []
     assert jobs == [] and len(residue) == 0
