@@ -30,30 +30,26 @@ deterministic and is what this module re-expresses Spark-first:
   (``_read_stored``), which Spark plans as a single partition: those
   operators plan no exchange, and ``rollback_analysis``'s stitched scan
   is one plain window. On ``perfbench``'s ``incident_rca`` pass (seed 1,
-  4 cores) an investigation runs 26 jobs, not 43. An input cached as
-  several partitions keeps the plans it had.
+  4 cores) an investigation runs 20 jobs (43 when it planned exchanges).
+  An input cached as several partitions keeps the plans it had.
 - One action per step: ``_collect_sections`` takes a ``{section: bounded
   frame}`` map, tags every row as ``to_json(struct(*))`` (timestamps as
   ``unix_micros``, NULL fields kept) with its section and a
   ``monotonically_increasing_id``, unions the tagged rows, collects them
   once and splits them back into sections on the driver, in row order,
-  with the values ``collect()`` would give. The formatter, phase A's
-  rollback summary and the rest of its scanner tail (baselines row
-  count, recovery-episode head) as a second action, and the five one-row
-  detector summaries each go through it. Over several partitions every shuffle
-  map stage is still its own job, so a union saves actions, not every
-  job. The grouped detector aggregates (``zscore_hotspots``,
-  ``baseline_window_anomalies``, ``metric_anomalies``) stay out of the
-  detector union and keep their own collects: on the ``incident_rca``
-  pass, putting them in it raised ``peak_exec_mb`` from 201.6 to 403.0
-  MB. The detector summaries stay out of phase A's tail union too (in
-  it, the same pass ran one job more).
+  with the values ``collect()`` would give. Phase A (the scanner's sweep,
+  heatmap head and tail), phase B (the eight detectors) and the formatter
+  each go through it once. Their grouped aggregates share a stage, and
+  each reserves execution memory in ``get_spark``'s 2 MB pages, not a
+  64 MB page (``session.py``). Over several partitions every shuffle map
+  stage is still its own job, so a union saves actions, not every job.
 - The detectors read only the input, its event metrics and the
   baselines, so one investigation runs them once and later iterations
   reuse the results: with a low-confidence LLM, 6 iterations over an
-  ``incident_rca`` corpus (seed 7, 4 cores) run 43–45 jobs, counting
-  ``read_trace_events``' two (64–68 before the one-partition read,
-  122–130 when every iteration re-ran the detectors).
+  ``incident_rca`` corpus (seed 7, 4 cores) run 37–39 jobs, counting
+  ``read_trace_events``' two (43–45 before phase A and phase B each
+  became one action, 64–68 before the one-partition read, 122–130 when
+  every iteration re-ran the detectors).
 
 Documented deviations from the reference (kept deliberately):
 - the reference's display sort key ``-(sev) if sev>=40 else -1000``
@@ -194,8 +190,9 @@ def _collect_sections(sections: dict[str, DataFrame]) -> dict[str, list[Row]]:
     so an ``orderBy(...).limit(k)`` head keeps its sort order. A section
     with no rows comes back as ``[]``. Callers pass only bounded frames
     (LIMIT'd heads and aggregates with a bounded number of groups) whose
-    columns are strings, integers, booleans, doubles, timestamps or
-    ``map<string,string>``."""
+    columns are strings, integers, booleans, doubles, timestamps,
+    ``map<string,string>`` or ``array<string>`` (NULL elements and empty
+    arrays included)."""
     tagged = []
     for name, df in sections.items():
         cols = [
@@ -642,20 +639,27 @@ def _read_stored(df: DataFrame) -> DataFrame:
 def _detector_results(
     events: DataFrame, event_metrics: DataFrame, baselines: DataFrame
 ) -> dict[str, dict]:
-    """The eight global detectors' evidence (reference :1100-1151): the
-    five one-row summaries in one action, then the three grouped
-    detectors' own collects."""
+    """The eight global detectors' evidence (reference :1100-1151) from
+    one action: the five one-row summaries, the z-score hotspots and the
+    20-row heads of the two anomaly detectors."""
     from ..detectors import detectors as D
 
-    summaries = _collect_sections({
+    got = _collect_sections({
         "storage_engine_pressure": D.storage_engine_pressure(events, baselines)["summary"],
         "recovery_loop": D.recovery_loop(events)["summary"],
         "ratekeeper_throttling": D.ratekeeper_throttling(events)["summary"],
         "missing_tlogs": D.missing_tlogs(events)["summary"],
         "coordination_loss": D.coordination_loss(events)["summary"],
+        "zscore_hotspots": D.zscore_hotspots(events)["hotspots"],
+        "baseline_window_anomalies": D.baseline_window_anomalies(
+            events, event_metrics, baselines
+        )["anomalies"].limit(20),
+        "metric_anomalies": D.metric_anomalies(events)["anomalies"].limit(20),
     })
-    det_results = {k: rows[0].asDict() for k, rows in summaries.items()}
-    hot_rows = D.zscore_hotspots(events)["hotspots"].collect()
+    hot_rows = got.pop("zscore_hotspots")
+    bwa = [r.asDict() for r in got.pop("baseline_window_anomalies")]
+    ma = got.pop("metric_anomalies")
+    det_results = {k: rows[0].asDict() for k, rows in got.items()}
     det_results["zscore_hotspots"] = {
         "detected": bool(hot_rows),
         "hotspots": [
@@ -667,18 +671,11 @@ def _detector_results(
             for r in hot_rows
         ],
     }
-    bwa = [
-        r.asDict()
-        for r in D.baseline_window_anomalies(events, event_metrics, baselines)["anomalies"]
-        .limit(20)
-        .collect()
-    ]
     det_results["baseline_window_anomalies"] = {
         "detected": bool(bwa),
         "count": len(bwa),
         "first_anomaly": bwa[0] if bwa else None,
     }
-    ma = D.metric_anomalies(events)["anomalies"].limit(20).collect()
     det_results["metric_anomalies"] = {"detected": bool(ma), "count": len(ma)}
     return det_results
 
@@ -775,11 +772,23 @@ class PhasedInvestigationAgent:
 
         # ---- phase A, iteration 1: the global sweep (reference :983-1091) ----
         acc = T.top_events(events, severity_min=30, limit=500)  # the evidence events
+        rb = D.rollback_analysis(events)
+        event_metrics = derive_event_metrics(events)
+        # counted below, then read by two detectors
+        baselines = _own(D.metric_baselines_table(events, event_metrics, min_count=20))
+        # One action: the scanner's sweep (its severity counts, event
+        # histogram, time span and global summary are reduced from one
+        # aggregate), the heatmap head and the scanner's tail. It also
+        # fills the baselines' cache for the detectors.
+        got = _collect_sections({
+            "sweep": T._sweep(events),
+            "heatmap": T._top_buckets(events, 0, 300, 100),
+            "rollback": rb["summary"],
+            "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),
+            "episodes": D.recovery_episodes(events)["episodes"].limit(20),
+        })
+        summary = T._summary(got["sweep"])
         tools_used.append("scanner.top_events")
-        # The scanner's severity counts, event histogram and time span are
-        # parts of its global summary: ask Spark once and keep the
-        # reference's per-tool evidence and tool trail.
-        summary = T.global_summary(events)
         additional.append(("severity_counts", summary["severity_counts"]))
         tools_used.append("scanner.severity_counts")
         additional.append(("event_histogram", summary["event_histogram"]))
@@ -787,9 +796,7 @@ class PhasedInvestigationAgent:
         span = summary["time_span"]
         additional.append(("time_span", span))
         tools_used.append("scanner.time_span")
-        buckets = T.high_severity_buckets(
-            events, min_severity=0, bucket_seconds=300, limit=100
-        )
+        buckets = T._buckets(got["heatmap"])
         additional.append(("bucket_heatmap", buckets))
         tools_used.append("scanner.bucket_heatmap")
         # heatmap rows are distinct buckets: a glance (no events pulled),
@@ -797,28 +804,12 @@ class PhasedInvestigationAgent:
         dive_order = [(300, int(b["bucket_start_epoch"])) for b in buckets[:10]]
         additional.append(("global_summary", summary))
         tools_used.append("scanner.global_summary")
-        rb = D.rollback_analysis(events)
-        event_metrics = derive_event_metrics(events)
-        # counted below, then read by two detectors
-        baselines = _own(D.metric_baselines_table(events, event_metrics, min_count=20))
-        # The rollback summary is collected first, on its own. The job
-        # that first parses ``fields`` pays one-time costs that two
-        # concurrent broadcast stages of one union would each pay; the
-        # largest was ICU's case-table build for ``py_float``'s ``lower``
-        # (~1.8 s in one task), gone since ``get_spark`` maps case by the
-        # JVM. The rest of the scanner's tail is one action; it also fills
-        # the baselines' cache for the detectors.
-        tail = _collect_sections({"rollback": rb["summary"]})
-        tail.update(_collect_sections({
-            "baselines": baselines.agg(F.count(F.lit(1)).alias("rows")),
-            "episodes": D.recovery_episodes(events)["episodes"].limit(20),
-        }))
-        rollback_info = tail["rollback"][0].asDict()
+        rollback_info = got["rollback"][0].asDict()
         additional.append(("rollback_analysis", rollback_info))
         tools_used.append("scanner.rollback_analysis")
-        additional.append(("metric_baselines", tail["baselines"][0].asDict()))
+        additional.append(("metric_baselines", got["baselines"][0].asDict()))
         tools_used.append("scanner.metric_baselines")
-        ep_rows = [r.asDict() for r in tail["episodes"]]
+        ep_rows = [r.asDict() for r in got["episodes"]]
         additional.append(("recovery_episodes", {"count": len(ep_rows)}))
         tools_used.append("scanner.recovery_episodes")
         timeline_highlights = {

@@ -20,13 +20,17 @@ a 4-core local session, ``severity_counts``, ``event_histogram``,
 Spark plans as one partition (a phased investigation reads a
 one-partition cached input through ``coalesce(1)``) an aggregate plans
 no exchange, and each of these tools, ``high_severity_buckets`` and
-``get_uncovered`` runs one job (on ``perfbench``'s ``incident_rca``
-pass, where the investigation has filled the cache before its first
-tool runs). ``get_uncovered`` with no limit collects every bucket of
-its heatmap unordered and ranks them on the driver: two jobs over
-several partitions, where a range-partitioned sort ran four. With a
-limit, the buckets are ranked by Spark's top-k. No tool stores its
-input: a caller that runs many over one frame holds it (``session.py``).
+``get_uncovered`` runs one job. ``get_uncovered`` with no limit collects
+every bucket of its heatmap unordered and ranks them on the driver: two
+jobs over several partitions, where a range-partitioned sort ran four.
+With a limit, the buckets are ranked by Spark's top-k. The phased
+investigation does not call ``global_summary`` or
+``high_severity_buckets``: it puts their lazy frames (``_sweep``,
+``_top_buckets``) into its phase-A action and reduces the rows with the
+same driver code (``_summary``, ``_buckets``), so on ``perfbench``'s
+``incident_rca`` pass the scanner runs no job of its own; the dive's
+``get_uncovered`` runs one a call. No tool stores its input: a caller
+that runs many over one frame holds it (``session.py``).
 """
 
 from __future__ import annotations
@@ -51,20 +55,16 @@ def top_events(
     )
 
 
-def _sweep(events: DataFrame) -> list:
-    """One ``(severity, event)`` aggregate with count, min ts and max ts,
-    collected: the rows the scanner's severity counts, event histogram
-    and time span are all reduced from on the driver. There is one row
-    per severity/event pair, so the collect is bounded by the event-type
+def _sweep(events: DataFrame) -> DataFrame:
+    """One ``(severity, event)`` aggregate with count, min ts and max ts:
+    the rows the scanner's severity counts, event histogram and time span
+    are all reduced from on the driver. There is one row per
+    severity/event pair, so its collect is bounded by the event-type
     vocabulary, not by the number of events."""
-    return (
-        events.groupBy("severity", "event")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("ts").alias("earliest"),
-            F.max("ts").alias("latest"),
-        )
-        .collect()
+    return events.groupBy("severity", "event").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("ts").alias("earliest"),
+        F.max("ts").alias("latest"),
     )
 
 
@@ -104,24 +104,22 @@ def _time_span(rows) -> dict:
 
 def severity_counts(events: DataFrame) -> dict[int, int]:
     """Events per severity, keys in ascending severity with NULL last."""
-    return _severity_counts(_sweep(events))
+    return _severity_counts(_sweep(events).collect())
 
 
 def event_histogram(events: DataFrame, k: int = 10) -> dict[str, int]:
     """The ``k`` most frequent event types, most frequent first."""
-    return _event_histogram(_sweep(events), k)
+    return _event_histogram(_sweep(events).collect(), k)
 
 
 def time_span(events: DataFrame) -> dict:
-    return _time_span(_sweep(events))
+    return _time_span(_sweep(events).collect())
 
 
-def global_summary(events: DataFrame) -> dict:
-    """Composite sweep summary (scanner.global_summary), reduced from one
-    aggregate. ``max_severity`` is read off the severity counts' keys:
-    ``max`` skips NULLs and is None when nothing is left, and so does
-    this."""
-    rows = _sweep(events)
+def _summary(rows) -> dict:
+    """The global summary reduced from the sweep's rows. ``max_severity``
+    is read off the severity counts' keys: ``max`` skips NULLs and is
+    None when nothing is left, and so does this."""
     counts = _severity_counts(rows)
     return {
         "max_severity": max((s for s in counts if s is not None), default=None),
@@ -131,22 +129,13 @@ def global_summary(events: DataFrame) -> dict:
     }
 
 
-def _ranked_buckets(events, min_severity, bucket_seconds, limit, exclude=()) -> list[dict]:
-    """Heatmap buckets whose max severity reaches ``min_severity``, most
-    severe and busiest first, without the ``exclude`` bucket starts."""
-    df = A.bucket_heatmap(events, bucket_seconds, min_max_severity=min_severity)
-    if exclude:
-        df = df.filter(~F.col("bucket").isin(exclude))
-    if limit is None:
-        # every bucket is collected anyway, so rank them on the driver, in
-        # the order below (desc is NULLS LAST, asc NULLS FIRST): the
-        # collect is one aggregate, not a range-partitioned sort
-        rows = sorted(df.collect(), key=lambda r: (
-            r["max_severity"] is None, -(r["max_severity"] or 0), -r["n"],
-            r["bucket"] is not None, r["bucket"] or 0,
-        ))
-    else:
-        rows = df.orderBy(F.desc("max_severity"), F.desc("n"), "bucket").limit(limit).collect()
+def global_summary(events: DataFrame) -> dict:
+    """Composite sweep summary (scanner.global_summary), reduced from one
+    aggregate."""
+    return _summary(_sweep(events).collect())
+
+
+def _buckets(rows) -> list[dict]:
     return [
         {
             "bucket_start_epoch": r["bucket"],
@@ -157,13 +146,23 @@ def _ranked_buckets(events, min_severity, bucket_seconds, limit, exclude=()) -> 
     ]
 
 
+def _top_buckets(events, min_severity, bucket_seconds, limit) -> DataFrame:
+    """The ``limit`` heatmap buckets whose max severity reaches
+    ``min_severity``, most severe and busiest first."""
+    return (
+        A.bucket_heatmap(events, bucket_seconds, min_max_severity=min_severity)
+        .orderBy(F.desc("max_severity"), F.desc("n"), "bucket")
+        .limit(limit)
+    )
+
+
 def high_severity_buckets(
     events: DataFrame,
     min_severity: int = 20,
     bucket_seconds: int = 600,
     limit: int = 20,
 ) -> list[dict]:
-    return _ranked_buckets(events, min_severity, bucket_seconds, limit)
+    return _buckets(_top_buckets(events, min_severity, bucket_seconds, limit).collect())
 
 
 def get_uncovered(
@@ -173,8 +172,17 @@ def get_uncovered(
     bucket_seconds: int = 600,
 ) -> list[dict]:
     """Every high-severity bucket not yet inspected
-    (hotspot_selector.get_uncovered)."""
-    return _ranked_buckets(events, min_severity, bucket_seconds, None, inspected_buckets)
+    (hotspot_selector.get_uncovered), ranked like ``_top_buckets``."""
+    df = A.bucket_heatmap(events, bucket_seconds, min_max_severity=min_severity)
+    if inspected_buckets:
+        df = df.filter(~F.col("bucket").isin(inspected_buckets))
+    # every bucket is collected anyway, so rank them on the driver (desc
+    # is NULLS LAST, asc NULLS FIRST): the collect is one aggregate, not a
+    # range-partitioned sort
+    return _buckets(sorted(df.collect(), key=lambda r: (
+        r["max_severity"] is None, -(r["max_severity"] or 0), -r["n"],
+        r["bucket"] is not None, r["bucket"] or 0,
+    )))
 
 
 def context_window(

@@ -11,8 +11,9 @@ sweep    Wall seconds per entry as JSONL, streamed so a killed sweep keeps
          or {"query", "skipped"}. --only restricts the sweep to the named
          entries; --resume appends to OUT and skips the entries it
          already records. --stages adds "stages": up to 25 executed
-         stages, most task time first. Timing covers building the
-         DataFrame (streaming entries drain here) plus a noop-sink write:
+         stages, most task time first, each with its task, shuffle,
+         spill and peak execution memory totals. Timing covers building
+         the DataFrame (streaming entries drain here) plus a noop-sink write:
          cold plans, no table cache, session.py defaults. A breadth and
          regression sweep, not the headline bench.
 plans    Formatted physical plans of the named entries: one combined
@@ -124,6 +125,7 @@ def stage_rows(spark, group: str) -> list[dict]:
                 "shuffle_write_mb": round(sd.shuffleWriteBytes() / MB, 1),
                 "input_mb": round(sd.inputBytes() / MB, 1),
                 "spill_mb": round(sd.diskBytesSpilled() / MB, 1),
+                "peak_exec_mb": round(sd.peakExecutionMemory() / MB, 2),
             })
     return sorted(rows, key=lambda r: -r["task_sec"])
 

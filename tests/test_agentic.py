@@ -74,19 +74,21 @@ def test_format_events_report(scenario):
 def test_collect_sections_round_trips_every_value(spark):
     """One action returns each section's rows exactly as its own
     ``collect()`` does: timestamps to the microsecond, NULLs as present
-    keys, maps, non-finite doubles, empty sections and sorted heads."""
+    keys, maps, string arrays (NULL elements, empty), non-finite doubles,
+    empty sections, sorted heads and grouped aggregates."""
     from db_loganalyzer_spark.agentic.investigation import _collect_sections
 
     rows = [
-        (1, T0.replace(microsecond=123457), None, {"a": "1", "b": None}, float("nan")),
-        (2, None, "x", {}, float("inf")),
-        (3, T0 + dt.timedelta(seconds=5, microseconds=1), "y", None, float("-inf")),
-        (4, T0 - dt.timedelta(days=400, microseconds=999999), "z", {"k": "v"}, -0.1),
-        (5, T0, None, {"c": "3"}, 1e308),
-        (6, T0 + dt.timedelta(hours=1), "w", {"d": ""}, None),
+        (1, T0.replace(microsecond=123457), None, {"a": "1", "b": None}, float("nan"), ["r", None]),
+        (2, None, "x", {}, float("inf"), []),
+        (3, T0 + dt.timedelta(seconds=5, microseconds=1), "y", None, float("-inf"), None),
+        (4, T0 - dt.timedelta(days=400, microseconds=999999), "z", {"k": "v"}, -0.1, ["a", "b"]),
+        (5, T0, None, {"c": "3"}, 1e308, [None]),
+        (6, T0 + dt.timedelta(hours=1), "w", {"d": ""}, None, ["x"]),
     ]
     df = spark.createDataFrame(
-        rows, "id long, ts timestamp, s string, m map<string,string>, d double"
+        rows,
+        "id long, ts timestamp, s string, m map<string,string>, d double, a array<string>",
     ).repartition(3)
     assert df.rdd.getNumPartitions() == 3
     sections = {
@@ -94,15 +96,18 @@ def test_collect_sections_round_trips_every_value(spark):
         "empty": df.filter(F.col("id") < 0),
         "head": df.orderBy(F.desc("d"), "id").limit(4),
         "agg": df.agg(F.max("ts").alias("latest"), F.count("s").alias("n_s")),
+        "grouped": df.groupBy(F.col("id") % 2).agg(
+            F.min("ts").alias("earliest"), F.sum("d").alias("d_sum"), F.count("a").alias("n_a")
+        ),
     }
     got = _collect_sections(sections)
     assert set(got) == set(sections)
     assert got["empty"] == []
     for name, frame in sections.items():
         want = frame.collect()
-        if name == "all":  # row order across partitions is not pinned
-            want = sorted(want, key=lambda r: r["id"])
-            got[name] = sorted(got[name], key=lambda r: r["id"])
+        if name in ("all", "grouped"):  # row order across partitions is not pinned
+            want = sorted(want, key=lambda r: r[0])
+            got[name] = sorted(got[name], key=lambda r: r[0])
         # repr tells 1 from 1.0 and compares NaN, unlike ==
         assert repr(got[name]) == repr(want), name
         assert [list(r.asDict()) for r in got[name]] == [list(r.asDict()) for r in want]
@@ -111,6 +116,46 @@ def test_collect_sections_round_trips_every_value(spark):
     assert by_id[1]["ts"].microsecond == 123457 and by_id[2]["ts"] is None
     assert "s" in by_id[1].asDict() and by_id[1]["s"] is None
     assert by_id[1]["m"] == {"a": "1", "b": None}
+    assert by_id[1]["a"] == ["r", None] and by_id[2]["a"] == [] and by_id[3]["a"] is None
+    assert len(got["grouped"]) == 2
+
+
+def test_collect_sections_reserves_pages_for_its_rows(spark):
+    """Three grouped aggregates over a small one-partition cached frame
+    run in one stage of one action. Each aggregate's hash map takes at
+    least one execution page, so the stage's peak execution memory is a
+    few of ``get_spark``'s 2 MB pages, not three of Spark's default
+    (64 MB for an 8 GB driver on 4 cores: 192 MB)."""
+    from db_loganalyzer_spark.agentic.investigation import _collect_sections
+
+    df = spark.range(2000).select(
+        (F.col("id") % 7).alias("k"), (F.col("id") % 13).alias("j"), "id"
+    ).coalesce(1).cache()
+    try:
+        df.count()
+        sc = spark.sparkContext
+        group = "test_agentic.collect_sections_pages"
+        sc.setJobGroup(group, group)
+        try:
+            got = _collect_sections({
+                "by_k": df.groupBy("k").count(),
+                "by_j": df.groupBy("j").agg(F.max("id").alias("top")),
+                "by_kj": df.groupBy("k", "j").agg(F.sum("id").alias("s")),
+            })
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    finally:
+        df.unpersist()
+    assert [len(got[s]) for s in ("by_k", "by_j", "by_kj")] == [7, 13, 91]
+    ssc = sc._jsc.sc()
+    ssc.listenerBus().waitUntilEmpty(60_000)
+    store = ssc.statusStore()
+    peaks = [
+        store.lastStageAttempt(sid).peakExecutionMemory()
+        for job in sc.statusTracker().getJobIdsForGroup(group)
+        for sid in sc.statusTracker().getJobInfo(job).stageIds
+    ]
+    assert peaks and max(peaks) <= 16 * 1024 * 1024, peaks
 
 
 def test_format_empty(spark):

@@ -13,7 +13,7 @@ import measure  # noqa: E402
 ENTRIES = ["a06_metric_baselines", "d09_rollback_analysis"]
 STAGE_KEYS = {
     "stage", "name", "sec", "task_sec", "tasks", "gc_sec", "fetch_wait_sec",
-    "shuffle_read_mb", "shuffle_write_mb", "input_mb", "spill_mb",
+    "shuffle_read_mb", "shuffle_write_mb", "input_mb", "spill_mb", "peak_exec_mb",
 }
 
 

@@ -203,25 +203,27 @@ def test_sideband_phased_loop_surfaces_evidence(spark, clogged_sideband):
     assert any("recovery" in q.lower() for q in rag_queries)
 
 
-# Jobs one investigation runs on a 4-core local session, plus 6 of
-# headroom for plan variation. CloggedSideband runs 43 (101 before
+# Jobs one investigation runs on a 4-core local session, plus 5 of
+# headroom for plan variation. CloggedSideband runs 41 (101 before
 # investigate persisted its input, 78 before rollback_analysis shared one
 # stitched scan and the phase-A sweep became one aggregate, 60 before the
 # formatter, phase A's scanner tail and phase B's detector summaries each
 # became one action, 45 before get_uncovered ranked its buckets on the
-# driver); ClogWithRollbacks runs 44 (was 82, then 61, then 46) and
-# StoragePressure 39 (was 68, then 55, then 41).
-SIDEBAND_JOB_BUDGET = 49
-ROLLBACKS_JOB_BUDGET = 50
-PRESSURE_JOB_BUDGET = 45
+# driver, 44 before phase A and phase B each became one action);
+# ClogWithRollbacks runs 42 (was 82, then 61, then 46, then 45) and
+# StoragePressure 37 (was 68, then 55, then 41, then 40).
+SIDEBAND_JOB_BUDGET = 46
+ROLLBACKS_JOB_BUDGET = 47
+PRESSURE_JOB_BUDGET = 42
 # A 4-iteration CloggedSideband investigation with a low-confidence LLM
-# runs 52 jobs when the detectors run once (88 when every iteration
-# re-ran them, 54 before get_uncovered ranked on the driver).
-SIDEBAND_MULTI_JOB_BUDGET = 58
-# The same with 6 iterations runs 52 jobs, 2 of headroom under the 56 it
-# ran when the two iterations after coverage was complete asked
-# get_uncovered and built the timeline again.
-SIDEBAND_SIX_JOB_BUDGET = 54
+# runs 50 jobs when the detectors run once (88 when every iteration
+# re-ran them, 54 before get_uncovered ranked on the driver, 53 before
+# phase A and phase B each became one action).
+SIDEBAND_MULTI_JOB_BUDGET = 55
+# The same with 6 iterations runs 50 jobs (53 before phase A and phase B
+# each became one action; 56 when the two iterations after coverage was
+# complete asked get_uncovered and built the timeline again).
+SIDEBAND_SIX_JOB_BUDGET = 51
 
 
 def _sideband_llm(prompt):
@@ -757,9 +759,10 @@ def rollbacks_trace_files(tmp_path_factory):
 # depend on perfbench's generator: a change to it changes them.)
 TRACE_PROMPT_DIGESTS = ["f8ebf95d343c858fce326ebee228a79cbd23aba14acdac2826f3db6ec445d7f6"]
 # Jobs the investigation runs (not read_trace_events' own offset jobs) on
-# a 4-core local session: 25, plus 4 of headroom. Planning exchanges over
-# the one partition, and taking the stitched scan's range path, it ran 45.
-TRACE_JOB_BUDGET = 29
+# a 4-core local session: 19, plus 4 of headroom. Planning exchanges over
+# the one partition, and taking the stitched scan's range path, it ran 45;
+# before phase A and phase B each became one action, 25.
+TRACE_JOB_BUDGET = 23
 
 
 def test_trace_file_investigation_one_partition(spark, persistent_rdds, rollbacks_trace_files):
@@ -789,6 +792,44 @@ def test_trace_file_investigation_one_partition(spark, persistent_rdds, rollback
     _assert_job_budget(jobs, TRACE_JOB_BUDGET)
     assert not any(site.startswith("localCheckpoint") for site in jobs)
     assert len(residue) == 0
+
+
+def test_trace_file_investigation_one_action_per_phase(
+    spark, persistent_rdds, rollbacks_trace_files, monkeypatch
+):
+    """Phase A, phase B (the detectors) and the formatter each collect
+    once, through ``_collect_sections``; no other collect in the package's
+    agentic code runs but the timeline's and the dive's bucket query."""
+    from db_loganalyzer_spark.agentic import investigation as I
+    from db_loganalyzer_spark.sources.trace_logs import read_trace_events
+
+    agentic = os.path.dirname(I.__file__)
+    calls = []
+    frame_cls = type(spark.range(1))  # the session's DataFrame class
+    collect_sections, collect = I._collect_sections, frame_cls.collect
+
+    def counted_sections(sections):
+        calls.append(("sections", sys._getframe(1).f_code.co_name))
+        return collect_sections(sections)
+
+    def counted_collect(df):
+        caller = sys._getframe(1).f_code
+        if caller.co_filename.startswith(agentic) and caller.co_name != "_collect_sections":
+            calls.append(("collect", caller.co_name))
+        return collect(df)
+
+    monkeypatch.setattr(I, "_collect_sections", counted_sections)
+    monkeypatch.setattr(frame_cls, "collect", counted_collect)
+    events = read_trace_events(spark, rollbacks_trace_files, per_file_offsets=True)
+    res, _, _ = _investigation(persistent_rdds, events, "test_scenarios.trace_file_actions")
+    assert res.iterations == 2
+    assert calls == [
+        ("sections", "_loop"),  # phase A
+        ("sections", "_detector_results"),  # phase B
+        ("collect", "build_timeline"),
+        ("sections", "format_events_for_llm"),
+        ("collect", "get_uncovered"),  # the dive's sub-buckets
+    ]
 
 
 def test_trace_file_investigation_without_iterations_runs_no_job(

@@ -1,7 +1,9 @@
 """The session defaults ``get_spark`` sets to skip per-session costs, and
 what they keep: ``lower``/``upper`` take the JVM's case mapping (not
 ICU's, whose tables the first call would build), and PySpark captures no
-Python call site per ``Column``/``functions`` call."""
+Python call site per ``Column``/``functions`` call; and execution memory
+is taken in 2 MB pages, not the default (64 MB for an 8 GB driver on 4
+cores)."""
 
 import pytest
 from pyspark.errors import utils as error_utils
@@ -17,6 +19,10 @@ def test_call_site_capture_off(spark, monkeypatch):
     # the flag is cached per process; read it again from the active session
     monkeypatch.setattr(error_utils, "_enable_debugging_cache", None)
     assert error_utils.is_debugging_enabled() is False
+
+
+def test_execution_page_size(spark):
+    assert spark.sparkContext.getConf().get("spark.buffer.pageSize") == "2m"
 
 
 # Unicode <= 13 only: newer letters case-map by the JVM's own tables
